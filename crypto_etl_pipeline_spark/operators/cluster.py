@@ -66,10 +66,8 @@ def _contract_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
             return r
 
         for pdf in batches:
-            # Null endpoints tolerated as join misses (ADVICE r13 #1):
-            # the pre-r13 join-based loop silently treated a null src/
-            # dst as a non-edge, whereas `ry < rx` on None raises
-            # TypeError inside the Arrow task. Keep the old contract.
+            # Guard only: null endpoints are filtered in Spark below,
+            # before Arrow could widen the batch's int64 ids to float64.
             pdf = pdf.dropna()
             for x, y in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
                 if x not in parent:
@@ -88,8 +86,13 @@ def _contract_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
         out = pd.DataFrame({a_name: nodes, b_name: [find(n) for n in nodes]})
         yield out[out[a_name] != out[b_name]]
 
-    return edges.select(F.col(src_col), F.col(dst_col)).mapInPandas(
-        uf_part, out_schema
+    # Null endpoints are non-edges, as in the pre-r13 join-based loop.
+    # Drop them in Spark: a null in an Arrow batch turns the batch's
+    # int64 ids into float64, which loses ids above 2^53.
+    return (
+        edges.select(F.col(src_col), F.col(dst_col))
+        .where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
+        .mapInPandas(uf_part, out_schema)
     )
 
 

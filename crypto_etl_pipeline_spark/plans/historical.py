@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 from crypto_etl_pipeline_spark.functions.cleaning import (
     normalize_headers,
@@ -110,23 +111,24 @@ def _flag_outliers(df: DataFrame, price: Column) -> DataFrame:
     )
 
 
-def _impute_medians(df: DataFrame) -> DataFrame:
-    """Exact-median imputation of all numeric columns, fully lazy:
-    one agg row broadcast back via crossJoin + per-column coalesce
-    (same pattern as ``_flag_outliers`` — no eager ``.first()`` job).
-    Medians are cast to each column's type, matching ``na.fill``
-    (long columns truncate); a null median leaves the column as-is."""
-    med = df.agg(
-        *[F.percentile(F.col(c), F.lit(0.5)).alias(f"_med_{c}") for c in NUMERIC_COLS]
-    )
+def _impute_medians(df: DataFrame, cols: tuple[str, ...] = NUMERIC_COLS) -> DataFrame:
+    """Exact-median imputation of ``cols``, fully lazy: one agg row
+    broadcast back via crossJoin + per-column fill (same pattern as
+    ``_flag_outliers`` — no eager ``.first()`` job). Same result as
+    ``df.na.fill(medians)``: medians are cast to each column's type
+    (long columns truncate), float/double columns also replace NaN,
+    and a null median (all-null column) leaves the column as-is."""
+    med = df.agg(*[F.percentile(F.col(c), F.lit(0.5)).alias(f"_med_{c}") for c in cols])
     types = {f.name: f.dataType for f in df.schema.fields}
+
+    def fill(c: str) -> Column:
+        v = F.col(c)
+        if isinstance(types[c], (DoubleType, FloatType)):
+            v = F.nanvl(v, F.lit(None))
+        return F.coalesce(v, F.col(f"_med_{c}").cast(types[c])).alias(c)
+
     return df.crossJoin(F.broadcast(med)).select(
-        *[
-            F.coalesce(F.col(c), F.col(f"_med_{c}").cast(types[c])).alias(c)
-            if c in NUMERIC_COLS
-            else F.col(c)
-            for c in df.columns
-        ]
+        *[fill(c) if c in cols else F.col(c) for c in df.columns]
     )
 
 

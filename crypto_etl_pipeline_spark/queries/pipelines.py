@@ -120,7 +120,10 @@ def pipeline_historical_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_percent,
         parse_unit_suffix,
     )
-    from crypto_etl_pipeline_spark.plans.historical import _flag_outliers
+    from crypto_etl_pipeline_spark.plans.historical import (
+        _flag_outliers,
+        _impute_medians,
+    )
 
     messy = _messy_historical(spark, sf_dir)
     parsed = messy.select(
@@ -130,9 +133,9 @@ def pipeline_historical_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_money(F.col(" 24h Volume ")).alias("volume_24h"),
         parse_unit_suffix(F.col("Total Supply")).alias("total_supply"),
     )
-    cols = ("current_price", "pct_1h", "volume_24h", "total_supply")
-    med = parsed.agg(*[F.percentile(F.col(c), F.lit(0.5)).alias(c) for c in cols]).first()
-    imputed = parsed.na.fill({c: med[c] for c in cols if med[c] is not None})
+    imputed = _impute_medians(
+        parsed, ("current_price", "pct_1h", "volume_24h", "total_supply")
+    )
     flagged = _flag_outliers(imputed, F.col("current_price"))
     return flagged.select(
         "p_partkey",

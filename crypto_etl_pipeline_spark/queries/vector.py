@@ -2445,39 +2445,48 @@ def ann_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = ann.join(truth, ["query_id", "neighbor_id"], "left").localCheckpoint(
         eager=False
     )
-    # r14: nq as a 1-row broadcast frame instead of a sequential
-    # driver .count() — the collect was a full extra action (and a
-    # barrier before the hits job) computing a number the final
-    # 3-row projection can carry as a column (the house
-    # scalar-join-back pattern; guide §5 "the driver should do almost
-    # no data work").
-    nqf = truth.select("query_id").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("_nq")
-    )
-    hits = j.agg(
+    # One aggregate over j UNION truth yields the single row
+    # (h1, h5, h10, _nq). j rows carry the hit flags; truth rows carry
+    # a rank-1 marker (row_number ranks: one rank-1 row per query, so
+    # its count is the distinct query count); each side's other
+    # columns are null, which sum/count skip. The k levels then come
+    # from exploding an array of structs: no scalar join, and no
+    # per-k union branch re-planning the same aggregate.
+    nul = F.lit(None).cast("long")
+    rows = j.select(
         *[
-            F.sum(
-                (
-                    (F.col("a_rank") <= k)
-                    & F.col("t_rank").isNotNull()
-                    & (F.col("t_rank") <= k)
-                ).cast("long")
-            ).alias(f"h{k}")
+            (
+                (F.col("a_rank") <= k)
+                & F.col("t_rank").isNotNull()
+                & (F.col("t_rank") <= k)
+            ).cast("long").alias(f"h{k}")
+            for k in RECALL_KS
+        ],
+        nul.alias("_q1"),
+    ).unionByName(
+        truth.select(
+            *[nul.alias(f"h{k}") for k in RECALL_KS],
+            F.when(F.col("t_rank") == 1, 1).alias("_q1"),
+        )
+    )
+    one = rows.agg(
+        *[F.sum(f"h{k}").alias(f"h{k}") for k in RECALL_KS],
+        F.count("_q1").alias("_nq"),
+    )
+    levels = F.array(
+        *[
+            F.struct(F.lit(k).alias("k"), F.col(f"h{k}").alias("n_hits"))
             for k in RECALL_KS
         ]
-    ).crossJoin(F.broadcast(nqf))
-    out = None
-    for k in RECALL_KS:
-        row = hits.select(
-            F.lit(k).alias("k"),
-            F.col(f"h{k}").alias("n_hits"),
-            (F.lit(k) * F.col("_nq")).cast("long").alias("n_possible"),
-            F.round(F.col(f"h{k}") / (F.lit(k) * F.col("_nq")), 6).alias(
-                "recall"
-            ),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+    )
+    lv = one.select(F.explode(levels).alias("lv"), "_nq")
+    n_possible = (F.col("lv.k") * F.col("_nq")).cast("long")
+    return lv.select(
+        F.col("lv.k").alias("k"),
+        F.col("lv.n_hits").alias("n_hits"),
+        n_possible.alias("n_possible"),
+        F.round(F.col("lv.n_hits") / n_possible, 6).alias("recall"),
+    )
 
 
 _CBAL_K = 8          #: balanced-sampling cells (seeded, iters=0 — oracle-exact)

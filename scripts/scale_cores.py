@@ -10,13 +10,18 @@ and merges per-core-count results into one JSON.
 
 Usage:
     python scripts/gen_scale_sf.py 10 .scale/sf1.0   # once
-    python scripts/scale_cores.py --top=20           # runs both tiers
+    python scripts/scale_cores.py --top=20 --warmup=<small sf dir>
+
+Each tier first runs every query once, untimed, on the small SF
+directory given by ``--warmup=DIR`` (Python-worker spawn and JIT
+warmup would otherwise land in the first timed run); without the flag,
+or if DIR does not exist, the warmup is skipped.
 
 The parent process re-execs itself once per core count (the only way
 to honor a different local[N] master per measurement), then merges
-`scale_cores_sf1.json`: {query: {"c8": sec, "c32": sec, "speedup":
-c8/c32}}. speedup > 1 = the query parallelizes; ~1 or below = still
-overhead-bound at this SF.
+`scale_cores_sf1.json`: {query: {"c1": sec, "c2": sec, "c4": sec,
+"speedup": c1/c4}}. speedup > 1 = the query parallelizes; ~1 or below
+= still overhead-bound at this SF. The tiers fit a 4-core host.
 """
 
 from __future__ import annotations
@@ -32,7 +37,7 @@ sys.path.insert(0, ROOT)
 
 SF_BIG = os.path.join(ROOT, ".scale", "sf1.0")
 OUT = os.path.join(ROOT, "scale_cores_sf1.json")
-CORE_TIERS = (8, 32)
+CORE_TIERS = (1, 2, 4)
 
 
 def _slowest(top: int) -> list[str]:
@@ -41,17 +46,21 @@ def _slowest(top: int) -> list[str]:
     return [n for n, _ in sorted(prev["queries"].items(), key=lambda kv: -kv[1])[:top]]
 
 
-def _run_tier(cpus: int, names: list[str], sf_dir: str) -> dict[str, float]:
+def _run_tier(
+    cpus: int, names: list[str], sf_dir: str, warmup_dir: str | None
+) -> dict[str, float]:
     from crypto_etl_pipeline_spark.queries import REGISTRY
     from crypto_etl_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name=f"scale_cores_{cpus}", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, float] = {}
-    for n in names:
-        if n not in REGISTRY:
-            continue
-        REGISTRY[n].fn(spark, "/root/testdata/sf0.001").count()  # warmup
+    if warmup_dir is not None and os.path.isdir(warmup_dir):
+        for n in names:
+            if n in REGISTRY:
+                REGISTRY[n].fn(spark, warmup_dir).count()
+    elif warmup_dir is not None:
+        print(f"warmup dir {warmup_dir} missing — warmup skipped", flush=True)
     for n in names:
         if n not in REGISTRY:
             continue
@@ -78,6 +87,7 @@ def main() -> None:
     top = 20
     sf_dir = SF_BIG
     names_arg = None
+    warmup_dir = None
     tier = None
     for a in sys.argv[1:]:
         if a.startswith("--top="):
@@ -86,6 +96,8 @@ def main() -> None:
             sf_dir = os.path.abspath(a.split("=", 1)[1])
         elif a.startswith("--only="):
             names_arg = a.split("=", 1)[1]
+        elif a.startswith("--warmup="):
+            warmup_dir = os.path.abspath(a.split("=", 1)[1])
         elif a.startswith("--tier="):  # internal: child invocation
             tier = int(a.split("=", 1)[1])
 
@@ -94,7 +106,7 @@ def main() -> None:
     names = names_arg.split(",") if names_arg else _slowest(top)
 
     if tier is not None:
-        res = _run_tier(tier, names, sf_dir)
+        res = _run_tier(tier, names, sf_dir, warmup_dir)
         with open(f"{OUT}.c{tier}.part", "w") as fh:
             json.dump(res, fh)
         return
@@ -108,6 +120,7 @@ def main() -> None:
                 f"--tier={cpus}",
                 f"--sf={sf_dir}",
                 "--only=" + ",".join(names),
+                *([f"--warmup={warmup_dir}"] if warmup_dir else []),
             ],
             check=True,
         )

@@ -118,3 +118,16 @@ class TestContractEdgesNullEndpoints:
         # (1,2) and (4,5) merge; 3 stays a singleton (its only edge had
         # a null endpoint, i.e. a join miss in the old loop).
         assert got == [(1, 1), (2, 1), (3, 3), (4, 4), (5, 4)]
+
+    def test_null_endpoint_keeps_int64_ids_exact(self, spark):
+        """A null in an Arrow batch would widen the batch's int64 ids
+        to float64; ids above 2^53 must come back exact."""
+        from crypto_etl_pipeline_spark.operators.cluster import _contract_edges
+
+        big = 2**53
+        edges = spark.createDataFrame(
+            [(big + 3, big + 1), (big + 5, None), (big + 7, big + 3)],
+            "src long, dst long",
+        ).coalesce(1)
+        got = sorted(tuple(r) for r in _contract_edges(edges, "src", "dst").collect())
+        assert got == [(big + 3, big + 1), (big + 7, big + 1)]
