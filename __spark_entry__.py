@@ -3,7 +3,13 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
+
+Both dicts are in registration order: the ``queries`` submodules in
+the order ``crypto_etl_pipeline_spark/queries/__init__.py`` imports
+them, then definition order within each module. A consumer that
+samples the first N names therefore always gets the same set, starting
+with the relational, then the cleaning, then the text queries.
 
 Implementation lives in ``crypto_etl_pipeline_spark`` (see SURVEY.md §2
 for the operator inventory each query exercises).

@@ -1,22 +1,20 @@
-"""Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness — runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+two JSON lines: the full result (per-query seconds under "queries"),
+then a compact summary line.
 
 Each query is executed to completion (count of the result — forces the
 full plan without collecting data to the driver) and wall-clock timed.
 A warmup pass on sf0.001 triggers JVM/codegen warm paths first so the
 numbers measure the plans, not JIT compilation.
 
-``--calibrate`` additionally runs a fixed 5-query probe set 3x after
-warmup and records a host-noise coefficient (median and max of
-per-probe max/min wall ratios) into BENCH_FULL.json — the
-self-measured answer to "is this round's per-query spread host drift
-or plan drift" (VERDICT r12 task #6).
+Usage:
+    SPARK_GRAFT_SF_DIR=<directory of sf* parquet tables> python bench.py
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -25,255 +23,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Headline queries: one per operator family (agg, join, window, setop,
-# topk, cleaning, text, dedup, similarity). Kept to the queries whose
-# runtime is dominated by engine work, not driver-side plan building.
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_nation_revenue",
-    "window_top3_orders_per_customer",
-    "set_union_active_buyers",
-    "topk_orders_by_totalprice",
-    "agg_stats_extendedprice",
-    "iqr_outlier_flag",
-    "classify_trend_lineitem",
-    "clean_unit_suffix_supply",
-    "text_stats",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_clusters_minhash",
-    "ann_brute_force_topk",
-    "ann_ivf_topk",
-    "events_hourly_rollup",
-    "asof_join_purchase_click",
-    "tfidf_top_terms",
-    "pipeline_historical_clean",
-    "skew_salted_join",
-    # round-2 surface
-    "q9_product_profit",
-    "text_chunk_documents",
-    "pipeline_dedup_corpus",
-    "cdc_apply_changeset",
-    "pagerank_trade_graph",
-    # round-3 surface
-    "ohlc_hourly_bars",
-    "ewma_user_purchase_value",
-    "cohort_weekly_retention",
-    "resample_ffill_hourly",
-    "histogram_quantile_rollup",
-    "text_bigram_lm_score",
-    "rolling_wau",
-    # round-3 ops that have never landed in the driver's correctness
-    # sample — keep them headline so the sample is likelier to hit them
-    "decontaminate_eval_overlap",
-    "stream_sketch_quantiles",
-    "pack_training_sequences",
-    "corpus_source_stats",
-    "inverted_index_postings",
-    # round-4 surface
-    "dedup_incremental_new_docs",
-    "ann_lsh_bucketed_topk",
-    "text_heavy_hitter_tokens",
-    "graph_triangle_count",
-    "stream_static_enrich",
-    "text_kl_source_drift",
-    "tokenizer_pair_stats",
-    "bpe_train_merges",
-    "dedup_prefix_filter_pairs",
-    "stream_heavy_hitters",
-    # round-5 surface
-    "bpe_encode_token_counts",
-    "multimodal_real_decode_ppm",
-    "reconcile_checksum_events",
-    "sample_pps_documents",
-    "text_boilerplate_ngram_prune",
-    "cms_frequency_contract",
-    "stream_interval_join_outer",
-    "dedup_semantic_clusters",
-    "text_duplicated_spans",
-    "schema_evolution_merge_read",
-    "stream_interval_join_full",
-    "text_entropy_signals",
-    "dedup_containment_pairs",
-    "text_lr_score_fixed",
-    "text_lr_train_quality",
-    "consistent_universe_sample",
-    "global_sequence_ids",
-    "text_chi2_source_quality",
-    "dpp_partitioned_star_probe",
-    "ann_mmr_diversified_topk",
-    "text_excise_duplicated_spans",
-    "seasonal_anomaly_hour_profile",
-    "impute_grouped_median_by_user_bucket",
-    "rolling_wau_hll",
-    "quality_referential_audit",
-    "join_cardinality_estimate",
-    "pack_ffd_bins",
-    "ann_ivf_probe_only",
-    "join_skew_profile",
-    "pipeline_curation_v2",
-    "late_data_profile",
-    "model_eval_suite",
-    "text_cdc_chunks",
-    "winsorize_event_values",
-    "model_pr_curve",
-    "rfm_segmentation",
-    "robust_zscore_mad",
-    "benford_first_digit_audit",
-    "event_transition_matrix",
-    "weekly_rollup_calendar",
-    "sample_weighted_ares",
-    "inter_event_gap_profile",
-    "trend_regression_by_type",
-    # round-6 surface
-    "vocab_coverage_curve",
-    "sample_stratified_exact",
-    "dedup_canonical_by_quality",
-    "corpus_mix_temperature",
-    "cap_docs_per_source",
-    "quality_percentile_normalize",
-    "text_gopher_filters",
-    "embedding_random_projection",
-    "sql_recursive_hierarchy_rollup",
-    "variant_props_shred",
-    "ann_jl_projected_topk",
-    "embedding_pca_top_component",
-    "sketch_kmv_audience_overlap",
-    "bucketed_join_colocated",
-    "decontaminate_bloom_prefilter",
-    "kcore_trade_graph",
-    "ab_ks_test",
-    "embedding_pca_by_label",
-    "stream_kmv_distinct",
-    "embedding_pca_residual_outliers",
-    # round-7 surface: the de-hinted TPC-H stars — forced fact-side
-    # broadcasts removed, AQE owns the join strategy; tracked per-round
-    # so a local regression from the de-hinting would be visible
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_item_customers",
-    "q18_large_volume_orders",
-    # round-7 retrieval / data-selection family
-    "bm25_topk_retrieval",
-    "text_bigram_lm_perplexity",
-    "dsir_importance_weights",
-    # round-7 second wave
-    "quality_kanonymity_audit",
-    "split_leakage_audit",
-    "ann_hard_negative_topk",
-    "token_budget_epoch_allocation",
-    "label_propagation_communities",
-    "tokenizer_fertility_by_lang",
-    "truncation_loss_by_context",
-    "quality_filter_funnel",
-    "embedding_anisotropy_by_label",
-    "oov_rate_by_lang",
-    "source_overlap_matrix",
-    "ann_pq_adc_topk",
-    "layout_skipping_audit",
-    "dedup_cluster_size_histogram",
-    "dedup_soft_weights_by_source",
-    "active_learning_margin_topk",
-    "curriculum_phase_schedule",
-    "hybrid_rrf_retrieval",
-    # round-7 fifth wave: coreset / exact quantile / calibration / walks
-    "kcenter_coreset_selection",
-    "quantile_exact_histogram",
-    "model_calibration_bins",
-    "graph_random_walks",
-    # round-7 sixth wave: MV merge / Wilson PII / novelty curve
-    "incremental_rollup_merge",
-    "pii_rate_wilson_by_source",
-    "text_ngram_novelty_curve",
-    # round-7 seventh wave: basket rules / corpus-law fits
-    "basket_association_rules",
-    "text_zipf_heaps_fit",
-    "dedup_lsh_parameter_sweep",
-    # round-7 eighth wave: rank-sum test / attribution
-    "ab_mann_whitney_u",
-    "event_attribution_linear",
-    # round-7 ninth wave: footer audit / matryoshka
-    "parquet_footer_stats_audit",
-    "embedding_matryoshka_fidelity",
-    # round-7 tenth wave: streaming MV
-    "stream_incremental_mv_merge",
-    "forecast_holt_daily_revenue",
-    "quantile_grouped_exact_histogram",
-    "text_langid_confusion",
-    "quality_cusum_drift_alarm",
-    "orders_backlog_sweepline",
-    "user_activity_streaks",
-    "privacy_dp_noised_counts",
-    "ann_ivf_nprobe_sweep",
-    "dedup_minhash_estimate_error",
-    "embedding_drift_centroid_shift",
-    "corr_matrix_lineitem",
-    # round-8 surface: pair-feed skew guards + sampled k-center
-    "dedup_ngram_jaccard_pairs_capped",
-    "dedup_hot_shingle_spill",
-    "split_leakage_audit_capped",
-    "source_overlap_matrix_capped",
-    "kcenter_sampled_assign",
-    "dedup_simhash_banded_pairs",
-    "dedup_paragraph_first_wins",
-    "dedup_cascade_report",
-    "orc_roundtrip_documents",
-    "dedup_paragraph_excise",
-    "dedup_simhash_hamming_calibration",
-    "dedup_semantic_threshold_sweep",
-    "dedup_token_savings_by_source",
-    "dedup_cluster_source_purity",
-    "ann_ivf_recall_at_k",
-]
-
-
-#: fixed probe set for --calibrate: five stable, shape-diverse,
-#: mid-cost queries (agg / dedup / window / ANN / rollup). Chosen for
-#: low plan-construction overhead so the 3x repeat measures the HOST,
-#: not Catalyst.
-CALIBRATE_PROBES = [
-    "q1_pricing_summary",
-    "dedup_exact",
-    "window_top3_orders_per_customer",
-    "ann_brute_force_topk",
-    "events_hourly_rollup",
-]
-
-
-def _calibrate(spark, registry) -> dict:
-    """Host-noise coefficient (VERDICT r12 task #6): run the fixed
-    probe set 3x and report median/max of per-query max/min wall
-    ratios. Same-tree suite runs on this host differ up to 1.33x, so
-    per-query regressions under ~1.4x are invisible; this field lets a
-    verdict separate plan drift from host drift without git
-    archaeology — a noise_coeff near the observed per-query spread
-    says "host", a calm noise_coeff under a big spread says "plan"."""
-    probe_times: dict[str, list[float]] = {}
-    for _ in range(3):
-        for name in CALIBRATE_PROBES:
-            if name not in registry:
-                continue
-            t0 = time.perf_counter()
-            registry[name].fn(spark, SF_DIR).count()
-            probe_times.setdefault(name, []).append(
-                round(time.perf_counter() - t0, 3)
-            )
-    ratios = sorted(
-        max(ts) / min(ts) for ts in probe_times.values() if min(ts) > 0
-    )
-    if not ratios:
-        return {}
-    mid = len(ratios) // 2
-    med = (
-        ratios[mid] if len(ratios) % 2 else (ratios[mid - 1] + ratios[mid]) / 2
-    )
-    return {
-        "host_noise_coeff": round(med, 3),
-        "host_noise_max": round(ratios[-1], 3),
-        "host_noise_probes": probe_times,
-    }
 
 
 def main() -> None:
@@ -284,37 +33,25 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # Bench the ENTIRE registry, headline order first (VERDICT r8 task
-    # #2: 119 registered queries had never been in a BENCH_FULL pass —
-    # the round-8 19.9 s Generate pathology was invisible to oracles
-    # and found only by timing). Headline names keep their positions so
-    # per-query diffs against prior rounds stay aligned; the long tail
-    # of sub-second shapes appends in registry order. New queries are
-    # benched automatically from the round they are registered.
-    headline = [n for n in HEADLINE if n in REGISTRY]
-    names = headline + [n for n in REGISTRY if n not in set(HEADLINE)]
 
     # Warmup at the smallest SF: JIT, codegen caches, parquet footer
     # reads, and Python worker spawn for the pandas_udf-backed queries.
-    for name in names:
+    for name in REGISTRY:
         REGISTRY[name].fn(spark, "/root/testdata/sf0.001").count()
-
-    calib = _calibrate(spark, REGISTRY) if "--calibrate" in sys.argv else {}
 
     # Two timed passes, min per query: this shared host shows steal-time
     # spikes that inflate a single pass by up to ~10x (measured); the
     # min of two passes measures the PLAN, not the hypervisor's mood.
     timings: dict[str, float] = {}
     for _ in range(2):
-        for name in names:
+        for name, spec in REGISTRY.items():
             t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, SF_DIR).count()
+            spec.fn(spark, SF_DIR).count()
             dt = round(time.perf_counter() - t0, 3)
             if name not in timings or dt < timings[name]:
                 timings[name] = dt
 
     total = round(sum(timings.values()), 3)
-    headline_total = round(sum(timings[n] for n in headline), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     full = {
         "metric": "registry_queries_total_wall",
@@ -324,67 +61,18 @@ def main() -> None:
         "passes": 2,
         "agg": "min",
         "sf": sf_val,
-        # headline subtotal: the 177-query surface benched through r8,
-        # kept for round-over-round continuity now that `value` covers
-        # the whole registry
-        "headline_value": headline_total,
-        "n_headline": len(headline),
     }
     # Per-query timings go to a committed artifact; stdout gets the full
-    # line FIRST and then a compact summary line LAST.  The driver keeps
-    # only a ~2000-char stdout tail, and the 90+-query dict overflowed
-    # it in round 5 (BENCH_r05.json "parsed": null) — the compact final
-    # line always lands inside any tail buffer.  A 160+-query dict is
-    # ~5 KB and can never fit that tail, so the final line carries the
-    # most self-containment the artifact admits (VERDICT r7 task #6):
-    # the slowest-query map (the rows any plan audit starts from), the
-    # sha256 of the canonical full per-query dict, and the committed
-    # file that dict lives in — tamper-evident without the full 5 KB.
-    import hashlib
-
-    # Shared-median host ratio vs the PREVIOUS committed bench at the
-    # same SF (r9 VERDICT task #8): driver runs are consistently 7-35%
-    # hotter than quiet-host runs, and every round re-derives "is this
-    # host noise or a plan regression?" by hand. A UNIFORM shared-set
-    # median ratio = host load; outlier structure on top of a ~1.0
-    # median = real per-query change. Computed before the overwrite so
-    # the summary line is self-interpreting.
+    # line FIRST and then a compact summary line LAST. A reader that
+    # keeps only a short stdout tail (~2000 chars) cannot hold the
+    # ~10 KB per-query dict, so the last line carries the slowest-query
+    # map, the sha256 of the file's text and the file it lives in.
     bench_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
     )
-    shared_median_ratio = None
-    n_shared = 0
-    try:
-        with open(bench_path) as fh:
-            prev = json.load(fh)
-        if prev.get("sf") == sf_val:
-            ratios = sorted(
-                timings[n] / prev["queries"][n]
-                for n in timings
-                if prev["queries"].get(n, 0) > 0.0
-            )
-            n_shared = len(ratios)
-            if n_shared:
-                mid = n_shared // 2
-                shared_median_ratio = round(
-                    ratios[mid]
-                    if n_shared % 2
-                    else (ratios[mid - 1] + ratios[mid]) / 2,
-                    3,
-                )
-    except (OSError, ValueError, KeyError):
-        pass
-    if shared_median_ratio is not None:
-        full["shared_median_ratio_vs_prev"] = shared_median_ratio
-        full["n_shared_vs_prev"] = n_shared
-    if calib:
-        full.update(calib)
-
     file_text = json.dumps(full, indent=1, sort_keys=True) + "\n"
-    # Only attest the sha/file when the write actually landed (ADVICE
-    # r8 #3: a swallowed OSError used to leave the summary pointing at
-    # a stale or absent file — defeating the tamper-evidence the field
-    # exists for).
+    # Only attest the sha/file when the write actually landed, so the
+    # summary never points at a stale or absent file.
     wrote_ok = False
     try:
         with open(bench_path, "w") as fh:
@@ -393,25 +81,9 @@ def main() -> None:
     except OSError:
         pass
     print(json.dumps(full))
-    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:20])
-    summary = {
-        "metric": "registry_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "n_queries": len(timings),
-        "passes": 2,
-        "agg": "min",
-        "sf": sf_val,
-        "headline_value": headline_total,
-        "n_headline": len(headline),
-        "slowest": slowest,
-    }
-    if shared_median_ratio is not None:
-        summary["shared_median_ratio_vs_prev"] = shared_median_ratio
-        summary["n_shared_vs_prev"] = n_shared
-    if calib:
-        summary["host_noise_coeff"] = calib["host_noise_coeff"]
-        summary["host_noise_max"] = calib["host_noise_max"]
+    summary = {k: v for k, v in full.items() if k != "queries"}
+    summary["n_queries"] = len(timings)
+    summary["slowest"] = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:20])
     if wrote_ok:
         summary["bench_full_sha256"] = hashlib.sha256(file_text.encode()).hexdigest()
         summary["queries_file"] = "BENCH_FULL.json"

@@ -8,9 +8,8 @@ idiomatic Spark DataFrame engine:
 - ``sources``     — parquet/CSV/REST readers and CSV/parquet sinks.
 - ``functions``   — the cleaning/classification expression library
                     (pure Column builders; SURVEY.md §2.8 F1-F13).
-- ``operators``   — stats/aggregation layer (§2.4), dedup, similarity
-                    search, text analysis (§2.13 extensions), skew
-                    mitigation, profiling (S5).
+- ``operators``   — dedup, similarity search, text analysis (§2.13
+                    extensions), skew mitigation, profiling (S5).
 - ``plans``       — end-to-end pipeline compositions (EP2 api flow,
                     EP3 historical cleaning flow).
 - ``streaming``   — incremental / availableNow runs, watermarked aggs,

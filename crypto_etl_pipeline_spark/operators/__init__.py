@@ -1,1 +1,1 @@
-from crypto_etl_pipeline_spark.operators import dedup, profiling, similarity, stats, textops  # noqa: F401
+from crypto_etl_pipeline_spark.operators import dedup, profiling, similarity, textops  # noqa: F401

@@ -140,22 +140,3 @@ th {{ background: #eee; }} td:first-child, th:first-child {{ text-align: left; }
         f.write(doc)
     return path
 
-
-def correlation_matrix(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Pairwise Pearson correlations of numeric columns, one agg pass."""
-    from crypto_etl_pipeline_spark.operators.stats import numeric_columns
-
-    cols = cols or numeric_columns(df)
-    aggs = []
-    for i, a in enumerate(cols):
-        for b in cols[i + 1:]:
-            aggs.append(F.corr(F.col(a), F.col(b)).alias(f"{a}__{b}"))
-    if not aggs:
-        raise ValueError("need >= 2 numeric columns")
-    row = df.agg(*aggs).first()
-    spark = df.sparkSession
-    data = []
-    for i, a in enumerate(cols):
-        for b in cols[i + 1:]:
-            data.append((a, b, float(row[f"{a}__{b}"]) if row[f"{a}__{b}"] is not None else None))
-    return spark.createDataFrame(data, "col_a string, col_b string, pearson double")

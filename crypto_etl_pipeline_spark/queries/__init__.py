@@ -1,11 +1,12 @@
 """Query registry — every operator from SURVEY.md §2 (+ §2.13 extensions)
 as a named (PySpark builder, DuckDB oracle SQL) pair.
 
-The driver contract (/root/repo/__spark_entry__.py) runs each Spark
-builder at sf0.01 and hash-compares against the oracle SQL executed by
-DuckDB over the same parquet. Column names are aliased identically on
-both sides; float outputs are rounded identically on both sides so the
-order-insensitive value hash is stable across engines.
+The driver contract (``__spark_entry__.py`` at the repo root) runs
+each Spark builder at sf0.01 and hash-compares against the oracle SQL
+executed by DuckDB over the same parquet. Column names are aliased
+identically on both sides; float outputs are rounded identically on
+both sides so the order-insensitive value hash is stable across
+engines.
 """
 
 from __future__ import annotations
@@ -31,145 +32,13 @@ from crypto_etl_pipeline_spark.queries import web  # noqa: F401, E402
 from crypto_etl_pipeline_spark.queries import preference  # noqa: F401, E402
 
 
-# The driver's correctness gate samples the FIRST 50 entries of
-# queries(), so ordering is rotated each round to cycle coverage.
-# Since round 13 the rotation is PROGRAMMATIC (VERDICT r12 task #2):
-# with the never-driver-sampled pool drained in r12, the hand-
-# maintained 50-name list is replaced by
-#   explicit slots  — _GATE_NEW (queries registered this round, gated
-#                     at birth) + _GATE_REINCLUDE (deliberate re-runs
-#                     of already-green names whose plan/semantics
-#                     changed this round), then
-#   filler slots    — OLDEST-GREEN-FIRST: the remaining slots go to
-#                     the registered queries whose latest GREEN driver
-#                     sample (parsed from the CORRECTNESS_r*.json
-#                     union, rounds < CURRENT_ROUND) is oldest, ties
-#                     alphabetical. A query never sampled green sorts
-#                     first (round -1), so red rows keep re-sampling
-#                     until they go green.
-# tests/test_round11_ops.py::test_gate_rotation_no_accidental_resample
-# asserts the filler genuinely picked the stalest names, and
-# test_gate_rotation_refresh_bound asserts the K-round re-sample
-# guarantee on the ordering function itself.
-
-import glob as _glob
-import json as _json
-import os as _os
-import re as _re
-
-#: the build round currently being authored — CORRECTNESS files of
-#: this round or later are IGNORED by the rotation (the driver writes
-#: CORRECTNESS_r{CURRENT_ROUND}.json at round close; including it
-#: would reshuffle the order the moment the driver did its job)
-CURRENT_ROUND = 13
-
-#: how many names the driver samples per round
-GATE_SLOTS = 50
-
-#: queries REGISTERED this round — gated at birth
-_GATE_NEW: tuple = (
-    "clean_url_canonicalize",
-    "dedup_by_url",
-    "web_host_profile",
-    "train_epoch_shuffle",
-    "bitext_mine_margin",
-    "bitext_margin_threshold_sweep",
-    "bitext_intersection_pairs",
-    "cap_fetches_per_host",
-    "bitext_mine_bucketed",
-    "train_shard_manifest",
-    # r13 technical-indicator family (aggregate-first daily bars)
-    "ta_bollinger_bands",
-    "ta_rsi_cutler",
-    "ta_max_drawdown",
-    "ta_realized_volatility",
-    "ta_returns_correlation",
-    # r13 annotation-agreement / FD-audit family
-    "quality_cohen_kappa",
-    "quality_fleiss_kappa",
-    "quality_fd_violations",
-    # r13 preference-aggregation family
-    "pref_copeland_scores",
-    "pref_bradley_terry",
-)
-
-#: deliberate re-inclusions: already-green names whose plan or
-#: semantics changed this round, so the fix wants a fresh official row
-#: (keep in sync with INTENDED_REINCLUSIONS in tests/test_round11_ops.py)
-_GATE_REINCLUDE: tuple = (
-    # r13: whitespace-collapse regex \s+ -> explicit [ \t\n\x0B\f\r]+
-    # in unicode_canonical AND its DuckDB twin (r12 ADVICE engine-drift
-    # fix) — every query whose plan embeds the pattern re-samples
-    "clean_unicode_normalize",
-    "dedup_unicode_fingerprint",
-    "pipeline_multilingual_curation",
-)
-
-_REPO_ROOT = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-
-
-def _row_green(row: dict) -> bool:
-    """A driver CORRECTNESS row counts as green iff it errored nowhere
-    and failed no recorded check (rows-only checks lack hash/schema
-    keys — absent means not-checked, not failed)."""
-    if row.get("err") is not None:
-        return False
-    return all(
-        row.get(k) is not False for k in ("rows_match", "schema_match", "hash_match")
-    )
-
-
-def last_green_round(before_round: int = None) -> dict:
-    """name -> latest round (< before_round) with a green driver
-    CORRECTNESS row. Pure function of the committed driver artifacts."""
-    cut = CURRENT_ROUND if before_round is None else before_round
-    out: dict = {}
-    for f in _glob.glob(_os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", f)
-        if not m or int(m.group(1)) >= cut:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(f) as fh:
-                rows = _json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and _row_green(row):
-                out[name] = max(out.get(name, -1), rnd)
-    return out
-
-
-def gate_first(last_green: dict, explicit: tuple, slots: int = GATE_SLOTS) -> list:
-    """The first-``slots`` gate sample: explicit names first (order
-    preserved), then oldest-green-first filler over the rest of the
-    registry. Pure so the refresh-bound meta-test can simulate rounds."""
-    explicit = [n for n in explicit if n in REGISTRY]
-    taken = set(explicit)
-    pool = sorted(
-        (n for n in REGISTRY if n not in taken),
-        key=lambda n: (last_green.get(n, -1), n),
-    )
-    return list(explicit) + pool[: max(0, slots - len(explicit))]
-
-
-def _gate_ordered():
-    explicit = _GATE_NEW + _GATE_REINCLUDE
-    missing = [n for n in explicit if n not in REGISTRY]
-    assert not missing, f"explicit gate names not registered: {missing}"
-    assert len(set(explicit)) == len(explicit), "duplicate explicit gate names"
-    first = gate_first(last_green_round(), explicit)
-    head = set(first)
-    return first + [n for n in REGISTRY if n not in head]
-
-
 def queries():
-    return {name: REGISTRY[name].fn for name in _gate_ordered()}
+    """name -> builder, in registration order (module import order
+    above, then definition order within each module)."""
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def oracle_sql():
-    return {
-        name: REGISTRY[name].oracle
-        for name in _gate_ordered()
-        if REGISTRY[name].oracle is not None
-    }
+    """name -> DuckDB oracle SQL for every oracled query, in
+    registration order."""
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}

@@ -1,11 +1,12 @@
-"""Per-query optimization measurement harness (round 13).
+"""Per-query optimization measurement harness.
 
 For each named query: warm it at sf0.001, then time ``fn(spark,
 SF_DIR).count()`` (the bench methodology) over N passes at the bench
 SF, and optionally dump ``explain('formatted')`` plus the executed
-plan to plans/r13/<name>_<tag>.txt. Also reports the number of Spark
-jobs each build+count triggered (eager actions inside builders are
-invisible in a plan dump but dominate several multi-stage queries).
+plan to plans/<name>_<tag>.txt at the repo root (git-ignored). Also
+reports the number of Spark jobs each build+count triggered (eager
+actions inside builders are invisible in a plan dump but dominate
+several multi-stage queries).
 
 Usage:
     python scripts/opt_measure.py name1,name2 [--tag=before] [--passes=2]
@@ -23,7 +24,7 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-PLAN_DIR = os.path.join(ROOT, "plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r14"))
+PLAN_DIR = os.path.join(ROOT, "plans")
 
 
 def n_jobs(spark) -> int:

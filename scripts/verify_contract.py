@@ -19,9 +19,8 @@ one-command verification outside pytest.
 ``--gate`` additionally runs the two subsets that went red in round 11
 while the oracle sweep stayed green — the registry plan lints
 (cartesian/broadcast/posting/global-window/fingerprint) and the golden
-reference-parity tests, plus the rotation meta-test — so the builder's
-pre-close check and the driver's full-suite gate cannot diverge
-(r11 VERDICT task #9)."""
+reference-parity tests — so a pre-commit check and the full-suite gate
+cannot diverge."""
 
 from __future__ import annotations
 
@@ -129,14 +128,12 @@ def main() -> int:
     if "--gate" in sys.argv:
         import subprocess
 
-        print("GATE: running plan lints + golden parity + rotation meta-test",
-              flush=True)
+        print("GATE: running plan lints + golden parity", flush=True)
         rc = subprocess.call(
             [
                 sys.executable, "-m", "pytest", "-q",
                 "tests/test_registry_lint.py",
                 "tests/test_golden_parity.py",
-                "tests/test_round11_ops.py::test_gate_rotation_no_accidental_resample",
             ],
             cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )

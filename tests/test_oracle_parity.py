@@ -91,7 +91,7 @@ def test_oracle_no_hugeint_columns(name, duck):
     """Oracle-typing lint (round-2 postmortem): DuckDB `sum()` over any
     integer type returns HUGEINT (int128), which the driver's value-hash
     normalizes differently from Spark's bigint — a bit-identical answer
-    then reads as hash-red (see CORRECTNESS_r02 dedup_simhash /
+    then reads as hash-red (round 2: dedup_simhash /
     pipeline_dedup_corpus). DESCRIBE every oracle and reject any
     HUGEINT/UHUGEINT output column; fix is a `::BIGINT` cast on the sum."""
     spec = REGISTRY[name]

@@ -113,7 +113,7 @@ def test_no_cartesian_product_plans(name, spark, built_df):
 def test_no_array_map_final_schema(name, built_df):
     """The driver's pandas canonicalizer sorts and hashes every output
     column; list/dict cells raise `TypeError: unhashable type` before
-    any comparison happens (CORRECTNESS_r09 `inverted_index_postings`).
+    any comparison happens (round 9, `inverted_index_postings`).
     A registered query's FINAL schema therefore must not contain
     ArrayType or MapType at any nesting depth — serialize with
     array_join (oracle: array_to_string) and keep the array form as an

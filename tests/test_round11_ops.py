@@ -478,80 +478,20 @@ def test_bh_fdr_registered_invariants(spark):
         assert abs(r["bh_threshold"] - round(0.05 * r["bh_rank"] / m, 6)) < 1e-12
 
 
-# --- gate-rotation discipline (VERDICT r10 #8, PROGRAMMATIC since r13) ------
+# --- driver-contract order --------------------------------------------------
 
 
 @pytest.mark.quick
-def test_gate_rotation_no_accidental_resample():
-    """Since r13 the 50-slot driver sample is derived, not hand-listed
-    (VERDICT r12 task #2): explicit slots (_GATE_NEW + _GATE_REINCLUDE)
-    first, then oldest-green-first filler. This test pins the
-    discipline mechanically: the explicit head is exactly the declared
-    tuples, every _GATE_NEW name has NO prior green row (it really is
-    new), and the filler names are genuinely the stalest — no filler
-    name has a newer last-green round than any name left outside the
-    sample (ties broken alphabetically, also asserted)."""
-    from crypto_etl_pipeline_spark.queries import (
-        _GATE_NEW,
-        _GATE_REINCLUDE,
-        GATE_SLOTS,
-        REGISTRY,
-        last_green_round,
-        queries,
-    )
+def test_entry_order_is_registration_order():
+    """``queries()`` and ``oracle_sql()`` list names in registration
+    order and read no other state, so a consumer that samples the first
+    N names always gets the same set."""
+    import __spark_entry__
 
-    last = last_green_round()
-    if not last:  # fresh checkout without driver artifacts
-        pytest.skip("no pre-round CORRECTNESS_r*.json present")
-    order = list(queries())
-    assert len(order) == len(REGISTRY) and len(set(order)) == len(order)
-    explicit = list(_GATE_NEW) + list(_GATE_REINCLUDE)
-    first = order[:GATE_SLOTS]
-    assert first[: len(explicit)] == explicit
-    for n in _GATE_NEW:
-        assert n not in last, f"_GATE_NEW name {n} already has a green row"
-    filler = first[len(explicit):]
-    outside = order[GATE_SLOTS:]
-    if filler and outside:
-        key = lambda n: (last.get(n, -1), n)  # noqa: E731
-        assert max(key(n) for n in filler) <= min(key(n) for n in outside), (
-            "filler slots skipped a staler query"
-        )
-
-
-@pytest.mark.quick
-def test_gate_rotation_refresh_bound():
-    """The encoded guarantee that replaced the hand-maintained list:
-    under oldest-green-first filling, EVERY registered query is
-    re-sampled within K = ceil(R / (GATE_SLOTS - reserve)) rounds even
-    if every future round spends `reserve` slots on explicit names.
-    Simulated against the real ordering function (gate_first) from the
-    real artifact state, with a worst-case 15-slot explicit reserve
-    (the BENCH_LAG_ALLOWANCE-sized new-query budget per round)."""
-    import math
-
-    from crypto_etl_pipeline_spark.queries import (
-        CURRENT_ROUND,
-        GATE_SLOTS,
-        REGISTRY,
-        gate_first,
-        last_green_round,
-    )
-
-    reserve = 15
-    fill_per_round = GATE_SLOTS - reserve
-    horizon = math.ceil(len(REGISTRY) / fill_per_round)
-    last = dict(last_green_round())
-    for rnd in range(CURRENT_ROUND, CURRENT_ROUND + horizon):
-        # worst case: `reserve` slots burned on hypothetical new names
-        picked = gate_first(last, explicit=(), slots=fill_per_round)
-        for n in picked:
-            last[n] = rnd
-    stale = [n for n in REGISTRY if last.get(n, -1) < CURRENT_ROUND]
-    assert not stale, (
-        f"{len(stale)} queries would not be re-sampled within {horizon} "
-        f"rounds: {sorted(stale)[:5]}"
-    )
+    assert list(__spark_entry__.queries()) == list(REGISTRY)
+    assert list(__spark_entry__.oracle_sql()) == [
+        n for n, s in REGISTRY.items() if s.oracle is not None
+    ]
 
 
 # --- end-to-end pretrain corpus funnel --------------------------------------

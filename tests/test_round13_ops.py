@@ -1,6 +1,5 @@
 """Round-13 operator tests: URL canonicalization + per-URL dedup
-(CCNet §2 / C4), gate-rotation programmatic policy (covered in
-test_round11_ops), and the r12 ADVICE fixes."""
+(CCNet §2 / C4) and the r12 ADVICE fixes."""
 
 from __future__ import annotations
 
