@@ -1,11 +1,15 @@
 """EP3 — the historical cleaning dataflow (SURVEY.md §3 EP3).
 
 The reference executes eleven separate whole-table pandas passes
-(crypto_etl_pipeline.py:137-208). Here the same semantics compile to
-TWO scan passes: one fused ``select`` of all cleaning expressions
-(whole-stage codegen), one global ``agg`` for the medians/quantiles
-that the imputation and outlier flag depend on — no shuffle at all
-(global aggregates are partial+final tree reductions).
+(crypto_etl_pipeline.py:137-208). Here the parse cascade is one fused
+``select`` of all cleaning expressions (whole-stage codegen), and
+impute-then-flag (``_impute_then_flag``) reads the parsed rows three
+times: one global ``agg`` for the exact medians, one stats row (the
+medians plus the quartiles of the imputed price, from ONE
+array-percentage ``percentile``), and one projection that fills and
+flags against that broadcast row. No row-level shuffle: global
+aggregates are partial+final reductions and the stats rows join as
+broadcast scalars.
 
 Operation order follows the colab flow (impute -> outlier flag),
 because that is what produced the shipped golden artifact
@@ -85,50 +89,86 @@ def parse_historical(raw: DataFrame) -> DataFrame:
     )
 
 
-def _flag_outliers(df: DataFrame, price: Column) -> DataFrame:
-    """IQR*1.5 Tukey fence on current_price via one agg + broadcast
-    scalars (never an unpartitioned window — SURVEY.md §2.5).
+def _quartiles(price: Column) -> list[Column]:
+    """``_q1``/``_q3`` of ``price`` from ONE exact ``percentile``: each
+    call builds and sorts its own value->count map, and every
+    percentage of an array call reads the same sorted map."""
+    q = F.percentile(price, F.lit([0.25, 0.75]))
+    return [q.getItem(0).alias("_q1"), q.getItem(1).alias("_q3")]
+
+
+def _is_outlier(price: Column) -> Column:
+    """IQR*1.5 Tukey fence against the broadcast ``_q1``/``_q3`` row.
 
     Null prices flag True: pandas ``~s.between(...)`` turns NaN ->
     False -> ~False -> True (crypto_etl_pipeline.py:199), whereas SQL
     ``NOT (null BETWEEN ..)`` is null — the coalesce restores reference
     parity on the order="P" path (imputation hasn't run yet there)."""
-    bounds = df.agg(
-        F.percentile(price, F.lit(0.25)).alias("_q1"),
-        F.percentile(price, F.lit(0.75)).alias("_q3"),
-    )
     iqr = F.col("_q3") - F.col("_q1")
-    return (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "is_outlier",
-            F.coalesce(
-                ~price.between(F.col("_q1") - 1.5 * iqr, F.col("_q3") + 1.5 * iqr),
-                F.lit(True),
-            ),
-        )
-        .drop("_q1", "_q3")
-    )
+    return F.coalesce(
+        ~price.between(F.col("_q1") - 1.5 * iqr, F.col("_q3") + 1.5 * iqr),
+        F.lit(True),
+    ).alias("is_outlier")
 
 
-def _impute_medians(df: DataFrame, cols: tuple[str, ...] = NUMERIC_COLS) -> DataFrame:
-    """Exact-median imputation of ``cols``, fully lazy: one agg row
-    broadcast back via crossJoin + per-column fill (same pattern as
-    ``_flag_outliers`` — no eager ``.first()`` job). Same result as
-    ``df.na.fill(medians)``: medians are cast to each column's type
-    (long columns truncate), float/double columns also replace NaN,
-    and a null median (all-null column) leaves the column as-is."""
-    med = df.agg(*[F.percentile(F.col(c), F.lit(0.5)).alias(f"_med_{c}") for c in cols])
+def _flag_outliers(df: DataFrame, price: Column) -> DataFrame:
+    """IQR*1.5 Tukey fence on ``price`` via one agg + broadcast
+    scalars (never an unpartitioned window — SURVEY.md §2.5)."""
+    bounds = df.agg(*_quartiles(price))
+    return df.crossJoin(F.broadcast(bounds)).select(*df.columns, _is_outlier(price))
+
+
+def _medians(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """One row: the exact median of each of ``cols`` as ``_med_<c>``."""
+    return df.agg(*[F.percentile(F.col(c), F.lit(0.5)).alias(f"_med_{c}") for c in cols])
+
+
+def _median_fill(df: DataFrame, cols: tuple[str, ...]):
+    """``c -> Column``: ``c`` with nulls (and NaN on float/double
+    columns) replaced by the ``_med_<c>`` column cast to ``c``'s type,
+    as ``df.na.fill(medians)`` does (long columns truncate; a null
+    median, from an all-null column, leaves the column as-is). Columns
+    outside ``cols`` pass through."""
     types = {f.name: f.dataType for f in df.schema.fields}
 
     def fill(c: str) -> Column:
         v = F.col(c)
+        if c not in cols:
+            return v
         if isinstance(types[c], (DoubleType, FloatType)):
             v = F.nanvl(v, F.lit(None))
-        return F.coalesce(v, F.col(f"_med_{c}").cast(types[c])).alias(c)
+        return F.coalesce(v, F.col(f"_med_{c}").cast(types[c]))
 
-    return df.crossJoin(F.broadcast(med)).select(
-        *[fill(c) if c in cols else F.col(c) for c in df.columns]
+    return fill
+
+
+def _impute_medians(df: DataFrame, cols: tuple[str, ...] = NUMERIC_COLS) -> DataFrame:
+    """Exact-median imputation of ``cols``, fully lazy: one agg row
+    broadcast back via crossJoin + per-column fill (no eager
+    ``.first()`` job). Same result as ``df.na.fill(medians)``."""
+    fill = _median_fill(df, cols)
+    return df.crossJoin(F.broadcast(_medians(df, cols))).select(
+        *[fill(c).alias(c) for c in df.columns]
+    )
+
+
+def _impute_then_flag(
+    df: DataFrame, cols: tuple[str, ...] = NUMERIC_COLS, price: str = "current_price"
+) -> DataFrame:
+    """``_flag_outliers(_impute_medians(df, cols), F.col(price))`` with
+    the medians computed ONCE. The composed form runs the median
+    aggregate twice: in the imputed rows and again under the IQR
+    bounds, which read the imputed price (column pruning makes the two
+    plans differ, so exchange reuse misses). Here one stats row carries
+    the medians (``max`` of a per-row constant) and the quartiles of
+    the imputed price, and one broadcast of it fills and flags."""
+    fill = _median_fill(df, cols)
+    stats = df.crossJoin(F.broadcast(_medians(df, cols))).agg(
+        *[F.max(f"_med_{c}").alias(f"_med_{c}") for c in cols],
+        *_quartiles(fill(price)),
+    )
+    return df.crossJoin(F.broadcast(stats)).select(
+        *[fill(c).alias(c) for c in df.columns], _is_outlier(fill(price))
     )
 
 
@@ -143,16 +183,16 @@ def clean_historical(raw: DataFrame, order: str = "C") -> DataFrame:
     order (crypto_etl_pipeline.py:193-205).
     """
     parsed = parse_historical(raw)
-    price = F.col("current_price")
 
     if order == "C":
-        return _flag_outliers(_impute_medians(parsed), price).select(*OUTPUT_COLS)
+        return _impute_then_flag(parsed).select(*OUTPUT_COLS)
 
     if order == "P":
         # Flag over non-null prices (nulls flag True — see
-        # _flag_outliers), THEN impute: the production DAG's order.
+        # _is_outlier), THEN impute: the production DAG's order.
         # is_outlier itself is boolean, untouched by _impute_medians.
-        return _impute_medians(_flag_outliers(parsed, price)).select(*OUTPUT_COLS)
+        flagged = _flag_outliers(parsed, F.col("current_price"))
+        return _impute_medians(flagged).select(*OUTPUT_COLS)
 
     raise ValueError(f"order must be 'C' or 'P', got {order!r}")
 

@@ -236,3 +236,70 @@ def unbounded_global_windows(df):
                 out.append((hit, head[:120]))
         stack.extend(_children(node))
     return out
+
+
+# --------------------------------------------------------------------------
+# Split exact-percentile detector
+# --------------------------------------------------------------------------
+#
+# The waste: every exact ``percentile`` aggregate builds its own boxed
+# value->count map of its input, serializes it through the shuffle and
+# sorts it. Two of them over the same input in one Aggregate (q1 and
+# q3 as two calls) do that twice; one array-percentage call
+# ``q = F.percentile(c, F.lit([p1, p2]))`` reads every percentage off
+# the same sorted map, bit-identically. ``percentile_approx`` is a
+# different function (ApproximatePercentile) and is not counted.
+
+
+def _percentile_aggs(expr):
+    """Every AggregateExpression over an exact Percentile in ``expr``."""
+    out = []
+    stack = [expr]
+    while stack:
+        e = stack.pop()
+        if (
+            e.getClass().getSimpleName() == "AggregateExpression"
+            and e.aggregateFunction().getClass().getSimpleName() == "Percentile"
+        ):
+            out.append(e)
+            continue
+        cs = e.children()
+        for i in range(cs.size()):
+            stack.append(cs.apply(i))
+    return out
+
+
+def split_percentiles(df):
+    """Return [(input_sql, n)] for every Aggregate in ``df``'s
+    optimized plan holding ``n`` >= 2 distinct exact ``percentile``
+    functions over the same canonicalized input and frequency (same
+    filter, distinctness and direction): percentages one array call
+    would compute from one sorted count map."""
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    # cheap prefilter: "percentile_approx(" does not contain it
+    if "percentile(" not in optimized.toString():
+        return []
+    out = []
+    stack = [optimized]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "Aggregate":
+            groups: dict = {}
+            aggs = node.aggregateExpressions()
+            for i in range(aggs.size()):
+                for ae in _percentile_aggs(aggs.apply(i)):
+                    fn = ae.aggregateFunction()
+                    # canonical strings keep exprIds: one Aggregate's
+                    # inputs share them, and names are blanked
+                    key = (
+                        fn.child().canonicalized().toString(),
+                        fn.frequencyExpression().canonicalized().toString(),
+                        ae.filter().toString(),
+                        ae.isDistinct(),
+                        fn.reverse(),
+                    )
+                    fns = groups.setdefault(key, (fn.child().sql(), set()))[1]
+                    fns.add(fn.canonicalized().toString())
+            out += [(sql, len(fns)) for sql, fns in groups.values() if len(fns) > 1]
+        stack.extend(_children(node))
+    return out

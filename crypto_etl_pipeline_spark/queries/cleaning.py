@@ -287,10 +287,8 @@ def impute_median_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 def iqr_outlier_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     c = F.col("l_extendedprice")
-    bounds = li.agg(
-        F.percentile(c, F.lit(0.25)).alias("q1"),
-        F.percentile(c, F.lit(0.75)).alias("q3"),
-    )
+    q = F.percentile(c, F.lit([0.25, 0.75]))
+    bounds = li.agg(q.getItem(0).alias("q1"), q.getItem(1).alias("q3"))
     iqr = F.col("q3") - F.col("q1")
     return (
         li.crossJoin(F.broadcast(bounds))
@@ -386,10 +384,8 @@ def winsorize_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare raw values against exact-arithmetic quantile bounds
     identically in both engines; only the emitted value rounds."""
     ev = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    b = ev.groupBy("event_type").agg(
-        F.percentile(F.col("value"), F.lit(0.05)).alias("lo"),
-        F.percentile(F.col("value"), F.lit(0.95)).alias("hi"),
-    )
+    q = F.percentile(F.col("value"), F.lit([0.05, 0.95]))
+    b = ev.groupBy("event_type").agg(q.getItem(0).alias("lo"), q.getItem(1).alias("hi"))
     j = ev.join(F.broadcast(b), "event_type")
     w = (
         F.when(F.col("value") < F.col("lo"), F.col("lo"))

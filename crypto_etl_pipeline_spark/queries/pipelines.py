@@ -120,10 +120,7 @@ def pipeline_historical_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_percent,
         parse_unit_suffix,
     )
-    from crypto_etl_pipeline_spark.plans.historical import (
-        _flag_outliers,
-        _impute_medians,
-    )
+    from crypto_etl_pipeline_spark.plans.historical import _impute_then_flag
 
     messy = _messy_historical(spark, sf_dir)
     parsed = messy.select(
@@ -133,10 +130,9 @@ def pipeline_historical_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_money(F.col(" 24h Volume ")).alias("volume_24h"),
         parse_unit_suffix(F.col("Total Supply")).alias("total_supply"),
     )
-    imputed = _impute_medians(
-        parsed, ("current_price", "pct_1h", "volume_24h", "total_supply")
+    flagged = _impute_then_flag(
+        parsed, ("current_price", "pct_1h", "volume_24h", "total_supply"), "current_price"
     )
-    flagged = _flag_outliers(imputed, F.col("current_price"))
     return flagged.select(
         "p_partkey",
         "current_price",

@@ -363,6 +363,9 @@ def set_except_building_never_open(spark: SparkSession, sf_dir: str) -> DataFram
 # Statistics layer (A1-A5): exact interpolated percentiles in ONE agg pass
 # (partial+final tree aggregation — no unpartitioned window, SURVEY §2.5).
 # Spark `percentile` and DuckDB `quantile_cont` share linear interpolation.
+# One array-percentage `percentile` per column: each exact percentile
+# builds and sorts its own value->count map, so q1/median/q3 as three
+# calls would do that work three times for the same answers.
 # --------------------------------------------------------------------------
 @register(
     "agg_stats_extendedprice",
@@ -383,14 +386,15 @@ def set_except_building_never_open(spark: SparkSession, sf_dir: str) -> DataFram
 def agg_stats_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     c = F.col("l_extendedprice")
+    q = F.percentile(c, F.lit([0.25, 0.50, 0.75]))
     return li.agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.avg(c), 4).alias("mean_price"),
         F.round(F.stddev(c), 4).alias("std_price"),
         F.round(F.min(c), 2).alias("min_price"),
-        F.round(F.percentile(c, F.lit(0.25)), 4).alias("q1"),
-        F.round(F.percentile(c, F.lit(0.50)), 4).alias("median"),
-        F.round(F.percentile(c, F.lit(0.75)), 4).alias("q3"),
+        F.round(q.getItem(0), 4).alias("q1"),
+        F.round(q.getItem(1), 4).alias("median"),
+        F.round(q.getItem(2), 4).alias("q3"),
         F.round(F.max(c), 2).alias("max_price"),
     )
 
@@ -416,14 +420,15 @@ def agg_stats_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouped_describe_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     c = F.col("o_totalprice")
+    q = F.percentile(c, F.lit([0.25, 0.50, 0.75]))
     return orders.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.avg(c), 4).alias("mean_total"),
         F.round(F.stddev(c), 4).alias("std_total"),
         F.round(F.min(c), 2).alias("min_total"),
-        F.round(F.percentile(c, F.lit(0.25)), 4).alias("q1"),
-        F.round(F.percentile(c, F.lit(0.50)), 4).alias("median"),
-        F.round(F.percentile(c, F.lit(0.75)), 4).alias("q3"),
+        F.round(q.getItem(0), 4).alias("q1"),
+        F.round(q.getItem(1), 4).alias("median"),
+        F.round(q.getItem(2), 4).alias("q3"),
         F.round(F.max(c), 2).alias("max_total"),
     )
 

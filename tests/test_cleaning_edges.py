@@ -192,3 +192,94 @@ def test_lazy_median_imputation_matches_na_fill(spark):
 
     assert rows(got) == rows(want)
     assert all(r["x"] == r["x"] and r["y"] == r["y"] for r in got.collect())
+
+
+# ---- impute-then-flag with the medians computed once -------------------------
+_NAN = float("nan")
+_ITF_SCHEMA = "id long, price double, x double, n bigint, z double"
+_ITF_FRAMES = {
+    # nulls, NaN in both doubles, a bigint column, an all-null column
+    # (z) and one price far above the fence
+    "mixed": [
+        (1, 10.0, 1.0, 10, None),
+        (2, None, None, None, None),
+        (3, 12.0, _NAN, 31, None),
+        (4, _NAN, 4.0, None, None),
+        (5, 11.0, 2.5, 20, None),
+        (6, 13.0, None, 7, None),
+        (7, 1000.0, 3.0, None, None),
+        (8, 9.0, _NAN, 12, None),
+    ],
+    "single": [(1, 5.0, None, 3, None)],
+    "null_price": [(1, None, 1.0, None, None), (2, None, None, 4, None)],
+    "empty": [],
+}
+
+
+def _repr_rows(d):
+    # NaN != NaN: compare through repr so a surviving NaN still matches
+    return sorted(tuple(repr(v) for v in r) for r in d.collect())
+
+
+@pytest.mark.parametrize("frame", sorted(_ITF_FRAMES))
+def test_impute_then_flag_matches_composed_reference(spark, frame):
+    """One medians aggregate + one broadcast stats row gives exactly the
+    imputed columns and flag of impute-then-flag composed from the two
+    single-purpose steps."""
+    from crypto_etl_pipeline_spark.plans.historical import (
+        _flag_outliers,
+        _impute_medians,
+        _impute_then_flag,
+    )
+
+    df = spark.createDataFrame(_ITF_FRAMES[frame], _ITF_SCHEMA)
+    cols = ("price", "x", "n", "z")
+    want = _flag_outliers(_impute_medians(df, cols), F.col("price"))
+    got = _impute_then_flag(df, cols, "price")
+    assert got.dtypes == want.dtypes
+    assert _repr_rows(got) == _repr_rows(want)
+    if frame == "mixed":
+        flagged = {r["id"] for r in got.where("is_outlier").collect()}
+        assert flagged == {7}
+
+
+def _raw_historical(spark, prices):
+    """The dirty Kaggle shape (all strings, padded headers) with the
+    given ``Price`` tokens and fixed, parseable other columns."""
+    cols = [
+        "Rank", "Coin Name", "Symbol", " Price ", "1h", "24h", "7d", "30d",
+        " 24h Volume ", "Circulating Supply", "Total Supply", " Market Cap ",
+    ]
+    rows = [
+        (str(i), f"coin{i}", f"C{i}", p, "1.5%", "-", "0.2%", "-2.0%",
+         f"${i},000 ", f"{i}00,000", f"{i} Million", " $-   ")
+        for i, p in enumerate(prices, 1)
+    ]
+    return spark.createDataFrame(rows, ", ".join(f"`{c}` string" for c in cols))
+
+
+def test_clean_historical_orders(spark):
+    """order="C" is impute-then-flag: the reference composition over the
+    parsed frame, row for row. order="P" flags first, so every null
+    price flags True, and imputation still leaves no null price."""
+    from crypto_etl_pipeline_spark.plans.historical import (
+        NUMERIC_COLS,
+        OUTPUT_COLS,
+        _flag_outliers,
+        _impute_medians,
+        clean_historical,
+        parse_historical,
+    )
+
+    raw = _raw_historical(spark, ["10", " $-   ", "12", "1,000,000", "11", "-", "13"])
+    parsed = parse_historical(raw)
+    want = _flag_outliers(_impute_medians(parsed, NUMERIC_COLS), F.col("current_price"))
+    got = clean_historical(raw, order="C")
+    assert got.columns == list(OUTPUT_COLS)
+    assert _repr_rows(got) == _repr_rows(want.select(*OUTPUT_COLS))
+    assert {r["coin"] for r in got.where("is_outlier").collect()} == {"coin4"}
+
+    p = clean_historical(raw, order="P")
+    flagged = {r["coin"] for r in p.where("is_outlier").collect()}
+    assert {"coin2", "coin6"} <= flagged  # the null prices
+    assert p.where(F.col("current_price").isNull() | F.col("is_outlier").isNull()).count() == 0

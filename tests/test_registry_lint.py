@@ -1,9 +1,10 @@
 """Registry-wide hygiene lints: metadata completeness and a plan-level
 scale guard over every registered query.
 
-Each parametrized case builds its query's plan ONCE and runs all four
-plan checks on it (cartesian, broadcast-hint boundedness, posting-
-self-join cap, fingerprint snapshot) — the fingerprint guard used to be a second full-registry
+Each parametrized case builds its query's plan ONCE and runs every
+plan check on it (cartesian, broadcast-hint boundedness, global
+windows, posting-self-join cap, split exact percentiles, fingerprint
+snapshot) — the fingerprint guard used to be a second full-registry
 pass in test_scale_patterns.py, ~2 min of duplicated plan builds.
 """
 
@@ -66,6 +67,7 @@ def test_no_cartesian_product_plans(name, spark, built_df):
     from plan_fingerprints import fingerprint
 
     from crypto_etl_pipeline_spark.plans.lint import (
+        split_percentiles,
         unbounded_broadcast_hints,
         unbounded_global_windows,
         uncapped_posting_self_joins,
@@ -101,6 +103,16 @@ def test_no_cartesian_product_plans(name, spark, built_df):
             f"{hits} — thread shingle_df_cap/bucket_cap or add an "
             "exact-by-contract waiver with a reason"
         )
+    # 6. Split exact-percentile lint, same plan build: two exact
+    #    `percentile` calls over the same input in one Aggregate build
+    #    and sort the same value->count map twice — one array-percentage
+    #    call gives the same values (plans/lint.py).
+    split = split_percentiles(df)
+    assert not split, (
+        f"{name} computes exact percentiles of one input in separate "
+        f"`percentile` calls {split} — use one "
+        "F.percentile(c, F.lit([p1, p2, ...])) and index it"
+    )
     got = fingerprint(df)
     assert got["cartesian"] == 0, f"{name} plans a CartesianProduct"
     assert got == FINGERPRINTS.get(name), (
@@ -213,3 +225,29 @@ def test_posting_self_join_detector_is_live(spark):
     # joining exploded sides on a NON-exploded key is fine (per-doc fanout)
     onid = a.join(b, F.col("a.id") == F.col("b.id"))
     assert not uncapped_posting_self_joins(onid)
+
+
+def test_split_percentile_detector_is_live(spark):
+    """The detector itself: red on q1/q3 as two exact `percentile`
+    calls over one column, green on one array call, and blind to
+    `percentile_approx` next to an exact `percentile`."""
+    from pyspark.sql import functions as F
+
+    from crypto_etl_pipeline_spark.plans.lint import split_percentiles
+
+    df = spark.createDataFrame([(1, 1.0), (1, 2.0), (2, 3.0)], "g long, v double")
+    v = F.col("v")
+    split = df.agg(F.percentile(v, F.lit(0.25)), F.percentile(v, F.lit(0.75)))
+    assert split_percentiles(split) == [("v", 2)]
+    grouped = df.groupBy("g").agg(F.percentile(v, F.lit(0.1)), F.median(v))
+    assert split_percentiles(grouped) == [("v", 2)]
+
+    q = F.percentile(v, F.lit([0.25, 0.75]))
+    assert not split_percentiles(df.agg(q.getItem(0), q.getItem(1)))
+    assert not split_percentiles(
+        df.agg(F.percentile(v, F.lit(0.5)), F.percentile_approx(v, F.lit(0.5)))
+    )
+    # different inputs are different maps
+    assert not split_percentiles(
+        df.agg(F.percentile(v, F.lit(0.5)), F.percentile(v * 2, F.lit(0.5)))
+    )

@@ -871,6 +871,13 @@ def test_pipeline_historical_clean_builds_without_jobs(spark):
     assert _jobs_started(spark, lambda: fn(spark, SF_SMOKE)) == 0
 
 
+def test_session_does_not_capture_python_call_sites(spark):
+    """get_spark turns DataFrame call-site capture off: with it on,
+    every Column call walks the Python stack and makes extra Py4J
+    round trips to record its file:line for error messages."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_load_table_reinfers_schema_after_rewrite(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
