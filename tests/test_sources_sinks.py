@@ -878,6 +878,30 @@ def test_session_does_not_capture_python_call_sites(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+def test_warm_etl_clean_pass_compiles_no_class(spark):
+    """get_spark sizes the JVM-wide codegen class cache above the
+    benchmark's etl_clean working set (111 classes at sf0.001), so a
+    second pass over its queries is all cache hits. At Spark's default
+    100 entries the LRU cache thrashes and the second pass recompiles."""
+    import json
+
+    from crypto_etl_pipeline_spark.queries import REGISTRY
+
+    workloads = os.path.join(os.path.dirname(__file__), "..", "perfbench", "workloads.json")
+    with open(workloads) as fh:
+        names = json.load(fh)["workloads"]["etl_clean"]["queries"]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        for name in names:
+            REGISTRY[name].fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before == 0
+
+
 def test_load_table_reinfers_schema_after_rewrite(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
