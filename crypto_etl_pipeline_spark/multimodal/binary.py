@@ -53,7 +53,7 @@ MEDIA_SCHEMA = StructType(
 )
 
 
-def attach_fake_payloads(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def attach_fake_payloads(docs: DataFrame) -> DataFrame:
     """Deterministic binary payloads for testing the multimodal plumbing.
 
     payload = UTF-8 bytes of the text; metadata dimensions derive from
@@ -67,17 +67,17 @@ def attach_fake_payloads(docs: DataFrame, id_col: str = "doc_id", text_col: str 
     # codec work to a single core — the same hazard class as AQE
     # coalescing Python grouped stages (operators/timeseries.ewma).
     docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     n = F.octet_length(payload)
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("image/fake").alias("mime"),
             (n % 640 + 1).cast("int").alias("width"),
             (n % 480 + 1).cast("int").alias("height"),
             F.lit(None).cast("long").alias("duration_ms"),
-            F.concat(F.lit("mem://doc/"), F.col(id_col).cast("string")).alias("uri"),
+            F.concat(F.lit("mem://doc/"), F.col("doc_id").cast("string")).alias("uri"),
         ).alias("meta"),
     )
 
@@ -302,8 +302,8 @@ def extract_features_stub(media: DataFrame) -> DataFrame:
     return media.mapInPandas(feats, schema=FEATURE_SCHEMA)
 
 
-def sample_frames_stub(media: DataFrame, every_n_bytes: int = 256) -> DataFrame:
-    """STUB frame sampler: one 'frame' row per every_n_bytes of payload.
+def sample_frames_stub(media: DataFrame) -> DataFrame:
+    """STUB frame sampler: one 'frame' row per 256 bytes of payload.
 
     Demonstrates the 1->N row fan-out shape (video -> frames) through
     mapInPandas; a real sampler would emit decoded frame payloads.
@@ -320,11 +320,11 @@ def sample_frames_stub(media: DataFrame, every_n_bytes: int = 256) -> DataFrame:
         for pdf in batches:
             ids, nos, offs = [], [], []
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = max(len(bytes(p)) // every_n_bytes, 1)
+                n_frames = max(len(bytes(p)) // 256, 1)
                 for i in range(n_frames):
                     ids.append(doc_id)
                     nos.append(i)
-                    offs.append(i * every_n_bytes)
+                    offs.append(i * 256)
             yield pd.DataFrame({"doc_id": ids, "frame_no": nos, "offset": offs})
 
     return media.mapInPandas(frames, schema=schema)
@@ -341,9 +341,9 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_image_stub(media: DataFrame, max_side: int = 224) -> DataFrame:
+def resize_image_stub(media: DataFrame) -> DataFrame:
     """STUB resize: aspect-preserving target dimensions via exact
-    integer arithmetic (``dim * max_side // longest_side``), computed
+    integer arithmetic (``dim * 224 // longest_side``), computed
     over the metadata only — the codec call that would produce resized
     pixels is the marked stub. Upscaling is avoided (min with source).
     Pure-expression: at 100 TB this plans as a metadata-only projection
@@ -356,8 +356,8 @@ def resize_image_stub(media: DataFrame, max_side: int = 224) -> DataFrame:
         "doc_id",
         w.alias("src_w"),
         h.alias("src_h"),
-        F.least(w, (w * max_side).cast("int") / longest).cast("int").alias("out_w"),
-        F.least(h, (h * max_side).cast("int") / longest).cast("int").alias("out_h"),
+        F.least(w, (w * 224).cast("int") / longest).cast("int").alias("out_w"),
+        F.least(h, (h * 224).cast("int") / longest).cast("int").alias("out_h"),
     )
 
 
@@ -466,10 +466,10 @@ def resample_pcm_zoh(samples, src_rate: int, dst_rate: int):
     return samples[idx]
 
 
-def resample_audio(media: DataFrame, dst_rate: int = 4_000) -> DataFrame:
+def resample_audio(media: DataFrame) -> DataFrame:
     """REAL audio resample over Arrow mapInPandas: parse each RIFF/WAVE
     payload (wav_decode — actual byte-level chunk walking), ZOH-resample
-    the PCM to dst_rate, and emit per-doc sample counts, duration, and
+    the PCM to 4 kHz, and emit per-doc sample counts, duration, and
     the int64 sum of the RESAMPLED samples. The pcm_sum only matches an
     independent oracle if header parse (rate), frame decode (int16 LE),
     and index arithmetic are all correct — a stub cannot fake it.
@@ -483,14 +483,14 @@ def resample_audio(media: DataFrame, dst_rate: int = 4_000) -> DataFrame:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 rate, _ch, s = wav_decode(bytes(payload))
-                out = resample_pcm_zoh(s, rate, dst_rate)
+                out = resample_pcm_zoh(s, rate, 4_000)
                 rows.append(
                     (
                         int(doc_id),
                         int(rate),
                         len(s),
                         len(out),
-                        len(out) * 1000 // dst_rate,
+                        len(out) * 1000 // 4_000,
                         int(out.astype(np.int64).sum()),
                     )
                 )
@@ -509,10 +509,10 @@ def resample_audio(media: DataFrame, dst_rate: int = 4_000) -> DataFrame:
     return media.mapInPandas(gen, schema=WAV_DECODED_SCHEMA)
 
 
-def vad_energy_windows(media: DataFrame, window: int = 16) -> DataFrame:
+def vad_energy_windows(media: DataFrame) -> DataFrame:
     """Per-WINDOW short-time energy over REAL decoded PCM: parse each
     RIFF/WAVE payload (wav_decode), split the frames into consecutive
-    full windows of ``window`` samples (trailing remainder dropped —
+    full windows of 16 samples (trailing remainder dropped —
     the contract), and emit one row per (doc, window) with the int64
     sum of squares. DELIBERATELY stops here: the kernel decodes at the
     data edge; thresholding, activity ratios, and segment runs are
@@ -527,11 +527,11 @@ def vad_energy_windows(media: DataFrame, window: int = 16) -> DataFrame:
             ids, ws, sums = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 _rate, _ch, s = wav_decode(bytes(payload))
-                n_win = len(s) // window
+                n_win = len(s) // 16
                 if n_win == 0:
                     continue
                 sq = (
-                    s[: n_win * window].astype(np.int64).reshape(n_win, window)
+                    s[: n_win * 16].astype(np.int64).reshape(n_win, 16)
                     ** 2
                 ).sum(axis=1)
                 ids.extend([int(doc_id)] * n_win)
@@ -606,9 +606,7 @@ def pixel_gray_rows(media: DataFrame) -> DataFrame:
     )
 
 
-def attach_wav_payloads(
-    docs: DataFrame, id_col: str = "doc_id", step: int = 7
-) -> DataFrame:
+def attach_wav_payloads(docs: DataFrame, step: int = 7) -> DataFrame:
     """VALID RIFF/WAVE payloads per document, parameterized ONLY by
     (doc_id, n_chars) so the oracle derives every expected output from
     table columns: src_rate = 8000 + (n_chars%5)*2000 (five distinct
@@ -621,7 +619,7 @@ def attach_wav_payloads(
     JVM-side)."""
     docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     sized = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         (F.lit(8000) + (F.col("n_chars") % 5) * 2000).cast("int").alias("_rate"),
         (F.col("n_chars") % 200 + 20).cast("int").alias("_n"),
     )
@@ -649,19 +647,17 @@ def attach_wav_payloads(
     )
 
 
-def resample_audio_stub(
-    media: DataFrame, src_rate: int = 44_100, dst_rate: int = 16_000
-) -> DataFrame:
+def resample_audio_stub(media: DataFrame) -> DataFrame:
     """STUB audio resample: payload bytes stand in for PCM samples; the
     output sample count and duration follow the exact integer
-    resampling arithmetic (``n * dst // src``). A real implementation
+    resampling arithmetic (``n * dst // src``) from 44.1 kHz to 16 kHz. A real implementation
     would run the polyphase filter inside mapInPandas — the arithmetic
     contract checked here is what any implementation must satisfy."""
     n = F.octet_length(F.col("payload")).cast("long")
-    out = (n * dst_rate).cast("long") / src_rate
+    out = (n * 16_000).cast("long") / 44_100
     return media.select(
         "doc_id",
         n.alias("src_samples"),
         out.cast("long").alias("out_samples"),
-        ((out.cast("long") * 1000) / dst_rate).cast("long").alias("duration_ms"),
+        ((out.cast("long") * 1000) / 16_000).cast("long").alias("duration_ms"),
     )

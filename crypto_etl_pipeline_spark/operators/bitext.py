@@ -17,121 +17,126 @@ everything does not.
 Scale shape: the source side is the BOUNDED side (a structural
 ``limit`` upstream, the ANN-family query contract), so the pair feed
 is |src| x |tgt| with |src| capped — the same broadcast-queries shape
-as brute_force_topk; both k-NN means and the final ranking ride
-windows over that bounded pair frame. At 100 TB the tgt side stays
-partitioned and the src batch streams through it; for unbounded BOTH
-sides, pre-bucket with the IVF/LSH machinery and feed each bucket
-through this operator (the cap/spill-audit discipline of the dedup
-family applies unchanged).
+as brute_force_topk; both k-NN sums and the final ranking ride
+windows over that bounded pair frame. For unbounded BOTH sides, the
+registered ``bitext_mine_bucketed`` query pre-buckets with IVF cells
+and scores within each cell with the same :func:`pair_ci_pd`.
 
 Reference: no embedding or multilingual surface in the reference at
 all (SURVEY §1.2) — north-star extension (VERDICT r12 "worth
 adding" #2).
 
-Float discipline (matches queries/vector.py): per-pair cosine is
-rounded to 4 decimals FIRST; the k-NN means and the margin derive
-from the rounded values in both engines, so the only cross-engine
-float hazard (accumulation order inside the cosine) is absorbed
-before any downstream arithmetic.
+Exact arithmetic, bit-identical in Spark and the DuckDB oracle:
 
-Relationship to the REGISTERED queries (queries/vector.py): this
-module is the DataFrame-level API (float avg over the ACTUAL
-neighborhood) used by callers and the planted-fixture tests; the
-registered bitext_* queries re-express the same scoring in the
-integer-exact oracle contract — margin = (ks+kt)*ci/(si+ti) over
-quantized cosines — which equals cos / mean-of-neighborhood-means
-whenever both sides have full neighborhoods and, like here, divides
-by the actual counts when they don't. The two formulations rank
-identically up to the 1e-4 quantization; the semantics (actual-count
-neighborhoods, positive-cosine candidacy) are the same by
-construction.
+- cosine: components are quantized to ``floor(x * LSH_SCALE)``, so the
+  dot product and both squared norms are sums of integers below 2^53,
+  exact in float64 in any summation order; ``dot / sqrt(na * nb)`` is
+  then three correctly-rounded IEEE operations, and
+  ``ci = floor(cos * 10000 + 0.5)`` is the cosine in units of 1e-4.
+  (A float cosine rounded to 4 decimals is not portable: DuckDB's
+  ``list_cosine_similarity`` works in float32 on FLOAT lists, and a
+  pair within float error of a ``.xxxx5`` boundary rounds differently.)
+- margin: the k-NN "means" stay as integer SUMS (si, ti) with their
+  ACTUAL counts (ks, kt <= k — a vector can have fewer than k
+  positive-cosine candidates, and dividing by a fixed 2k there would
+  inflate every margin it touches), and
+  ``margin = (ks + kt) * ci / (si + ti)`` — one double division of
+  exact integers, equal to cos / mean-of-neighborhood-means whenever
+  ks == kt.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from crypto_etl_pipeline_spark.operators.similarity import _spread, pair_cosine_pd
+from crypto_etl_pipeline_spark.operators.similarity import LSH_SCALE, _spread
+
+BITEXT_K = 4  #: k-NN neighborhood size for the margin denominator
 
 
-def bitext_margin_pairs(
-    src: DataFrame,
-    tgt: DataFrame,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All (src, tgt) pairs with cosine and ratio-margin scores.
+def duck_pair_ci(sq: str, tq: str) -> str:
+    """DuckDB twin of :func:`pair_ci_pd` over two quantized vectors
+    (``floor(x * LSH_SCALE)`` component lists)."""
+    return (
+        f"CAST(floor(list_dot_product({sq}, {tq})"
+        f" / sqrt(list_dot_product({sq}, {sq}) * list_dot_product({tq}, {tq}))"
+        " * 10000 + 0.5) AS BIGINT)"
+    )
 
-    ``src`` must be the bounded side (it is broadcast). Returns
-    (src_id, tgt_id, cos_sim, margin) with cos_sim rounded to 4
-    decimals and margin to 4 decimals computed from rounded cosines
-    and the two k-NN means."""
-    s = src.select(F.col(id_col).alias("src_id"), F.col(vec_col).alias("_svec"))
-    t = _spread(tgt, id_col).select(
-        F.col(id_col).alias("tgt_id"), F.col(vec_col).alias("_tvec")
+
+def pair_ci_pd():
+    """Arrow-batched exact per-pair cosine in units of 1e-4 (``ci``,
+    long): see the module header for why every step is exact."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def pair_ci(sv: pd.Series, tv: pd.Series) -> pd.Series:
+        S = np.floor(np.asarray([np.asarray(x, dtype=np.float64) for x in sv]) * LSH_SCALE)
+        T = np.floor(np.asarray([np.asarray(x, dtype=np.float64) for x in tv]) * LSH_SCALE)
+        num = np.einsum("ij,ij->i", S, T)
+        den = np.sqrt(np.einsum("ij,ij->i", S, S) * np.einsum("ij,ij->i", T, T))
+        return pd.Series(np.floor(num / den * 10000.0 + 0.5).astype(np.int64))
+
+    return pair_ci
+
+
+def bitext_margin_pairs(src: DataFrame, tgt: DataFrame) -> DataFrame:
+    """All positive-cosine (src, tgt) pairs of two ``(vec_id,
+    embedding)`` frames, scored with the integer-exact ratio margin:
+    (src_id, tgt_id, cos_sim, margin), both rounded to 4 decimals.
+    ``src`` must be the bounded side (it is broadcast)."""
+    s = src.select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("_sv"))
+    t = _spread(tgt, "vec_id").select(
+        F.col("vec_id").alias("tgt_id"), F.col("embedding").alias("_tv")
     )
     pairs = (
         t.crossJoin(F.broadcast(s))
-        .select(
-            "src_id",
-            "tgt_id",
-            F.round(pair_cosine_pd()(F.col("_svec"), F.col("_tvec")), 4).alias(
-                "cos_sim"
-            ),
-        )
+        .select("src_id", "tgt_id", pair_ci_pd()(F.col("_sv"), F.col("_tv")).alias("ci"))
         .localCheckpoint(eager=False)
-        # candidacy requires POSITIVE similarity — keeps every k-NN
-        # neighborhood mean positive so the ratio margin is always
-        # well-defined (a cell/slice of mutually-negative cosines has
-        # no mineable pairs by contract)
-        .where(F.col("cos_sim") > 0)
+        # candidacy requires POSITIVE similarity (translations are
+        # strongly positive): keeps every neighborhood sum positive,
+        # so the ratio margin is always well-defined (filter sits
+        # after the checkpoint -> plain-attribute predicate)
+        .where(F.col("ci") > 0)
     )
-    w_s = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.asc("tgt_id"))
-    nn_s = (
+    w_s = Window.partitionBy("src_id").orderBy(F.desc("ci"), F.asc("tgt_id"))
+    nns = (
         pairs.withColumn("_r", F.row_number().over(w_s))
-        .where(F.col("_r") <= k)
+        .where(F.col("_r") <= BITEXT_K)
         .groupBy("src_id")
-        .agg(F.avg("cos_sim").alias("_nn_src"))
+        .agg(F.sum("ci").alias("si"), F.count(F.lit(1)).alias("ks"))
     )
-    w_t = Window.partitionBy("tgt_id").orderBy(F.desc("cos_sim"), F.asc("src_id"))
-    nn_t = (
+    w_t = Window.partitionBy("tgt_id").orderBy(F.desc("ci"), F.asc("src_id"))
+    nnt = (
         pairs.withColumn("_r", F.row_number().over(w_t))
-        .where(F.col("_r") <= k)
+        .where(F.col("_r") <= BITEXT_K)
         .groupBy("tgt_id")
-        .agg(F.avg("cos_sim").alias("_nn_tgt"))
+        .agg(F.sum("ci").alias("ti"), F.count(F.lit(1)).alias("kt"))
     )
     return (
-        pairs.join(F.broadcast(nn_s), "src_id")
-        .join(nn_t, "tgt_id")
+        pairs.join(F.broadcast(nns), "src_id")
+        .join(nnt, "tgt_id")
         .select(
             "src_id",
             "tgt_id",
-            "cos_sim",
+            F.round(F.col("ci") / 10000.0, 4).alias("cos_sim"),
             F.round(
-                F.col("cos_sim")
-                / ((F.col("_nn_src") + F.col("_nn_tgt")) / F.lit(2.0)),
+                ((F.col("ks") + F.col("kt")) * F.col("ci")).cast("double")
+                / F.nullif(F.col("si") + F.col("ti"), F.lit(0)),
                 4,
             ).alias("margin"),
         )
     )
 
 
-def mine_bitext(
-    src: DataFrame,
-    tgt: DataFrame,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Forward mining: the best (highest-margin) tgt candidate per src
-    vector — (src_id, tgt_id, cos_sim, margin). Thresholding is the
-    caller's policy (the registered bitext_margin_threshold_sweep
-    query demonstrates the sweep over its own integer-exact twin of
-    this scoring — see the module header)."""
-    scored = bitext_margin_pairs(src, tgt, k=k, id_col=id_col, vec_col=vec_col)
+def mine_bitext(scored: DataFrame) -> DataFrame:
+    """Forward mining: the best (highest-margin, then highest-cosine,
+    then lowest tgt_id) candidate per src_id of a scored pair frame.
+    Thresholding is the caller's policy."""
     w = Window.partitionBy("src_id").orderBy(
         F.desc("margin"), F.desc("cos_sim"), F.asc("tgt_id")
     )

@@ -25,35 +25,30 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: default geometry: 2^16 bits = 1024 longs = 8 KiB plan literal.
+#: filter geometry: 2^16 bits = 1024 longs = 8 KiB plan literal.
 BLOOM_M_BITS = 1 << 16
 BLOOM_SEEDS = (11, 23, 37, 53)
 
 
-def _positions(col: Column, m_bits: int, seeds: tuple[int, ...]) -> list[Column]:
+def _positions(col: Column) -> list[Column]:
     """k bit positions for a key: pmod(xxhash64(key, seed), m)."""
-    return [F.pmod(F.xxhash64(col, F.lit(s)), F.lit(m_bits)) for s in seeds]
+    return [F.pmod(F.xxhash64(col, F.lit(s)), F.lit(BLOOM_M_BITS)) for s in BLOOM_SEEDS]
 
 
-def build_bloom_bits(
-    df: DataFrame,
-    col: str,
-    m_bits: int = BLOOM_M_BITS,
-    seeds: tuple[int, ...] = BLOOM_SEEDS,
-) -> list[int]:
+def build_bloom_bits(df: DataFrame, col: str) -> list[int]:
     """Aggregate the key column into a bitset (list of m/64 longs).
 
     Distributed part: one explode + DISTINCT over at most m distinct
     positions — the exchange is bounded by the filter geometry, not
-    the key count. Driver part: OR-ing <= m_bits position ints into
+    the key count. Driver part: OR-ing <= BLOOM_M_BITS position ints into
     m/64 longs. Returns plain Python ints suitable for a plan literal.
     """
     pos_rows = (
-        df.select(F.explode(F.array(*_positions(F.col(col), m_bits, seeds))).alias("p"))
+        df.select(F.explode(F.array(*_positions(F.col(col)))).alias("p"))
         .distinct()
         .collect()
     )
-    words = [0] * (m_bits // 64)
+    words = [0] * (BLOOM_M_BITS // 64)
     for r in pos_rows:
         p = int(r["p"])
         words[p // 64] |= 1 << (p % 64)
@@ -61,19 +56,14 @@ def build_bloom_bits(
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
-def bloom_might_contain(
-    col: Column,
-    bits: list[int],
-    m_bits: int = BLOOM_M_BITS,
-    seeds: tuple[int, ...] = BLOOM_SEEDS,
-) -> Column:
+def bloom_might_contain(col: Column, bits: list[int]) -> Column:
     """Membership test as a pure codegen expression: for each seed,
     element_at the 8 KiB long-array literal and getbit the position.
     All k bits set => maybe-member (verify with the exact join);
     any bit clear => definitely absent (safe to drop pre-shuffle)."""
     arr = F.lit(bits)
     test = None
-    for p in _positions(col, m_bits, seeds):
+    for p in _positions(col):
         word = F.element_at(arr, (p / 64).cast("int") + 1)
         bit = F.getbit(word, (p % 64).cast("int")) == 1
         test = bit if test is None else (test & bit)

@@ -342,7 +342,7 @@ def encode_word(word: str, merges: list) -> list:
     return syms
 
 
-def bpe_encode_words(words: DataFrame, merges: list, word_col: str = "word") -> DataFrame:
+def bpe_encode_words(words: DataFrame, merges: list) -> DataFrame:
     """Encode a column of words with a trained merge table.
 
     ``merges``: list of (left, right) pairs in rank order (e.g.
@@ -366,7 +366,7 @@ def bpe_encode_words(words: DataFrame, merges: list, word_col: str = "word") -> 
         cache: dict = {}
         for pdf in batches:
             toks = []
-            for w in pdf[word_col]:
+            for w in pdf["word"]:
                 t = cache.get(w)
                 if t is None:
                     t = encode_word(w, merge_list)

@@ -16,16 +16,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def apply_changeset(
-    snapshot: DataFrame,
-    changes: DataFrame,
-    key: str,
-    op_col: str = "op",
-    seq_col: str = "seq",
-) -> DataFrame:
+def apply_changeset(snapshot: DataFrame, changes: DataFrame, key: str) -> DataFrame:
     """Next snapshot after applying ``changes`` (op in I/U/D).
 
-    The LATEST change per key wins (highest ``seq_col``; ties broken by
+    The LATEST change per key wins (highest ``seq``; ties broken by
     preferring D — a delete at the same sequence number is final).
     Unchanged snapshot rows pass through via an anti join on the change
     keys; surviving I/U rows are unioned in with the snapshot's column
@@ -33,7 +27,7 @@ def apply_changeset(
     idempotent.
     """
     w = Window.partitionBy(key).orderBy(
-        F.desc(seq_col), F.desc(F.col(op_col) == "D")
+        F.desc("seq"), F.desc(F.col("op") == "D")
     )
     latest = (
         changes.withColumn("_rn", F.row_number().over(w))
@@ -41,5 +35,5 @@ def apply_changeset(
         .drop("_rn")
     )
     untouched = snapshot.join(latest.select(key), key, "left_anti")
-    upserts = latest.where(F.col(op_col) != "D").select(*snapshot.columns)
+    upserts = latest.where(F.col("op") != "D").select(*snapshot.columns)
     return untouched.unionByName(upserts)

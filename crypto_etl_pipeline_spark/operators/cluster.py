@@ -118,21 +118,14 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 20,
-    strict: bool = True,
 ) -> DataFrame:
     """(id, component) — component = min node id reachable from id.
 
     ``nodes``: one row per vertex; singletons keep their own id.
     ``edges``: undirected pairs (each edge propagates both ways).
 
-    BEHAVIOR CHANGE (round 5): non-convergence within ``max_iter``
-    RAISES RuntimeError instead of silently returning partial labels —
-    unconverged labels split real components, which corrupted dedup
-    clusters at sf0.1 before the fix. Callers that prefer the old
-    best-effort degraded output over a hard failure (e.g. exploratory
-    runs with a deliberately small iteration budget) pass
-    ``strict=False``; the returned labels are then possibly
-    UNCONVERGED (one component may carry several labels)."""
+    Non-convergence within ``max_iter`` raises RuntimeError: unconverged
+    labels would split real components."""
     # Iterative jobs MUST materialize between rounds: a lazy loop would
     # re-derive the whole upstream plan (here: the similarity self-join
     # producing the edges) once per iteration, and the lineage would
@@ -171,7 +164,7 @@ def connected_components(
         # whose every round is pure fixed cost at this size. The
         # result is the complete (endpoint -> global min root)
         # mapping — identical labels to the loop's fixpoint, so the
-        # strict/max_iter contract is trivially satisfied (converged
+        # max_iter contract is trivially satisfied (converged
         # by construction). The cap is a ROW bound (task memory is
         # O(distinct endpoints), the same class as one hash-agg
         # partition); graphs above it take the distributed loop below,
@@ -254,11 +247,10 @@ def connected_components(
             converged = True
             break
         prev_sum = new_sum
-    if not converged and strict:
+    if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            "(doubled propagation covers diameter 2^rounds — raise max_iter, "
-            "or pass strict=False to accept best-effort labels)"
+            "(doubled propagation covers diameter 2^rounds — raise max_iter)"
         )
     # Singletons (no incident edges) rejoin with component = own id.
     # The label table is collision-density-sized, so AQE will broadcast
@@ -274,23 +266,16 @@ def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    pair_a: str = "id_a",
-    pair_b: str = "id_b",
-    max_iter: int = 20,
-    strict: bool = True,
 ) -> DataFrame:
-    """(doc_id, cluster_id, is_canonical) from near-dup pairs.
+    """(doc_id, cluster_id, is_canonical) from near-dup ``(id_a, id_b)``
+    pairs.
 
     cluster_id = min doc id in the component; the canonical row is the
-    one to KEEP when deduplicating a corpus.
-
-    Since round 5 this RAISES on non-convergence (previously returned
-    best-effort labels, which silently split clusters); pass
-    ``strict=False`` to opt back into tolerant degraded output.
+    one to KEEP when deduplicating a corpus. Raises RuntimeError if the
+    components do not converge (see :func:`connected_components`).
     """
     comp = connected_components(
-        docs.select(id_col), pairs, id_col=id_col, src_col=pair_a, dst_col=pair_b,
-        max_iter=max_iter, strict=strict,
+        docs.select(id_col), pairs, id_col=id_col, src_col="id_a", dst_col="id_b"
     )
     return comp.select(
         F.col("id").alias(id_col),

@@ -17,7 +17,7 @@ operators/phash.py, which is byte-identical in DuckDB — so MinHash,
 SimHash, and the LSH candidate pipeline all carry full value-hash
 DuckDB oracles (the winnow_fingerprints md5 precedent, generalized).
 The Carter-Wegman multiply-mod fan-out means ONE md5 per shingle
-feeds all ``num_hashes`` signature columns — cheaper than the previous
+feeds all ``NUM_HASHES`` signature columns — cheaper than the previous
 one-xxhash64-per-(shingle, i) formulation, and portable.
 """
 
@@ -30,32 +30,33 @@ from crypto_etl_pipeline_spark.operators.phash import md5_long, universal_hash
 from crypto_etl_pipeline_spark.operators.textops import (
     fingerprint_md5,
     jaccard,
-    shingles,
     shingles_of,
     tokens,
 )
 
+#: The MinHash/LSH settings every fingerprint producer and consumer
+#: shares: signatures of ``NUM_HASHES`` values over word ``SHINGLE_N``-
+#: grams, banded ``NUM_BANDS`` ways. A :class:`MinhashStore` is only
+#: probeable with the banding it was built with, so these are constants,
+#: not per-call parameters (the DuckDB oracle reads them too).
+NUM_HASHES = 32
+NUM_BANDS = 8
+SHINGLE_N = 3
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep one canonical row (min id) per normalized-text fingerprint."""
-    fp = fingerprint_md5(F.col(text_col))
+    fp = fingerprint_md5(F.col("text"))
     return (
         df.withColumn("_fp", fp)
         .groupBy("_fp")
-        .agg(F.min(F.col(id_col)).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min(F.col("doc_id")).alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
         .drop("_fp")
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-    shingle_df: DataFrame | None = None,
-) -> DataFrame:
-    """Per-document MinHash signature as ``num_hashes`` plain long columns.
+def minhash_signatures(df: DataFrame, shingle_df: DataFrame | None = None) -> DataFrame:
+    """Per-document MinHash signature as ``NUM_HASHES`` plain long columns.
 
     ``shingle_df`` lets a caller that ALSO needs the shingle sets (the
     Jaccard-verify stage of :func:`near_dup_pairs_minhash`) pass the one
@@ -66,9 +67,9 @@ def minhash_signatures(
 
     Shuffle-based formulation: explode shingles, hash each shingle ONCE
     (``md5_long``, portable to the DuckDB oracle), fan out to
-    ``num_hashes`` flat Carter-Wegman columns ``(A[i]*x+B[i]) % P``,
+    ``NUM_HASHES`` flat Carter-Wegman columns ``(A[i]*x+B[i]) % P``,
     then ``groupBy(id).agg(min...)`` — map-side partial aggregation
-    means the shuffle carries one num_hashes-wide row per
+    means the shuffle carries one NUM_HASHES-wide row per
     (doc x partition), and every expression is a flat codegen-able
     function of an attribute.
 
@@ -80,30 +81,28 @@ def minhash_signatures(
     CollapseProject inlines it — measured ~40,000x re-evaluation of the
     tokenizer per row at 500 docs (minutes vs. milliseconds).
 
-    Documents with fewer than ``shingle_n`` tokens produce no shingles
+    Documents with fewer than ``SHINGLE_N`` tokens produce no shingles
     and therefore no signature row — they cannot near-duplicate anything
     at this shingle size.
 
     The input is repartitioned by id before the explode: compact text
     tables arrive in few (often one) parquet splits, which would pin
-    the hash computation — num_hashes x shingles per doc — to one core.
+    the hash computation — NUM_HASHES x shingles per doc — to one core.
     Hash-partitioning on the id costs one tiny shuffle of the raw text
     and doubles as the groupBy(id) partitioning, so the aggregation
     that follows adds NO second exchange.
     """
-    sh_tbl = shingle_df if shingle_df is not None else _shingle_arrays(df, text_col, id_col, shingle_n)
-    sh = sh_tbl.select(F.col(id_col), F.explode(F.col("_sh")).alias("_shingle"))
-    # md5 behind its own projection: the num_hashes mul-mod columns each
+    sh_tbl = shingle_df if shingle_df is not None else _shingle_arrays(df)
+    sh = sh_tbl.select(F.col("doc_id"), F.explode(F.col("_sh")).alias("_shingle"))
+    # md5 behind its own projection: the NUM_HASHES mul-mod columns each
     # reference the attribute `_x`, so the md5 runs once per shingle.
-    hashed = sh.select(id_col, md5_long(F.col("_shingle"), 8).alias("_x")).select(
-        id_col, *[universal_hash(i, F.col("_x")).alias(f"h{i}") for i in range(num_hashes)]
+    hashed = sh.select("doc_id", md5_long(F.col("_shingle"), 8).alias("_x")).select(
+        "doc_id", *[universal_hash(i, F.col("_x")).alias(f"h{i}") for i in range(NUM_HASHES)]
     )
-    return hashed.groupBy(id_col).agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)])
+    return hashed.groupBy("doc_id").agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(NUM_HASHES)])
 
 
-def _shingle_arrays(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int
-) -> DataFrame:
+def _shingle_arrays(df: DataFrame) -> DataFrame:
     """(id, _sh) — DISTINCT shingle array per doc, repartitioned by id.
 
     Order of operations matters twice here:
@@ -128,22 +127,17 @@ def _shingle_arrays(
     """
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     return (
-        df.repartition(n_parts, F.col(id_col))
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+        df.repartition(n_parts, F.col("doc_id"))
+        .select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
         .select(
-            F.col(id_col),
-            F.array_distinct(shingles_of(F.col("_toks"), shingle_n)).alias("_sh"),
+            F.col("doc_id"),
+            F.array_distinct(shingles_of(F.col("_toks"), SHINGLE_N)).alias("_sh"),
         )
         .localCheckpoint(eager=False)
     )
 
 
-def lsh_buckets(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    num_bands: int = 8,
-) -> DataFrame:
+def lsh_buckets(signatures: DataFrame) -> DataFrame:
     """Band the signature columns into (id, band, bucket) rows.
 
     bucket = md5_long over the '|'-joined band slice of signature
@@ -152,9 +146,9 @@ def lsh_buckets(
     references, fully codegen'd; the downstream self-join shuffles on
     (band, bucket) so cost scales with collision density, never n^2.
     """
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = NUM_HASHES // NUM_BANDS
     banded = signatures.select(
-        id_col,
+        "doc_id",
         *[
             md5_long(
                 F.concat_ws(
@@ -163,17 +157,17 @@ def lsh_buckets(
                 ),
                 15,
             ).alias(f"b{b}")
-            for b in range(num_bands)
+            for b in range(NUM_BANDS)
         ],
     )
     pairs = F.array(
         *[
             F.struct(F.lit(b).alias("band"), F.col(f"b{b}").alias("bucket"))
-            for b in range(num_bands)
+            for b in range(NUM_BANDS)
         ]
     )
-    return banded.select(id_col, F.explode(pairs).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    return banded.select("doc_id", F.explode(pairs).alias("bb")).select(
+        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
 
 
@@ -190,7 +184,7 @@ def cap_hot_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
 
     Recall semantics (documented, not hidden): a pair is lost ONLY if
     every band it collides in is capped. Genuinely near-duplicate pairs
-    collide in several of the ``num_bands`` bands, so the usual casualty
+    collide in several of the ``NUM_BANDS`` bands, so the usual casualty
     is exactly the degenerate boilerplate cluster the cap exists to
     absorb — handle those with :func:`exact_dedup` upstream, which
     collapses identical texts at hash-groupBy cost. Use
@@ -232,11 +226,6 @@ def lsh_hot_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
 
 def near_dup_pairs_minhash(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 3,
     threshold: float = 0.5,
     bucket_cap: int | None = None,
 ) -> DataFrame:
@@ -252,35 +241,27 @@ def near_dup_pairs_minhash(
     exact drop/recall semantics and :func:`lsh_hot_buckets` for the
     spill metric.
     """
-    buckets, sh_tbl = minhash_buckets(df, text_col, id_col, num_hashes, num_bands, shingle_n)
+    buckets, sh_tbl = minhash_buckets(df)
     if bucket_cap is not None:
         buckets = cap_hot_buckets(buckets, bucket_cap)
-    return near_dup_pairs_from_buckets(buckets, sh_tbl, id_col, threshold)
+    return near_dup_pairs_from_buckets(buckets, sh_tbl, threshold)
 
 
-def minhash_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
+def minhash_buckets(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The candidate-generation half of :func:`near_dup_pairs_minhash`,
     exposed so a caller that needs the bucket table for more than the
     pair join — the cascade report reads the :func:`lsh_hot_buckets`
     spill off the same frame — shares ONE tokenize/hash/band pass.
     Returns ``(buckets, shingle_table)``; feed both to
     :func:`near_dup_pairs_from_buckets` for the verified pairs."""
-    sh_tbl = _shingle_arrays(df, text_col, id_col, shingle_n)
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, shingle_df=sh_tbl)
-    return lsh_buckets(sigs, id_col, num_hashes, num_bands), sh_tbl
+    sh_tbl = _shingle_arrays(df)
+    sigs = minhash_signatures(df, shingle_df=sh_tbl)
+    return lsh_buckets(sigs), sh_tbl
 
 
 def near_dup_pairs_from_buckets(
     buckets: DataFrame,
     sh_tbl: DataFrame,
-    id_col: str = "doc_id",
     threshold: float = 0.5,
 ) -> DataFrame:
     """Candidate join + exact-Jaccard verification over a prebuilt
@@ -293,16 +274,16 @@ def near_dup_pairs_from_buckets(
             right,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
     # The SAME checkpointed shingle table feeds both the signature path
     # above and this Jaccard rehydration — one tokenizer pass, one
     # localCheckpoint RDD shared by both consumers.
-    a = sh_tbl.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("sh_a"))
-    b = sh_tbl.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("sh_b"))
+    a = sh_tbl.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("sh_a"))
+    b = sh_tbl.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("sh_b"))
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -387,24 +368,16 @@ class MinhashStore:
         )
 
 
-def build_minhash_store(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 3,
-    batch_id: str = "base",
-) -> MinhashStore:
+def build_minhash_store(df: DataFrame, batch_id: str = "base") -> MinhashStore:
     """Fingerprint a corpus once into a :class:`MinhashStore`, tagged
     as ingest batch ``batch_id``.
 
     One shared shingle pass feeds signatures, bands, and the stored
     shingle sets (same single-tokenizer discipline as
     :func:`near_dup_pairs_minhash`)."""
-    sh = _shingle_arrays(df, text_col, id_col, shingle_n)
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, shingle_df=sh)
-    bands = lsh_buckets(sigs, id_col, num_hashes, num_bands)
+    sh = _shingle_arrays(df)
+    sigs = minhash_signatures(df, shingle_df=sh)
+    bands = lsh_buckets(sigs)
     tag = F.lit(batch_id).alias("ingest_batch")
     return MinhashStore(
         sigs=sigs.select("*", tag),
@@ -416,11 +389,6 @@ def build_minhash_store(
 def incremental_near_dups(
     new_docs: DataFrame,
     store: MinhashStore,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    shingle_n: int = 3,
     threshold: float = 0.5,
     bucket_cap: int | None = None,
     batch_id: str = "delta",
@@ -455,11 +423,9 @@ def incremental_near_dups(
     scales with bucket collisions against new docs only.
     """
     tag = F.lit(batch_id).alias("ingest_batch")
-    sh_new = _shingle_arrays(new_docs, text_col, id_col, shingle_n)
-    sigs_new = minhash_signatures(
-        new_docs, text_col, id_col, num_hashes, shingle_n, shingle_df=sh_new
-    )
-    bands_new = lsh_buckets(sigs_new, id_col, num_hashes, num_bands).select("*", tag)
+    sh_new = _shingle_arrays(new_docs)
+    sigs_new = minhash_signatures(new_docs, shingle_df=sh_new)
+    bands_new = lsh_buckets(sigs_new).select("*", tag)
     sigs_new = sigs_new.select("*", tag)
     sh_new = sh_new.select("*", tag)
 
@@ -471,12 +437,12 @@ def incremental_near_dups(
         # capped by the same rule so both halves of a hot bucket drop.
         all_bands = cap_hot_buckets(all_bands, bucket_cap)
         bands_probe = all_bands.join(
-            bands_new.select(id_col).distinct(), id_col, "left_semi"
+            bands_new.select("doc_id").distinct(), "doc_id", "left_semi"
         )
     else:
         bands_probe = bands_new
-    nb = bands_probe.select(F.col(id_col).alias("_nid"), "band", "bucket")
-    ab = all_bands.select(F.col(id_col).alias("_oid"), "band", "bucket")
+    nb = bands_probe.select(F.col("doc_id").alias("_nid"), "band", "bucket")
+    ab = all_bands.select(F.col("doc_id").alias("_oid"), "band", "bucket")
     # New side probes the combined band table: (new x old) pairs appear
     # once, (new x new) pairs twice (once from each probe) — normalized
     # ordering + dropDuplicates collapses them, matching the batch
@@ -491,8 +457,8 @@ def incremental_near_dups(
         .dropDuplicates(["id_a", "id_b"])
     )
     sh_all = store.shingles.unionByName(sh_new)
-    a = sh_all.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("sh_a"))
-    b = sh_all.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("sh_b"))
+    a = sh_all.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("sh_a"))
+    b = sh_all.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("sh_b"))
     pairs = (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -508,18 +474,12 @@ def incremental_near_dups(
     return pairs, updated
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (rolling-hash selection).
 
     The classic local-fingerprinting scheme (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 "Winnowing: Local Algorithms for Document Fingerprinting"):
-    hash every word ``k``-gram, slide a window of ``w`` consecutive
+    SIGMOD'03 "Winnowing: Local Algorithms for Document Fingerprinting"),
+    with ``k`` = 3 and ``w`` = 4: hash every word ``k``-gram, slide a window of ``w`` consecutive
     hashes over the sequence, keep the minimum hash of each window, and
     emit the distinct minima as the document's fingerprint set. Any
     shared substring longer than ``w + k - 1`` words between two
@@ -543,32 +503,27 @@ def winnow_fingerprints(
     # scan on one core (the round-8 Generate pathology; found here by
     # the round-9 full-registry bench — 16.3 s -> 1.9 s at sf0.1).
     arr = (
-        df.repartition(n_parts, F.col(id_col))
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(F.col(id_col), shingles_of(F.col("_toks"), k).alias("_grams"))
+        df.repartition(n_parts, F.col("doc_id"))
+        .select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
+        .select(F.col("doc_id"), shingles_of(F.col("_toks"), 3).alias("_grams"))
         .localCheckpoint(eager=False)
     )
     grams = arr.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_grams").alias("_m"),
         F.posexplode("_grams").alias("_pos", "_g"),
     )
-    hashed = grams.select(id_col, "_m", "_pos", F.md5(F.col("_g")).alias("_h"))
-    win = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(Window.currentRow, w - 1)
+    hashed = grams.select("doc_id", "_m", "_pos", F.md5(F.col("_g")).alias("_h"))
+    win = Window.partitionBy("doc_id").orderBy("_pos").rowsBetween(Window.currentRow, 4 - 1)
     return (
         hashed.withColumn("fingerprint", F.min("_h").over(win))
-        .where(F.col("_pos") <= F.greatest(F.col("_m") - w, F.lit(0)))
-        .select(id_col, "fingerprint")
+        .where(F.col("_pos") <= F.greatest(F.col("_m") - 4, F.lit(0)))
+        .select("doc_id", "fingerprint")
         .distinct()
     )
 
 
-def exact_repeated_substrings(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 10,
-) -> DataFrame:
+def exact_repeated_substrings(docs: DataFrame, min_len: int = 10) -> DataFrame:
     """CORPUS-level exact-substring dedup (the sorted-suffix method of
     Lee et al. ACL'22, ExactSubstr): every maximal token span of
     >= ``min_len`` tokens that occurs >= 2 times ANYWHERE in the
@@ -607,14 +562,14 @@ def exact_repeated_substrings(
     # InferFiltersFromGenerate pathology re-runs the tokenizer over the
     # raw single-split scan otherwise (see _posting_shingles)
     arr = (
-        docs.repartition(n_parts, F.col(id_col))
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(F.col(id_col), shingles_of(F.col("_toks"), min_len).alias("_g"))
+        docs.repartition(n_parts, F.col("doc_id"))
+        .select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
+        .select(F.col("doc_id"), shingles_of(F.col("_toks"), min_len).alias("_g"))
         .localCheckpoint(eager=False)
     )
     pos = arr.select(
-        F.col(id_col), F.posexplode("_g").alias("_p0", "_gram")
-    ).select(id_col, (F.col("_p0") + 1).cast("long").alias("pos"), "_gram")
+        F.col("doc_id"), F.posexplode("_g").alias("_p0", "_gram")
+    ).select("doc_id", (F.col("_p0") + 1).cast("long").alias("pos"), "_gram")
     # occurrence counts via groupBy + join-back, NOT count-over-window:
     # a window has no map-side partial aggregation and AQE does not
     # split window partitions, so one boilerplate gram repeated 10^8
@@ -628,11 +583,11 @@ def exact_repeated_substrings(
         .agg(F.count(F.lit(1)).alias("occ"))
         .where(F.col("occ") >= 2)
     )
-    rep = pos.join(occ, "_gram").select(id_col, "pos", "occ")
-    w_isl = Window.partitionBy(id_col).orderBy("pos")
+    rep = pos.join(occ, "_gram").select("doc_id", "pos", "occ")
+    w_isl = Window.partitionBy("doc_id").orderBy("pos")
     return (
         rep.withColumn("_grp", F.col("pos") - F.row_number().over(w_isl))
-        .groupBy(id_col, "_grp")
+        .groupBy("doc_id", "_grp")
         .agg(
             F.min("pos").alias("span_start"),
             (F.count(F.lit(1)) + F.lit(min_len - 1)).cast("long").alias("span_tokens"),
@@ -643,12 +598,7 @@ def exact_repeated_substrings(
     )
 
 
-def exact_substr_gram_counts(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 10,
-) -> DataFrame:
+def exact_substr_gram_counts(docs: DataFrame, min_len: int = 10) -> DataFrame:
     """(gram, n) occurrence counts of length-``min_len`` token shingles
     — the WHOLE persisted state of incremental exact-substring dedup.
     Counts are mergeable by sum, so the production layout is a parquet
@@ -658,10 +608,10 @@ def exact_substr_gram_counts(
     is vocabulary-of-grams sized, far below corpus size."""
     arr = (
         docs.repartition(
-            docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+            docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id")
         )
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(F.col(id_col), shingles_of(F.col("_toks"), min_len).alias("_g"))
+        .select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
+        .select(F.col("doc_id"), shingles_of(F.col("_toks"), min_len).alias("_g"))
         .localCheckpoint(eager=False)
     )
     return (
@@ -674,8 +624,6 @@ def exact_substr_gram_counts(
 def incremental_repeated_substrings(
     new_docs: DataFrame,
     stored_counts: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_len: int = 10,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental ExactSubstr: repeated spans in the NEW batch against
@@ -693,15 +641,15 @@ def incremental_repeated_substrings(
 
     arr = (
         new_docs.repartition(
-            new_docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+            new_docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id")
         )
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(F.col(id_col), shingles_of(F.col("_toks"), min_len).alias("_g"))
+        .select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
+        .select(F.col("doc_id"), shingles_of(F.col("_toks"), min_len).alias("_g"))
         .localCheckpoint(eager=False)
     )
     pos = arr.select(
-        F.col(id_col), F.posexplode("_g").alias("_p0", "gram")
-    ).select(id_col, (F.col("_p0") + 1).cast("long").alias("pos"), "gram")
+        F.col("doc_id"), F.posexplode("_g").alias("_p0", "gram")
+    ).select("doc_id", (F.col("_p0") + 1).cast("long").alias("pos"), "gram")
     new_counts = (
         pos.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
@@ -712,12 +660,12 @@ def incremental_repeated_substrings(
         (F.col("n") + F.coalesce("_n_old", F.lit(0))).cast("long").alias("occ"),
     )
     rep = pos.join(tot, "gram").where(F.col("occ") >= 2).select(
-        id_col, "pos", "occ"
+        "doc_id", "pos", "occ"
     )
-    w_isl = Window.partitionBy(id_col).orderBy("pos")
+    w_isl = Window.partitionBy("doc_id").orderBy("pos")
     spans = (
         rep.withColumn("_grp", F.col("pos") - F.row_number().over(w_isl))
-        .groupBy(id_col, "_grp")
+        .groupBy("doc_id", "_grp")
         .agg(
             F.min("pos").alias("span_start"),
             (F.count(F.lit(1)) + F.lit(min_len - 1))
@@ -731,12 +679,7 @@ def incremental_repeated_substrings(
     return spans, new_counts
 
 
-def exact_repeated_substrings_excise(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 10,
-) -> DataFrame:
+def exact_repeated_substrings_excise(docs: DataFrame, min_len: int = 10) -> DataFrame:
     """The APPLY half of :func:`exact_repeated_substrings` — ExactSubstr's
     dedup policy (Lee et al. ACL'22): the CORPUS-FIRST occurrence of
     every repeated substring survives, all later occurrences are
@@ -760,30 +703,30 @@ def exact_repeated_substrings_excise(
     window sliver (tiny relative to the corpus) shuffles."""
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
     arr = (
-        docs.repartition(n_parts, F.col(id_col))
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+        docs.repartition(n_parts, F.col("doc_id"))
+        .select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "_toks",
             shingles_of(F.col("_toks"), min_len).alias("_g"),
         )
         .localCheckpoint(eager=False)
     )
     pos = arr.select(
-        F.col(id_col), F.posexplode("_g").alias("_p0", "_gram")
-    ).select(id_col, (F.col("_p0") + 1).cast("long").alias("pos"), "_gram")
+        F.col("doc_id"), F.posexplode("_g").alias("_p0", "_gram")
+    ).select("doc_id", (F.col("_p0") + 1).cast("long").alias("pos"), "_gram")
     span = F.struct(
         F.col("pos").alias("s"),
         (F.col("pos") + min_len - 1).alias("e"),
     )
     # per-gram count + corpus-first occurrence in ONE map-side-combined
     # aggregate; (id, pos) is unique so min(struct) == rank-1 of the
-    # (id_col, pos) ordering the spec calls for
+    # (doc_id, pos) ordering the spec calls for
     gstats = (
         pos.groupBy("_gram")
         .agg(
             F.count(F.lit(1)).alias("occ"),
-            F.min(F.struct(F.col(id_col).alias("_i"), F.col("pos").alias("_p"))).alias(
+            F.min(F.struct(F.col("doc_id").alias("_i"), F.col("pos").alias("_p"))).alias(
                 "_first"
             ),
         )
@@ -791,14 +734,14 @@ def exact_repeated_substrings_excise(
     )
     rep = pos.join(gstats, "_gram").withColumn(
         "_is_first",
-        (F.col(id_col) == F.col("_first._i")) & (F.col("pos") == F.col("_first._p")),
+        (F.col("doc_id") == F.col("_first._i")) & (F.col("pos") == F.col("_first._p")),
     )
-    iv = rep.groupBy(id_col).agg(
+    iv = rep.groupBy("doc_id").agg(
         F.collect_list(F.when(~F.col("_is_first"), span)).alias("_nf"),
         F.collect_list(F.when(F.col("_is_first"), span)).alias("_ff"),
     )
-    joined = arr.join(iv, id_col, "left").select(
-        F.col(id_col),
+    joined = arr.join(iv, "doc_id", "left").select(
+        F.col("doc_id"),
         "_toks",
         F.coalesce(F.col("_nf"), F.array()).alias("_nfn"),
         F.coalesce(F.col("_ff"), F.array()).alias("_ffn"),
@@ -811,19 +754,14 @@ def exact_repeated_substrings_excise(
         lambda x, i: ~(covered("_nfn", i) & ~covered("_ffn", i)),
     )
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_toks").cast("long").alias("n_tokens"),
         (F.size("_toks") - F.size(kept)).cast("long").alias("n_removed"),
         F.when(F.size(kept) > 0, F.array_join(kept, " ")).alias("clean_text"),
     )
 
 
-def simhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 1,
-) -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """60-bit SimHash per document as (id, simhash).
 
     Classic sign-aggregation: for each bit b, sum +/-1 over the token
@@ -841,23 +779,23 @@ def simhash_signatures(
     int — ``shiftright`` does not accept a column shift count).
     """
     n_bits = 60
-    sh = shingles(F.col(text_col), shingle_n) if shingle_n > 1 else F.split(F.col(text_col), r"[ \t\n\f\r]+")
+    sh = F.split(F.col("text"), r"[ \t\n\f\r]+")
     n_parts = df.sparkSession.sparkContext.defaultParallelism
-    tok = df.repartition(n_parts, F.col(id_col)).select(F.col(id_col), F.explode(sh).alias("_t"))
-    hashed = tok.select(id_col, md5_long(F.col("_t"), 15).alias("_h"))
+    tok = df.repartition(n_parts, F.col("doc_id")).select(F.col("doc_id"), F.explode(sh).alias("_t"))
+    hashed = tok.select("doc_id", md5_long(F.col("_t"), 15).alias("_h"))
     bits = hashed.select(
-        id_col,
+        "doc_id",
         *[
             F.when(F.shiftright(F.col("_h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1).alias(f"s{b}")
             for b in range(n_bits)
         ],
     )
-    sums = bits.groupBy(id_col).agg(*[F.sum(f"s{b}").alias(f"s{b}") for b in range(n_bits)])
+    sums = bits.groupBy("doc_id").agg(*[F.sum(f"s{b}").alias(f"s{b}") for b in range(n_bits)])
     sig = None
     for b in range(n_bits):
         term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
         sig = term if sig is None else sig.bitwiseOR(term)
-    return sums.select(id_col, sig.alias("simhash"))
+    return sums.select("doc_id", sig.alias("simhash"))
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -865,13 +803,7 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def prefix_filter_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def prefix_filter_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT set-similarity join via prefix filtering (AllPairs /
     SSJoin family — Bayardo et al., WWW'07; Chaudhuri et al., ICDE'06):
     all pairs with shingle-Jaccard >= ``threshold``, with a candidate
@@ -913,10 +845,10 @@ def prefix_filter_pairs(
     per-pair tightest-bound aggregation -> exact Jaccard verify by
     array rehydration (same pattern as the LSH verify stage above).
     """
-    sh = _shingle_arrays(df, text_col, id_col, shingle_n)
-    cand = _prefix_candidates(sh, id_col, threshold)
-    sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"))
-    sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"))
+    sh = _shingle_arrays(df)
+    cand = _prefix_candidates(sh, "doc_id", threshold)
+    sh_a = sh.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sh_a"))
+    sh_b = sh.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sh_b"))
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
     union = F.size("_sh_a") + F.size("_sh_b") - inter
     jac = inter / union
@@ -1010,13 +942,7 @@ def _prefix_candidates(
     )
 
 
-def duplicated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    gram: int = 8,
-    min_run: int = 3,
-) -> DataFrame:
+def duplicated_spans(docs: DataFrame, gram: int = 8, min_run: int = 3) -> DataFrame:
     """EXACT shared-span extents per document pair (Lee et al. ACL'22):
     (id_a, id_b, n_gram_matches, max_run_grams, max_span_tokens).
 
@@ -1037,8 +963,8 @@ def duplicated_spans(
 
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
     grams = (
-        docs.repartition(n_parts, F.col(id_col))
-        .select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks"))
+        docs.repartition(n_parts, F.col("doc_id"))
+        .select(F.col("doc_id").alias("_id"), tokens(F.col("text")).alias("_toks"))
         .select("_id", shingles_of(F.col("_toks"), gram).alias("_g"))
         .localCheckpoint(eager=False)
     )
@@ -1073,8 +999,6 @@ def duplicated_spans(
 
 def excise_duplicated_spans(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     gram: int = 8,
     min_run: int = 3,
 ) -> DataFrame:
@@ -1102,8 +1026,8 @@ def excise_duplicated_spans(
 
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
     base = (
-        docs.repartition(n_parts, F.col(id_col))
-        .select(F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks"))
+        docs.repartition(n_parts, F.col("doc_id"))
+        .select(F.col("doc_id").alias("_id"), tokens(F.col("text")).alias("_toks"))
         .localCheckpoint(eager=False)
     )
     pos = base.select(
@@ -1163,7 +1087,7 @@ def excise_duplicated_spans(
         lambda x, i: ~F.exists(F.col("_ivn"), lambda v: (i >= v.s) & (i <= v.e)),
     )
     return joined.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.size("_toks").alias("n_tokens"),
         (F.size("_toks") - F.size(kept)).alias("n_removed"),
         F.array_join(kept, " ").alias("clean_text"),
@@ -1174,13 +1098,7 @@ def excise_duplicated_spans(
 # Shared exact shingle-posting pair feed (+ hot-shingle DF cap)
 # --------------------------------------------------------------------------
 
-def _posting_shingles(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    block_col: str | None,
-) -> DataFrame:
+def _posting_shingles(docs: DataFrame, block_col: str | None) -> DataFrame:
     """(id, [block], _sh) distinct-shingle arrays, repartitioned by id
     and CHECKPOINTED. The checkpoint is not just reuse: Catalyst's
     infer-filters-from-Generate otherwise pushes a size()/isnotnull
@@ -1189,13 +1107,13 @@ def _posting_shingles(
     parquet scan on one core — measured 18 s vs ~1 s at sf0.1 on the
     spill query before this was shared."""
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    cols = [F.col(id_col)] + ([F.col(block_col)] if block_col else [])
+    cols = [F.col("doc_id")] + ([F.col(block_col)] if block_col else [])
     return (
-        docs.repartition(n_parts, F.col(id_col))
-        .select(*cols, tokens(F.col(text_col)).alias("_toks"))
+        docs.repartition(n_parts, F.col("doc_id"))
+        .select(*cols, tokens(F.col("text")).alias("_toks"))
         .select(
             *cols,
-            F.array_distinct(shingles_of(F.col("_toks"), shingle_n)).alias("_sh"),
+            F.array_distinct(shingles_of(F.col("_toks"), SHINGLE_N)).alias("_sh"),
         )
         .localCheckpoint(eager=False)
     )
@@ -1203,9 +1121,6 @@ def _posting_shingles(
 
 def shingle_posting_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     block_col: str | None = None,
     shingle_df_cap: int | None = None,
     shingle_df: DataFrame | None = None,
@@ -1246,7 +1161,7 @@ def shingle_posting_pairs(
     :func:`hot_shingle_spill` before choosing one; default ``None``
     keeps the feed exact.
 
-    ``shingle_df``: pre-built ``(id_col, [block_col], _sh)`` distinct-
+    ``shingle_df``: pre-built ``(doc_id, [block_col], _sh)`` distinct-
     shingle-array table (e.g. a checkpointed :func:`_shingle_arrays`)
     so a caller sharing the tokenizer pass with MinHash signatures
     tokenizes once.
@@ -1256,10 +1171,10 @@ def shingle_posting_pairs(
     sh = (
         shingle_df
         if shingle_df is not None
-        else _posting_shingles(docs, text_col, id_col, shingle_n, block_col)
+        else _posting_shingles(docs, block_col)
     )
-    sizes = sh.select(F.col(id_col), F.size("_sh").alias("_sz"))
-    post_cols = [F.col(id_col)] + ([F.col(block_col)] if block_col else [])
+    sizes = sh.select(F.col("doc_id"), F.size("_sh").alias("_sz"))
+    post_cols = [F.col("doc_id")] + ([F.col(block_col)] if block_col else [])
     post = sh.select(*post_cols, F.explode("_sh").alias("_g"))
     if shingle_df_cap is not None:
         w = Window.partitionBy(*(([block_col] if block_col else []) + ["_g"]))
@@ -1270,14 +1185,14 @@ def shingle_posting_pairs(
         )
     a, b = post.alias("a"), post.alias("b")
     cond = (F.col("a._g") == F.col("b._g")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+        F.col("a.doc_id") < F.col("b.doc_id")
     )
     if block_col:
         cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
     inter = (
         a.join(b, cond)
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
@@ -1285,19 +1200,15 @@ def shingle_posting_pairs(
     # forcing it driver-side is the 100 TB anti-pattern. AQE broadcasts
     # it at test scale and falls back to a shuffle join beyond the
     # threshold.
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("_sz").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("_sz").alias("size_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("_sz").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("_sz").alias("size_b"))
     return inter.join(sa, "id_a").join(sb, "id_b")
 
 
 def hot_shingle_spill(
     docs: DataFrame,
     shingle_df_cap: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     block_col: str | None = None,
-    shingle_df: DataFrame | None = None,
 ) -> DataFrame:
     """The spill metric for :func:`shingle_posting_pairs`'s cap — one
     row per (block, shingle) a cap of ``shingle_df_cap`` would drop:
@@ -1305,11 +1216,7 @@ def hot_shingle_spill(
     would otherwise have generated (the observability half of the cap;
     a silent cap would read as full coverage — ``lsh_hot_buckets``
     discipline)."""
-    sh = (
-        shingle_df
-        if shingle_df is not None
-        else _posting_shingles(docs, text_col, id_col, shingle_n, block_col)
-    )
+    sh = _posting_shingles(docs, block_col)
     post_cols = ([F.col(block_col)] if block_col else []) + [
         F.explode("_sh").alias("shingle")
     ]

@@ -14,13 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: PageRank damping factor ``d``
+DAMPING = 0.85
+
 
 def pagerank(
     edges: DataFrame,
     iters: int = 2,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
     every_node_has_in_edges: bool = False,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
@@ -88,12 +88,12 @@ def pagerank(
         # from scratch; behind the cut it runs once and both read the
         # materialized rows (guide §2.4 / the kcore_peel twin fix).
         e0 = edges.localCheckpoint(eager=False)
-        deg = e0.groupBy(src).agg(F.count(F.lit(1)).alias("_deg"))
-        e = e0.join(F.broadcast(deg), src).localCheckpoint(eager=False)
+        deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
+        e = e0.join(F.broadcast(deg), "src").localCheckpoint(eager=False)
     else:
         e = (
-            edges.repartition(n_part, F.col(src))
-            .withColumn("_deg", F.count(F.lit(1)).over(Window.partitionBy(src)))
+            edges.repartition(n_part, F.col("src"))
+            .withColumn("_deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
             .localCheckpoint(eager=False)
         )
     nodes = None
@@ -101,8 +101,8 @@ def pagerank(
         # Derived from the checkpointed edges so the edge-building
         # subtree is still executed only once.
         nodes = (
-            e.select(F.col(src).alias("node"))
-            .unionByName(e.select(F.col(dst).alias("node")))
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
             .distinct()
             .localCheckpoint(eager=False)
         )
@@ -113,15 +113,15 @@ def pagerank(
             # every edge is exactly 1/outdeg, so the first iteration
             # needs NO rank join at all — one groupBy over e.
             contribs = e.select(
-                F.col(dst).alias("node"), (F.lit(1.0) / F.col("_deg")).alias("_c")
+                F.col("dst").alias("node"), (F.lit(1.0) / F.col("_deg")).alias("_c")
             )
         else:
             rhs = F.broadcast(ranks) if broadcast_ranks else ranks
-            contribs = e.join(rhs, e[src] == rhs["node"]).select(
-                F.col(dst).alias("node"), (F.col("rank") / F.col("_deg")).alias("_c")
+            contribs = e.join(rhs, e["src"] == rhs["node"]).select(
+                F.col("dst").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c")
             )
         agg = contribs.groupBy("node").agg(F.sum("_c").alias("_s"))
-        base = (1.0 - damping) + damping * F.coalesce(F.col("_s"), F.lit(0.0))
+        base = (1.0 - DAMPING) + DAMPING * F.coalesce(F.col("_s"), F.lit(0.0))
         if every_node_has_in_edges:
             # e.g. a bidirectional edge set: contribs already covers
             # every node, so the per-iteration left join back to the
@@ -314,14 +314,8 @@ def kcore_peel(
     return alive.select("node", "deg0", F.col("deg").alias("deg_final"))
 
 
-def label_propagation(
-    edges: DataFrame,
-    iters: int = 2,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_labels: bool = False,
-) -> DataFrame:
-    """(node, community) after ``iters`` SYNCHRONOUS label-propagation
+def label_propagation(edges: DataFrame, broadcast_labels: bool = False) -> DataFrame:
+    """(node, community) after 2 SYNCHRONOUS label-propagation
     rounds (Raghavan et al. 2007) from community = own node id.
 
     Update rule: community(v) <- the most frequent community among
@@ -342,8 +336,6 @@ def label_propagation(
     nodes should union them back unchanged.
     """
     spark = edges.sparkSession
-    if iters < 1:
-        raise ValueError("label_propagation needs at least one iteration")
     try:
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
@@ -355,7 +347,7 @@ def label_propagation(
     # iters=2). Non-broadcast additionally pre-partitions on the join
     # key so every round's label join reuses one exchange.
     e = (
-        edges if broadcast_labels else edges.repartition(n_part, F.col(src))
+        edges if broadcast_labels else edges.repartition(n_part, F.col("src"))
     ).localCheckpoint(eager=False)
 
     def _argmax(cnt: DataFrame) -> DataFrame:
@@ -367,13 +359,13 @@ def label_propagation(
         return m.select("node", (-F.col("_m.nc")).alias("community"))
 
     labels = None
-    for i in range(iters):
+    for i in range(2):
         if i == 0:
-            nbr = e.select(F.col(dst).alias("node"), F.col(src).alias("community"))
+            nbr = e.select(F.col("dst").alias("node"), F.col("src").alias("community"))
         else:
             rhs = F.broadcast(labels) if broadcast_labels else labels
-            nbr = e.join(rhs, e[src] == rhs["node"]).select(
-                F.col(dst).alias("node"), "community"
+            nbr = e.join(rhs, e["src"] == rhs["node"]).select(
+                F.col("dst").alias("node"), "community"
             )
         cnt = nbr.groupBy("node", "community").agg(F.count(F.lit(1)).alias("_cnt"))
         labels = _argmax(cnt)

@@ -20,13 +20,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def zscore_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    out_col: str = "zscore",
-) -> DataFrame:
-    """Per-group z-score via grouped-map applyInPandas.
+def zscore_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Per-group z-score, appended as ``zscore``, via grouped-map
+    applyInPandas.
 
     Population stddev==0 or single-row groups yield null (matching the
     SQL convention where sample stddev of one row is null).
@@ -43,7 +39,7 @@ def zscore_by_group(
         n_part = spark.sparkContext.defaultParallelism
     df = df.repartition(n_part, F.col(group_col))
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{fields}, {out_col} double"
+    schema = f"{fields}, zscore double"
 
     def norm(pdf: pd.DataFrame) -> pd.DataFrame:
         v = pdf[value_col]
@@ -52,6 +48,6 @@ def zscore_by_group(
             z = pd.Series([None] * len(pdf), dtype="float64")
         else:
             z = (v - v.mean()) / std
-        return pdf.assign(**{out_col: z})
+        return pdf.assign(zscore=z)
 
     return df.groupBy(group_col).applyInPandas(norm, schema=schema)

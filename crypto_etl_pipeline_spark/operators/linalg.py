@@ -96,7 +96,6 @@ def pca_top_component(
     vec_col: str,
     dim: int,
     iters: int = 2,
-    round_to: int = 6,
 ) -> DataFrame:
     """Top principal component of an embedding corpus.
 
@@ -115,7 +114,7 @@ def pca_top_component(
     rows = moment_rows(df, vec_col, dim).collect()
     cov, _, _ = covariance_from_moments(rows, dim)
     v, ray = power_iteration(cov, iters)
-    out = [(int(i), round(float(v[i]), round_to), round(ray, round_to)) for i in range(dim)]
+    out = [(int(i), round(float(v[i]), 6), round(ray, 6)) for i in range(dim)]
     return spark.createDataFrame(out, "pos int, loading double, eigenvalue double")
 
 
@@ -162,7 +161,6 @@ def pca_top_by_group(
     vec_col: str,
     dim: int,
     iters: int = 2,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group top principal component summary: (group, n_vecs,
     eigenvalue, explained_share). Driver-side work is G power
@@ -181,7 +179,7 @@ def pca_top_by_group(
         v, ray = power_iteration(cov, iters)
         trace = float(np.trace(cov))
         out.append(
-            (g, int(n), round(ray, round_to), round(ray / trace, round_to))
+            (g, int(n), round(ray, 6), round(ray / trace, 6))
         )
     gtype = df.schema[group_col].dataType.simpleString()
     return spark.createDataFrame(
@@ -195,7 +193,6 @@ def pca_residual_scores(
     vec_col: str,
     mean: np.ndarray,
     component: np.ndarray,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-vector spectral decomposition against a fitted component:
     pc1_score = (x - mean)·v and residual = ||x - mean||² - score²
@@ -223,6 +220,6 @@ def pca_residual_scores(
     norm2 = dot(x, x) - 2.0 * dot(x, mlit) + F.lit(mm)
     return df.select(
         F.col(id_col),
-        F.round(score, round_to).alias("pc1_score"),
-        F.round(norm2 - score * score, round_to).alias("residual"),
+        F.round(score, 6).alias("pc1_score"),
+        F.round(norm2 - score * score, 6).alias("residual"),
     )

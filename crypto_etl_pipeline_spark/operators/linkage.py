@@ -36,8 +36,6 @@ def blocked_fuzzy_join(
     left_text: str,
     right_text: str,
     block,
-    max_dist: int = 2,
-    top_k: int = 1,
     block_cap: int | None = None,
 ) -> DataFrame:
     """Best fuzzy matches per left row within shared blocks.
@@ -71,9 +69,9 @@ def blocked_fuzzy_join(
         F.asc("dist"), F.asc(right_text)
     )
     return (
-        cand.where(F.col("dist") <= max_dist)
+        cand.where(F.col("dist") <= 2)
         .withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= top_k)
+        .where(F.col("_rk") <= 1)
         .drop("_block", "_rk")
     )
 

@@ -38,20 +38,15 @@ from pyspark.sql import functions as F
 from crypto_etl_pipeline_spark.operators.phash import md5_long
 
 
-def hashed_presence_features(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 256,
-) -> DataFrame:
+def hashed_presence_features(docs: DataFrame, dim: int = 256) -> DataFrame:
     """(doc_id, feat) — one row per DISTINCT token bucket per document
     (binary presence features; dedup before hashing keeps the fan-out
     at distinct-token width). Bias is NOT included — trainers and
     scorers add index `dim` themselves."""
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(F.split(F.col(text_col), r"[ \t\n\f\r]+"))).alias("_tok"),
+            F.col("doc_id"),
+            F.explode(F.array_distinct(F.split(F.col("text"), r"[ \t\n\f\r]+"))).alias("_tok"),
         )
         .select("doc_id", (md5_long(F.col("_tok"), 8) % dim).alias("feat"))
         .distinct()

@@ -65,15 +65,9 @@ def bfd_pack_shard(lengths: list[tuple[int, int]], capacity: int) -> dict[int, t
     return out
 
 
-def pack_bfd(
-    docs: DataFrame,
-    capacity: int,
-    shard_col: str = "lang",
-    len_col: str = "n_tok",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pack_bfd(docs: DataFrame, capacity: int) -> DataFrame:
     """(doc_id, shard, bin_id, offset, n_tok): whole-document bin
-    assignments, best-fit-decreasing within each shard.
+    assignments, best-fit-decreasing within each ``lang`` shard.
 
     The per-shard pack runs in applyInPandas — the sequential algorithm
     executes executor-side on shard-local data, the classic
@@ -84,23 +78,23 @@ def pack_bfd(
     """
     import pandas as pd
 
-    schema = f"{id_col} long, shard string, bin_id long, offset long, {len_col} long"
+    schema = "doc_id long, shard string, bin_id long, offset long, n_tok long"
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pairs = list(zip(pdf[id_col].tolist(), pdf[len_col].tolist()))
+        pairs = list(zip(pdf["doc_id"].tolist(), pdf["n_tok"].tolist()))
         placed = bfd_pack_shard(pairs, capacity)
-        ids = pdf[id_col].tolist()
+        ids = pdf["doc_id"].tolist()
         return pd.DataFrame(
             {
-                id_col: ids,
-                "shard": pdf[shard_col].tolist(),
+                "doc_id": ids,
+                "shard": pdf["lang"].tolist(),
                 "bin_id": [placed[i][0] for i in ids],
                 "offset": [placed[i][1] for i in ids],
-                len_col: pdf[len_col].tolist(),
+                "n_tok": pdf["n_tok"].tolist(),
             }
         )
 
-    return docs.select(id_col, shard_col, len_col).groupBy(shard_col).applyInPandas(
+    return docs.select("doc_id", "lang", "n_tok").groupBy("lang").applyInPandas(
         pack, schema=schema
     )
 

@@ -34,10 +34,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def pair_cosine_pd():
     """Arrow-batched per-pair cosine (the probe hot path).
 
@@ -87,7 +83,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k per query vector.
@@ -99,9 +94,9 @@ def brute_force_topk(
     """
     from pyspark.sql.window import Window
 
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec"))
-    c = _spread(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvec")
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col(vec_col).alias("_qvec"))
+    c = _spread(corpus, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"), F.col(vec_col).alias("_cvec")
     )
     # Per-pair cosine via the Arrow-batched matmul UDF: the broadcast
     # join only routes rows; all arithmetic is one numpy pass per batch.
@@ -126,15 +121,15 @@ def brute_force_topk(
 LSH_SCALE = 1 << 20
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic Rademacher (+/-1) hyperplanes from a fixed seed.
+def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
+    """Deterministic Rademacher (+/-1) hyperplanes from the fixed seed 42.
 
     Sign-random-projection LSH does not need Gaussian planes —
     Achlioptas-style +/-1 entries give the same locality guarantees and
     make the projection EXACT arithmetic: each term is +/-floor(x*2^20),
     an integer, so the sign is reproducible bit-for-bit in DuckDB (the
     oracle inlines the same plane literals)."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     return rng.choice([-1.0, 1.0], size=(n_planes, dim)).tolist()
 
 
@@ -201,11 +196,7 @@ def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     n_planes: int = 8,
-    seed: int = 42,
     probe_radius: int = 2,
 ) -> DataFrame:
     """Approximate top-k via MULTI-PROBE sign-LSH.
@@ -223,20 +214,20 @@ def lsh_bucketed_topk(
     """
     from pyspark.sql.window import Window
 
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(64, n_planes)
     masks = _probe_masks(n_planes, probe_radius)
     # Corpus-side bucketing: Arrow matmul UDF (one pass, vectorized).
     # Query-side (small, broadcast): JVM expression. Both are the same
     # exact-integer arithmetic, so buckets agree bit-for-bit (tested).
-    c = _spread(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        _lsh_signature_pd(planes)(F.col(vec_col)).alias("_bucket"),
+    c = _spread(corpus, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cvec"),
+        _lsh_signature_pd(planes)(F.col("embedding")).alias("_bucket"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        lsh_signature(F.col(vec_col), planes).alias("_sig"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
+        lsh_signature(F.col("embedding"), planes).alias("_sig"),
     ).select(
         "query_id",
         "_qvec",
@@ -365,19 +356,17 @@ def ivf_build_centroids(
     corpus: DataFrame,
     k: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Deterministic mini k-means: seed with the k lowest-id vectors,
     then `iters` Lloyd steps. Each step is one distributed assignment
     pass + a per-dimension mean (posexplode -> groupBy(cell, pos) avg);
     only the k centroid vectors ever reach the driver.
     """
-    cents = _centroid_rows(corpus, k, id_col, vec_col)
-    corpus = _spread(corpus, id_col)
+    cents = _centroid_rows(corpus, k, "vec_id", "embedding")
+    corpus = _spread(corpus, "vec_id")
     for _ in range(iters):
         assigned = corpus.select(
-            F.col(vec_col).alias("_v"), _nearest_centroid_pd(cents)(F.col(vec_col)).alias("_cell")
+            F.col("embedding").alias("_v"), _nearest_centroid_pd(cents)(F.col("embedding")).alias("_cell")
         )
         means = (
             assigned.select("_cell", F.posexplode("_v").alias("_pos", "_x"))
@@ -394,12 +383,7 @@ def ivf_build_centroids(
     return cents
 
 
-def ivf_assign_cells(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign_cells(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """(neighbor_id, _cvec, _cell): the corpus with its IVF cell id.
 
     At 100 TB this table is what you PERSIST (written out partitioned
@@ -407,10 +391,10 @@ def ivf_assign_cells(
     repeatedly pass it to :func:`ivf_topk` via ``cells=`` instead of
     re-assigning the corpus per query batch.
     """
-    return _spread(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        _nearest_centroid_pd(centroids)(F.col(vec_col)).alias("_cell"),
+    return _spread(corpus, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cvec"),
+        _nearest_centroid_pd(centroids)(F.col("embedding")).alias("_cell"),
     )
 
 
@@ -420,8 +404,6 @@ def ivf_topk(
     centroids: list[list[float]],
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cells: DataFrame | None = None,
 ) -> DataFrame:
     """IVF probe: each query scans only its `nprobe` nearest cells.
@@ -437,15 +419,15 @@ def ivf_topk(
     from pyspark.sql.window import Window
 
     if cells is None:
-        cells = ivf_assign_cells(corpus, centroids, id_col, vec_col)
+        cells = ivf_assign_cells(corpus, centroids)
     # nprobe nearest cells per query: Arrow-batched stable argsort over
     # the same quantized distances as the corpus assignment (the
     # unrolled expression alternative costs ~2 s of plan analysis).
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
         F.explode(
-            _nearest_cells_pd(centroids, nprobe)(F.col(vec_col))
+            _nearest_cells_pd(centroids, nprobe)(F.col("embedding"))
         ).alias("_cell"),
     )
     sims = (
@@ -506,11 +488,7 @@ def cap_hot_cells(
     )
 
 
-def ivf_hot_cells(
-    assignments: DataFrame,
-    max_cell_size: int,
-    cell_col: str = "cell",
-) -> DataFrame:
+def ivf_hot_cells(assignments: DataFrame, max_cell_size: int) -> DataFrame:
     """The observability half of :func:`cap_hot_cells` (mirrors
     ``lsh_hot_buckets``): (cell, n_ids, skipped_comparisons) for every
     cell a cap would split, where skipped_comparisons counts the
@@ -526,7 +504,7 @@ def ivf_hot_cells(
         rem * (rem - 1) / 2
     )
     return (
-        assignments.groupBy(cell_col)
+        assignments.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_ids"))
         .where(F.col("n_ids") > max_cell_size)
         .withColumn(
@@ -536,11 +514,11 @@ def ivf_hot_cells(
     )
 
 
-def rademacher_matrix(in_dim: int, out_dim: int, prefix: str = "") -> np.ndarray:
+def rademacher_matrix(in_dim: int, out_dim: int) -> np.ndarray:
     """Deterministic Rademacher (±1) projection matrix from md5 parity.
 
     Entry (i, j) is +1 when the first hex character of
-    ``md5(f"{prefix}{i}_{j}")`` has even ASCII code, else -1 — a
+    ``md5(f"{i}_{j}")`` has even ASCII code, else -1 — a
     formula any engine with md5 can reproduce exactly (the DuckDB
     oracle regenerates the same matrix in SQL), so the projection is
     a portable contract, not a seed hidden inside one RNG
@@ -553,7 +531,7 @@ def rademacher_matrix(in_dim: int, out_dim: int, prefix: str = "") -> np.ndarray
     m = np.empty((in_dim, out_dim), dtype=np.float64)
     for i in range(in_dim):
         for j in range(out_dim):
-            h = hashlib.md5(f"{prefix}{i}_{j}".encode()).hexdigest()
+            h = hashlib.md5(f"{i}_{j}".encode()).hexdigest()
             m[i, j] = 1.0 if ord(h[0]) % 2 == 0 else -1.0
     return m
 
@@ -564,7 +542,6 @@ def random_projection(
     vec_col: str,
     in_dim: int,
     out_dim: int,
-    round_to: int = 6,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection (Achlioptas ±1 variant,
     "Database-friendly random projections", PODS'01): map D-dim
@@ -588,7 +565,7 @@ def random_projection(
             if len(pdf) == 0:
                 continue
             vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            proj = np.round(vecs @ mat, round_to)
+            proj = np.round(vecs @ mat, 6)
             n = len(pdf)
             yield pd.DataFrame(
                 {
@@ -607,27 +584,23 @@ def random_projection_vec(
     vec_col: str,
     in_dim: int,
     out_dim: int,
-    out_col: str = "jl_vec",
-    round_to: int = 6,
 ) -> DataFrame:
-    """Wide-form twin of :func:`random_projection`: (id, array<double>)
+    """Wide-form twin of :func:`random_projection`: (id, jl_vec array<double>)
     so the projected frame drops straight into the ANN operators
     (``brute_force_topk``/LSH take any vector column). Same md5-parity
     Rademacher matrix, same Arrow-batched matmul, same rounding — the
     two forms agree element-for-element, so an oracle written against
     the long form certifies this one too."""
     mat = rademacher_matrix(in_dim, out_dim)
-    schema = f"{id_col} long, {out_col} array<double>"
+    schema = f"{id_col} long, jl_vec array<double>"
 
     def _project(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            proj = np.round(vecs @ mat, round_to)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), out_col: list(proj)}
-            )
+            proj = np.round(vecs @ mat, 6)
+            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "jl_vec": list(proj)})
 
     return df.select(id_col, vec_col).mapInPandas(_project, schema=schema)
 
@@ -660,8 +633,6 @@ def pq_train_codebooks(
     subdim: int,
     k: int,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """All PQ sub-codebooks in ONE distributed pass per Lloyd step.
 
@@ -680,20 +651,20 @@ def pq_train_codebooks(
     exact-integer distances everywhere, so the result is bit-identical
     to the per-subspace loop and the unrolled SQL oracle.
     """
-    rows = corpus.orderBy(id_col).limit(k).select(vec_col).collect()
-    full = [[float(x) for x in r[vec_col]] for r in rows]
+    rows = corpus.orderBy("vec_id").limit(k).select("embedding").collect()
+    full = [[float(x) for x in r["embedding"]] for r in rows]
     cbs = [
         [v[m * subdim : (m + 1) * subdim] for v in full] for m in range(n_sub)
     ]
-    spread = _spread(corpus, id_col)
+    spread = _spread(corpus, "vec_id")
     for _ in range(iters):
         cell_cols = [
             _nearest_centroid_pd(cbs[m])(
-                F.slice(F.col(vec_col), m * subdim + 1, subdim)
+                F.slice(F.col("embedding"), m * subdim + 1, subdim)
             ).alias(f"_c{m}")
             for m in range(n_sub)
         ]
-        assigned = spread.select(F.col(vec_col).alias("_v"), *cell_cols)
+        assigned = spread.select(F.col("embedding").alias("_v"), *cell_cols)
         ex = assigned.select(
             F.posexplode("_v").alias("_pos", "_x"),
             F.array(*[F.col(f"_c{m}") for m in range(n_sub)]).alias("_cells"),

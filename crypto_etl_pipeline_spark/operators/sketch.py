@@ -30,11 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def fixed_bin(value: Column, width: float, n_bins: int = 100) -> Column:
-    """Stream-safe bin id: clamp(floor(value / width), 0, n_bins-1)."""
-    return F.least(
-        F.greatest(F.floor(value / width), F.lit(0)), F.lit(n_bins - 1)
-    ).cast("long")
+def fixed_bin(value: Column, width: float) -> Column:
+    """Stream-safe bin id over 100 bins: clamp(floor(value / width), 0, 99)."""
+    return F.least(F.greatest(F.floor(value / width), F.lit(0)), F.lit(99)).cast("long")
 
 
 def histogram_sketch(
@@ -386,7 +384,7 @@ def kmv_sketch(df: DataFrame, group_col: str, key_col: str, k: int) -> DataFrame
     return hashed.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") <= k).drop("_rk")
 
 
-def kmv_pair_overlap(sketches: DataFrame, k: int, round_to: int = 6) -> DataFrame:
+def kmv_pair_overlap(sketches: DataFrame, k: int) -> DataFrame:
     """Pairwise union / intersection / Jaccard ESTIMATES from per-group
     KMV sketches alone — the corpus is never rescanned per pair.
 
@@ -438,9 +436,9 @@ def kmv_pair_overlap(sketches: DataFrame, k: int, round_to: int = 6) -> DataFram
     return agg.select(
         "grp_a",
         "grp_b",
-        F.round(union_est, round_to).alias("union_est"),
-        F.round(jacc, round_to).alias("jaccard_est"),
-        F.round(jacc * union_est, round_to).alias("intersect_est"),
+        F.round(union_est, 6).alias("union_est"),
+        F.round(jacc, 6).alias("jaccard_est"),
+        F.round(jacc * union_est, 6).alias("intersect_est"),
     )
 
 
@@ -456,7 +454,7 @@ def kmv_merge(base: DataFrame, delta: DataFrame, k: int) -> DataFrame:
     return both.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") <= k).drop("_rk")
 
 
-def kmv_estimate(sketch: DataFrame, k: int, round_to: int = 6) -> DataFrame:
+def kmv_estimate(sketch: DataFrame, k: int) -> DataFrame:
     """Distinct-cardinality estimate per group from a KMV sketch:
     (k-1)/U_(k) when the sketch is full, else the exact count of
     hashes seen (the sketch IS the value set below k)."""
@@ -466,4 +464,4 @@ def kmv_estimate(sketch: DataFrame, k: int, round_to: int = 6) -> DataFrame:
     est = F.when(F.col("sketch_size") < k, F.col("sketch_size").cast("double")).otherwise(
         F.lit(float(k - 1)) / (F.col("_hk").cast("double") / F.lit(KMV_DOMAIN))
     )
-    return agg.select("grp", "sketch_size", F.round(est, round_to).alias("distinct_est"))
+    return agg.select("grp", "sketch_size", F.round(est, 6).alias("distinct_est"))

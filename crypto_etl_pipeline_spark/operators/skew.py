@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, from_col: str, n_salts: int, salt_col: str = "_salt") -> DataFrame:
+def with_salt(df: DataFrame, from_col: str, n_salts: int) -> DataFrame:
     """Deterministic salt in [0, n_salts) from a row-local column."""
-    return df.withColumn(salt_col, F.pmod(F.xxhash64(F.col(from_col)), F.lit(n_salts)).cast("int"))
+    return df.withColumn("_salt", F.pmod(F.xxhash64(F.col(from_col)), F.lit(n_salts)).cast("int"))
 
 
 def salted_join(
@@ -62,10 +62,9 @@ def salted_join(
     return s.join(replicated, [key, "_salt"], how).drop("_salt")
 
 
-def two_phase_distinct_count(
-    df: DataFrame, group_col: str, value_col: str, alias: str = "n_distinct"
-) -> DataFrame:
-    """Exact per-group COUNT(DISTINCT value) without a hot-group funnel.
+def two_phase_distinct_count(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Exact per-group COUNT(DISTINCT value), as ``n_distinct``, without a
+    hot-group funnel.
 
     Phase 1: dedup (group, value) — the shuffle key includes the value,
     so a hot group spreads over many partitions. Phase 2: count rows
@@ -76,5 +75,5 @@ def two_phase_distinct_count(
         df.select(group_col, value_col)
         .dropDuplicates([group_col, value_col])
         .groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias(alias))
+        .agg(F.count(F.lit(1)).alias("n_distinct"))
     )

@@ -57,9 +57,9 @@ def unique_token_count(text: Column | str) -> Column:
     return F.size(F.array_distinct(tokens(text)))
 
 
-def regex_token_count(text: Column | str, pattern: str = REGEX_TOKEN_PATTERN) -> Column:
+def regex_token_count(text: Column | str) -> Column:
     """Token count under a regex pre-tokenizer (BPE-ish word/number/symbol)."""
-    return F.size(F.regexp_extract_all(_as_col(text), F.lit(pattern), F.lit(0)))
+    return F.size(F.regexp_extract_all(_as_col(text), F.lit(REGEX_TOKEN_PATTERN), F.lit(0)))
 
 
 def stopword_hits(text: Column | str, words: tuple[str, ...]) -> Column:
@@ -76,16 +76,17 @@ def type_token_ratio(text: Column | str) -> Column:
     return unique_token_count(text) / token_count(text)
 
 
-def quality_label(text: Column | str, min_tokens: int = 10, min_ttr: float = 0.3) -> Column:
+def quality_label(text: Column | str) -> Column:
     """Heuristic quality bucket: too_short / repetitive / no_stopwords / ok.
 
     Mirrors the length/stopword/diversity ratio features used by public
-    LLM-corpus quality filters; thresholds are tunable parameters.
+    LLM-corpus quality filters: fewer than 10 tokens is too_short, a
+    type-token ratio below 0.3 is repetitive.
     """
     t = _as_col(text)
     return (
-        F.when(token_count(t) < min_tokens, "too_short")
-        .when(type_token_ratio(t) < min_ttr, "repetitive")
+        F.when(token_count(t) < 10, "too_short")
+        .when(type_token_ratio(t) < 0.3, "repetitive")
         .when(stopword_hits(t, STOPWORDS["en"]) == 0, "no_stopwords")
         .otherwise("ok")
     )
@@ -143,11 +144,6 @@ def shingles_of(toks: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles ('w1_w2_w3'); empty array when < n tokens."""
-    return shingles_of(tokens(text), n)
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Set Jaccard over two string arrays (distinct semantics)."""
     inter = F.size(F.array_intersect(a, b))
@@ -159,19 +155,19 @@ def jaccard(a: Column, b: Column) -> Column:
 # Repetition signals (Gopher-style corpus quality features)
 # --------------------------------------------------------------------------
 
-def duplicate_ngram_fraction(toks: Column, n: int = 3) -> Column:
-    """Fraction of n-gram OCCURRENCES that are repeats of an earlier one
+def duplicate_ngram_fraction(toks: Column) -> Column:
+    """Fraction of trigram OCCURRENCES that are repeats of an earlier one
     (1 - distinct/total) — the classic within-document repetition signal.
     Pure expression over the token-array attribute; 0.0 for docs shorter
-    than n tokens."""
-    sh = shingles_of(toks, n)
+    than 3 tokens."""
+    sh = shingles_of(toks, 3)
     return F.when(
         F.size(sh) > 0,
         F.round(1 - F.size(F.array_distinct(sh)) / F.size(sh), 6),
     ).otherwise(F.lit(0.0))
 
 
-def repetition_signals(df, text_col: str = "text", id_col: str = "doc_id"):
+def repetition_signals(df):
     """Per-document repetition features: top-unigram coverage,
     top-bigram coverage, duplicate-trigram fraction.
 
@@ -185,25 +181,25 @@ def repetition_signals(df, text_col: str = "text", id_col: str = "doc_id"):
     the shuffles gram-count-sized.
     """
     n_parts = df.sparkSession.sparkContext.defaultParallelism
-    base = df.repartition(n_parts, F.col(id_col)).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
+    base = df.repartition(n_parts, F.col("doc_id")).select(
+        F.col("doc_id"), tokens(F.col("text")).alias("_toks")
     )
 
     def top_cov(gram_col: Column, out: str):
         return (
-            base.select(F.col(id_col), F.explode(gram_col).alias("_g"))
-            .groupBy(id_col, "_g")
+            base.select(F.col("doc_id"), F.explode(gram_col).alias("_g"))
+            .groupBy("doc_id", "_g")
             .agg(F.count(F.lit(1)).alias("_c"))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.round(F.max("_c") / F.sum("_c"), 6).alias(out))
         )
 
     uni = top_cov(F.col("_toks"), "top_unigram_cov")
     bi = top_cov(shingles_of(F.col("_toks"), 2), "top_bigram_cov")
     tri = base.select(
-        F.col(id_col), duplicate_ngram_fraction(F.col("_toks"), 3).alias("dup_trigram_frac")
+        F.col("doc_id"), duplicate_ngram_fraction(F.col("_toks")).alias("dup_trigram_frac")
     )
-    return uni.join(bi, id_col).join(tri, id_col)
+    return uni.join(bi, "doc_id").join(tri, "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -265,7 +261,6 @@ GOPHER_MAX_SYMBOL_FRAC = 0.1
 
 def gopher_signals(
     text: Column | str | None = None,
-    min_words: int = GOPHER_MIN_WORDS,
     *,
     toks: Column | str | None = None,
 ) -> dict[str, Column]:
@@ -314,7 +309,7 @@ def gopher_signals(
         6,
     )
     keep = (
-        n.between(min_words, GOPHER_MAX_WORDS)
+        n.between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS)
         & mean_len.between(GOPHER_MIN_MEAN_WORD_LEN, GOPHER_MAX_MEAN_WORD_LEN)
         & (stop_n >= GOPHER_MIN_STOPWORDS)
         & (distinct_ratio >= GOPHER_MIN_DISTINCT_RATIO)

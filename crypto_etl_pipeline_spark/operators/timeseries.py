@@ -29,10 +29,10 @@ def asof_join(
     on: str,
     by: str,
     right_cols: list[str],
-    suffix: str = "_asof",
 ) -> DataFrame:
     """For each left row, attach the latest right row with
-    right.on <= left.on within the same `by` group.
+    right.on <= left.on within the same `by` group; each carried column
+    ``c`` comes back as ``c_asof``.
 
     Matches DuckDB ``ASOF JOIN`` / pandas ``merge_asof`` semantics
     (backward search, inclusive). Right rows sort before left rows at
@@ -72,7 +72,7 @@ def asof_join(
     )
     out = carried.where(F.col("_is_left") == 1).select(
         F.col("_row.*"),
-        *[F.col(f"_rvals_f.{c}").alias(f"{c}{suffix}") for c in right_cols],
+        *[F.col(f"_rvals_f.{c}").alias(f"{c}_asof") for c in right_cols],
     )
     return out
 

@@ -6,19 +6,22 @@ runtime guards (empty API table, missing file). This module makes the
 targets measurable engine-side:
 
 - ``completeness``: per-column non-null ratio in ONE agg pass.
-- ``assert_schema``: structural guard (names + types) for pipeline
-  boundaries — the explicit version of what the reference loses by
-  re-inferring CSV schemas between tasks.
 - ``violations``: rows failing declarative predicates, for
   quarantine-style flows (flag, never drop — data_dictionary.txt:20's
   philosophy applied to validity).
+- ``rule_report`` / ``fk_orphan_count``: violation counts per rule and
+  per foreign-key edge, one scan each.
+- ``table_checksum``: order-insensitive content checksum for
+  reconciliation.
+
+Schemas are enforced where data enters (explicit read schemas in
+``sources/``), not by a separate guard here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def completeness(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -34,19 +37,6 @@ def completeness(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         for c in cols
     ]
     return spark.createDataFrame(data, "column string, n long, n_nonnull long, ratio double")
-
-
-def assert_schema(df: DataFrame, expected: StructType) -> DataFrame:
-    """Raise ValueError on any name/type mismatch; returns df unchanged.
-
-    Nullability is intentionally ignored (Spark's nullability flags are
-    advisory after most transformations).
-    """
-    got = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    want = [(f.name, f.dataType.simpleString()) for f in expected.fields]
-    if got != want:
-        raise ValueError(f"schema mismatch: got {got}, expected {want}")
-    return df
 
 
 def violations(df: DataFrame, checks: dict[str, Column]) -> DataFrame:

@@ -21,7 +21,7 @@ from crypto_etl_pipeline_spark.functions.classify import classify_trend
 from crypto_etl_pipeline_spark.sources.rest import API_FIELDS, rest_source
 
 
-def classify_api_table(api_df: DataFrame, label_col: str = "tendencia") -> DataFrame:
+def classify_api_table(api_df: DataFrame) -> DataFrame:
     """Project to the 7 API fields and add the 5-way trend label (F8).
 
     Null pct-change rows classify "Tendencia estable" (null comparisons
@@ -29,7 +29,7 @@ def classify_api_table(api_df: DataFrame, label_col: str = "tendencia") -> DataF
     SURVEY.md §1.2).
     """
     return api_df.select(*API_FIELDS).withColumn(
-        label_col, classify_trend(F.col("price_change_percentage_24h"))
+        "tendencia", classify_trend(F.col("price_change_percentage_24h"))
     )
 
 

@@ -197,12 +197,7 @@ def clean_historical(raw: DataFrame, order: str = "C") -> DataFrame:
     raise ValueError(f"order must be 'C' or 'P', got {order!r}")
 
 
-def run_historical_pipeline(
-    spark,
-    raw_csv_path: str,
-    out_dir: str,
-    order: str = "C",
-) -> dict:
+def run_historical_pipeline(spark, raw_csv_path: str, out_dir: str) -> dict:
     """EP3 end-to-end with sinks: dirty CSV -> clean -> parquet + CSV +
     profile (the reference's t2 + t4 + t5 collapsed into one lazy plan
     with durable outputs; SURVEY.md §3).
@@ -222,7 +217,7 @@ def run_historical_pipeline(
     )
 
     raw = read_dirty_csv(spark, raw_csv_path)
-    cleaned = clean_historical(raw, order=order)
+    cleaned = clean_historical(raw)
 
     pq_path = f"{out_dir}/historical_clean.parquet"
     write_parquet(cleaned, pq_path)

@@ -849,8 +849,6 @@ def fuzzy_match_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_id="s_suppkey",
         right_text="s_name",
         window=SNM_WINDOW,
-        max_dist=2,
-        top_k=1,
     )
     return best.select(
         "dirty_id",
@@ -957,8 +955,6 @@ def fuzzy_match_suppliers_multipass(spark: SparkSession, sf_dir: str) -> DataFra
         right_id="s_suppkey",
         right_text="s_name",
         window=SNM_WINDOW,
-        max_dist=2,
-        top_k=1,
         keys=(None, F.reverse),
     )
     return best.select(
@@ -1043,8 +1039,6 @@ def fuzzy_match_suppliers_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_text="dirty_name",
         right_text="s_name",
         block=lambda c: F.substring(c, 1, 14),
-        max_dist=2,
-        top_k=1,
         block_cap=FUZZY_BLOCK_CAP,
     )
     return best.select(
@@ -3135,7 +3129,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    labels = label_propagation(edges, iters=2, broadcast_labels=True)
+    labels = label_propagation(edges, broadcast_labels=True)
     name = F.when(
         F.col("community") % 2 == 0,
         F.concat(F.lit("C"), F.expr("CAST(community DIV 2 AS STRING)")),

@@ -90,10 +90,8 @@ def _footer_max_ts(path: str, ts_kind: str):
         return None
 
 
-def _write_watermark_sentinels(
-    spark, sf_dir: str, stage_dir: str, n: int = 2, user_id: int = -1
-) -> None:
-    """Write ``n`` single-row far-future sentinel parquet files into a
+def _write_watermark_sentinels(spark, sf_dir: str, stage_dir: str) -> None:
+    """Write two single-row far-future sentinel parquet files into a
     staged stream-input dir (mtime-ordered AFTER the staged data files).
 
     Purpose: APPEND-mode windowed aggregation only emits a window once
@@ -150,12 +148,12 @@ def _write_watermark_sentinels(
         ]
     )
     now = time.time()
-    for i in range(n):
+    for i in range(2):
         tbl = pa.table(
             {
                 "event_id": [-(i + 1)],
                 "ts": [mk(365 * (i + 1))],
-                "user_id": [user_id],
+                "user_id": [-1],
                 "event_type": ["_sentinel"],
                 "value": [0.0],
                 "props": [None],
@@ -197,7 +195,7 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are excluded DOWNSTREAM of the watermark node so they advance
     # event time without ever creating window state.
     stage = _stage_dir(sf_dir, copies=1)
-    _write_watermark_sentinels(spark, sf_dir, stage, n=2)
+    _write_watermark_sentinels(spark, sf_dir, stage)
     # r14: all three files (events + both sentinels) in ONE data batch
     # — the watermark still advances past every real window at that
     # batch's end, and the standard no-data batch emits every closed
@@ -205,14 +203,11 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical sink contents (the interval-join family fix; ~0.7-1 s
     # of fixed per-cycle overhead measured).
     events = read_event_stream(spark, stage)
-    rolled = hourly_rollup_stream(
-        events, watermark="2 hours", exclude_event_types=("_sentinel",)
-    )
+    rolled = hourly_rollup_stream(events, exclude_event_types=("_sentinel",))
     return run_available_now(
         rolled,
         f"rollup_{uuid.uuid4().hex[:8]}",
         _checkpoint(),
-        output_mode="append",
         state_partitions=8,  # ~3.4k window keys; sized to state, not batch shuffle
     )
 
@@ -244,7 +239,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         deduped,
         f"dedup_{uuid.uuid4().hex[:8]}",
         _checkpoint(),
-        output_mode="append",
         state_partitions=8,  # ~10k event_id keys at the gate SF
         # r14: dropDuplicatesWithinWatermark emits each first
         # occurrence eagerly in the batch that reads it — the trailing
@@ -314,7 +308,6 @@ def stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessions,
         f"sess_{uuid.uuid4().hex[:8]}",
         _checkpoint(),
-        output_mode="append",
         state_partitions=8,  # ~1k user keys
     )
     return out.select(
@@ -362,7 +355,6 @@ def stream_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         sessions,
         f"tws_{uuid.uuid4().hex[:8]}",
         _checkpoint(),
-        output_mode="append",
         state_partitions=8,  # ~1k user keys, matches the v1 operating point
         extra_confs=TWS_CONFS,
     )
@@ -827,7 +819,7 @@ def multimodal_real_resample_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return resample_audio(attach_wav_payloads(docs), dst_rate=4_000)
+    return resample_audio(attach_wav_payloads(docs))
 
 
 @register(
@@ -903,9 +895,7 @@ def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    wen = vad_energy_windows(
-        attach_wav_payloads(docs, step=7919), window=16
-    )
+    wen = vad_energy_windows(attach_wav_payloads(docs, step=7919))
     act = wen.select(
         "doc_id",
         "w",
@@ -961,7 +951,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return sample_frames_stub(attach_fake_payloads(docs), every_n_bytes=256)
+    return sample_frames_stub(attach_fake_payloads(docs))
 
 
 @register(
@@ -1001,7 +991,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         f"ij_{uuid.uuid4().hex[:8]}",
         _checkpoint(),
-        output_mode="append",
         state_partitions=4,  # 4 join state stores/partition; 6.5 s (sp=32) -> 2.2 s
         # r14: an INNER stream-stream join emits every match eagerly in
         # the batch that reads it — the trailing no-data micro-batch
@@ -1061,7 +1050,7 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _stage_dir(sf_dir, copies=1)
-    _write_watermark_sentinels(spark, sf_dir, d, n=2)
+    _write_watermark_sentinels(spark, sf_dir, d)
     # r14: one data batch, not two. At maxFilesPerTrigger=2 the drain
     # ran {events+sentinel1}, {sentinel2}, {no-data} — three
     # micro-batch cycles at ~0.7-1.0 s of fixed overhead each. All
@@ -1079,7 +1068,6 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         f"ijo_{uuid.uuid4().hex[:8]}",
         _checkpoint(),
-        output_mode="append",
         state_partitions=4,  # 4 join state stores/partition; 3.9 s (sp=8) -> 3.2 s
     )
     return out.where(F.col("purchase_id") >= 0).select(
@@ -1130,7 +1118,7 @@ def stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _stage_dir(sf_dir, copies=1)
-    _write_watermark_sentinels(spark, sf_dir, d, n=2)
+    _write_watermark_sentinels(spark, sf_dir, d)
     # r14: same one-data-batch drain as the left-outer twin (see its
     # comment) — sentinels in batch 0, absence rows in the no-data
     # batch, one micro-batch cycle fewer.
@@ -1144,7 +1132,6 @@ def stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         f"ijf_{uuid.uuid4().hex[:8]}",
         _checkpoint(),
-        output_mode="append",
         state_partitions=4,  # same operating point as the left-outer twin
     )
     keep = (F.col("purchase_id").isNull() | (F.col("purchase_id") >= 0)) & (
@@ -1185,7 +1172,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return resize_image_stub(attach_fake_payloads(docs), max_side=224)
+    return resize_image_stub(attach_fake_payloads(docs))
 
 
 @register(
@@ -1273,8 +1260,6 @@ def stream_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         events,
         sketch_dir=_tmpdir("sketch_"),
         checkpoint_dir=_checkpoint(),
-        bin_width=5.0,
-        n_bins=100,
     )
 
 
@@ -1331,8 +1316,6 @@ def stream_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         events,
         sketch_dir=_tmpdir("sketchq_"),
         checkpoint_dir=_checkpoint(),
-        bin_width=5.0,
-        n_bins=100,
     )
     return quantile_from_sketch(
         merged,
@@ -1388,7 +1371,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_mktsegment"
     )
     stage = _stage_dir(sf_dir, copies=1)
-    _write_watermark_sentinels(spark, sf_dir, stage, n=2)
+    _write_watermark_sentinels(spark, sf_dir, stage)
     # 2 micro-batches: {events, sentinel#1} then {sentinel#2} — the
     # first advances the watermark past every real window, the second
     # triggers their append emission (mtime ordering groups the files).
@@ -1415,7 +1398,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         rolled,
         f"enrich_{uuid.uuid4().hex[:8]}",
         _checkpoint(),
-        output_mode="append",
         state_partitions=8,  # ~3.4k window keys; sized to state, not batch shuffle
     )
 
@@ -1455,8 +1437,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         events,
         store_dir=_tmpdir("mgstore_"),
         checkpoint_dir=_checkpoint(),
-        term_col="event_type",
-        k=5,
     )
     batch = load_table(spark, sf_dir, "events")
     return verify_heavy_hitters(batch, "event_type", store.select("term"), k=5)

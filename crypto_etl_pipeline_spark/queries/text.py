@@ -21,6 +21,8 @@ from pyspark.sql.window import Window
 
 from crypto_etl_pipeline_spark.operators import phash, textops
 from crypto_etl_pipeline_spark.operators.dedup import (
+    NUM_BANDS,
+    NUM_HASHES,
     build_minhash_store,
     exact_dedup,
     hamming64,
@@ -177,7 +179,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return exact_dedup(docs, "text", "doc_id")
+    return exact_dedup(docs)
 
 
 # --------------------------------------------------------------------------
@@ -1020,18 +1022,13 @@ def dedup_prune_vs_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_ctes(
-    num_hashes: int = 32,
-    num_bands: int = 8,
-    threshold: float = 0.05,
-    source: str = "documents",
-    bucket_cap: int | None = None,
-) -> str:
+def _minhash_ctes(source: str = "documents", bucket_cap: int | None = None) -> str:
     """DuckDB CTE chain reproducing near_dup_pairs_minhash exactly:
     md5_long(shingle, 8) -> Carter-Wegman fan-out (same inlined A/B/P
     constants as the Spark plan) -> per-doc min -> '|'-joined band
     buckets -> (band, bucket) self-join -> exact-Jaccard verification.
-    Terminal CTE is ``mh_pairs(id_a, id_b, jaccard)``.
+    Terminal CTE is ``mh_pairs(id_a, id_b, jaccard)``, the pairs at
+    Jaccard >= 0.05 (the threshold every MinHash query uses).
 
     ``bucket_cap`` mirrors cap_hot_buckets exactly (drop (band, bucket)
     groups larger than the cap before candidate generation) — unlike
@@ -1039,7 +1036,7 @@ def _minhash_ctes(
     cap IS SQL-replayable, so capped Spark plans can be oracled even
     where the cap engages. None leaves the SQL text byte-identical to
     the pre-cap form (existing oracles' hashes unchanged)."""
-    rpb = num_hashes // num_bands
+    rpb = NUM_HASHES // NUM_BANDS
     jac = """len(list_intersect(a.s, b.s)) * 1.0
                    / len(list_distinct(list_concat(a.s, b.s)))"""
     cand_src = "bands"
@@ -1069,7 +1066,7 @@ def _minhash_ctes(
     ),
     hs AS (
       SELECT doc_id, coef.i, min((coef.a * xs.x + coef.b) % {phash.P}) AS h
-      FROM xs CROSS JOIN {phash.duck_coef_values(num_hashes)}
+      FROM xs CROSS JOIN {phash.duck_coef_values(NUM_HASHES)}
       GROUP BY doc_id, coef.i
     ),
     bands AS (
@@ -1086,7 +1083,7 @@ def _minhash_ctes(
     mh_pairs AS (
       SELECT c.id_a, c.id_b, round({jac}, 6) AS jaccard
       FROM cand c JOIN ss a ON a.doc_id = c.id_a JOIN ss b ON b.doc_id = c.id_b
-      WHERE {jac} >= {threshold}
+      WHERE {jac} >= 0.05
     )"""
 
 
@@ -1160,7 +1157,7 @@ def dedup_lsh_hot_bucket_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest case (max_occupancy = largest true near-dup cluster, zero
     spill) and the flooded case (the mega-cluster fixture asserts the
     spill mass exactly). One (band, bucket) aggregate + one band
-    rollup — two exchanges, the second over <=num_bands keys."""
+    rollup — two exchanges, the second over <= NUM_BANDS keys."""
     from crypto_etl_pipeline_spark.operators.dedup import minhash_buckets
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1224,7 +1221,7 @@ def dedup_incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_signatures(docs, "text", "doc_id")
+    return simhash_signatures(docs)
 
 
 SIMHASH_HAM_K = 3  #: max hamming distance for a banded-simhash pair
@@ -1304,7 +1301,7 @@ def _simhash_post(docs: DataFrame) -> DataFrame:
     ONE 60-column signature aggregation feeds both self-join branches
     (and any spill audit): ReuseExchange dedups exchanges, not the
     map-side partial-agg work feeding two alias lineages."""
-    sig = simhash_signatures(docs, "text", "doc_id")
+    sig = simhash_signatures(docs)
     mask = (1 << _SH_BITS) - 1
     bb = F.explode(
         F.array(
@@ -1599,7 +1596,7 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     share one exchange; fingerprint cardinality ~ docs x (len/w), a
     fixed fraction of the corpus at any scale."""
     docs = load_table(spark, sf_dir, "documents")
-    return winnow_fingerprints(docs, "text", "doc_id", k=3, w=4)
+    return winnow_fingerprints(docs)
 
 
 @register(
@@ -1645,7 +1642,7 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return textops.repetition_signals(docs, "text", "doc_id")
+    return textops.repetition_signals(docs)
 
 
 @register(
@@ -2751,7 +2748,7 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 (2.0x candidate reduction; t=0.8: 3.0x, 2.5 s) with the
     # same result set (every clone pair here sits above J=0.9 —
     # verified in both engines). Below ~0.5 the right tool is LSH.
-    return prefix_filter_pairs(docs, "text", "doc_id", shingle_n=3, threshold=0.7)
+    return prefix_filter_pairs(docs, threshold=0.7)
 
 
 @register(
@@ -2796,7 +2793,7 @@ def sample_pps_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split(F.col("text"), r"[ \t\n\f\r]+")).cast("long").alias("weight"),
     )
     return pps_systematic_sample(
-        docs, "weight", k=20, id_col="doc_id", strata=["lang"]
+        docs, "weight", k=20, strata=["lang"]
     ).select("doc_id", "lang", "weight")
 
 
@@ -3786,7 +3783,7 @@ def pack_ffd_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", token_count(F.col("text")).alias("n_tok")
     )
-    packed = pack_bfd(docs, capacity=PACK_CAPACITY, shard_col="lang")
+    packed = pack_bfd(docs, capacity=PACK_CAPACITY)
     per_bin = packed.groupBy("shard", "bin_id").agg(
         F.sum("n_tok").alias("fill"),
         F.max(F.col("offset") + F.col("n_tok")).alias("extent"),
@@ -4145,7 +4142,7 @@ def pipeline_pretrain_corpus_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         gsig["gopher_keep"].alias("keep_q"),
     ).localCheckpoint(eager=False)
     s1 = feat.where("keep_q").drop("keep_q")
-    canon2 = exact_dedup(s1, "text", "doc_id").select("doc_id")
+    canon2 = exact_dedup(s1).select("doc_id")
     s2 = s1.join(canon2, "doc_id").localCheckpoint(eager=False)
 
     buckets, sh_tbl = minhash_buckets(s2)
@@ -6412,7 +6409,6 @@ def text_zipf_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: consecutive slicing means candidate sets NEST (a full 8-row band
 #: match implies its 2-row sub-bands match), pinned in tests
 _SWEEP_CONFIGS = ((4, 8), (8, 4), (16, 2))
-_SWEEP_HASHES = 32
 _SWEEP_TRUTH_J = 0.5
 
 
@@ -6441,7 +6437,7 @@ def _lsh_sweep_oracle() -> str:
     )""",
         f"""hs AS MATERIALIZED (
       SELECT doc_id, coef.i, min((coef.a * xs.x + coef.b) % {phash.P}) AS h
-      FROM xs CROSS JOIN {phash.duck_coef_values(_SWEEP_HASHES)}
+      FROM xs CROSS JOIN {phash.duck_coef_values(NUM_HASHES)}
       GROUP BY doc_id, coef.i
     )""",
         # the exact ppjoin length filter (J >= t forces t*|B| <= |A|)
@@ -6526,10 +6522,8 @@ def dedup_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh_tbl = _shingle_arrays(docs, "text", "doc_id", 3)
-    sigs = minhash_signatures(
-        docs, num_hashes=_SWEEP_HASHES, shingle_df=sh_tbl
-    ).localCheckpoint(eager=False)
+    sh_tbl = _shingle_arrays(docs)
+    sigs = minhash_signatures(docs, shingle_df=sh_tbl).localCheckpoint(eager=False)
 
     # Exact truth via the shared posting-join feed (no lang block):
     # |A∩B| as a hash aggregation over shared shingles, sizes joined
@@ -6781,11 +6775,9 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh_tbl = _shingle_arrays(docs, "text", "doc_id", 3)
-    sigs = minhash_signatures(
-        docs, num_hashes=32, shingle_df=sh_tbl
-    ).localCheckpoint(eager=False)
-    bk = lsh_buckets(sigs, num_hashes=32, num_bands=8)
+    sh_tbl = _shingle_arrays(docs)
+    sigs = minhash_signatures(docs, shingle_df=sh_tbl).localCheckpoint(eager=False)
+    bk = lsh_buckets(sigs)
     x, y = bk.alias("x"), bk.alias("y")
     cand = (
         x.join(
@@ -7062,7 +7054,7 @@ def dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: raw cardinality from the parquet footer (metadata) instead
     # of a full-scan count job — same number by definition.
     n0 = _docs_count(sf_dir)
-    canon = exact_dedup(docs, "text", "doc_id").select("doc_id")
+    canon = exact_dedup(docs).select("doc_id")
     surv = docs.join(canon, "doc_id").localCheckpoint(eager=False)
 
     buckets, sh_tbl = minhash_buckets(surv)

@@ -22,6 +22,13 @@ from crypto_etl_pipeline_spark.operators.similarity import (
     lsh_bucketed_topk,
     norm,
 )
+from crypto_etl_pipeline_spark.operators.bitext import (
+    BITEXT_K,
+    bitext_margin_pairs,
+    duck_pair_ci,
+    mine_bitext,
+    pair_ci_pd,
+)
 from crypto_etl_pipeline_spark.queries.base import register
 from crypto_etl_pipeline_spark.sources.tables import load_table
 
@@ -47,7 +54,7 @@ IVF_NPROBE = 4
 #: the exact plane literals the Spark plan uses (fixed seed) — inlined
 #: into the DuckDB oracle below so both engines hash into identical
 #: buckets (the projection is exact integer arithmetic; see LSH_SCALE).
-_PLANES = _hyperplanes(64, N_PLANES, seed=42)
+_PLANES = _hyperplanes(64, N_PLANES)
 
 #: floor-quantization of an embedding list, as a DuckDB fragment
 _DUCK_QV = f"list_transform(embedding, x -> floor(x::DOUBLE * {float(LSH_SCALE)}))"
@@ -2576,38 +2583,26 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Bitext / parallel-pair mining (r13) — operators/bitext.py.
 # --------------------------------------------------------------------------
-BITEXT_K = 4  #: k-NN neighborhood size for the margin denominator
 BITEXT_SRC_CAP = 200  #: structural bound on the (broadcast) source side
 #: accept thresholds for the sweep — margin > 1 means "above the
 #: neighborhood average", the paper's operating region
 BITEXT_THRESHOLDS = (10000, 10200, 10500, 11000)  # margin x 1e4, integer grid
 
-#: margin as exact-integer arithmetic: cosines are rounded to 4
-#: decimals then scaled to integers (ci = round(cos*1e4)); the k-NN
-#: "means" stay as integer SUMS (si, ti) with their ACTUAL counts
-#: (ks, kt <= k — a vector can have fewer than k positive-cosine
-#: candidates, and dividing by a fixed 2k there would inflate every
-#: margin it touches), and
-#:   margin = (ks + kt) * ci / (si + ti)
-#: — one double division of exact integers, bit-identical across
-#: engines, immune to float accumulation order in averages, and equal
-#: to cos / mean-of-neighborhood-means whenever ks == kt.
+#: the exact-integer cosine (ci) and margin of operators/bitext.py
 _BX_PAIR_SQL = """
     s AS (
-      SELECT e.vec_id AS src_id, e.embedding AS sv
+      SELECT e.vec_id AS src_id, {qv} AS sq
       FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id
       WHERE d.lang = 'en' AND e.vec_id < {cap}
     ),
     t AS (
-      SELECT e.vec_id AS tgt_id, e.embedding AS tv
+      SELECT e.vec_id AS tgt_id, {qv} AS tq
       FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id
       WHERE d.lang = 'de'
     ),
     p AS MATERIALIZED (
       SELECT * FROM (
-        SELECT src_id, tgt_id,
-               CAST(round(round(CAST(list_cosine_similarity(sv, tv) AS DOUBLE), 4)
-                          * 10000) AS BIGINT) AS ci
+        SELECT src_id, tgt_id, {ci} AS ci
         FROM s CROSS JOIN t
       ) WHERE ci > 0
     ),
@@ -2630,77 +2625,23 @@ _BX_PAIR_SQL = """
                    / nullif(nns.si + nnt.ti, 0), 4) AS margin
       FROM p JOIN nns USING (src_id) JOIN nnt USING (tgt_id)
     )
-""".format(cap=BITEXT_SRC_CAP, k=BITEXT_K)
+""".format(
+    qv=_DUCK_QV, cap=BITEXT_SRC_CAP, k=BITEXT_K, ci=duck_pair_ci("sq", "tq")
+)
 
 
 def _bitext_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of the _BX_PAIR_SQL CTE chain: all (en-slice, de)
     pairs scored with the integer-exact ratio margin."""
-    from pyspark.sql.window import Window
-
-    from crypto_etl_pipeline_spark.operators.similarity import pair_cosine_pd
-
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     tagged = emb.join(docs, emb.vec_id == docs.doc_id).select(
         "vec_id", "embedding", "lang"
     )
-    src = (
-        tagged.where((F.col("lang") == "en") & (F.col("vec_id") < BITEXT_SRC_CAP))
-        .limit(BITEXT_SRC_CAP)
-        .select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("_sv"))
-    )
-    from crypto_etl_pipeline_spark.operators.similarity import _spread
-
-    tgt = _spread(tagged.where(F.col("lang") == "de"), "vec_id").select(
-        F.col("vec_id").alias("tgt_id"), F.col("embedding").alias("_tv")
-    )
-    pairs = (
-        tgt.crossJoin(F.broadcast(src))
-        .select(
-            "src_id",
-            "tgt_id",
-            F.round(
-                F.round(pair_cosine_pd()(F.col("_sv"), F.col("_tv")), 4) * 10000
-            )
-            .cast("long")
-            .alias("ci"),
-        )
-        .localCheckpoint(eager=False)
-        # candidacy requires POSITIVE similarity (translations are
-        # strongly positive): keeps every neighborhood sum positive,
-        # so the ratio margin is always well-defined (filter sits
-        # after the checkpoint -> plain-attribute predicate)
-        .where(F.col("ci") > 0)
-    )
-    w_s = Window.partitionBy("src_id").orderBy(F.desc("ci"), F.asc("tgt_id"))
-    nns = (
-        pairs.withColumn("_r", F.row_number().over(w_s))
-        .where(F.col("_r") <= BITEXT_K)
-        .groupBy("src_id")
-        .agg(F.sum("ci").alias("si"), F.count(F.lit(1)).alias("ks"))
-    )
-    w_t = Window.partitionBy("tgt_id").orderBy(F.desc("ci"), F.asc("src_id"))
-    nnt = (
-        pairs.withColumn("_r", F.row_number().over(w_t))
-        .where(F.col("_r") <= BITEXT_K)
-        .groupBy("tgt_id")
-        .agg(F.sum("ci").alias("ti"), F.count(F.lit(1)).alias("kt"))
-    )
-    return (
-        pairs.join(F.broadcast(nns), "src_id")
-        .join(nnt, "tgt_id")
-        .select(
-            "src_id",
-            "tgt_id",
-            F.round(F.col("ci") / 10000.0, 4).alias("cos_sim"),
-            F.round(
-                ((F.col("ks") + F.col("kt")) * F.col("ci")).cast("double")
-                / F.nullif(F.col("si") + F.col("ti"), F.lit(0)),
-                4,
-            ).alias("margin"),
-        )
-    )
+    src = tagged.where(
+        (F.col("lang") == "en") & (F.col("vec_id") < BITEXT_SRC_CAP)
+    ).limit(BITEXT_SRC_CAP)
+    return bitext_margin_pairs(src, tagged.where(F.col("lang") == "de"))
 
 
 @register(
@@ -2724,17 +2665,7 @@ def bitext_mine_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair feed is |src_cap| x |tgt| — the broadcast-queries ANN shape;
     recall on planted translations is pinned in
     tests/test_round13_ops.py."""
-    from pyspark.sql.window import Window
-
-    scored = _bitext_scored(spark, sf_dir)
-    w = Window.partitionBy("src_id").orderBy(
-        F.desc("margin"), F.desc("cos_sim"), F.asc("tgt_id")
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return mine_bitext(_bitext_scored(spark, sf_dir))
 
 
 @register(
@@ -2886,8 +2817,8 @@ def bitext_intersection_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE d.lang IN ('en', 'de')
     ),
     cells AS (
-      SELECT vec_id, embedding, lang, idx AS cell
-      FROM (SELECT t.vec_id, t.embedding, t.lang, c.idx,
+      SELECT vec_id, q, lang, idx AS cell
+      FROM (SELECT t.vec_id, t.q, t.lang, c.idx,
                    row_number() OVER (PARTITION BY t.vec_id ORDER BY
                      -2 * list_dot_product(t.q, c.qc)
                      + list_dot_product(c.qc, c.qc), c.idx) AS rn
@@ -2897,8 +2828,7 @@ def bitext_intersection_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p AS MATERIALIZED (
       SELECT * FROM (
         SELECT s.vec_id AS src_id, t.vec_id AS tgt_id, s.cell,
-               CAST(round(round(CAST(list_cosine_similarity(s.embedding, t.embedding)
-                                     AS DOUBLE), 4) * 10000) AS BIGINT) AS ci
+               {duck_pair_ci("s.q", "t.q")} AS ci
         FROM cells s JOIN cells t ON s.cell = t.cell
         WHERE s.lang = 'en' AND t.lang = 'de'
       ) WHERE ci > 0
@@ -2950,7 +2880,6 @@ def bitext_mine_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.operators.similarity import (
         ivf_assign_cells,
         ivf_build_centroids,
-        pair_cosine_pd,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2978,11 +2907,7 @@ def bitext_mine_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src_id",
             "tgt_id",
             "cell",
-            F.round(
-                F.round(pair_cosine_pd()(F.col("_sv"), F.col("_tv")), 4) * 10000
-            )
-            .cast("long")
-            .alias("ci"),
+            pair_ci_pd()(F.col("_sv"), F.col("_tv")).alias("ci"),
         )
         .localCheckpoint(eager=False)
         .where(F.col("ci") > 0)  # same positive-candidacy contract
@@ -3016,11 +2941,4 @@ def bitext_mine_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("margin"),
         )
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.desc("margin"), F.desc("cos_sim"), F.asc("tgt_id")
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return mine_bitext(scored)

@@ -41,10 +41,9 @@ HISTORICAL_RAW_SCHEMA = StructType(
 )
 
 
-def read_dirty_csv(
-    spark: SparkSession, path: str, schema: StructType = HISTORICAL_RAW_SCHEMA
-) -> DataFrame:
-    """Read a messy CSV with an explicit all-string schema.
+def read_dirty_csv(spark: SparkSession, path: str) -> DataFrame:
+    """Read a messy CSV with the explicit all-string
+    ``HISTORICAL_RAW_SCHEMA``.
 
     Quoted fields with embedded commas (``"36,456.94"``) are handled by
     the standard quote rules; no type is inferred, so every cleaning
@@ -54,7 +53,7 @@ def read_dirty_csv(
         spark.read.option("header", True)
         .option("quote", '"')
         .option("escape", '"')
-        .schema(schema)
+        .schema(HISTORICAL_RAW_SCHEMA)
         .csv(path)
     )
 

@@ -51,13 +51,11 @@ def write_timestamped_csv(
     return path
 
 
-def write_jsonl(df: DataFrame, path: str, single_file: bool = False) -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON-lines sink — the de-facto interchange format for
     training-data corpora. One JSON object per line, splittable,
-    readable by any downstream tokenizer pipeline. ``single_file``
-    as in :func:`write_csv` (never at scale)."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").json(path)
+    readable by any downstream tokenizer pipeline."""
+    df.write.mode("overwrite").json(path)
 
 
 def read_jsonl(spark, path: str, schema):

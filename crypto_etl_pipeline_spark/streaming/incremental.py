@@ -62,6 +62,10 @@ _EVENT_FILE_SCHEMA = StructType(
     ]
 )
 
+#: seconds an AvailableNow drain may take before it is stopped and
+#: reported as a TimeoutError (a partially-drained sink is never returned)
+DRAIN_TIMEOUT_SEC = 120
+
 
 def read_event_stream(
     spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8
@@ -110,19 +114,18 @@ def read_event_stream(
 
 def hourly_rollup_stream(
     events: DataFrame,
-    watermark: str = "2 hours",
     exclude_event_types: tuple = (),
 ) -> DataFrame:
     """Watermarked tumbling 1-hour rollup by event type.
 
-    The watermark bounds aggregation state: windows older than
-    (max event time - watermark) are finalized and their state dropped.
+    The 2-hour watermark bounds aggregation state: windows older than
+    (max event time - 2 hours) are finalized and their state dropped.
 
     ``exclude_event_types`` filters AFTER the watermark node, so the
     excluded rows still advance event time but never create window
     state — the hook watermark-sentinel files use.
     """
-    src = events.withWatermark("ts", watermark)
+    src = events.withWatermark("ts", "2 hours")
     if exclude_event_types:
         # The vacuous ts-null disjunct REFERENCES the watermark column,
         # which pins this filter ABOVE the EventTimeWatermark node:
@@ -358,8 +361,6 @@ def run_available_now(
     stream_df: DataFrame,
     query_name: str,
     checkpoint_dir: str,
-    output_mode: str = "append",
-    timeout_sec: int = 120,
     progress_out: dict | None = None,
     state_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
@@ -378,18 +379,16 @@ def run_available_now(
     package are serial, and a production deployment sets the session
     value once at startup instead.
 
-    Returns the sink table as a batch DataFrame. 'append' (the default
-    — every registered query uses it) emits only watermark-finalized
-    rows and drops their state; 'complete' re-emits every aggregate
-    group each batch and retains all state, so it is for bounded
-    debugging drains only, never a continuous pipeline.
+    Returns the sink table as a batch DataFrame. The sink runs in
+    'append' mode: it emits only watermark-finalized rows and drops
+    their state.
 
     ``progress_out``: optional dict populated with the drained query's
     ``lastProgress``/``recentProgress`` so callers (tests) can assert
     state-store behavior (e.g. that a watermark swept the state empty).
 
     Raises TimeoutError if the drain does not finish within
-    ``timeout_sec`` — a partially-drained sink is WRONG data, never
+    ``DRAIN_TIMEOUT_SEC`` — a partially-drained sink is WRONG data, never
     silently returned (the query is stopped before raising).
     """
     spark = stream_df.sparkSession
@@ -407,16 +406,16 @@ def run_available_now(
         q = (
             stream_df.writeStream.format("memory")
             .queryName(query_name)
-            .outputMode(output_mode)
+            .outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
         )
-        finished = q.awaitTermination(timeout_sec)
+        finished = q.awaitTermination(DRAIN_TIMEOUT_SEC)
         if not finished:
             q.stop()
             raise TimeoutError(
-                f"stream {query_name!r} did not drain within {timeout_sec}s; "
+                f"stream {query_name!r} did not drain within {DRAIN_TIMEOUT_SEC}s; "
                 "sink is partial — refusing to return it"
             )
     finally:
@@ -436,13 +435,11 @@ def run_available_now(
 def interval_join_streams(
     purchases: DataFrame,
     clicks: DataFrame,
-    interval_seconds: int = 86_400,
-    watermark: str = "35 days",
     how: str = "inner",
     keep_sentinels: bool = False,
 ) -> DataFrame:
     """Stream-stream interval join: each purchase joins the same user's
-    clicks from the preceding ``interval_seconds``.
+    clicks from the preceding 24 hours (86,400 s).
 
     The canonical attribution shape. Both sides carry watermarks and the
     join condition bounds event-time distance, so the state store can
@@ -484,7 +481,7 @@ def interval_join_streams(
             F.col("user_id"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", "35 days")
     )
     c = (
         clicks.where(c_keep)
@@ -493,11 +490,11 @@ def interval_join_streams(
             F.col("ts").alias("c_ts"),
             F.col("user_id").alias("c_user_id"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", "35 days")
     )
     cond = (
         (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {interval_seconds} SECOND"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 86400 SECOND"))
         & (F.col("c_ts") <= F.col("p_ts"))
     )
     return p.join(c, cond, how).select(
@@ -552,7 +549,6 @@ def _run_versioned_merge_stream(
     reduce_batch,
     merge,
     empty_base=None,
-    timeout_sec: int = 120,
     retain_versions: int = 3,
     label: str = "stream",
     finalize=None,
@@ -605,9 +601,9 @@ def _run_versioned_merge_stream(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(DRAIN_TIMEOUT_SEC):
         q.stop()
-        raise TimeoutError(f"{label} did not drain within {timeout_sec}s")
+        raise TimeoutError(f"{label} did not drain within {DRAIN_TIMEOUT_SEC}s")
     final = _latest()
     if empty_base is None:
         assert final is not None, f"{label} produced no batches"
@@ -621,7 +617,6 @@ def run_cdc_stream(
     snapshot_dir: str,
     key: str,
     checkpoint_dir: str,
-    timeout_sec: int = 120,
     retain_versions: int = 3,
 ) -> DataFrame:
     """Maintain a parquet snapshot from a stream of CDC changesets.
@@ -647,7 +642,6 @@ def run_cdc_stream(
         reduce_batch=lambda batch_df: batch_df,
         merge=lambda base, delta: apply_changeset(base, delta, key=key),
         empty_base=lambda: snapshot_seed,
-        timeout_sec=timeout_sec,
         retain_versions=retain_versions,
         label="CDC stream",
     )
@@ -657,15 +651,11 @@ def run_sketch_rollup_stream(
     events: DataFrame,
     sketch_dir: str,
     checkpoint_dir: str,
-    bin_width: float = 5.0,
-    n_bins: int = 100,
-    timeout_sec: int = 120,
-    retain_versions: int = 3,
 ) -> DataFrame:
     """Continuous aggregate over a stream via MERGEABLE sketch state.
 
     Each micro-batch reduces to fixed-bin histogram counts
-    (``bin = clamp(floor(value / bin_width), 0, n_bins-1)``) and MERGES
+    (``bin = clamp(floor(value / 5.0), 0, 99)``) and MERGES
     them into the running sketch by per-(event_type, bin) ADDITION —
     the property that makes histogram sketches (and HLL, and count-min)
     the right state representation for streaming aggregates: state
@@ -691,27 +681,17 @@ def run_sketch_rollup_stream(
         reduce_batch=lambda batch_df: histogram_sketch(
             batch_df.where(F.col("value").isNotNull()),
             "event_type",
-            fixed_bin(F.col("value"), bin_width, n_bins),
+            fixed_bin(F.col("value"), 5.0),
         ),
         merge=lambda base, delta: merge_sketches(base, delta),
-        timeout_sec=timeout_sec,
-        retain_versions=retain_versions,
         label="sketch rollup stream",
     )
 
 
-def run_mg_stream(
-    events: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    term_col: str = "event_type",
-    k: int = 5,
-    timeout_sec: int = 120,
-    retain_versions: int = 3,
-) -> DataFrame:
+def run_mg_stream(events: DataFrame, store_dir: str, checkpoint_dir: str) -> DataFrame:
     """Streaming frequent items via a MERGEABLE Misra-Gries store.
 
-    Each micro-batch reduces to its MG(k) summary (per-partition
+    Each micro-batch reduces to its MG(k=5) summary (per-partition
     partials summed and pruned); the running store merges summaries by
     weight addition + prune-to-(k-1) — the Agarwal et al. mergeable-
     summaries property, the frequency-domain sibling of the histogram
@@ -738,11 +718,9 @@ def run_mg_stream(
         events,
         store_dir,
         checkpoint_dir,
-        reduce_batch=lambda batch_df: misra_gries_partials(batch_df, term_col, k),
-        merge=lambda base, delta: merge_mg_summaries(base, delta, k),
+        reduce_batch=lambda batch_df: misra_gries_partials(batch_df, "event_type", 5),
+        merge=lambda base, delta: merge_mg_summaries(base, delta, 5),
         empty_base=lambda: spark.createDataFrame([], "term string, w long"),
-        timeout_sec=timeout_sec,
-        retain_versions=retain_versions,
         label="MG stream",
     )
 
@@ -752,8 +730,6 @@ def run_kmv_distinct_stream(
     store_dir: str,
     checkpoint_dir: str,
     k: int = 64,
-    timeout_sec: int = 120,
-    retain_versions: int = 3,
 ) -> DataFrame:
     """Streaming distinct-user estimation via MERGEABLE KMV state
     (the run_sketch_rollup_stream discipline applied to cardinality):
@@ -779,8 +755,6 @@ def run_kmv_distinct_stream(
         checkpoint_dir,
         reduce_batch=lambda batch_df: kmv_sketch(batch_df, "event_type", "user_id", k),
         merge=lambda base, delta: kmv_merge(base, delta, k),
-        timeout_sec=timeout_sec,
-        retain_versions=retain_versions,
         label="KMV distinct stream",
         finalize=lambda final: kmv_estimate(final, k),
     )
@@ -790,8 +764,6 @@ def run_mv_rollup_stream(
     events: DataFrame,
     store_dir: str,
     checkpoint_dir: str,
-    timeout_sec: int = 120,
-    retain_versions: int = 3,
 ) -> DataFrame:
     """Streaming materialized-view maintenance for the hourly rollup:
     the EXACT-aggregate twin of run_sketch_rollup_stream, and the
@@ -871,8 +843,6 @@ def run_mv_rollup_stream(
         checkpoint_dir,
         reduce_batch=_reduce,
         merge=_merge,
-        timeout_sec=timeout_sec,
-        retain_versions=retain_versions,
         label="mv rollup stream",
         finalize=_finalize,
     )

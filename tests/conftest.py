@@ -168,6 +168,7 @@ def duck():
 
 _QUICK_MODULES = {
     "test_registry_lint",
+    "test_unset_params",
     "test_cleaning_edges",
     "test_operator_edges",
     "test_golden_parity",

@@ -114,7 +114,7 @@ def test_winnowing_guarantee(spark):
         ],
         "doc_id int, text string",
     )
-    fps = winnow_fingerprints(docs, "text", "doc_id", k=3, w=4).collect()
+    fps = winnow_fingerprints(docs).collect()
     by_doc = {}
     for r in fps:
         by_doc.setdefault(r["doc_id"], set()).add(r["fingerprint"])

@@ -108,7 +108,7 @@ def test_fuzzy_block_cap_bounds_comparisons(spark):
     out = blocked_fuzzy_join(
         names, names.selectExpr("name AS rname"),
         left_id="id", left_text="name", right_text="rname",
-        block=block, max_dist=2, top_k=1, block_cap=10,
+        block=block, block_cap=10,
     )
     rows = out.collect()
     # capped right side = lexicographic first 10 names (ids 0-9): every

@@ -280,7 +280,10 @@ def test_bitext_margin_recovers_planted_pairs(spark):
     exactly what demotes hubs — the point of Artetxe & Schwenk)."""
     import random
 
-    from crypto_etl_pipeline_spark.operators.bitext import mine_bitext
+    from crypto_etl_pipeline_spark.operators.bitext import (
+        bitext_margin_pairs,
+        mine_bitext,
+    )
 
     rng = random.Random(7)
     dim = 16
@@ -307,13 +310,78 @@ def test_bitext_margin_recovers_planted_pairs(spark):
     tgt_df = spark.createDataFrame(tgts, "vec_id long, embedding array<float>")
     mined = {
         r["src_id"]: (r["tgt_id"], r["margin"])
-        for r in mine_bitext(src_df, tgt_df, k=4).collect()
+        for r in mine_bitext(bitext_margin_pairs(src_df, tgt_df)).collect()
     }
     assert set(mined) == {i for i, _ in srcs}
     for i, _ in srcs:
         tgt_id, margin = mined[i]
         assert tgt_id == 100 + i, f"src {i} mined {tgt_id}, wanted {100 + i}"
         assert margin > 1.0, f"planted pair margin {margin} not > 1"
+
+
+# embeddings 91 (en) and 229 (de) of perfbench's sf0.01 tables (seed 42)
+_BOUNDARY_SRC = [
+    -0.039225187, -0.076184094, 0.041901205, 0.12105242, 0.006759072,
+    -0.060994968, -0.040826153, -0.0521446, 0.2103833, 0.12980382,
+    -0.0023366322, 0.22848439, 0.12378931, -0.17541267, 0.23323229,
+    -0.09416123, -0.03679434, -0.043305956, 0.1601623, -0.012215519,
+    -0.037818406, -0.032646157, -0.11976497, 0.10407017, -0.048717536,
+    -0.055340055, 0.000424464, 0.10641371, 0.30383557, 0.11897867,
+    -0.006419844, 0.1705858, 0.2111728, -0.05238724, -0.005664801,
+    -0.056775067, 0.062010266, 0.0017916729, 0.09651412, -0.16334382,
+    -0.01154771, -0.010150566, -0.14290737, -0.14148107, 0.10782102,
+    -0.0337449, 0.14901204, 0.016288841, 0.10335597, -0.035359524,
+    -0.047194615, 0.00830468, -0.1469083, -0.1751433, 0.21011582,
+    0.20492956, 0.13413669, 0.019578429, -0.121469244, 0.18313615,
+    0.24023353, -0.07087069, -0.27286538, 0.11621374,
+]
+_BOUNDARY_TGT = [
+    -0.0058657406, -0.15751092, 0.032065377, 0.054404244, 0.004304771,
+    0.084169544, 0.019701816, -0.14939155, 0.09362963, 0.10395835,
+    -0.014898611, 0.12445474, 0.0840575, -0.28100458, 0.22582492,
+    -0.11530622, 0.090890594, -0.032677814, -0.18760216, 0.030655434,
+    -0.06770664, -0.015151435, -0.29651868, 0.058656253, 0.17087969,
+    -0.05800474, 0.18762185, 0.0832941, 0.08958418, -0.0015260336,
+    0.18686269, 0.028504938, 0.032942742, -0.014058691, 0.022945171,
+    0.07951871, 0.038448013, -0.0776332, 0.04163338, -0.09544563,
+    -0.074687734, -0.07571828, 0.009203781, -0.07241805, -0.078679696,
+    0.12133826, 0.09299872, 0.12581037, 0.016668323, -0.23055387,
+    0.049064104, 0.08203946, -0.20022993, -0.0918502, 0.17487743,
+    0.32634225, 0.23075989, 0.13967256, -0.031371918, 0.15895408,
+    0.17210656, -0.022790246, -0.17077897, 0.025339698,
+]
+
+
+def test_bitext_boundary_pair_scores_identically_in_both_engines(spark):
+    """Regression: this pair's float cosine lies within float error of
+    0.60905, so rounding a float cosine to 4 decimals gave 0.609 in
+    Spark (float64 numpy) and 0.6091 in DuckDB (float32
+    list_cosine_similarity), and bitext_mine_margin disagreed with its
+    oracle. The quantized integer cosine is exact in both engines."""
+    import duckdb
+
+    from crypto_etl_pipeline_spark.operators.bitext import bitext_margin_pairs
+    from crypto_etl_pipeline_spark.queries import REGISTRY
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.execute(
+        "INSERT INTO embeddings VALUES (91, ?), (229, ?)",
+        [_BOUNDARY_SRC, _BOUNDARY_TGT],
+    )
+    con.execute(
+        "CREATE TABLE documents AS "
+        "SELECT * FROM (VALUES (91, 'en'), (229, 'de')) t(doc_id, lang)"
+    )
+    duck = con.sql(REGISTRY["bitext_mine_margin"].oracle).fetchall()
+
+    schema = "vec_id long, embedding array<float>"
+    src = spark.createDataFrame([(91, _BOUNDARY_SRC)], schema)
+    tgt = spark.createDataFrame([(229, _BOUNDARY_TGT)], schema)
+    got = [tuple(r) for r in bitext_margin_pairs(src, tgt).collect()]
+
+    assert duck == [(91, 229, 0.609, 1.0)]
+    assert got == [(91, 229, 0.609, 1.0)]
 
 
 def test_bitext_intersection_keeps_planted_drops_hub(spark):
@@ -342,7 +410,7 @@ def test_bitext_intersection_keeps_planted_drops_hub(spark):
 
     from pyspark.sql.window import Window
 
-    scored = bitext_margin_pairs(src_df, tgt_df, k=4)
+    scored = bitext_margin_pairs(src_df, tgt_df)
     w_f = Window.partitionBy("src_id").orderBy(
         F.desc("margin"), F.desc("cos_sim"), F.asc("tgt_id")
     )

@@ -287,7 +287,7 @@ class TestPrefixFilter:
         df = spark.createDataFrame(docs, "doc_id long, text string")
         got = {
             (r.id_a, r.id_b)
-            for r in prefix_filter_pairs(df, "text", "doc_id", 3, 0.5).collect()
+            for r in prefix_filter_pairs(df, 0.5).collect()
         }
         assert got == expected
 
@@ -300,7 +300,7 @@ class TestPrefixFilter:
         from crypto_etl_pipeline_spark.operators.dedup import _shingle_arrays
 
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        sh = _shingle_arrays(docs, "text", "doc_id", 3)
+        sh = _shingle_arrays(docs)
         full = sh.select(F.explode("_sh")).count()
         # Re-derive the prefix posting count with the operator's rule.
         from pyspark.sql.window import Window

@@ -152,7 +152,7 @@ class TestStreamStaticEnrichAppend:
             "c_custkey", "c_mktsegment"
         )
         stage = _stage_dir(SF_ORACLE, copies=1)
-        _write_watermark_sentinels(spark, SF_ORACLE, stage, n=2)
+        _write_watermark_sentinels(spark, SF_ORACLE, stage)
         events = read_event_stream(spark, stage, max_files_per_trigger=2)
         rolled = (
             events.withWatermark("ts", "2 hours")
@@ -170,7 +170,6 @@ class TestStreamStaticEnrichAppend:
             rolled,
             f"enrich_t_{uuid.uuid4().hex[:8]}",
             _checkpoint(),
-            output_mode="append",
             progress_out=progress,
         )
         got = {(r["hour_start"], r["segment"]): r["n_events"] for r in out.collect()}
@@ -224,17 +223,16 @@ class TestHourlyRollupAppend:
         from tests.conftest import SF_ORACLE
 
         stage = _stage_dir(SF_ORACLE, copies=1)
-        _write_watermark_sentinels(spark, SF_ORACLE, stage, n=2)
+        _write_watermark_sentinels(spark, SF_ORACLE, stage)
         events = read_event_stream(spark, stage, max_files_per_trigger=2)
         rolled = hourly_rollup_stream(
-            events, watermark="2 hours", exclude_event_types=("_sentinel",)
+            events, exclude_event_types=("_sentinel",)
         )
         progress: dict = {}
         out = run_available_now(
             rolled,
             f"rollup_t_{uuid.uuid4().hex[:8]}",
             _checkpoint(),
-            output_mode="append",
             progress_out=progress,
         )
         got = {
@@ -299,7 +297,7 @@ class TestPpjoinFilters:
 
         docs = self._dense_docs()
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        sh = _shingle_arrays(df, "text", "doc_id", 3)
+        sh = _shingle_arrays(df)
         base = _prefix_candidates(
             sh, "doc_id", 0.7, length_filter=False, positional_filter=False
         ).count()
@@ -336,7 +334,7 @@ class TestPpjoinFilters:
         assert expected, "fixture must contain qualifying pairs"
 
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        sh = _shingle_arrays(df, "text", "doc_id", 3)
+        sh = _shingle_arrays(df)
         cand = {
             (r["id_a"], r["id_b"])
             for r in _prefix_candidates(sh, "doc_id", t).collect()
@@ -345,7 +343,7 @@ class TestPpjoinFilters:
 
         got = {
             (r.id_a, r.id_b)
-            for r in prefix_filter_pairs(df, "text", "doc_id", 3, t).collect()
+            for r in prefix_filter_pairs(df, t).collect()
         }
         assert got == expected
 
@@ -415,7 +413,7 @@ class TestPpsSample:
         df = self._docs(spark, [1 + i % 5 for i in range(400)])
         from pyspark.sql import functions as F
 
-        out = pps_systematic_sample(df, "w", k=10, id_col="doc_id", strata=["stratum"])
+        out = pps_systematic_sample(df, "w", k=10, strata=["stratum"])
         counts = {r["stratum"]: r["n"] for r in
                   out.groupBy("stratum").agg(F.count(F.lit(1)).alias("n")).collect()}
         assert counts == {"s0": 10, "s1": 10}
@@ -429,9 +427,9 @@ class TestPpsSample:
         weights = [1] * 200 + [500]  # doc 200 carries >> total/k weight
         df = self._docs(spark, weights)
         sel1 = {r["doc_id"] for r in
-                pps_systematic_sample(df, "w", k=5, id_col="doc_id", strata=["stratum"]).collect()}
+                pps_systematic_sample(df, "w", k=5, strata=["stratum"]).collect()}
         sel2 = {r["doc_id"] for r in
-                pps_systematic_sample(df, "w", k=5, id_col="doc_id", strata=["stratum"]).collect()}
+                pps_systematic_sample(df, "w", k=5, strata=["stratum"]).collect()}
         assert 200 in sel1
         assert sel1 == sel2
 
@@ -561,7 +559,7 @@ class TestOuterIntervalJoin:
         from tests.conftest import SF_ORACLE
 
         d = _stage_dir(SF_ORACLE, copies=1)
-        _write_watermark_sentinels(spark, SF_ORACLE, d, n=2)
+        _write_watermark_sentinels(spark, SF_ORACLE, d)
         joined = interval_join_streams(
             read_event_stream(spark, d, max_files_per_trigger=2),
             read_event_stream(spark, d, max_files_per_trigger=2),
@@ -573,7 +571,6 @@ class TestOuterIntervalJoin:
             joined,
             f"ijo_t_{uuid.uuid4().hex[:8]}",
             _checkpoint(),
-            output_mode="append",
             state_partitions=4,
             progress_out=progress,
         )
@@ -934,7 +931,7 @@ def test_ffd_pack_matches_independent_reference_and_properties(spark):
     )
     got = {
         r["doc_id"]: (r["shard"], r["bin_id"], r["offset"])
-        for r in pack_ffd(docs, capacity=128, shard_col="lang").collect()
+        for r in pack_ffd(docs, capacity=128).collect()
     }
     by_lang = {}
     for r in docs.collect():

@@ -112,9 +112,8 @@ class TestAresPositiveWeightContract:
 
 
 class TestConnectedComponentsStrictFlag:
-    """ADVICE_r5 (low): the r5 raise-on-non-convergence is the right
-    default but a breaking change; strict=False restores best-effort
-    labels for callers that want degraded output over a hard stop."""
+    """Non-convergence within max_iter raises; a converged run labels
+    every node with its component's min id."""
 
     def _chain(self, spark, n):
         nodes = spark.createDataFrame([(i,) for i in range(n + 1)], "id long")
@@ -137,24 +136,12 @@ class TestConnectedComponentsStrictFlag:
         with pytest.raises(RuntimeError, match="(?i)converge"):
             connected_components(nodes, edges, max_iter=1).collect()
 
-    def test_tolerant_mode_returns_best_effort(self, spark, monkeypatch):
-        from crypto_etl_pipeline_spark.operators import cluster
-        from crypto_etl_pipeline_spark.operators.cluster import connected_components
-
-        monkeypatch.setattr(cluster, "_SINGLE_TASK_EDGE_CAP", 0)
-        nodes, edges = self._chain(spark, 40)
-        rows = connected_components(nodes, edges, max_iter=1, strict=False).collect()
-        assert len(rows) == 41  # every node labeled, possibly unconverged
-
-    def test_converged_result_identical_in_both_modes(self, spark):
+    def test_converged_chain_has_min_id_root(self, spark):
         from crypto_etl_pipeline_spark.operators.cluster import connected_components
 
         nodes, edges = self._chain(spark, 12)
         a = sorted(map(tuple, connected_components(nodes, edges).collect()))
-        b = sorted(
-            map(tuple, connected_components(nodes, edges, strict=False).collect())
-        )
-        assert a == b
+        assert len(a) == 13
         assert {t[1] for t in a} == {0}  # one chain, min-id root
 
 

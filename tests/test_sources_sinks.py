@@ -292,7 +292,6 @@ def test_sessionize_two_drains_identical(spark, tmp_path):
             sessionize_stream(ev, gap_seconds=6 * 3600, timeout="none"),
             f"sess_det_{tag}",
             str(tmp_path / f"ckpt_{tag}"),
-            output_mode="append",
         )
         return sorted(map(repr, (tuple(r) for r in out.collect())))
 
