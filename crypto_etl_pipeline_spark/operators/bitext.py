@@ -20,7 +20,7 @@ is |src| x |tgt| with |src| capped — the same broadcast-queries shape
 as brute_force_topk; both k-NN sums and the final ranking ride
 windows over that bounded pair frame. For unbounded BOTH sides, the
 registered ``bitext_mine_bucketed`` query pre-buckets with IVF cells
-and scores within each cell with the same :func:`pair_ci_pd`.
+and scores within each cell with the same :func:`margin_scores`.
 
 Reference: no embedding or multilingual surface in the reference at
 all (SURVEY §1.2) — north-star extension (VERDICT r12 "worth
@@ -28,14 +28,8 @@ adding" #2).
 
 Exact arithmetic, bit-identical in Spark and the DuckDB oracle:
 
-- cosine: components are quantized to ``floor(x * LSH_SCALE)``, so the
-  dot product and both squared norms are sums of integers below 2^53,
-  exact in float64 in any summation order; ``dot / sqrt(na * nb)`` is
-  then three correctly-rounded IEEE operations, and
-  ``ci = floor(cos * 10000 + 0.5)`` is the cosine in units of 1e-4.
-  (A float cosine rounded to 4 decimals is not portable: DuckDB's
-  ``list_cosine_similarity`` works in float32 on FLOAT lists, and a
-  pair within float error of a ``.xxxx5`` boundary rounds differently.)
+- cosine: the vector family's one kernel, ``ci`` = the cosine in units
+  of 1e-4 (:func:`~crypto_etl_pipeline_spark.operators.similarity.pair_ci_pd`).
 - margin: the k-NN "means" stay as integer SUMS (si, ti) with their
   ACTUAL counts (ks, kt <= k — a vector can have fewer than k
   positive-cosine candidates, and dividing by a fixed 2k there would
@@ -47,62 +41,26 @@ Exact arithmetic, bit-identical in Spark and the DuckDB oracle:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from crypto_etl_pipeline_spark.operators.similarity import LSH_SCALE, _spread
+from crypto_etl_pipeline_spark.operators.similarity import _spread, pair_ci_pd
 
 BITEXT_K = 4  #: k-NN neighborhood size for the margin denominator
 
 
-def duck_pair_ci(sq: str, tq: str) -> str:
-    """DuckDB twin of :func:`pair_ci_pd` over two quantized vectors
-    (``floor(x * LSH_SCALE)`` component lists)."""
-    return (
-        f"CAST(floor(list_dot_product({sq}, {tq})"
-        f" / sqrt(list_dot_product({sq}, {sq}) * list_dot_product({tq}, {tq}))"
-        " * 10000 + 0.5) AS BIGINT)"
-    )
+def margin_scores(pairs: DataFrame) -> DataFrame:
+    """Score a candidate pair frame ``(src_id, tgt_id, ci, ...)`` with
+    the integer-exact ratio margin: the same columns with ``ci``
+    replaced by ``cos_sim = ci / 10000.0`` and ``margin`` (rounded to
+    4 decimals).
 
-
-def pair_ci_pd():
-    """Arrow-batched exact per-pair cosine in units of 1e-4 (``ci``,
-    long): see the module header for why every step is exact."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def pair_ci(sv: pd.Series, tv: pd.Series) -> pd.Series:
-        S = np.floor(np.asarray([np.asarray(x, dtype=np.float64) for x in sv]) * LSH_SCALE)
-        T = np.floor(np.asarray([np.asarray(x, dtype=np.float64) for x in tv]) * LSH_SCALE)
-        num = np.einsum("ij,ij->i", S, T)
-        den = np.sqrt(np.einsum("ij,ij->i", S, S) * np.einsum("ij,ij->i", T, T))
-        return pd.Series(np.floor(num / den * 10000.0 + 0.5).astype(np.int64))
-
-    return pair_ci
-
-
-def bitext_margin_pairs(src: DataFrame, tgt: DataFrame) -> DataFrame:
-    """All positive-cosine (src, tgt) pairs of two ``(vec_id,
-    embedding)`` frames, scored with the integer-exact ratio margin:
-    (src_id, tgt_id, cos_sim, margin), both rounded to 4 decimals.
-    ``src`` must be the bounded side (it is broadcast)."""
-    s = src.select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("_sv"))
-    t = _spread(tgt, "vec_id").select(
-        F.col("vec_id").alias("tgt_id"), F.col("embedding").alias("_tv")
-    )
-    pairs = (
-        t.crossJoin(F.broadcast(s))
-        .select("src_id", "tgt_id", pair_ci_pd()(F.col("_sv"), F.col("_tv")).alias("ci"))
-        .localCheckpoint(eager=False)
-        # candidacy requires POSITIVE similarity (translations are
-        # strongly positive): keeps every neighborhood sum positive,
-        # so the ratio margin is always well-defined (filter sits
-        # after the checkpoint -> plain-attribute predicate)
-        .where(F.col("ci") > 0)
-    )
+    Candidacy requires POSITIVE similarity (translations are strongly
+    positive): that keeps every neighborhood sum positive, so the ratio
+    margin is always well-defined. The filter sits after a checkpoint,
+    so it is a plain-attribute predicate over the kernel's output."""
+    pairs = pairs.localCheckpoint(eager=False).where(F.col("ci") > 0)
     w_s = Window.partitionBy("src_id").orderBy(F.desc("ci"), F.asc("tgt_id"))
     nns = (
         pairs.withColumn("_r", F.row_number().over(w_s))
@@ -117,18 +75,36 @@ def bitext_margin_pairs(src: DataFrame, tgt: DataFrame) -> DataFrame:
         .groupBy("tgt_id")
         .agg(F.sum("ci").alias("ti"), F.count(F.lit(1)).alias("kt"))
     )
+    extra = [c for c in pairs.columns if c not in ("src_id", "tgt_id", "ci")]
     return (
         pairs.join(F.broadcast(nns), "src_id")
         .join(nnt, "tgt_id")
         .select(
             "src_id",
             "tgt_id",
-            F.round(F.col("ci") / 10000.0, 4).alias("cos_sim"),
+            *extra,
+            (F.col("ci") / 10000.0).alias("cos_sim"),
             F.round(
                 ((F.col("ks") + F.col("kt")) * F.col("ci")).cast("double")
                 / F.nullif(F.col("si") + F.col("ti"), F.lit(0)),
                 4,
             ).alias("margin"),
+        )
+    )
+
+
+def bitext_margin_pairs(src: DataFrame, tgt: DataFrame) -> DataFrame:
+    """All positive-cosine (src, tgt) pairs of two ``(vec_id,
+    embedding)`` frames, scored by :func:`margin_scores`:
+    (src_id, tgt_id, cos_sim, margin). ``src`` must be the bounded side
+    (it is broadcast)."""
+    s = src.select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("_sv"))
+    t = _spread(tgt).select(
+        F.col("vec_id").alias("tgt_id"), F.col("embedding").alias("_tv")
+    )
+    return margin_scores(
+        t.crossJoin(F.broadcast(s)).select(
+            "src_id", "tgt_id", pair_ci_pd()(F.col("_sv"), F.col("_tv")).alias("ci")
         )
     )
 

@@ -779,7 +779,7 @@ def simhash_signatures(df: DataFrame) -> DataFrame:
     int — ``shiftright`` does not accept a column shift count).
     """
     n_bits = 60
-    sh = F.split(F.col("text"), r"[ \t\n\f\r]+")
+    sh = tokens(F.col("text"))
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     tok = df.repartition(n_parts, F.col("doc_id")).select(F.col("doc_id"), F.explode(sh).alias("_t"))
     hashed = tok.select("doc_id", md5_long(F.col("_t"), 15).alias("_h"))

@@ -19,7 +19,17 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two numeric arrays, accumulated in double."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
 
 
 def moment_rows(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
@@ -31,8 +41,6 @@ def moment_rows(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     merges partials across partitions (map-side combine keeps the
     exchange at dim^2 + dim + 1 rows regardless of corpus size).
     """
-    from pyspark.sql import functions as F
-
     def _partial(batches):
         acc = np.zeros((dim, dim), dtype=np.float64)
         s = np.zeros(dim, dtype=np.float64)
@@ -126,8 +134,6 @@ def grouped_moment_rows(
     (group, i, j, v) partials, one groupBy(group, i, j) merge. The
     exchange is G * (dim^2 + dim + 1) rows; per-group corpus size
     never matters."""
-    from pyspark.sql import functions as F
-
     def _partial(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -207,10 +213,6 @@ def pca_residual_scores(
     ||x-mean||² = ||x||² - 2·dot(x,mean) + ||mean||² keeps every
     per-row term a single fold against a literal.
     """
-    from pyspark.sql import functions as F
-
-    from crypto_etl_pipeline_spark.operators.similarity import dot
-
     vlit = F.array(*[F.lit(float(x)) for x in component])
     mlit = F.array(*[F.lit(float(x)) for x in mean])
     mv = float(mean @ component)

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_etl_pipeline_spark.operators.phash import md5_long
+from crypto_etl_pipeline_spark.operators.textops import tokens
 
 
 def hashed_presence_features(docs: DataFrame, dim: int = 256) -> DataFrame:
@@ -46,7 +47,7 @@ def hashed_presence_features(docs: DataFrame, dim: int = 256) -> DataFrame:
     return (
         docs.select(
             F.col("doc_id"),
-            F.explode(F.array_distinct(F.split(F.col("text"), r"[ \t\n\f\r]+"))).alias("_tok"),
+            F.explode(F.array_distinct(tokens(F.col("text")))).alias("_tok"),
         )
         .select("doc_id", (md5_long(F.col("_tok"), 8) % dim).alias("feat"))
         .distinct()

@@ -1,7 +1,8 @@
 """Similarity search over embedding columns (north-star extension §2.13).
 
-- ``cosine``: expression-level cosine over two array<float/double>
-  columns — zip_with product + aggregate sum in DOUBLE, JVM-side.
+- ``pair_ci_pd`` / ``duck_pair_ci``: THE cosine of the vector family
+  (one Spark kernel and its DuckDB twin), exact integer arithmetic so
+  both engines return the same ``ci`` bit for bit.
 - ``brute_force_topk``: exact top-k neighbors for a (small) query set:
   broadcast the queries, one narrow pass over the corpus, then a
   partitioned window keeps k per query. Scales as corpus_size x
@@ -20,46 +21,83 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: fixed-point scale of every exact-integer vector kernel (pair cosine,
+#: sign-LSH projections, IVF/PQ centroid distances): components are
+#: quantized to ``floor(x * LSH_SCALE)``, an exact float64 integer.
+LSH_SCALE = 1 << 20
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two numeric arrays, accumulated in double."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+EMBED_DIM = 64  #: width of the embeddings column (LSH planes, PQ subspaces)
+
+
+def duck_qv(col: str) -> str:
+    """DuckDB fragment quantizing the list column ``col`` the way
+    :func:`pair_ci_pd` and the centroid kernels do."""
+    return f"list_transform({col}, x -> floor(x::DOUBLE * {float(LSH_SCALE)}))"
+
+
+def duck_pair_ci(sq: str, tq: str) -> str:
+    """DuckDB twin of :func:`pair_ci_pd` over two quantized lists
+    (:func:`duck_qv`). A zero or NULL vector divides by zero, which
+    DuckDB answers with NULL."""
+    return (
+        f"CAST(floor(list_dot_product({sq}, {tq})"
+        f" / sqrt(list_dot_product({sq}, {sq}) * list_dot_product({tq}, {tq}))"
+        " * 10000 + 0.5) AS BIGINT)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def pair_ci_pd():
+    """Exact per-pair cosine in units of 1e-4 — ``ci``, a long, with
+    ``cos_sim = ci / 10000.0`` — Arrow-batched, one numpy pass per
+    batch. Every cosine of the vector family goes through it.
 
+    Components are quantized to ``floor(x * LSH_SCALE)`` (x = 2^20), so
+    the dot product and both squared norms are sums of integers. They
+    are exact in float64, in any summation order, while
+    ``dim * (max|x| * 2^20)^2 < 2^53``. The inputs meet that bound with
+    room to spare:
 
-def pair_cosine_pd():
-    """Arrow-batched per-pair cosine (the probe hot path).
+    - the ``embeddings`` column: 64 dims of a float32 unit vector,
+      |x| <= 1 (to float32 rounding), so the sums stay below 2^47;
+    - Matryoshka prefixes of it: fewer dims, same |x|;
+    - ``ann_jl_projected_topk``'s 16-dim ±1 projections of those unit
+      vectors: |x| <= sqrt(64) = 8, so the sums stay below 2^50.
 
-    One numpy einsum per Arrow batch replaces an interpreted HOF fold
-    per pair — the same vectorization pattern as the IVF centroid
-    assignment. Numeric note: numpy's pairwise-blocked summation can
-    differ from the sequential JVM/DuckDB fold by ~1e-16 relative;
-    every caller rounds to 4 decimals, which absorbs it (verified in
-    tests against the expression variant)."""
+    ``ci = floor(dot / sqrt(na * nb) * 10000 + 0.5)`` is then five
+    correctly-rounded IEEE operations in the same order as the DuckDB
+    twin (:func:`duck_pair_ci`), so the two engines agree bit for bit.
+    A float cosine rounded to 4 decimals does not: DuckDB's built-in
+    list cosine works in float32 on FLOAT lists, and a pair within
+    float error of a ``.xxxx5`` boundary rounds differently.
+
+    A null vector, or one that quantizes to all zeros, gives a null
+    ``ci`` (DuckDB's division by zero does the same). Rows may differ in
+    length (per-row prefixes); the two vectors of a pair may not."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("double")
-    def pair_cos(qv: pd.Series, cv: pd.Series) -> pd.Series:
-        Q = np.asarray([np.asarray(x, dtype=np.float64) for x in qv], dtype=np.float64)
-        C = np.asarray([np.asarray(x, dtype=np.float64) for x in cv], dtype=np.float64)
-        num = np.einsum("ij,ij->i", Q, C)
-        den = np.sqrt(np.einsum("ij,ij->i", Q, Q) * np.einsum("ij,ij->i", C, C))
-        return pd.Series(num / den)
+    @pandas_udf("long")
+    def pair_ci(sv: pd.Series, tv: pd.Series) -> pd.Series:
+        sva, tva = sv.to_numpy(), tv.to_numpy()
+        ci = np.full(len(sva), np.nan)
+        ok = (sv.notna() & tv.notna()).to_numpy()
+        dims = np.fromiter((len(v) if o else -1 for v, o in zip(sva, ok)), np.int64, len(sva))
+        for d in np.unique(dims[ok]):
+            rows = np.flatnonzero(dims == d)
+            S = np.floor(np.stack(sva[rows]).astype(np.float64) * LSH_SCALE)
+            T = np.floor(np.stack(tva[rows]).astype(np.float64) * LSH_SCALE)
+            num = np.einsum("ij,ij->i", S, T)
+            den = np.sqrt(np.einsum("ij,ij->i", S, S) * np.einsum("ij,ij->i", T, T))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                ci[rows] = np.where(den > 0, np.floor(num / den * 10000.0 + 0.5), np.nan)
+        return pd.Series(ci).astype("Int64")
 
-    return pair_cos
+    return pair_ci
 
 
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Hash-repartition a compact table across all cores.
+def _spread(df: DataFrame) -> DataFrame:
+    """Hash-repartition a compact ``vec_id``-keyed table across all cores.
 
-    The per-pair cosine passes below are CPU-bound interpreted folds; if
+    The per-pair cosine passes below are CPU-bound; if
     the corpus parquet arrives as one split (typical for a small table,
     and exactly what the driver's testdata does), a broadcast join pins
     the whole pass to ONE task. At 100 TB the table has thousands of
@@ -75,7 +113,7 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     # no-op); fewer files than cores means a compact table where one
     # hash shuffle to all cores is the cheap, right call.
     if len(df.inputFiles()) < target:
-        return df.repartition(target, F.col(id_col))
+        return df.repartition(target, F.col("vec_id"))
     return df
 
 
@@ -87,18 +125,18 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k per query vector.
 
-    ``queries`` is broadcast (it must be the small side); the cosine is
-    computed corpus-side in one codegen'd pass; a window partitioned by
-    query id ranks candidates. Returns (query_id, neighbor_id, cos_sim,
-    rank).
+    ``queries`` is broadcast (it must be the small side); the exact
+    cosine kernel (:func:`pair_ci_pd`) scores each pair corpus-side; a
+    window partitioned by query id ranks candidates. Returns (query_id,
+    neighbor_id, cos_sim, rank).
     """
     from pyspark.sql.window import Window
 
     q = queries.select(F.col("vec_id").alias("query_id"), F.col(vec_col).alias("_qvec"))
-    c = _spread(corpus, "vec_id").select(
+    c = _spread(corpus).select(
         F.col("vec_id").alias("neighbor_id"), F.col(vec_col).alias("_cvec")
     )
-    # Per-pair cosine via the Arrow-batched matmul UDF: the broadcast
+    # Per-pair cosine via the Arrow-batched exact kernel: the broadcast
     # join only routes rows; all arithmetic is one numpy pass per batch.
     sims = (
         c.crossJoin(F.broadcast(q))
@@ -106,22 +144,14 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(pair_cosine_pd()(F.col("_qvec"), F.col("_cvec")), 4).alias("cos_sim"),
+            (pair_ci_pd()(F.col("_qvec"), F.col("_cvec")) / 10000.0).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-#: fixed-point scale for sign-LSH projections. Inputs are float32
-#: embeddings with |x| ~ 1; floor(x * 2^20) < 2^26 per term, and a
-#: 64-dim sum of +/- such terms stays < 2^32 — exactly representable
-#: in float64 AND int64, so the projection (and therefore the bucket)
-#: is bit-identical regardless of summation order or engine.
-LSH_SCALE = 1 << 20
-
-
-def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
+def _hyperplanes(n_planes: int) -> list[list[float]]:
     """Deterministic Rademacher (+/-1) hyperplanes from the fixed seed 42.
 
     Sign-random-projection LSH does not need Gaussian planes —
@@ -130,7 +160,7 @@ def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     an integer, so the sign is reproducible bit-for-bit in DuckDB (the
     oracle inlines the same plane literals)."""
     rng = np.random.RandomState(42)
-    return rng.choice([-1.0, 1.0], size=(n_planes, dim)).tolist()
+    return rng.choice([-1.0, 1.0], size=(n_planes, EMBED_DIM)).tolist()
 
 
 def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
@@ -214,12 +244,12 @@ def lsh_bucketed_topk(
     """
     from pyspark.sql.window import Window
 
-    planes = _hyperplanes(64, n_planes)
+    planes = _hyperplanes(n_planes)
     masks = _probe_masks(n_planes, probe_radius)
     # Corpus-side bucketing: Arrow matmul UDF (one pass, vectorized).
     # Query-side (small, broadcast): JVM expression. Both are the same
     # exact-integer arithmetic, so buckets agree bit-for-bit (tested).
-    c = _spread(corpus, "vec_id").select(
+    c = _spread(corpus).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("_cvec"),
         _lsh_signature_pd(planes)(F.col("embedding")).alias("_bucket"),
@@ -244,7 +274,7 @@ def lsh_bucketed_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(pair_cosine_pd()(F.col("_qvec"), F.col("_cvec")), 4).alias("cos_sim"),
+            (pair_ci_pd()(F.col("_qvec"), F.col("_cvec")) / 10000.0).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -254,10 +284,10 @@ def lsh_bucketed_topk(
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) index — the k-means-cell scale path for ANN.
 # ---------------------------------------------------------------------------
-def _centroid_rows(df, k: int, id_col: str, vec_col: str) -> list[list[float]]:
+def _centroid_rows(df, k: int) -> list[list[float]]:
     """Deterministic seeds: the k lowest-id vectors (no RNG)."""
-    rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
-    return [[float(x) for x in r[vec_col]] for r in rows]
+    rows = df.orderBy("vec_id").limit(k).select("embedding").collect()
+    return [[float(x) for x in r["embedding"]] for r in rows]
 
 
 def _quantize(cent: list[float]) -> list[float]:
@@ -362,8 +392,8 @@ def ivf_build_centroids(
     pass + a per-dimension mean (posexplode -> groupBy(cell, pos) avg);
     only the k centroid vectors ever reach the driver.
     """
-    cents = _centroid_rows(corpus, k, "vec_id", "embedding")
-    corpus = _spread(corpus, "vec_id")
+    cents = _centroid_rows(corpus, k)
+    corpus = _spread(corpus)
     for _ in range(iters):
         assigned = corpus.select(
             F.col("embedding").alias("_v"), _nearest_centroid_pd(cents)(F.col("embedding")).alias("_cell")
@@ -391,7 +421,7 @@ def ivf_assign_cells(corpus: DataFrame, centroids: list[list[float]]) -> DataFra
     repeatedly pass it to :func:`ivf_topk` via ``cells=`` instead of
     re-assigning the corpus per query batch.
     """
-    return _spread(corpus, "vec_id").select(
+    return _spread(corpus).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("_cvec"),
         _nearest_centroid_pd(centroids)(F.col("embedding")).alias("_cell"),
@@ -436,11 +466,20 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(pair_cosine_pd()(F.col("_qvec"), F.col("_cvec")), 4).alias("cos_sim"),
+            (pair_ci_pd()(F.col("_qvec"), F.col("_cvec")) / 10000.0).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return sims.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+SEM_CELL_CAP = 512  #: max members per cell before deterministic sub-cell split
+#: (cap_hot_cells). With corpus-scaled k the cap returns to its intended
+#: role: a guard against one DEGENERATE embedding cluster (boilerplate
+#: docs), not against global growth. Strict no-op at every tested SF
+#: (max cell ~200 at sf0.1), so the recursive-CTE oracle replays exactly;
+#: the guard mechanism itself is pinned on a skewed fixture in
+#: tests/test_round6_ops.py.
 
 
 def cap_hot_cells(
@@ -488,12 +527,13 @@ def cap_hot_cells(
     )
 
 
-def ivf_hot_cells(assignments: DataFrame, max_cell_size: int) -> DataFrame:
+def ivf_hot_cells(assignments: DataFrame) -> DataFrame:
     """The observability half of :func:`cap_hot_cells` (mirrors
     ``lsh_hot_buckets``): (cell, n_ids, skipped_comparisons) for every
-    cell a cap would split, where skipped_comparisons counts the
-    cross-sub-cell pairs the split stops comparing — a silent cap
-    would read as full coverage."""
+    cell the semantic-dedup cap (``SEM_CELL_CAP``) would split, where
+    skipped_comparisons counts the cross-sub-cell pairs the split stops
+    comparing — a silent cap would read as full coverage."""
+    max_cell_size = SEM_CELL_CAP
     # Mirror cap_hot_cells' ACTUAL split: floor(n/cap) full sub-cells
     # of exactly `cap` rows plus one remainder sub-cell of n mod cap —
     # retained pairs are full*C(cap,2) + C(r,2). (A balanced-split
@@ -536,13 +576,7 @@ def rademacher_matrix(in_dim: int, out_dim: int) -> np.ndarray:
     return m
 
 
-def random_projection(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    in_dim: int,
-    out_dim: int,
-) -> DataFrame:
+def random_projection(df: DataFrame, in_dim: int, out_dim: int) -> DataFrame:
     """Johnson-Lindenstrauss random projection (Achlioptas ±1 variant,
     "Database-friendly random projections", PODS'01): map D-dim
     embeddings to d-dim sketches that preserve pairwise distances to
@@ -550,7 +584,8 @@ def random_projection(
     large. Dense matmul over Arrow batches (``mapInPandas`` + numpy):
     one narrow map-only pass, O(n*D*d) flops executor-side, no
     shuffle, no driver round-trip. Long-form output (id, out_pos,
-    proj) so downstream bucketing/aggregation sees flat columns.
+    proj) so downstream bucketing/aggregation sees flat columns. Reads
+    the ``(vec_id, embedding)`` columns of ``df``.
 
     Per-partition cost is independent of corpus size — at 100 TB this
     is embarrassingly parallel and Arrow-batch bound; the matrix is a
@@ -558,51 +593,45 @@ def random_projection(
     executor projects with bit-identical signs.
     """
     mat = rademacher_matrix(in_dim, out_dim)
-    schema = f"{id_col} long, out_pos int, proj double"
+    schema = "vec_id long, out_pos int, proj double"
 
     def _project(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            vecs = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             proj = np.round(vecs @ mat, 6)
             n = len(pdf)
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), out_dim),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), out_dim),
                     "out_pos": np.tile(np.arange(out_dim, dtype=np.int32), n),
                     "proj": proj.reshape(-1),
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(_project, schema=schema)
+    return df.select("vec_id", "embedding").mapInPandas(_project, schema=schema)
 
 
-def random_projection_vec(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    in_dim: int,
-    out_dim: int,
-) -> DataFrame:
-    """Wide-form twin of :func:`random_projection`: (id, jl_vec array<double>)
+def random_projection_vec(df: DataFrame, in_dim: int, out_dim: int) -> DataFrame:
+    """Wide-form twin of :func:`random_projection`: (vec_id, jl_vec array<double>)
     so the projected frame drops straight into the ANN operators
     (``brute_force_topk``/LSH take any vector column). Same md5-parity
     Rademacher matrix, same Arrow-batched matmul, same rounding — the
     two forms agree element-for-element, so an oracle written against
     the long form certifies this one too."""
     mat = rademacher_matrix(in_dim, out_dim)
-    schema = f"{id_col} long, jl_vec array<double>"
+    schema = "vec_id long, jl_vec array<double>"
 
     def _project(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            vecs = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             proj = np.round(vecs @ mat, 6)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "jl_vec": list(proj)})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(), "jl_vec": list(proj)})
 
-    return df.select(id_col, vec_col).mapInPandas(_project, schema=schema)
+    return df.select("vec_id", "embedding").mapInPandas(_project, schema=schema)
 
 
 def _centroid_dists_pd(centroids: list[list[float]]):
@@ -627,14 +656,14 @@ def _centroid_dists_pd(centroids: list[list[float]]):
     return dist_row
 
 
-def pq_train_codebooks(
-    corpus: DataFrame,
-    n_sub: int,
-    subdim: int,
-    k: int,
-    iters: int = 1,
-) -> list[list[list[float]]]:
-    """All PQ sub-codebooks in ONE distributed pass per Lloyd step.
+PQ_M = 8  #: product-quantization subspaces (64-dim -> 8 x 8)
+PQ_SUBDIM = EMBED_DIM // PQ_M
+PQ_K = 16  #: codewords per subspace (codes pack into 8 x 4 bits = 32 bits/vector)
+
+
+def pq_train_codebooks(corpus: DataFrame, iters: int = 1) -> list[list[list[float]]]:
+    """All PQ_M sub-codebooks (PQ_K codewords of PQ_SUBDIM dims each)
+    in ONE distributed pass per Lloyd step.
 
     Per-subspace :func:`ivf_build_centroids` calls would cost
     2 jobs x n_sub x iters (measured: 7.8 s of mostly fixed job
@@ -651,12 +680,12 @@ def pq_train_codebooks(
     exact-integer distances everywhere, so the result is bit-identical
     to the per-subspace loop and the unrolled SQL oracle.
     """
-    rows = corpus.orderBy("vec_id").limit(k).select("embedding").collect()
-    full = [[float(x) for x in r["embedding"]] for r in rows]
+    n_sub, subdim, k = PQ_M, PQ_SUBDIM, PQ_K
+    full = _centroid_rows(corpus, k)
     cbs = [
         [v[m * subdim : (m + 1) * subdim] for v in full] for m in range(n_sub)
     ]
-    spread = _spread(corpus, "vec_id")
+    spread = _spread(corpus)
     for _ in range(iters):
         cell_cols = [
             _nearest_centroid_pd(cbs[m])(

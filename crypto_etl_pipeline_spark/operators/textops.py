@@ -114,7 +114,7 @@ def lang_id(text: Column | str) -> Column:
 
 def normalized_text(text: Column | str) -> Column:
     """Lowercase + collapse whitespace — canonical form for fingerprints."""
-    return F.lower(F.regexp_replace(_as_col(text), r"[ \t\n\f\r]+", " "))
+    return F.lower(F.regexp_replace(_as_col(text), WS_SPLIT, " "))
 
 
 def fingerprint_md5(text: Column | str) -> Column:

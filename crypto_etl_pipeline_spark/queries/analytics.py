@@ -13,6 +13,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crypto_etl_pipeline_spark.operators.textops import tokens
 from crypto_etl_pipeline_spark.queries.base import register
 from crypto_etl_pipeline_spark.sources.tables import load_table
 
@@ -62,7 +63,7 @@ def pivot_user_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 def explode_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("token"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
         .where(F.length("token") >= 4)
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))

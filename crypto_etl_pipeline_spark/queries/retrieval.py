@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from crypto_etl_pipeline_spark.operators.phash import duck_md5_long, md5_long
+from crypto_etl_pipeline_spark.operators.textops import token_count, tokens
 from crypto_etl_pipeline_spark.queries.base import register
 from crypto_etl_pipeline_spark.sources.tables import load_table
 
@@ -64,7 +65,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
-        "doc_id", "lang", F.split(F.col("text"), r"[ \t\n\f\r]+").alias("_toks")
+        "doc_id", "lang", tokens(F.col("text")).alias("_toks")
     ).select("doc_id", "lang", F.posexplode("_toks").alias("pos", "token"))
 
 
@@ -453,7 +454,7 @@ def token_budget_epoch_allocation(spark: SparkSession, sf_dir: str) -> DataFrame
     # scalar totals) — without it Catalyst re-executes the corpus scan
     # + token-count lineage per consumer (measured: 2 parquet scans).
     per_src = (
-        docs.select("source", F.size(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("n_tok"))
+        docs.select("source", token_count(F.col("text")).alias("n_tok"))
         .groupBy("source")
         .agg(F.sum("n_tok").cast("long").alias("avail_tokens"))
         .withColumn("w", F.pow(F.col("avail_tokens"), F.lit(BUDGET_ALPHA)))
@@ -725,7 +726,7 @@ def ccnet_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     dtr = (
         docs.where(
             (F.col("lang") == "en")
-            & (F.size(F.split(F.col("text"), r"[ \t\n\f\r]+")) >= 2)
+            & (token_count(F.col("text")) >= 2)
         ).agg(F.count(F.lit(1)).alias("d"))
     )
     scored = (

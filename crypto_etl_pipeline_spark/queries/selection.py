@@ -143,7 +143,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled DuckDB chain (no recall gate needed — this is exact)."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = (
-        _spread(emb, "vec_id")
+        _spread(emb)
         .select("vec_id", _qvec(F.col("embedding")).alias("q"))
         .withColumn("qq", _dot_long(F.col("q"), F.col("q")))
         .localCheckpoint(eager=False)
@@ -278,7 +278,7 @@ def kcenter_sampled_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = (
-        _spread(emb, "vec_id")
+        _spread(emb)
         .select("vec_id", _qvec(F.col("embedding")).alias("q"))
         .withColumn("qq", _dot_long(F.col("q"), F.col("q")))
         .localCheckpoint(eager=False)

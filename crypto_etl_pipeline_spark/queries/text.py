@@ -68,7 +68,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         textops.token_count(t).alias("n_tokens"),
         textops.unique_token_count(t).alias("n_unique_tokens"),
         F.round(
-            F.length(F.regexp_replace(t, r"[ \t\n\f\r]+", "")) / textops.token_count(t), 6
+            F.length(F.regexp_replace(t, textops.WS_SPLIT, "")) / textops.token_count(t), 6
         ).alias("avg_token_len"),
     )
 
@@ -524,7 +524,7 @@ def pipeline_multilingual_curation(spark: SparkSession, sf_dir: str) -> DataFram
     )
     toks = kept.select(
         "source",
-        F.size(F.split(F.col("c"), r"[ \t\n\f\r]+")).cast("long").alias("n_tok"),
+        textops.token_count(F.col("c")).cast("long").alias("n_tok"),
         F.length("c").cast("long").alias("n_chars"),
     )
     s0 = dirty.groupBy("source").agg(
@@ -1910,7 +1910,7 @@ def _chunker_udtf():
             import hashlib
             import re as _re
 
-            toks = _re.split(r"[ \t\n\f\r]+", text)
+            toks = _re.split(textops.WS_SPLIT, text)
             n = len(toks)
             chunk, stride = 64, 32
             last = max((n - chunk + stride - 1) // stride, 0)
@@ -2244,7 +2244,7 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     any final schema — the array form stays available internally by
     dropping the final array_join."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split(F.col("text"), r"[ \t\n\f\r]+").alias("_toks"))
+    toks = docs.select("doc_id", textops.tokens(F.col("text")).alias("_toks"))
     bigrams = F.when(
         F.size("_toks") >= 2,
         F.transform(
@@ -2383,7 +2383,7 @@ def text_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("term")
+        F.explode(textops.tokens(F.col("text"))).alias("term")
     )
     return heavy_hitters_exact(toks, "term", k=30)
 
@@ -2436,7 +2436,7 @@ def text_kl_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q(t) > 0 wherever P_s(t) > 0."""
     docs = load_table(spark, sf_dir, "documents")
     st = docs.select(
-        "source", F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("term")
+        "source", F.explode(textops.tokens(F.col("text"))).alias("term")
     )
     stc = (
         st.groupBy("source", "term")
@@ -2514,7 +2514,7 @@ def tokenizer_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     built on these statistics is `bpe_train_merges`."""
     docs = load_table(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("word"))
+        docs.select(F.explode(textops.tokens(F.col("text"))).alias("word"))
         .where(F.length("word") >= 2)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2613,7 +2613,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("word"))
+        docs.select(F.explode(textops.tokens(F.col("text"))).alias("word"))
         .where(F.length("word") >= 1)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2678,7 +2678,7 @@ def bpe_encode_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("word")
+        "doc_id", F.explode(textops.tokens(F.col("text"))).alias("word")
     ).where(F.col("word") != "")
     vocab = words.select("word").distinct()
     encoded = bpe_encode_words(vocab, merges).select("word", "n_tokens")
@@ -2790,7 +2790,7 @@ def sample_pps_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split(F.col("text"), r"[ \t\n\f\r]+")).cast("long").alias("weight"),
+        textops.token_count(F.col("text")).cast("long").alias("weight"),
     )
     return pps_systematic_sample(
         docs, "weight", k=20, strata=["lang"]
@@ -3385,7 +3385,7 @@ def text_entropy_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(f"{prefix}_entropy"),
         )
     chars = _entropy(F.split("text", ""), "char")
-    toks = _entropy(F.split("text", r"[ \t\n\f\r]+"), "token")
+    toks = _entropy(textops.tokens("text"), "token")
     return chars.join(toks, "doc_id").select(
         "doc_id", "n_chars", "distinct_chars", "char_entropy",
         "n_tokens", "distinct_tokens", "token_entropy",
@@ -3879,7 +3879,7 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tc_counts = (
-        docs.select("doc_id", F.explode(F.split("text", r"[ \t\n\f\r]+")).alias("_t"))
+        docs.select("doc_id", F.explode(textops.tokens("text")).alias("_t"))
         .groupBy("doc_id", "_t")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
@@ -4633,7 +4633,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("word"))
+        docs.select(F.explode(textops.tokens(F.col("text"))).alias("word"))
         .where(F.length("word") >= 1)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -5475,7 +5475,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
-        "lang", F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("word")
+        "lang", F.explode(textops.tokens(F.col("text"))).alias("word")
     ).where(F.col("word") != "")
     vocab = words.select("word").distinct()
     encoded = bpe_encode_words(vocab, merges).select("word", "n_tokens")
@@ -5530,7 +5530,7 @@ def truncation_loss_by_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(context_len) with map-side partials — 4 groups regardless
     of corpus size, so the exchange carries 4 rows per partition."""
     docs = load_table(spark, sf_dir, "documents")
-    nt = docs.select(F.size(textops.tokens(F.col("text"))).alias("n_tokens"))
+    nt = docs.select(textops.token_count(F.col("text")).alias("n_tokens"))
     ctx = spark.createDataFrame([(c,) for c in CONTEXT_LENS], ["context_len"])
     j = nt.crossJoin(F.broadcast(ctx))
     truncated = (F.col("n_tokens") > F.col("context_len")).cast("long")
@@ -6101,7 +6101,7 @@ def curriculum_phase_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(CURRICULUM_PHASES),
     )
     toks = docs.select(
-        "doc_id", F.size(textops.tokens(F.col("text"))).alias("n_tokens")
+        "doc_id", textops.token_count(F.col("text")).alias("n_tokens")
     )
     return (
         pct.select("doc_id", "margin", phase.alias("phase"))
@@ -6184,7 +6184,7 @@ def text_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         (F.col("doc_id") / _NOVELTY_BATCH).cast("long").alias("batch"),
-        F.split(F.col("text"), r"[ \t\n\f\r]+").alias("_toks"),
+        textops.tokens(F.col("text")).alias("_toks"),
     ).select("doc_id", "batch", F.posexplode("_toks").alias("pos", "token"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     tri = (
@@ -6324,7 +6324,7 @@ def text_zipf_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         (F.col("doc_id") / _NOVELTY_BATCH).cast("long").alias("batch"),
-        F.split(F.col("text"), r"[ \t\n\f\r]+").alias("_toks"),
+        textops.tokens(F.col("text")).alias("_toks"),
     ).select("doc_id", "batch", F.posexplode("_toks").alias("pos", "token"))
     freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("f"))
     rw = Window.orderBy(F.desc("f"), F.asc("token"))
@@ -7371,7 +7371,7 @@ def dedup_token_savings_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     tok = docs.select(
         "doc_id",
         "source",
-        F.size(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("n_tokens"),
+        textops.token_count(F.col("text")).alias("n_tokens"),
     )
     kept = F.when(F.col("is_canonical"), F.col("n_tokens")).otherwise(F.lit(0))
     saved = F.when(~F.col("is_canonical"), F.col("n_tokens")).otherwise(F.lit(0))
@@ -7520,7 +7520,7 @@ def span_corruption_mask_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang",
-        F.posexplode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("pos", "_t"),
+        F.posexplode(textops.tokens(F.col("text"))).alias("pos", "_t"),
     ).drop("_t")
     start = (
         phash.md5_long(
@@ -7798,7 +7798,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("lang") == "en")
     tok = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("pos", "token"),
+        F.posexplode(textops.tokens(F.col("text"))).alias("pos", "token"),
     )
     s = tok.withColumn(
         "st", F.col("token").isin(*STOPWORDS["en"]).cast("int")

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from crypto_etl_pipeline_spark.operators.textops import tokens
 from crypto_etl_pipeline_spark.queries.base import register
 from crypto_etl_pipeline_spark.sources.tables import load_table
 
@@ -140,7 +141,7 @@ def rollup_reuse_daily_from_hourly(spark: SparkSession, sf_dir: str) -> DataFram
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = (
-        docs.select("doc_id", F.explode(F.split(F.col("text"), r"[ \t\n\f\r]+")).alias("token"))
+        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
         .where(F.length("token") >= 4)
         .select("doc_id", F.lower("token").alias("token"))
     )

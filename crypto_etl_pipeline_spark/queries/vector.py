@@ -1,9 +1,10 @@
 """Similarity-search queries over the embeddings table (§2.13).
 
-Float discipline: DuckDB's list_cosine_similarity accumulates in
-float32 while the Spark expression accumulates in double; both are
-rounded to 4 decimals, which absorbs the ~1e-7 divergence (verified
-empirically). Ranking ties break on neighbor_id in both engines.
+Every cosine here is the exact integer kernel of operators/similarity.py
+(``pair_ci_pd`` in Spark, ``duck_pair_ci`` in the oracles): ``ci`` is
+the cosine in units of 1e-4, bit-identical in both engines, and
+``cos_sim = ci / 10000.0``. Ranking ties break on neighbor_id in both
+engines.
 """
 
 from __future__ import annotations
@@ -13,21 +14,24 @@ from pyspark.sql import functions as F
 
 from crypto_etl_pipeline_spark.operators.similarity import (
     LSH_SCALE,
+    PQ_K,
+    PQ_M,
+    PQ_SUBDIM,
+    SEM_CELL_CAP,
     _hyperplanes,
     _probe_masks,
-    _quantize,
     _spread,
     brute_force_topk,
-    dot,
+    duck_pair_ci,
+    duck_qv,
     lsh_bucketed_topk,
-    norm,
+    pair_ci_pd,
 )
 from crypto_etl_pipeline_spark.operators.bitext import (
     BITEXT_K,
     bitext_margin_pairs,
-    duck_pair_ci,
+    margin_scores,
     mine_bitext,
-    pair_ci_pd,
 )
 from crypto_etl_pipeline_spark.queries.base import register
 from crypto_etl_pipeline_spark.sources.tables import load_table
@@ -54,10 +58,10 @@ IVF_NPROBE = 4
 #: the exact plane literals the Spark plan uses (fixed seed) — inlined
 #: into the DuckDB oracle below so both engines hash into identical
 #: buckets (the projection is exact integer arithmetic; see LSH_SCALE).
-_PLANES = _hyperplanes(64, N_PLANES)
+_PLANES = _hyperplanes(N_PLANES)
 
-#: floor-quantization of an embedding list, as a DuckDB fragment
-_DUCK_QV = f"list_transform(embedding, x -> floor(x::DOUBLE * {float(LSH_SCALE)}))"
+#: floor-quantization of the embedding column, as a DuckDB fragment
+_DUCK_QV = duck_qv("embedding")
 
 
 def _duck_lsh_bucket(qv: str) -> str:
@@ -76,11 +80,12 @@ def _duck_lsh_bucket(qv: str) -> str:
 @register(
     "ann_brute_force_topk",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {N_QUERIES}),
+    WITH e AS (SELECT vec_id, {_DUCK_QV} AS q FROM embeddings),
+    q AS (SELECT vec_id AS query_id, q AS qv FROM e WHERE vec_id < {N_QUERIES}),
     sims AS (
       SELECT q.query_id, e.vec_id AS neighbor_id,
-             round(cast(list_cosine_similarity(q.qv, e.embedding) AS DOUBLE), 4) AS cos_sim
-      FROM q JOIN embeddings e ON e.vec_id != q.query_id
+             {duck_pair_ci("q.qv", "e.q")} / 10000.0 AS cos_sim
+      FROM q JOIN e ON e.vec_id != q.query_id
     ),
     ranked AS (
       SELECT query_id, neighbor_id, cos_sim,
@@ -99,41 +104,40 @@ def ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(emb, queries, k=TOP_K)
 
 
+#: embedding_cosine_near_dup's pair threshold, cosine >= 0.40 in ``ci``
+#: units: the synthetic embeddings top out at cosine ~0.47 within a
+#: label, so a conventional near-dup cutoff (0.9+) would match zero
+#: pairs — a vacuous oracle. The operator shape (blocked self-join +
+#: cosine filter) is what's under test.
+NEAR_DUP_CI = 4000
+
+
 @register(
     "embedding_cosine_near_dup",
-    oracle="""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(cast(list_cosine_similarity(a.embedding, b.embedding) AS DOUBLE), 4) AS cos_sim
-    FROM embeddings a JOIN embeddings b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.40
+    oracle=f"""
+    WITH e AS (SELECT vec_id, label, {_DUCK_QV} AS q FROM embeddings)
+    SELECT id_a, id_b, ci / 10000.0 AS cos_sim FROM (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b, {duck_pair_ci("a.q", "b.q")} AS ci
+      FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
+    WHERE ci >= {NEAR_DUP_CI}
     """,
     description="Embedding-cosine high-similarity pairs (label-blocked; near-dup shape)",
     tags=("similarity", "dedup"),
 )
 def embedding_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Threshold 0.40: the synthetic embeddings top out at cosine ~0.47
-    # within a label, so a conventional near-dup cutoff (0.9+) would
-    # match zero pairs — a vacuous oracle. The operator shape (blocked
-    # self-join + cosine filter) is what's under test.
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Norm hoisted to one pass per row (below the self-join); the
-    # per-pair cost is a single dot fold, and dot/(norm_a*norm_b) is the
-    # identical float expression cosine() builds — parity-safe.
-    withn = _spread(emb, "vec_id").select(
-        "vec_id", "label", "embedding", norm(F.col("embedding")).alias("_n")
+    emb = _spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", "label", "embedding"
     )
-    a, b = withn.alias("a"), withn.alias("b")
-    sim = dot(F.col("a.embedding"), F.col("b.embedding")) / (F.col("a._n") * F.col("b._n"))
+    a, b = emb.alias("a"), emb.alias("b")
     return (
         a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .withColumn("_sim", sim)
-        .where(F.col("_sim") >= 0.40)
         .select(
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
-            F.round(F.col("_sim"), 4).alias("cos_sim"),
+            pair_ci_pd()(F.col("a.embedding"), F.col("b.embedding")).alias("ci"),
         )
+        .where(F.col("ci") >= NEAR_DUP_CI)
+        .select("id_a", "id_b", (F.col("ci") / 10000.0).alias("cos_sim"))
     )
 
 
@@ -141,17 +145,17 @@ def embedding_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_lsh_bucketed_topk",
     oracle=f"""
     WITH sig AS (
-      SELECT vec_id, embedding, {_duck_lsh_bucket(_DUCK_QV)} AS bucket
+      SELECT vec_id, {_DUCK_QV} AS q, {_duck_lsh_bucket(_DUCK_QV)} AS bucket
       FROM embeddings
     ),
     probe AS (
-      SELECT s.vec_id, s.embedding, xor(s.bucket, m.m) AS bucket
+      SELECT s.vec_id, s.q, xor(s.bucket, m.m) AS bucket
       FROM sig s CROSS JOIN (VALUES {", ".join(f"({m})" for m in _probe_masks(N_PLANES, PROBE_RADIUS))}) m(m)
       WHERE s.vec_id < {N_QUERIES}
     ),
     sims AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             round(cast(list_cosine_similarity(q.embedding, c.embedding) AS DOUBLE), 4) AS cos_sim
+             {duck_pair_ci("q.q", "c.q")} / 10000.0 AS cos_sim
       FROM probe q JOIN sig c USING (bucket)
       WHERE c.vec_id != q.vec_id
     ),
@@ -197,10 +201,10 @@ def ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM ranked_cells WHERE vec_id < {N_QUERIES} AND rn <= {IVF_NPROBE}),
     sims AS (
       SELECT p.query_id, c.neighbor_id,
-             round(cast(list_cosine_similarity(qe.embedding, ne.embedding) AS DOUBLE), 4) AS cos_sim
+             {duck_pair_ci("qe.q", "ne.q")} / 10000.0 AS cos_sim
       FROM qprobe p JOIN cells c USING (cell)
-      JOIN embeddings qe ON qe.vec_id = p.query_id
-      JOIN embeddings ne ON ne.vec_id = c.neighbor_id
+      JOIN qv qe ON qe.vec_id = p.query_id
+      JOIN qv ne ON ne.vec_id = c.neighbor_id
       WHERE p.query_id != c.neighbor_id
     ),
     ranked AS (
@@ -294,10 +298,10 @@ def _lloyd_ivf_oracle(iters: int) -> str:
                FROM ranked_cells WHERE vec_id < {N_QUERIES} AND rn <= {IVF_NPROBE}),
     sims AS (
       SELECT p.query_id, c.neighbor_id,
-             round(cast(list_cosine_similarity(qe.embedding, ne.embedding) AS DOUBLE), 4) AS cos_sim
+             {duck_pair_ci("qe.q", "ne.q")} / 10000.0 AS cos_sim
       FROM qprobe p JOIN cells c USING (cell)
-      JOIN embeddings qe ON qe.vec_id = p.query_id
-      JOIN embeddings ne ON ne.vec_id = c.neighbor_id
+      JOIN qv qe ON qe.vec_id = p.query_id
+      JOIN qv ne ON ne.vec_id = c.neighbor_id
       WHERE p.query_id != c.neighbor_id
     ),
     ranked AS (
@@ -371,7 +375,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizes to all zeros rather than dividing by zero.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    s = _spread(emb, "vec_id").select(
+    s = _spread(emb).select(
         "vec_id",
         F.col("embedding").alias("_v"),
         (
@@ -457,13 +461,6 @@ SEM_TARGET_CELL = 128  #: target mean cell size — k SCALES with the corpus
 #: every driver-compared SF (n <= 2000) k resolves to 16, so the oracle
 #: margins and plan fingerprints are unchanged; the growth is exercised
 #: by the sf>=1 scale fixtures.
-SEM_CELL_CAP = 512  #: max members per cell before deterministic sub-cell split
-#: (cap_hot_cells). With corpus-scaled k the cap returns to its intended
-#: role: a guard against one DEGENERATE embedding cluster (boilerplate
-#: docs), not against global growth. Strict no-op at every tested SF
-#: (max cell ~200 at sf0.1), so the recursive-CTE oracle replays exactly;
-#: the guard mechanism itself is pinned on a skewed fixture in
-#: tests/test_round6_ops.py.
 
 
 def sem_k(n_vectors: int) -> int:
@@ -497,10 +494,7 @@ _SEM_K_SQL = (
     f"(SELECT greatest({SEM_K_MIN}, CAST(ceil(count(*) / {SEM_TARGET_CELL}.0) "
     "AS BIGINT)) FROM embeddings)"
 )
-SEM_TAU = 0.35  #: within-cell cosine threshold (margins measured: nearest pair
-#: values at the compared SFs are 0.34964/0.35054 (sf0.01) and
-#: 0.34985/0.35067 (sf0.001) — ~4e-4 from the cut, 100x the float32-vs-double
-#: cosine divergence, so the pair sets cannot differ between engines).
+SEM_TAU = 3500  #: within-cell cosine threshold, in ``ci`` units (cosine >= 0.35)
 
 
 @register(
@@ -511,14 +505,14 @@ SEM_TAU = 0.35  #: within-cell cosine threshold (margins measured: nearest pair
       SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS idx, {_DUCK_QV} AS qc
       FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {_SEM_K_SQL})
     ),
-    qv AS (SELECT vec_id, embedding, {_DUCK_QV} AS q FROM embeddings),
+    qv AS (SELECT vec_id, {_DUCK_QV} AS q FROM embeddings),
     adist AS (
-      SELECT v.vec_id, v.embedding, c.idx,
+      SELECT v.vec_id, v.q, c.idx,
              -2 * list_dot_product(v.q, c.qc) + list_dot_product(c.qc, c.qc) AS d
       FROM qv v CROSS JOIN cent c
     ),
     cells AS (
-      SELECT vec_id, embedding, idx AS cell
+      SELECT vec_id, q, idx AS cell
       FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, idx) AS rn
             FROM adist)
       WHERE rn = 1
@@ -526,7 +520,7 @@ SEM_TAU = 0.35  #: within-cell cosine threshold (margins measured: nearest pair
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.embedding, b.embedding) >= {SEM_TAU}
+      WHERE {duck_pair_ci("a.q", "b.q")} >= {SEM_TAU}
     ),
     edges AS (SELECT id_a AS a, id_b AS b FROM pairs
               UNION SELECT id_b, id_a FROM pairs),
@@ -569,8 +563,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_build_centroids,
     )
 
-    from crypto_etl_pipeline_spark.operators.similarity import pair_cosine_pd
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = ivf_build_centroids(emb, k=sem_k(_emb_count(sf_dir)), iters=0)
     # cap_hot_cells bounds the quadratic within-cell stage: any cell
@@ -586,10 +578,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_col="_cell",
     ).localCheckpoint(eager=False)
     a, b = cells.alias("a"), cells.alias("b")
-    # Arrow-batched numpy cosine per surviving pair (the IVF probe's
-    # hot-path kernel) instead of an interpreted HOF fold — measured
-    # 6.3 -> ~2 s at sf0.1; the 4e-4 threshold margins (module header)
-    # dwarf accumulation-order noise between numpy and the fold.
     pairs = (
         a.join(
             b,
@@ -599,9 +587,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
-            pair_cosine_pd()(F.col("a._cvec"), F.col("b._cvec")).alias("_sim"),
+            pair_ci_pd()(F.col("a._cvec"), F.col("b._cvec")).alias("_ci"),
         )
-        .where(F.col("_sim") >= SEM_TAU)
+        .where(F.col("_ci") >= SEM_TAU)
         .select("id_a", "id_b")
     )
     return dedup_clusters(emb.select("vec_id"), pairs, id_col="vec_id")
@@ -609,24 +597,24 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MMR_K = 3  #: diversified selections per query
 MMR_LAMBDA = 0.7  #: relevance weight; 1-MMR_LAMBDA penalizes redundancy
-_DUCK_COS = "round(cast(list_cosine_similarity({a}, {b}) AS DOUBLE), 4)"
 
 
 def _mmr_oracle(k: int) -> str:
     """Unrolled k-step MMR in SQL: each step is an argmax CTE over the
-    previous selections. All similarities round to the 4-decimal grid
-    BEFORE the argmax, so both engines rank identical values (the ANN
-    queries' discipline); ties break on candidate id."""
+    previous selections. All similarities are exact ``ci / 10000.0``
+    values, so both engines rank identical values; ties break on
+    candidate id."""
     lam, mu = MMR_LAMBDA, 1.0 - MMR_LAMBDA
     ctes = [
+        f"""e AS (SELECT vec_id, {_DUCK_QV} AS q FROM embeddings)""",
         f"""sims AS (
-      SELECT q.vec_id AS qid, c.vec_id AS cid, c.embedding AS cemb,
-             {_DUCK_COS.format(a='q.embedding', b='c.embedding')} AS rel
-      FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
+      SELECT q.vec_id AS qid, c.vec_id AS cid, c.q AS cq,
+             {duck_pair_ci("q.q", "c.q")} / 10000.0 AS rel
+      FROM e q JOIN e c ON c.vec_id != q.vec_id
       WHERE q.vec_id < {N_QUERIES}
     )""",
         """s1 AS (
-      SELECT qid, cid, cemb, rel, 0.0 AS maxdiv
+      SELECT qid, cid, cq, rel, 0.0 AS maxdiv
       FROM (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY rel DESC, cid) AS rn
             FROM sims) WHERE rn = 1
     )""",
@@ -635,12 +623,12 @@ def _mmr_oracle(k: int) -> str:
         prev = [f"s{j}" for j in range(1, i)]
         joins = " ".join(f"JOIN {p} ON {p}.qid = s.qid" for p in prev)
         notin = " AND ".join(f"s.cid != {p}.cid" for p in prev)
-        div_exprs = [_DUCK_COS.format(a="s.cemb", b=f"{p}.cemb") for p in prev]
+        div_exprs = [f"{duck_pair_ci('s.cq', f'{p}.cq')} / 10000.0" for p in prev]
         gdiv = div_exprs[0] if len(div_exprs) == 1 else f"greatest({', '.join(div_exprs)})"
         ctes.append(
             f"""s{i} AS (
-      SELECT qid, cid, cemb, rel, maxdiv
-      FROM (SELECT s.qid, s.cid, s.cemb, s.rel, {gdiv} AS maxdiv,
+      SELECT qid, cid, cq, rel, maxdiv
+      FROM (SELECT s.qid, s.cid, s.cq, s.rel, {gdiv} AS maxdiv,
                    row_number() OVER (PARTITION BY s.qid
                                       ORDER BY {lam} * s.rel - {mu} * {gdiv} DESC, s.cid) AS rn
             FROM sims s {joins}
@@ -673,18 +661,13 @@ def ann_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate table and takes a per-query WindowGroupLimit argmax. At
     100 TB the candidate table is an ANN shortlist (ann_ivf_topk /
     lsh), never the corpus; the same plan applies unchanged. All sims
-    round to the 4-decimal grid before every argmax, so both engines
-    rank the same values with id tie-breaks."""
+    are exact ``ci / 10000.0`` values, so both engines rank the same
+    values with id tie-breaks."""
     lam, mu = MMR_LAMBDA, 1.0 - MMR_LAMBDA
     from pyspark.sql.window import Window
 
-    emb = _spread(load_table(spark, sf_dir, "embeddings"), "vec_id").select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("_n")
-    )
+    emb = _spread(load_table(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
     q, c = emb.alias("q"), emb.alias("c")
-    rel = dot(F.col("q.embedding"), F.col("c.embedding")) / (
-        F.col("q._n") * F.col("c._n")
-    )
     sims = (
         q.where(F.col("q.vec_id") < N_QUERIES).limit(N_QUERIES)
         .join(c, F.col("c.vec_id") != F.col("q.vec_id"))
@@ -692,16 +675,15 @@ def ann_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("q.vec_id").alias("qid"),
             F.col("c.vec_id").alias("cid"),
             F.col("c.embedding").alias("cemb"),
-            F.col("c._n").alias("cn"),
-            F.round(rel, 4).alias("rel"),
+            (pair_ci_pd()(F.col("q.embedding"), F.col("c.embedding")) / 10000.0).alias("rel"),
         )
         .localCheckpoint(eager=False)
     )
-    picks = []  # per-step DataFrames of (qid, cid, cemb, cn, rel, maxdiv)
+    picks = []  # per-step DataFrames of (qid, cid, cemb, rel, maxdiv)
     w = Window.partitionBy("qid")
     for step in range(1, MMR_K + 1):
         if not picks:
-            scored = sims.select("qid", "cid", "cemb", "cn", "rel", F.lit(0.0).alias("maxdiv"))
+            scored = sims.select("qid", "cid", "cemb", "rel", F.lit(0.0).alias("maxdiv"))
             order = [F.desc("rel"), F.asc("cid")]
         else:
             cur = sims
@@ -712,22 +694,17 @@ def ann_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("qid").alias(f"_q{j}"),
                         F.col("cid").alias(f"_c{j}"),
                         F.col("cemb").alias(f"_e{j}"),
-                        F.col("cn").alias(f"_n{j}"),
                     )
                 )
                 cur = cur.join(pj, cur.qid == F.col(f"_q{j}"))
-                div_cols.append(
-                    F.round(
-                        dot(F.col("cemb"), F.col(f"_e{j}")) / (F.col("cn") * F.col(f"_n{j}")), 4
-                    )
-                )
+                div_cols.append(pair_ci_pd()(F.col("cemb"), F.col(f"_e{j}")) / 10000.0)
             keep = None
             for j in range(len(picks)):
                 cond = F.col("cid") != F.col(f"_c{j}")
                 keep = cond if keep is None else (keep & cond)
             maxdiv = div_cols[0] if len(div_cols) == 1 else F.greatest(*div_cols)
             scored = cur.where(keep).select(
-                "qid", "cid", "cemb", "cn", "rel", maxdiv.alias("maxdiv")
+                "qid", "cid", "cemb", "rel", maxdiv.alias("maxdiv")
             )
             order = [
                 F.desc(F.lit(lam) * F.col("rel") - F.lit(mu) * F.col("maxdiv")),
@@ -918,7 +895,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.operators.similarity import random_projection
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return random_projection(emb, "vec_id", "embedding", JL_IN_DIM, JL_OUT_DIM)
+    return random_projection(emb, JL_IN_DIM, JL_OUT_DIM)
 
 
 @register(
@@ -946,11 +923,12 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY el.vec_id, s.j
       ) el GROUP BY el.vec_id
     ),
-    q AS (SELECT vec_id AS query_id, jl_vec AS qv FROM proj WHERE vec_id < {N_QUERIES}),
+    pq AS (SELECT vec_id, {duck_qv("jl_vec")} AS q FROM proj),
+    q AS (SELECT vec_id AS query_id, q AS qv FROM pq WHERE vec_id < {N_QUERIES}),
     sims AS (
       SELECT q.query_id, p.vec_id AS neighbor_id,
-             round(cast(list_cosine_similarity(q.qv, p.jl_vec) AS DOUBLE), 4) AS cos_sim
-      FROM q JOIN proj p ON p.vec_id != q.query_id
+             {duck_pair_ci("q.qv", "p.q")} / 10000.0 AS cos_sim
+      FROM q JOIN pq p ON p.vec_id != q.query_id
     ),
     ranked AS (
       SELECT query_id, neighbor_id, cos_sim,
@@ -968,7 +946,7 @@ def ann_jl_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch space, so every distance costs D/d = 4x less and — the part
     that matters at 100 TB — the vectors shuffled/broadcast are 4x
     smaller in bytes. Exactness is deliberately defined IN the
-    projected space (top-k by projected cosine, round-4 + id
+    projected space (top-k by the exact projected cosine + id
     tie-break), which makes the whole composition deterministic and
     fully oracle-able. Honest fidelity note: JL guarantees pairwise
     DISTANCE preservation (gated in tests/test_round6b_ops.py), not
@@ -988,14 +966,14 @@ def ann_jl_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    proj = random_projection_vec(emb, "vec_id", "embedding", JL_IN_DIM, JL_OUT_DIM)
+    proj = random_projection_vec(emb, JL_IN_DIM, JL_OUT_DIM)
     # project the FILTERED frame for the query side: a predicate above
     # mapInPandas cannot push below it, so filtering proj would re-run
     # the full-corpus matmul to keep N_QUERIES rows; the projection is
     # deterministic per-row, so projecting the filtered scan is
     # row-for-row identical and the query side costs N_QUERIES rows.
     queries = random_projection_vec(
-        emb.where(F.col("vec_id") < N_QUERIES).limit(N_QUERIES), "vec_id", "embedding", JL_IN_DIM, JL_OUT_DIM
+        emb.where(F.col("vec_id") < N_QUERIES).limit(N_QUERIES), JL_IN_DIM, JL_OUT_DIM
     )
     return brute_force_topk(proj, queries, k=TOP_K, vec_col="jl_vec")
 
@@ -1220,14 +1198,15 @@ HARD_NEG_K = 5
 @register(
     "ann_hard_negative_topk",
     oracle=f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, label AS qlabel, embedding AS qv
-      FROM embeddings WHERE vec_id < {N_QUERIES}
+    WITH e AS (SELECT vec_id, label, {_DUCK_QV} AS q FROM embeddings),
+    q AS (
+      SELECT vec_id AS query_id, label AS qlabel, q AS qv
+      FROM e WHERE vec_id < {N_QUERIES}
     ),
     sims AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, e.label AS neg_label,
-             round(cast(list_cosine_similarity(q.qv, e.embedding) AS DOUBLE), 4) AS cos_sim
-      FROM q JOIN embeddings e ON e.label != q.qlabel
+             {duck_pair_ci("q.qv", "e.q")} / 10000.0 AS cos_sim
+      FROM q JOIN e ON e.label != q.qlabel
     ),
     ranked AS (
       SELECT query_id, neighbor_id, neg_label, cos_sim,
@@ -1247,7 +1226,7 @@ def ann_hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose label DIFFERS — the negatives nearest the decision boundary,
     where the gradient signal is. Same plan family as
     ann_brute_force_topk (broadcast bounded anchor set over the
-    corpus, per-pair cosine in one codegen pass, per-anchor window
+    corpus, per-pair exact cosine kernel, per-anchor window
     rank) with the label-mismatch predicate evaluated inside the join
     — mismatched pairs never reach the window. At 100 TB the anchor
     set stays a bounded broadcast frame (structural .limit) and the
@@ -1257,29 +1236,25 @@ def ann_hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-traded scale path if the anchor set itself grows."""
     from pyspark.sql.window import Window
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    withn = _spread(emb, "vec_id").select(
-        "vec_id", "label", "embedding", norm(F.col("embedding")).alias("_n")
+    emb = _spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", "label", "embedding"
     )
     q = (
-        withn.where(F.col("vec_id") < N_QUERIES)
+        emb.where(F.col("vec_id") < N_QUERIES)
         .limit(N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("label").alias("_qlabel"),
             F.col("embedding").alias("_qv"),
-            F.col("_n").alias("_qn"),
         )
     )
     sims = (
-        withn.join(F.broadcast(q), F.col("label") != F.col("_qlabel"))
+        emb.join(F.broadcast(q), F.col("label") != F.col("_qlabel"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             F.col("label").alias("neg_label"),
-            F.round(
-                dot(F.col("_qv"), F.col("embedding")) / (F.col("_qn") * F.col("_n")), 4
-            ).alias("cos_sim"),
+            (pair_ci_pd()(F.col("_qv"), F.col("embedding")) / 10000.0).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -1371,9 +1346,6 @@ def embedding_anisotropy_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-PQ_M = 8  #: product-quantization subspaces (64-dim -> 8 x 8)
-PQ_SUBDIM = JL_IN_DIM // PQ_M
-PQ_K = 16  #: codewords per subspace (codes pack into 8 x 4 bits = 32 bits/vector)
 PQ_ITERS = 1  #: Lloyd steps per sub-codebook (keeps the unrolled oracle compact)
 PQ_SHORTLIST = 100  #: ADC candidates exactly re-ranked per query. Config
 #: chosen by measurement (uniform random embeddings are PQ's worst case —
@@ -1599,13 +1571,11 @@ def _pq_codes_lut(emb, q):
     # loop costs 2 jobs x M x iters of fixed overhead — see
     # pq_train_codebooks); result is bit-identical to the sliced-frame
     # formulation the oracle unrolls.
-    codebooks = pq_train_codebooks(
-        emb, n_sub=PQ_M, subdim=PQ_SUBDIM, k=PQ_K, iters=PQ_ITERS
-    )
+    codebooks = pq_train_codebooks(emb, iters=PQ_ITERS)
     # Encode: ONE corpus pass, all M assignment UDFs in the same
     # projection (at 100 TB this — plus the packed codes — is what you
     # persist; 3 bits x 4 codes per vector).
-    enc = _spread(emb, "vec_id").select(
+    enc = _spread(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         *[
             _nearest_centroid_pd(codebooks[m])(sub(m)).alias(f"_c{m}")
@@ -1859,7 +1829,6 @@ def ann_ivf_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- Matryoshka truncation fidelity --------------------------------------------
 
 _MRL_DIMS = (8, 16, 32, 64)  #: truncation prefixes audited (full dim = 64)
-_MRL_PAIR_T = 0.40  #: the embedding_cosine_near_dup pair-feed threshold
 
 
 @register(
@@ -1877,36 +1846,35 @@ _MRL_PAIR_T = 0.40  #: the embedding_cosine_near_dup pair-feed threshold
       SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS idx, {_DUCK_QV} AS qc
       FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {_SEM_K_SQL})
     ),
-    qv AS (SELECT vec_id, embedding, {_DUCK_QV} AS q FROM embeddings),
+    qv AS (SELECT vec_id, {_DUCK_QV} AS q FROM embeddings),
     adist AS (
-      SELECT v.vec_id, v.embedding, c.idx,
+      SELECT v.vec_id, v.q, c.idx,
              -2 * list_dot_product(v.q, c.qc) + list_dot_product(c.qc, c.qc) AS d
       FROM qv v CROSS JOIN cent c
     ),
     cells AS (
-      SELECT vec_id, embedding, idx AS cell
+      SELECT vec_id, q, idx AS cell
       FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, idx) AS rn
             FROM adist)
       WHERE rn = 1
     ),
     pairs AS (
-      SELECT a.embedding AS va, b.embedding AS vb,
-             cast(list_cosine_similarity(a.embedding, b.embedding) AS DOUBLE) AS cf
-      FROM cells a JOIN cells b
-        ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.embedding, b.embedding) >= {_MRL_PAIR_T}
+      SELECT * FROM (
+        SELECT a.q AS qa, b.q AS qb, {duck_pair_ci("a.q", "b.q")} AS cf
+        FROM cells a JOIN cells b
+          ON a.cell = b.cell AND a.vec_id < b.vec_id)
+      WHERE cf >= {NEAR_DUP_CI}
     ),
     deltas AS (
-      SELECT k.k,
-             count(*) AS n_pairs,
-             avg(abs(cast(list_cosine_similarity(p.va[1:k.k], p.vb[1:k.k]) AS DOUBLE) - p.cf)) AS mad,
-             max(abs(cast(list_cosine_similarity(p.va[1:k.k], p.vb[1:k.k]) AS DOUBLE) - p.cf)) AS mxd
-      FROM pairs p CROSS JOIN ks k GROUP BY k.k
+      SELECT k, count(*) AS n_pairs, avg(abs(ck - cf)) AS mad, max(abs(ck - cf)) AS mxd
+      FROM (SELECT k.k, p.cf, {duck_pair_ci("p.qa[1:k.k]", "p.qb[1:k.k]")} AS ck
+            FROM pairs p CROSS JOIN ks k)
+      GROUP BY k
     )
     SELECT e.k, d.n_pairs,
            round(e.mef, 4) AS mean_energy_frac,
-           round(d.mad, 4) AS mean_abs_cos_delta,
-           round(d.mxd, 4) AS max_abs_cos_delta
+           round(d.mad / 10000.0, 4) AS mean_abs_cos_delta,
+           round(d.mxd / 10000.0, 4) AS max_abs_cos_delta
     FROM energy e JOIN deltas d USING (k)
     """,
     description=(
@@ -1929,15 +1897,13 @@ def embedding_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
     CELL-BLOCKED high-similarity join (the dedup_semantic_clusters
     shape — IVF cells + cap_hot_cells bound the quadratic stage)
     computed ONCE and fanned out 4x by the same literal frame; all
-    aggregates are k-bounded. Slices sit behind their own projection
-    so the HOF folds reference attributes (the repo-wide CollapseProject
-    discipline)."""
-    from crypto_etl_pipeline_spark.operators.similarity import _spread, dot, norm
-
+    aggregates are k-bounded. Both cosines (full vector and prefix)
+    come from the one exact kernel, so drifts are exact ``ci``
+    differences."""
     emb = load_table(spark, sf_dir, "embeddings")
     ks = spark.createDataFrame([(k,) for k in _MRL_DIMS], "k INT")
 
-    base = _spread(emb, "vec_id").select("vec_id", "label", "embedding")
+    base = _spread(emb).select("vec_id", "label", "embedding")
     en_sliced = base.crossJoin(F.broadcast(ks)).select(
         "k",
         F.slice(F.col("embedding"), 1, F.col("k")).alias("_pre"),
@@ -1979,21 +1945,18 @@ def embedding_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
         max_cell_size=SEM_CELL_CAP,
         cell_col="_cell",
     ).localCheckpoint(eager=False)
-    from crypto_etl_pipeline_spark.operators.similarity import pair_cosine_pd
-
     a, b = cells.alias("a"), cells.alias("b")
-    # Arrow-batched numpy cosine over the candidate pairs (the
-    # dedup_semantic_clusters hot-path kernel — an interpreted HOF fold
-    # here measured 15 s at sf0.3); the surviving pairs (few) then pay
-    # the per-k sliced folds, which is negligible.
+    # One kernel for both cosines: the full-vector ci gates the pair
+    # feed, the same kernel on each prefix gives the drift in exact
+    # ci units (k = 64 reproduces the full ci, so its drift is 0).
     pairs = (
         a.join(b, (F.col("a._cell") == F.col("b._cell")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .select(
             F.col("a._cvec").alias("va"),
             F.col("b._cvec").alias("vb"),
-            pair_cosine_pd()(F.col("a._cvec"), F.col("b._cvec")).alias("_cf"),
+            pair_ci_pd()(F.col("a._cvec"), F.col("b._cvec")).alias("_cf"),
         )
-        .where(F.col("_cf") >= _MRL_PAIR_T)
+        .where(F.col("_cf") >= NEAR_DUP_CI)
     )
     sliced = pairs.crossJoin(F.broadcast(ks)).select(
         "k",
@@ -2001,7 +1964,7 @@ def embedding_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
         F.slice(F.col("va"), 1, F.col("k")).alias("_sa"),
         F.slice(F.col("vb"), 1, F.col("k")).alias("_sb"),
     )
-    ck = dot(F.col("_sa"), F.col("_sb")) / (norm(F.col("_sa")) * norm(F.col("_sb")))
+    ck = pair_ci_pd()(F.col("_sa"), F.col("_sb"))
     deltas = (
         sliced.withColumn("_d", F.abs(ck - F.col("_cf")))
         .groupBy("k")
@@ -2015,8 +1978,8 @@ def embedding_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
         "k",
         "n_pairs",
         F.round("mef", 4).alias("mean_energy_frac"),
-        F.round("mad", 4).alias("mean_abs_cos_delta"),
-        F.round("mxd", 4).alias("max_abs_cos_delta"),
+        F.round(F.col("mad") / 10000.0, 4).alias("mean_abs_cos_delta"),
+        F.round(F.col("mxd") / 10000.0, 4).alias("max_abs_cos_delta"),
     )
 
 
@@ -2032,7 +1995,7 @@ _NPROBE_CONFIGS = (1, 2, 4)  #: probe counts swept (cells = IVF_K = 16)
       SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS idx, {_DUCK_QV} AS qc
       FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {IVF_K})
     ),
-    qv AS MATERIALIZED (SELECT vec_id, embedding, {_DUCK_QV} AS q FROM embeddings),
+    qv AS MATERIALIZED (SELECT vec_id, {_DUCK_QV} AS q FROM embeddings),
     adist AS MATERIALIZED (
       SELECT v.vec_id, c.idx,
              -2 * list_dot_product(v.q, c.qc) + list_dot_product(c.qc, c.qc) AS d
@@ -2048,10 +2011,10 @@ _NPROBE_CONFIGS = (1, 2, 4)  #: probe counts swept (cells = IVF_K = 16)
                FROM ranked_cells WHERE vec_id < {N_QUERIES} AND rn <= {max(_NPROBE_CONFIGS)}),
     cand AS MATERIALIZED (
       SELECT p.query_id, c.neighbor_id, p.probe_rn,
-             round(cast(list_cosine_similarity(qe.embedding, ne.embedding) AS DOUBLE), 4) AS cos_sim
+             {duck_pair_ci("qe.q", "ne.q")} / 10000.0 AS cos_sim
       FROM qprobe p JOIN cells c USING (cell)
-      JOIN embeddings qe ON qe.vec_id = p.query_id
-      JOIN embeddings ne ON ne.vec_id = c.neighbor_id
+      JOIN qv qe ON qe.vec_id = p.query_id
+      JOIN qv ne ON ne.vec_id = c.neighbor_id
       WHERE p.query_id != c.neighbor_id
     ),
     per_cfg AS MATERIALIZED (
@@ -2065,9 +2028,8 @@ _NPROBE_CONFIGS = (1, 2, 4)  #: probe counts swept (cells = IVF_K = 16)
       SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY round(cast(list_cosine_similarity(q.embedding, e.embedding) AS DOUBLE), 4) DESC,
-                          e.vec_id) AS rank
-        FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
+                 ORDER BY {duck_pair_ci("q.q", "e.q")} DESC, e.vec_id) AS rank
+        FROM qv q JOIN qv e ON e.vec_id != q.vec_id
         WHERE q.vec_id < {N_QUERIES}
       ) WHERE rank <= {TOP_K}
     ),
@@ -2110,10 +2072,8 @@ def ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled queries, which is exactly this plan's query-side shape)."""
     from crypto_etl_pipeline_spark.operators.similarity import (
         _nearest_cells_pd,
-        brute_force_topk,
         ivf_assign_cells,
         ivf_build_centroids,
-        pair_cosine_pd,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2135,7 +2095,7 @@ def ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "neighbor_id",
             "probe_rn",
-            F.round(pair_cosine_pd()(F.col("_qvec"), F.col("_cvec")), 4).alias("cos_sim"),
+            (pair_ci_pd()(F.col("_qvec"), F.col("_cvec")) / 10000.0).alias("cos_sim"),
         )
     )
     cfgs = spark.createDataFrame([(p,) for p in _NPROBE_CONFIGS], "np INT")
@@ -2234,7 +2194,7 @@ def embedding_drift_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFram
     arithmetic. Means divide only at the bounded stage; the compared
     surface rounds at 1e-4, orders above sum-association noise."""
     emb = load_table(spark, sf_dir, "embeddings")
-    split = _spread(emb, "vec_id").select(
+    split = _spread(emb).select(
         "label",
         F.when(
             (F.col("vec_id") * 2654435761) % 100 < _DRIFT_GATE_PCT, F.lit("A")
@@ -2264,7 +2224,7 @@ def embedding_drift_centroid_shift(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-SEM_SWEEP_TAUS = (0.35, 0.5, 0.7, 0.9)  #: cosine thresholds swept
+SEM_SWEEP_TAUS = (3500, 5000, 7000, 9000)  #: cosine thresholds swept, in ``ci`` units
 
 
 def _sem_sweep_oracle() -> str:
@@ -2276,31 +2236,30 @@ def _sem_sweep_oracle() -> str:
       SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS idx, {_DUCK_QV} AS qc
       FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {_SEM_K_SQL})
     ),
-    qv AS MATERIALIZED (SELECT vec_id, embedding, {_DUCK_QV} AS q FROM embeddings),
+    qv AS MATERIALIZED (SELECT vec_id, {_DUCK_QV} AS q FROM embeddings),
     adist AS (
-      SELECT v.vec_id, v.embedding, c.idx,
+      SELECT v.vec_id, v.q, c.idx,
              -2 * list_dot_product(v.q, c.qc) + list_dot_product(c.qc, c.qc) AS d
       FROM qv v CROSS JOIN cent c
     ),
     cells AS MATERIALIZED (
-      SELECT vec_id, embedding, idx AS cell
+      SELECT vec_id, q, idx AS cell
       FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, idx) AS rn
             FROM adist)
       WHERE rn = 1
     ),
     scored AS MATERIALIZED (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             round(CAST(list_cosine_similarity(a.embedding, b.embedding) AS DOUBLE), 4) AS sim
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b, {duck_pair_ci("a.q", "b.q")} AS ci
       FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
     )"""
     selects = []
     for tau in SEM_SWEEP_TAUS:
-        selects.append(f"""SELECT CAST({tau} AS DOUBLE) AS tau,
-           (SELECT count(*) FROM scored WHERE sim >= {tau})::BIGINT AS n_pairs,
-           (SELECT round(avg(sim), 6) FROM scored WHERE sim >= {tau}) AS mean_sim,
+        selects.append(f"""SELECT {tau} / 10000.0 AS tau,
+           (SELECT count(*) FROM scored WHERE ci >= {tau})::BIGINT AS n_pairs,
+           (SELECT round(avg(ci) / 10000.0, 6) FROM scored WHERE ci >= {tau}) AS mean_sim,
            (SELECT count(DISTINCT v) FROM (
-              SELECT id_a AS v FROM scored WHERE sim >= {tau}
-              UNION ALL SELECT id_b FROM scored WHERE sim >= {tau}))::BIGINT AS n_docs""")
+              SELECT id_a AS v FROM scored WHERE ci >= {tau}
+              UNION ALL SELECT id_b FROM scored WHERE ci >= {tau}))::BIGINT AS n_docs""")
     return "WITH " + ctes + "\n    " + "\n    UNION ALL ".join(selects)
 
 
@@ -2320,16 +2279,15 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
     each candidate threshold implies. ONE cell assignment + ONE
     Arrow-batched within-cell cosine pass (checkpointed), then every
     tau row is a cheap aggregate over the same scored pair table —
-    cost is the pair pass, not pairs × taus. Similarities round to the
-    4-decimal grid BEFORE thresholding on both engines, so tau
-    boundaries cannot drift cross-engine. Every tau emits a row even
+    cost is the pair pass, not pairs × taus. Similarities are exact
+    ``ci`` integers in both engines, so tau boundaries cannot drift
+    cross-engine. Every tau emits a row even
     with zero pairs (ungrouped aggregates; the LSH-sweep zero-candidate
     lesson). Output is len(taus) rows."""
     from crypto_etl_pipeline_spark.operators.similarity import (
         cap_hot_cells,
         ivf_assign_cells,
         ivf_build_centroids,
-        pair_cosine_pd,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2360,18 +2318,16 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
         .select(
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
-            F.round(
-                pair_cosine_pd()(F.col("a._cvec"), F.col("b._cvec")).cast("double"), 4
-            ).alias("sim"),
+            pair_ci_pd()(F.col("a._cvec"), F.col("b._cvec")).alias("ci"),
         )
         .localCheckpoint(eager=False)
     )
     out = None
     for tau in SEM_SWEEP_TAUS:
-        p = scored.where(F.col("sim") >= tau)
+        p = scored.where(F.col("ci") >= tau)
         stats = p.agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.round(F.avg("sim"), 6).alias("mean_sim"),
+            F.round(F.avg("ci") / 10000.0, 6).alias("mean_sim"),
         )
         nd = (
             p.select(F.explode(F.array("id_a", "id_b")).alias("v"))
@@ -2379,7 +2335,7 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
             .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
         )
         row = stats.crossJoin(F.broadcast(nd)).select(
-            F.lit(float(tau)).alias("tau"), "n_pairs", "mean_sim", "n_docs"
+            (F.lit(tau) / 10000.0).alias("tau"), "n_pairs", "mean_sim", "n_docs"
         )
         out = row if out is None else out.unionByName(row)
     return out
@@ -2428,7 +2384,7 @@ def ann_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     against exact truth, the metric every ANN paper reports and every
     index rollout gates on (the nprobe sweep reports candidate VOLUME;
     this reports result QUALITY at fixed nprobe across k levels). Both
-    rankings are deterministic (4-decimal cosine grid, neighbor-id
+    rankings are deterministic (exact ``ci`` cosines, neighbor-id
     tie-break), so recall is exact, not sampled. One left join of the
     two top-k tables (both query-count-bounded), then every k level is
     a conditional aggregate over the SAME joined frame — one pass, not
@@ -2620,7 +2576,7 @@ _BX_PAIR_SQL = """
     ),
     m AS (
       SELECT p.src_id, p.tgt_id,
-             round(p.ci / 10000.0, 4) AS cos_sim,
+             p.ci / 10000.0 AS cos_sim,
              round(CAST((nns.ks + nnt.kt) * p.ci AS DOUBLE)
                    / nullif(nns.si + nnt.ti, 0), 4) AS margin
       FROM p JOIN nns USING (src_id) JOIN nnt USING (tgt_id)
@@ -2660,7 +2616,7 @@ def bitext_mine_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward mining en->de over the embeddings+documents join: for
     each bounded-source vector, the target-language candidate with the
     highest ratio margin (module header of operators/bitext.py). The
-    margin is exact-integer arithmetic over 4-decimal-rounded cosines
+    margin is exact-integer arithmetic over the exact ``ci`` cosines
     (comment on _BX_PAIR_SQL), so both engines rank identically. The
     pair feed is |src_cap| x |tgt| — the broadcast-queries ANN shape;
     recall on planted translations is pinned in
@@ -2692,9 +2648,8 @@ def bitext_margin_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     """Operating-point selection for the miner (the
     dedup_lsh_parameter_sweep pattern): score once, fan out by a
     literal threshold frame, count accepted pairs and their mean
-    cosine per cut. mean over 4-decimal cos values at bounded count —
-    rounding absorbs order effects (same discipline as the ANN
-    family)."""
+    cosine per cut. mean over ``ci / 10000.0`` values at bounded
+    count, rounded to 4 decimals."""
     from pyspark.sql.window import Window
 
     scored = _bitext_scored(spark, sf_dir)
@@ -2847,7 +2802,7 @@ def bitext_intersection_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     m AS (
       SELECT p.src_id, p.tgt_id, p.cell,
-             round(p.ci / 10000.0, 4) AS cos_sim,
+             p.ci / 10000.0 AS cos_sim,
              round(CAST((nns.ks + nnt.kt) * p.ci AS DOUBLE)
                    / nullif(nns.si + nnt.ti, 0), 4) AS margin
       FROM p JOIN nns USING (src_id) JOIN nnt USING (tgt_id)
@@ -2875,8 +2830,6 @@ def bitext_mine_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade as ann_ivf_topk vs brute force) and is pinned on the planted
     fixture in tests; the seeded assignment replays as a SQL window,
     which is what keeps this fully oracled."""
-    from pyspark.sql.window import Window
-
     from crypto_etl_pipeline_spark.operators.similarity import (
         ivf_assign_cells,
         ivf_build_centroids,
@@ -2901,44 +2854,13 @@ def bitext_mine_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vid").alias("tgt_id"), F.col("_cell").alias("_tc"),
         F.col("_cvec").alias("_tv"),
     )
-    pairs = (
-        src.join(tgt, src.cell == tgt._tc)
-        .select(
-            "src_id",
-            "tgt_id",
-            "cell",
-            pair_ci_pd()(F.col("_sv"), F.col("_tv")).alias("ci"),
-        )
-        .localCheckpoint(eager=False)
-        .where(F.col("ci") > 0)  # same positive-candidacy contract
-    )
-    w_s = Window.partitionBy("src_id").orderBy(F.desc("ci"), F.asc("tgt_id"))
-    nns = (
-        pairs.withColumn("_r", F.row_number().over(w_s))
-        .where(F.col("_r") <= BITEXT_K)
-        .groupBy("src_id")
-        .agg(F.sum("ci").alias("si"), F.count(F.lit(1)).alias("ks"))
-    )
-    w_t = Window.partitionBy("tgt_id").orderBy(F.desc("ci"), F.asc("src_id"))
-    nnt = (
-        pairs.withColumn("_r", F.row_number().over(w_t))
-        .where(F.col("_r") <= BITEXT_K)
-        .groupBy("tgt_id")
-        .agg(F.sum("ci").alias("ti"), F.count(F.lit(1)).alias("kt"))
-    )
-    scored = (
-        pairs.join(nns, "src_id")
-        .join(nnt, "tgt_id")
-        .select(
-            "src_id",
-            "tgt_id",
-            "cell",
-            F.round(F.col("ci") / 10000.0, 4).alias("cos_sim"),
-            F.round(
-                ((F.col("ks") + F.col("kt")) * F.col("ci")).cast("double")
-                / F.nullif(F.col("si") + F.col("ti"), F.lit(0)),
-                4,
-            ).alias("margin"),
+    return mine_bitext(
+        margin_scores(
+            src.join(tgt, src.cell == tgt._tc).select(
+                "src_id",
+                "tgt_id",
+                "cell",
+                pair_ci_pd()(F.col("_sv"), F.col("_tv")).alias("ci"),
+            )
         )
     )
-    return mine_bitext(scored)

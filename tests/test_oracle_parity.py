@@ -283,7 +283,7 @@ def test_lsh_bucket_expression_matches_numpy(spark):
     )
     from crypto_etl_pipeline_spark.sources.tables import load_table
 
-    planes = _hyperplanes(64, 6)
+    planes = _hyperplanes(6)
     emb = load_table(spark, SF_ORACLE, "embeddings")
     diff = (
         emb.select(

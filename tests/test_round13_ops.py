@@ -352,36 +352,70 @@ _BOUNDARY_TGT = [
 ]
 
 
-def test_bitext_boundary_pair_scores_identically_in_both_engines(spark):
+def test_bitext_boundary_pair_scores_identically_in_both_engines(spark, tmp_path):
     """Regression: this pair's float cosine lies within float error of
-    0.60905, so rounding a float cosine to 4 decimals gave 0.609 in
-    Spark (float64 numpy) and 0.6091 in DuckDB (float32
-    list_cosine_similarity), and bitext_mine_margin disagreed with its
-    oracle. The quantized integer cosine is exact in both engines."""
+    0.60905, so a float cosine rounded to 4 decimals gave 0.609 in Spark
+    (float64) and 0.6091 in DuckDB (float32 list_cosine_similarity):
+    bitext_mine_margin and embedding_cosine_near_dup (the pair under one
+    label) disagreed with their oracles. The exact integer cosine gives
+    0.609 in both engines."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tables = {
+        "embeddings": {
+            "vec_id": pa.array([91, 229], pa.int64()),
+            "embedding": pa.array([_BOUNDARY_SRC, _BOUNDARY_TGT], pa.list_(pa.float32())),
+            "label": pa.array([3, 3], pa.int32()),
+        },
+        "documents": {"doc_id": pa.array([91, 229], pa.int64()), "lang": ["en", "de"]},
+    }
+    con = duckdb.connect()
+    for name, cols in tables.items():
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table(cols), path)
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+    for name, want in (
+        ("bitext_mine_margin", [(91, 229, 0.609, 1.0)]),
+        ("embedding_cosine_near_dup", [(91, 229, 0.609)]),
+    ):
+        q = REGISTRY[name]
+        assert [tuple(r) for r in q.fn(spark, str(tmp_path)).collect()] == want, name
+        assert con.sql(q.oracle).fetchall() == want, name
+
+
+def test_pair_ci_null_and_zero_vectors_agree_across_engines(spark):
+    """A null vector, or one that quantizes to all zeros, has no cosine:
+    the Spark kernel and its DuckDB twin both return a null ci (the
+    kernel used to return INT64_MIN for the zero vector and raise on
+    the null one), and a regular pair keeps its exact value."""
     import duckdb
 
-    from crypto_etl_pipeline_spark.operators.bitext import bitext_margin_pairs
-    from crypto_etl_pipeline_spark.queries import REGISTRY
+    from crypto_etl_pipeline_spark.operators.similarity import (
+        duck_pair_ci,
+        duck_qv,
+        pair_ci_pd,
+    )
 
+    v = [0.5, -0.25, 0.125, 0.75]
+    rows = [(0, [0.0, 0.0, 0.0, 0.0], v), (1, None, v), (2, [1e-9, 0.0, 0.0, 0.0], v), (3, v, v)]
+    df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
+    got = [
+        tuple(r)
+        for r in df.select("id", pair_ci_pd()(F.col("a"), F.col("b")))
+        .orderBy("id")
+        .collect()
+    ]
     con = duckdb.connect()
-    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
-    con.execute(
-        "INSERT INTO embeddings VALUES (91, ?), (229, ?)",
-        [_BOUNDARY_SRC, _BOUNDARY_TGT],
-    )
-    con.execute(
-        "CREATE TABLE documents AS "
-        "SELECT * FROM (VALUES (91, 'en'), (229, 'de')) t(doc_id, lang)"
-    )
-    duck = con.sql(REGISTRY["bitext_mine_margin"].oracle).fetchall()
+    con.execute("CREATE TABLE t (id BIGINT, a FLOAT[], b FLOAT[])")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    duck = con.sql(
+        f"SELECT id, {duck_pair_ci('qa', 'qb')} FROM "
+        f"(SELECT id, {duck_qv('a')} AS qa, {duck_qv('b')} AS qb FROM t) ORDER BY id"
+    ).fetchall()
 
-    schema = "vec_id long, embedding array<float>"
-    src = spark.createDataFrame([(91, _BOUNDARY_SRC)], schema)
-    tgt = spark.createDataFrame([(229, _BOUNDARY_TGT)], schema)
-    got = [tuple(r) for r in bitext_margin_pairs(src, tgt).collect()]
-
-    assert duck == [(91, 229, 0.609, 1.0)]
-    assert got == [(91, 229, 0.609, 1.0)]
+    assert got == duck == [(0, None), (1, None), (2, None), (3, 10000)]
 
 
 def test_bitext_intersection_keeps_planted_drops_hub(spark):

@@ -600,6 +600,7 @@ def test_semantic_dedup_soundness_and_recall(spark, duck):
     there, which is the regime SemDeDup operates in."""
     from tests.conftest import SF_ORACLE
 
+    from crypto_etl_pipeline_spark.operators.similarity import duck_pair_ci, duck_qv
     from crypto_etl_pipeline_spark.queries.vector import (
         SEM_TAU,
         dedup_semantic_clusters,
@@ -613,9 +614,10 @@ def test_semantic_dedup_soundness_and_recall(spark, duck):
         (a, b)
         for a, b in duck.execute(
             f"""
+            WITH e AS (SELECT vec_id, {duck_qv("embedding")} AS q FROM embeddings)
             SELECT a.vec_id, b.vec_id
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE list_cosine_similarity(a.embedding, b.embedding) >= {SEM_TAU}
+            FROM e a JOIN e b ON a.vec_id < b.vec_id
+            WHERE {duck_pair_ci("a.q", "b.q")} >= {SEM_TAU}
             """
         ).fetchall()
     }

@@ -194,30 +194,35 @@ class TestIvfHotCellCap:
 
     def test_hot_cells_report_counts_skipped_pairs(self, spark):
         """The report must model cap_hot_cells' ACTUAL split (full
-        sub-cells of size cap + one remainder): n=50, cap=8 splits
-        8,8,8,8,8,8,2 -> retained 6*C(8,2)+C(2,2) = 169, skipped
-        1225-169 = 1056 — cross-checked against the real sub-cell
-        membership cap_hot_cells produces."""
+        sub-cells of size cap + one remainder): n = 2*cap + 6 with the
+        package cap (SEM_CELL_CAP = 512) splits 512,512,6 -> retained
+        2*C(512,2)+C(6,2) = 261647, skipped C(1030,2)-261647 = 268288 —
+        cross-checked against the real sub-cell membership cap_hot_cells
+        produces."""
         from collections import Counter
 
         from crypto_etl_pipeline_spark.operators.similarity import (
+            SEM_CELL_CAP,
             cap_hot_cells,
             ivf_hot_cells,
         )
 
-        asg = self._skewed_assignments(spark)
-        rep = ivf_hot_cells(asg, max_cell_size=8).collect()
+        n = 2 * SEM_CELL_CAP + 6
+        rows = [(i, 0) for i in range(n)]
+        rows += [(10_000 + 10 * c + j, c) for c in range(1, 6) for j in range(4)]
+        asg = spark.createDataFrame(rows, "doc_id long, cell int")
+        rep = ivf_hot_cells(asg).collect()
         assert len(rep) == 1
         row = rep[0]
-        assert row["cell"] == 0 and row["n_ids"] == 50
-        assert row["skipped_comparisons"] == 1056
+        assert row["cell"] == 0 and row["n_ids"] == n
+        assert row["skipped_comparisons"] == 268288
         sizes = Counter(
             r["cell"]
-            for r in cap_hot_cells(asg, max_cell_size=8).collect()
+            for r in cap_hot_cells(asg, max_cell_size=SEM_CELL_CAP).collect()
             if str(r["cell"]).startswith("0#")
         )
         actual_retained = sum(s * (s - 1) // 2 for s in sizes.values())
-        assert 50 * 49 // 2 - actual_retained == row["skipped_comparisons"]
+        assert n * (n - 1) // 2 - actual_retained == row["skipped_comparisons"]
 
 
 class TestHessianFanoutGuard:

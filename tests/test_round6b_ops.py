@@ -106,7 +106,7 @@ class TestRandomProjection:
 
         emb = spark.read.parquet(SF + "/embeddings.parquet")
         n = emb.count()
-        out = random_projection(emb, "vec_id", "embedding", 64, 16)
+        out = random_projection(emb, 64, 16)
         pdf = out.toPandas()
         assert len(pdf) == n * 16
         proj_sq = pdf.groupby("vec_id")["proj"].apply(lambda s: float((s**2).sum()))
@@ -122,7 +122,7 @@ class TestRandomProjection:
         from crypto_etl_pipeline_spark.operators.similarity import random_projection
 
         emb = spark.read.parquet(SF + "/embeddings.parquet")
-        plan = random_projection(emb, "vec_id", "embedding", 64, 16)._jdf.queryExecution().executedPlan().toString()
+        plan = random_projection(emb, 64, 16)._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
 
 
@@ -215,7 +215,7 @@ class TestJlProjectedAnn:
         )
 
         emb = spark.read.parquet(SF + "/embeddings.parquet").limit(80)
-        proj = random_projection_vec(emb, "vec_id", "embedding", 64, 16)
+        proj = random_projection_vec(emb, 64, 16)
         V = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in emb.collect()}
         P = {r["vec_id"]: np.array(r["jl_vec"], dtype=np.float64) for r in proj.collect()}
         ids = sorted(V)
