@@ -232,27 +232,13 @@ def decode_image_stub(media: DataFrame) -> DataFrame:
     return _decode_image_with(media, _fake_decode)
 
 
-def decode_image(media: DataFrame, codec: str = "auto") -> DataFrame:
-    """Decode payloads with the requested codec; the Spark plan is
-    identical for all of them — only the per-batch callable differs.
-
-    - ``'auto'``/``'real'``: magic-byte sniffing real decoder — pure
-      Python for PPM/BMP, Pillow for compressed formats when installed,
-      error otherwise (the DEFAULT: real payloads get real parsing).
-    - ``'stub'``: deterministic fake (oracled-query codec).
-    - ``'pil'``: force Pillow; raises if it is not importable.
-    """
-    if codec in ("auto", "real"):
-        fn = _real_decode
-    elif codec == "stub":
-        fn = _fake_decode
-    elif codec == "pil":
-        if not HAS_PIL:
-            raise RuntimeError("codec='pil' but Pillow is not importable")
-        fn = _pil_decode
-    else:
-        raise ValueError(f"unknown codec {codec!r}")
-    return _decode_image_with(media, fn)
+def decode_image(media: DataFrame) -> DataFrame:
+    """Decode payloads with the real decoder (:func:`_real_decode`):
+    magic-byte sniffing, pure Python for PPM/BMP, Pillow for compressed
+    formats when installed, an error otherwise. The Spark plan is the
+    one :func:`decode_image_stub` runs — only the per-batch callable
+    differs."""
+    return _decode_image_with(media, _real_decode)
 
 
 def _decode_image_with(media: DataFrame, codec) -> DataFrame:

@@ -5,35 +5,21 @@ missing trainer+encoder pair of the §2.13 token-counting story (the
 BPE-ish regex pre-tokenizer in operators/textops.py is the
 pre-tokenization half).
 
-Scale shape — the standard BPE factorization, distributed where it
-matters:
+Scale shape — the standard BPE factorization:
 
 - The corpus reduces to the WORD-FREQUENCY table in one scan + one
   shuffle. Everything after runs on that sufficient statistic: pair
   statistics are weighted by word counts, never by re-reading text.
-- The DEFAULT strategy (``local_vocab``) then runs the entire merge
-  loop in one executor task over that statistic — one Spark job for
-  any n_merges; see ``bpe_train_merges``. The bullets below describe
-  the ``distributed`` fallback for vocabularies too large for one
-  task.
-- Pair counts are DELTA-MAINTAINED across merge rounds (round 4 ran a
-  full posexplode+window recount of the whole vocabulary per round):
-  merging (l, r) only changes the adjacency multiset of words that
-  actually CONTAIN the adjacent pair, so each round recounts only the
-  affected slice — subtracting its old pair contributions and adding
-  its rewritten ones — and rewrites only those words. Unaffected words
-  are never touched. Late rounds touch a vanishing fraction of the
-  vocabulary, which is what makes production merge counts (32k)
-  feasible: per-round cost tracks the merged pair's support, not the
-  vocabulary size.
-- Only the single argmax pair row reaches the driver per round — the
-  same driver-scalar discipline as IVF's k centroids
-  (operators/similarity.py).
-- Applying a merge is a per-word greedy left-to-right rewrite over the
-  AFFECTED words only; it runs as an Arrow-batched mapInPandas.
-- State (both the symbolized vocabulary and the pair-count table) is
-  lazily localCheckpointed per round, the operators/cluster.py lineage
-  discipline for driver-looped iteration.
+- The merge loop then runs in ONE executor task over that statistic
+  (see ``bpe_train_merges``): one Spark job for any n_merges, no
+  per-round collect.
+- Pair counts are maintained incrementally across merge rounds: merging
+  (l, r) only changes the adjacency multiset of words that CONTAIN the
+  adjacent pair, so each round subtracts the old pair contributions of
+  those words, rewrites them greedily left-to-right, and adds their new
+  ones; unaffected words are never touched. Per-round cost tracks the
+  merged pair's support, not the vocabulary size, which is what makes
+  production merge counts (32k) feasible.
 
 Encoding (``bpe_encode_words``) applies a trained merge table to a
 word column: merges applied in rank order, each greedily
@@ -60,76 +46,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-# Symbol-list separator for the JVM-side adjacency containment test.
-# \x1f (ASCII unit separator) never appears in real text tokens; the
-# trainer asserts nothing about it because a word containing \x1f
-# would merely mis-bucket that one word's affected-filter, and the
-# delta recount is computed from the SYMBOL LISTS, not this string.
-_SEP = "\x1f"
-
-
-def _with_joined(state: DataFrame) -> DataFrame:
-    """Add the separator-joined symbol string used for the cheap
-    JVM-side "contains adjacent pair (l, r)" filter:
-    SEP||l||SEP||r||SEP is a substring of SEP-joined-with-boundaries
-    iff l,r are adjacent somewhere in the list."""
-    return state.withColumn(
-        "joined", F.concat(F.lit(_SEP), F.concat_ws(_SEP, "syms"), F.lit(_SEP))
-    )
-
-
-def _pair_counts(state: DataFrame) -> DataFrame:
-    """Weighted adjacent-pair counts over (word, cnt, syms) state.
-
-    posexplode to (word, pos, sym) rows, pair via a lead window
-    partitioned by word — flat columns and a keyed shuffle, no
-    higher-order-function lambdas for Catalyst to inline (see
-    SCALE.md "Python stages": CollapseProject re-evaluates inlined
-    HOF lambdas per element — measured multiplicative blowup).
-    """
-    pos = state.select(
-        "word", "cnt", F.posexplode("syms").alias("pos", "left_sym")
-    )
-    w = Window.partitionBy("word").orderBy("pos")
-    return (
-        pos.withColumn("right_sym", F.lead("left_sym").over(w))
-        .where(F.col("right_sym").isNotNull())
-        .groupBy("left_sym", "right_sym")
-        .agg(F.sum("cnt").alias("pair_count"))
-    )
-
-
-def _apply_merge(state: DataFrame, left: str, right: str) -> DataFrame:
-    """Greedy left-to-right merge of (left, right) in every word's
-    symbol list — Arrow-batched, affected-slice-sized input."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for syms in pdf["syms"]:
-                syms = list(syms)
-                merged = []
-                i = 0
-                n = len(syms)
-                while i < n:
-                    if i + 1 < n and syms[i] == left and syms[i + 1] == right:
-                        merged.append(left + right)
-                        i += 2
-                    else:
-                        merged.append(syms[i])
-                        i += 1
-                out.append(merged)
-            yield pd.DataFrame(
-                {"word": pdf["word"], "cnt": pdf["cnt"], "syms": out}
-            )
-
-    return state.select("word", "cnt", "syms").mapInPandas(
-        run, schema="word string, cnt long, syms array<string>"
-    )
-
 
 def _greedy_rewrite(syms: list, left: str, right: str) -> list:
     """Greedy left-to-right single-merge rewrite (shared helper)."""
@@ -193,9 +109,7 @@ def _train_local(wordcounts: dict, n_merges: int) -> list:
     return merges
 
 
-def bpe_train_merges(
-    words: DataFrame, n_merges: int, strategy: str = "local_vocab"
-) -> DataFrame:
+def bpe_train_merges(words: DataFrame, n_merges: int) -> DataFrame:
     """Train ``n_merges`` BPE merges from a (word, cnt) frequency table.
 
     Returns one row per learned merge:
@@ -203,35 +117,15 @@ def bpe_train_merges(
     trained artifact ``bpe_encode_words`` loads, in learned order.
     Stops early if the vocabulary runs out of adjacent pairs.
 
-    Two equivalence-tested strategies (the pagerank two-strategy
-    pattern, operators/graph.py):
-
-    - ``local_vocab`` (default): the distributed work is reducing the
-      corpus to the word-frequency table; that sufficient statistic
-      (even web-scale: ~10M words ≈ hundreds of MB) then flows into
-      ONE executor task where the whole merge loop runs as a single
-      Arrow-batched pass with indexed incremental pair counts — one
-      Spark job for ANY n_merges, no per-round driver round-trips.
-      This is how production tokenizer trainers are actually built,
-      and it turns the round-4 8-merges-in-3.25s driver loop into
-      a flat cost at n_merges=64+ (the round-4 VERDICT #2 scaling
-      target).
-    - ``distributed``: for vocabularies too large for one task. A
-      driver loop with DELTA-maintained pair counts: each round
-      rewrites and recounts only the words containing the merged pair
-      (JVM-side containment filter on a separator-joined symbol
-      string); one argmax row reaches the driver per round. Exact at
-      every round — pinned against ``local_vocab`` and the
-      independent reference trainer in tests.
+    The distributed work is reducing the corpus to the word-frequency
+    table; that sufficient statistic (even web-scale: ~10M words ≈
+    hundreds of MB) then flows into ONE executor task where the whole
+    merge loop runs as a single Arrow-batched pass with indexed
+    incremental pair counts (:func:`_train_local`) — one Spark job for
+    ANY n_merges, no per-round collect. This is how
+    production tokenizer trainers are built; tests pin it against an
+    independent reference trainer.
     """
-    if strategy == "local_vocab":
-        return _train_local_vocab(words, n_merges)
-    if strategy != "distributed":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return _train_distributed(words, n_merges)
-
-
-def _train_local_vocab(words: DataFrame, n_merges: int) -> DataFrame:
     import pandas as pd
 
     def run(batches):
@@ -255,67 +149,6 @@ def _train_local_vocab(words: DataFrame, n_merges: int) -> DataFrame:
     ).mapInPandas(
         run,
         schema="merge_rank int, left_sym string, right_sym string, merged_sym string, pair_count long",
-    )
-
-
-def _train_distributed(words: DataFrame, n_merges: int) -> DataFrame:
-    spark = words.sparkSession
-    base = words.select(
-        "word",
-        F.col("cnt").cast("long").alias("cnt"),
-        F.split("word", "").alias("syms"),
-    )
-    n_parts = base.rdd.getNumPartitions()
-    state = _with_joined(base).localCheckpoint(eager=False)
-    pair_state = _pair_counts(state).localCheckpoint(eager=False)
-
-    merges = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            pair_state.where(F.col("pair_count") > 0)
-            .orderBy(F.desc("pair_count"), F.asc("left_sym"), F.asc("right_sym"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        left, right, pc = top[0]["left_sym"], top[0]["right_sym"], top[0]["pair_count"]
-        merges.append((rank, left, right, left + right, int(pc)))
-
-        needle = _SEP + left + _SEP + right + _SEP
-        hit = F.col("joined").contains(needle)
-        affected = state.where(hit)
-        rewritten = _with_joined(_apply_merge(affected, left, right)).localCheckpoint(
-            eager=False
-        )
-        # Exact delta: remove the affected slice's old adjacency
-        # contributions, add its rewritten ones. Everything here is
-        # sized by the merged pair's support, not the vocabulary.
-        minus = _pair_counts(affected).select(
-            "left_sym", "right_sym", (-F.col("pair_count")).alias("pair_count")
-        )
-        plus = _pair_counts(rewritten.select("word", "cnt", "syms"))
-        pair_state = (
-            pair_state.unionByName(minus)
-            .unionByName(plus)
-            .groupBy("left_sym", "right_sym")
-            .agg(F.sum("pair_count").alias("pair_count"))
-            .where(F.col("pair_count") > 0)
-            .localCheckpoint(eager=False)
-        )
-        # coalesce back to the input partition count: union concatenates
-        # partition lists, which would otherwise DOUBLE partitions per
-        # round (measured: 64 -> 4096 over 6 rounds, fixed cost blowup).
-        state = (
-            state.where(~hit)
-            .unionByName(rewritten)
-            .coalesce(n_parts)
-            .localCheckpoint(eager=False)
-        )
-
-    return spark.createDataFrame(
-        merges,
-        "merge_rank int, left_sym string, right_sym string, merged_sym string, pair_count long",
     )
 
 

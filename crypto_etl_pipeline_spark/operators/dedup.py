@@ -390,7 +390,6 @@ def incremental_near_dups(
     new_docs: DataFrame,
     store: MinhashStore,
     threshold: float = 0.5,
-    bucket_cap: int | None = None,
     batch_id: str = "delta",
 ) -> tuple[DataFrame, MinhashStore]:
     """Deduplicate NEW documents against a persisted fingerprint store.
@@ -430,18 +429,7 @@ def incremental_near_dups(
     sh_new = sh_new.select("*", tag)
 
     all_bands = store.bands.unionByName(bands_new)
-    if bucket_cap is not None:
-        # Cap on the COMBINED table: a bucket's heat is a property of
-        # the whole corpus, not of the new batch alone (same semantics
-        # as the batch path; see cap_hot_buckets). The probe side is
-        # capped by the same rule so both halves of a hot bucket drop.
-        all_bands = cap_hot_buckets(all_bands, bucket_cap)
-        bands_probe = all_bands.join(
-            bands_new.select("doc_id").distinct(), "doc_id", "left_semi"
-        )
-    else:
-        bands_probe = bands_new
-    nb = bands_probe.select(F.col("doc_id").alias("_nid"), "band", "bucket")
+    nb = bands_new.select(F.col("doc_id").alias("_nid"), "band", "bucket")
     ab = all_bands.select(F.col("doc_id").alias("_oid"), "band", "bucket")
     # New side probes the combined band table: (new x old) pairs appear
     # once, (new x new) pairs twice (once from each probe) — normalized
@@ -846,7 +834,7 @@ def prefix_filter_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     array rehydration (same pattern as the LSH verify stage above).
     """
     sh = _shingle_arrays(df)
-    cand = _prefix_candidates(sh, "doc_id", threshold)
+    cand = _prefix_candidates(sh, threshold)
     sh_a = sh.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sh_a"))
     sh_b = sh.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sh_b"))
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
@@ -860,26 +848,17 @@ def prefix_filter_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     )
 
 
-def _prefix_candidates(
-    sh: DataFrame,
-    id_col: str,
-    threshold: float,
-    length_filter: bool = True,
-    positional_filter: bool = True,
-) -> DataFrame:
-    """Candidate (id_a, id_b) pairs for :func:`prefix_filter_pairs`.
-
-    Exposed with filter toggles so tests can measure the candidate-set
-    reduction each ppjoin filter buys; production callers always run
-    with both on (each is a theorem — recall is unchanged, only the
-    candidate volume drops).
-    """
+def _prefix_candidates(sh: DataFrame, threshold: float) -> DataFrame:
+    """Candidate (id_a, id_b) pairs for :func:`prefix_filter_pairs`:
+    prefix-token postings joined under the ppjoin length filter, then
+    cut by the positional filter. Each filter is a theorem — recall is
+    unchanged, only the candidate volume drops (tests pin both)."""
     from pyspark.sql.window import Window
 
-    toks = sh.select(F.col(id_col), F.explode("_sh").alias("_t"))
+    toks = sh.select("doc_id", F.explode("_sh").alias("_t"))
     dfreq = toks.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    w_rank = Window.partitionBy(id_col).orderBy(F.asc("_df"), F.asc("_t"))
-    w_sz = Window.partitionBy(id_col)
+    w_rank = Window.partitionBy("doc_id").orderBy(F.asc("_df"), F.asc("_t"))
+    w_sz = Window.partitionBy("doc_id")
     ranked = (
         toks.join(dfreq, "_t")
         .withColumn("_r", F.row_number().over(w_rank))
@@ -889,7 +868,7 @@ def _prefix_candidates(
         ranked.where(
             F.col("_r") <= F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
         )
-        .select(F.col(id_col).alias("_id"), "_t", "_r", "_sz")
+        .select(F.col("doc_id").alias("_id"), "_t", "_r", "_sz")
         # r13: BOTH sides of the self-join below read this frame, and
         # ReuseExchange cannot dedup the explode/df-agg/rank-window
         # chain above a LogicalRDD — without a checkpoint the whole
@@ -900,15 +879,14 @@ def _prefix_candidates(
     )
 
     a, b = prefix.alias("pa"), prefix.alias("pb")
-    join_cond = (F.col("pa._t") == F.col("pb._t")) & (F.col("pa._id") < F.col("pb._id"))
-    if length_filter:
-        # pushed INTO the posting join so oversize-mismatch pairs never
-        # materialize out of a hot posting
-        join_cond = (
-            join_cond
-            & (F.col("pb._sz") >= F.lit(threshold) * F.col("pa._sz"))
-            & (F.col("pa._sz") >= F.lit(threshold) * F.col("pb._sz"))
-        )
+    # the length filter is pushed INTO the posting join so
+    # oversize-mismatch pairs never materialize out of a hot posting
+    join_cond = (
+        (F.col("pa._t") == F.col("pb._t"))
+        & (F.col("pa._id") < F.col("pb._id"))
+        & (F.col("pb._sz") >= F.lit(threshold) * F.col("pa._sz"))
+        & (F.col("pa._sz") >= F.lit(threshold) * F.col("pb._sz"))
+    )
     matched = a.join(b, join_cond).select(
         F.col("pa._id").alias("id_a"),
         F.col("pb._id").alias("id_b"),
@@ -917,9 +895,6 @@ def _prefix_candidates(
         F.col("pa._sz").alias("_sza"),
         F.col("pb._sz").alias("_szb"),
     )
-    if not positional_filter:
-        return matched.select("id_a", "id_b").distinct()
-
     # overlap upper bound from this shared token's ranks; the pair's
     # tightest bound (min over its shared prefix tokens) must clear the
     # Jaccard overlap floor t/(1+t) * (|x|+|y|).

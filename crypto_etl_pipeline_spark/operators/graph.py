@@ -2,11 +2,10 @@
 
 PageRank as the canonical driver-looped iterative workload: each
 iteration is one join + one keyed aggregation, fully distributed; the
-driver holds only the loop counter. At scale the edge table is the
-dataset — pre-partitioning edges and ranks on the join key lets every
-iteration reuse one exchange, and lineage is truncated the same way as
-operators/cluster.py (localCheckpoint per few rounds) when iteration
-counts grow.
+driver holds only the loop counter. The degree-annotated edge table is
+the loop invariant, cut from its lineage by a lazy localCheckpoint so
+no iteration re-executes the edge-building subtree (the discipline of
+operators/cluster.py).
 """
 
 from __future__ import annotations
@@ -16,98 +15,41 @@ from pyspark.sql import functions as F
 
 #: PageRank damping factor ``d``
 DAMPING = 0.85
+#: PageRank power iterations (fixed, so the unrolled SQL oracle replays them)
+PAGERANK_ITERS = 2
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 2,
-    every_node_has_in_edges: bool = False,
-    broadcast_ranks: bool = False,
-) -> DataFrame:
-    """(node, rank) after ``iters`` power iterations from rank=1.0.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """(node, rank) after ``PAGERANK_ITERS`` power iterations from rank=1.0.
 
     Standard formulation: rank(v) = (1-d) + d * sum over in-edges of
-    rank(u)/outdeg(u). Nodes without in-edges settle at (1-d); nodes
-    are the union of both endpoint sets, so dangling-only nodes are
-    kept. Fixed iteration count (not convergence-tested) keeps the
-    result exactly reproducible in the unrolled SQL oracle.
+    rank(u)/outdeg(u). Fixed iteration count (not convergence-tested)
+    keeps the result exactly reproducible in the unrolled SQL oracle.
 
-    Two physical strategies, chosen by ``broadcast_ranks``:
+    Precondition: every node has an in-edge — a bidirectional edge set,
+    as both callers build — so the per-iteration contributions cover
+    every node and no node table is needed. A node with only out-edges
+    would be missing from the result.
 
-    - ``False`` (web-scale default): the node/rank table is as big as
-      the edge table's endpoint set — repartition edges ONCE on the
-      join key behind a checkpoint and let every iteration's rank join
-      reuse that exchange (shuffle-join per iteration, no broadcast).
-    - ``True`` (dimension-keyed graphs — here customer x supplier,
-      generally any graph whose NODE set is dimension-sized while the
-      EDGE set is fact-sized): degree and per-iteration ranks are tiny
-      relative to edges, so join them by BROADCAST. The edge table
-      then never shuffles AND never window-sorts: contributions
-      partial-aggregate map-side into at most partitions x nodes rows.
-      At sf0.1 this removes a 1.17M-row exchange + sort from the plan
-      (~40% of the query's wall). The checkpoint still pins the edge
-      subtree to one execution across iterations.
+    Physical plan, for dimension-keyed graphs (here customer x
+    supplier, generally any graph whose NODE set is dimension-sized
+    while the EDGE set is fact-sized): degree and per-iteration ranks
+    are tiny relative to edges, so they join by BROADCAST. The edge
+    table then never shuffles and never window-sorts: contributions
+    partial-aggregate map-side into at most partitions x nodes rows.
     """
-    # The degree-annotated edge table is the loop INVARIANT: a lazy
-    # localCheckpoint stops each iteration's plan from re-embedding
-    # (and re-executing) its whole subtree — the same lineage
-    # discipline as operators/cluster.py (swap for reliable
-    # checkpoint(dir) on a real cluster). It is REPARTITIONED on the
-    # join key BEFORE the checkpoint (LogicalRDD preserves the
-    # physical outputPartitioning), so every iteration's e⨝ranks join
-    # reuses this one exchange instead of re-shuffling the edge set —
-    # at 100 TB the edge table is the dataset, and iters×(edge
-    # shuffle) is the dominant avoidable cost.
-    from pyspark.sql.window import Window
-
-    spark = edges.sparkSession
-    if iters < 1:
-        raise ValueError("pagerank needs at least one iteration")
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_part = spark.sparkContext.defaultParallelism
-    # Degree via a WINDOW count over the repartitioned edges, not a
-    # groupBy+join: a join would embed the (expensive) edge-building
-    # subtree TWICE in this plan — once under the aggregate, once under
-    # the probe side — while the window reads it exactly once, and its
-    # required clustering on `src` is satisfied by the repartition, so
-    # no extra exchange. The checkpoint then caches the degree-
-    # annotated edges partitioned on the join key, which every
-    # iteration reuses instead of re-shuffling the edge set — at
-    # 100 TB the edge table is the dataset, and iters×(edge shuffle)
-    # is the dominant avoidable cost. (A pathological hot source node
-    # concentrates its out-edges in one partition either way; AQE skew
-    # handling or salting the groupBy side applies as usual.)
-    if broadcast_ranks:
-        # Degree via groupBy (partial counts shuffle ~nodes rows, not
-        # edges) broadcast back onto the un-shuffled edge table.
-        # r14: checkpoint the RAW edges first — the degree BROADCAST
-        # job and the annotated-edge materialization each executed the
-        # caller's whole edge-building subtree (fact join + distinct)
-        # from scratch; behind the cut it runs once and both read the
-        # materialized rows (guide §2.4 / the kcore_peel twin fix).
-        e0 = edges.localCheckpoint(eager=False)
-        deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-        e = e0.join(F.broadcast(deg), "src").localCheckpoint(eager=False)
-    else:
-        e = (
-            edges.repartition(n_part, F.col("src"))
-            .withColumn("_deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-            .localCheckpoint(eager=False)
-        )
-    nodes = None
-    if not every_node_has_in_edges:
-        # Derived from the checkpointed edges so the edge-building
-        # subtree is still executed only once.
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+    # Checkpoint the RAW edges first: the degree broadcast job and the
+    # annotated-edge materialization would each execute the caller's
+    # whole edge-building subtree (fact join + distinct) from scratch;
+    # behind the cut it runs once and both read the materialized rows.
+    # The annotated table is the loop invariant, checkpointed so each
+    # iteration's plan does not re-embed its subtree (the lineage
+    # discipline of operators/cluster.py).
+    e0 = edges.localCheckpoint(eager=False)
+    deg = e0.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
+    e = e0.join(F.broadcast(deg), "src").localCheckpoint(eager=False)
     ranks = None
-    for i in range(iters):
+    for i in range(PAGERANK_ITERS):
         if i == 0:
             # Uniform start (rank=1.0 everywhere): the contribution of
             # every edge is exactly 1/outdeg, so the first iteration
@@ -116,35 +58,21 @@ def pagerank(
                 F.col("dst").alias("node"), (F.lit(1.0) / F.col("_deg")).alias("_c")
             )
         else:
-            rhs = F.broadcast(ranks) if broadcast_ranks else ranks
+            rhs = F.broadcast(ranks)
             contribs = e.join(rhs, e["src"] == rhs["node"]).select(
                 F.col("dst").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c")
             )
         agg = contribs.groupBy("node").agg(F.sum("_c").alias("_s"))
         base = (1.0 - DAMPING) + DAMPING * F.coalesce(F.col("_s"), F.lit(0.0))
-        if every_node_has_in_edges:
-            # e.g. a bidirectional edge set: contribs already covers
-            # every node, so the per-iteration left join back to the
-            # node table (and its stages) is dead weight — and the
-            # node table itself is never built.
-            ranks = agg.select("node", base.alias("rank"))
-        else:
-            ranks = nodes.join(agg, "node", "left").select(
-                "node", base.alias("rank")
-            )
+        ranks = agg.select("node", base.alias("rank"))
     return ranks
 
 
-def triangle_stats(
-    edges: DataFrame,
-    u: str = "u",
-    v: str = "v",
-    broadcast_degrees: bool = True,
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Exact triangle count + global clustering coefficient, one row:
     (n_nodes, n_edges, n_wedges, n_triangles, global_clustering).
 
-    Input: undirected edges. Normalized here to canonical (min, max)
+    Input: undirected (u, v) edges. Normalized here to canonical (min, max)
     distinct pairs with self-loops dropped, so callers can pass raw
     pair streams.
 
@@ -159,18 +87,16 @@ def triangle_stats(
     sum(deg^2), the difference between feasible and not on skewed
     100 TB graphs.
 
-    Physical plan: the degree table is node-sized; with
-    ``broadcast_degrees`` both orientation joins broadcast it and the
-    edge table shuffles only for the wedge self-join (on the wedge
-    apex) and the closing join (on the (b, c) pair). For graphs whose
-    node table outgrows broadcast, pass False and the same plan runs
-    with shuffle joins. Wedge totals (sum over nodes of C(deg, 2))
+    Physical plan: the degree table is node-sized, so both orientation
+    joins broadcast it and the edge table shuffles only for the wedge
+    self-join (on the wedge apex) and the closing join (on the (b, c)
+    pair). Wedge totals (sum over nodes of C(deg, 2))
     come straight off the degree aggregate — no extra pass.
     """
     e = (
         edges.select(
-            F.least(F.col(u), F.col(v)).alias("a"),
-            F.greatest(F.col(u), F.col(v)).alias("b"),
+            F.least(F.col("u"), F.col("v")).alias("a"),
+            F.greatest(F.col("u"), F.col("v")).alias("b"),
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
@@ -182,9 +108,8 @@ def triangle_stats(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    maybe_bc = F.broadcast if broadcast_degrees else (lambda x: x)
-    da = maybe_bc(deg.select(F.col("node").alias("a"), F.col("d").alias("da")))
-    db = maybe_bc(deg.select(F.col("node").alias("b"), F.col("d").alias("db")))
+    da = F.broadcast(deg.select(F.col("node").alias("a"), F.col("d").alias("da")))
+    db = F.broadcast(deg.select(F.col("node").alias("b"), F.col("d").alias("db")))
     # Orient low-(degree, id) -> high-(degree, id): src/dst plus the
     # dst's rank key, carried so wedge legs can be ordered without
     # another degree join.
@@ -253,36 +178,29 @@ def triangle_stats(
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k_threshold: Column | None = None,
-    rounds: int = 2,
-) -> DataFrame:
+#: k-core peeling rounds (threshold applications)
+KCORE_ROUNDS = 2
+
+
+def kcore_peel(edges: DataFrame) -> DataFrame:
     """k-core peeling (Seidman 1983; the Batagelj-Zaversnik distributed
     variant): alternately delete nodes of degree < k and recompute
-    degrees; ``rounds`` counts threshold applications (rounds=2 ==
-    filter on deg0, recompute, filter on deg1 — survivors report deg1
-    as deg_final). ``edges`` must be the DIRECTED expansion
-    of an undirected graph (both (u,v) and (v,u) rows), so degree ==
+    degrees over ``KCORE_ROUNDS`` threshold applications (2 == filter on
+    deg0, recompute, filter on deg1 — survivors report deg1 as
+    deg_final). ``edges`` must be the DIRECTED expansion of an
+    undirected graph (both (u,v) and (v,u) rows), so degree ==
     out-degree and each round is one groupBy + one semi-join pair.
 
-    ``k_threshold``: a scalar Column (default: ceil of the exact median
-    initial degree — scale-adaptive, so the same query peels
-    meaningfully at every SF). Fixed ``rounds`` keeps the operator
-    oracle-unrollable (the pagerank discipline); convergence-to-
-    fixpoint is a pytest property, not the registered contract — at
-    scale, rounds is the iteration budget and the loop is
-    driver-scheduled over cached frames, O(E) work per round.
+    k is the ceil of the exact median initial degree — scale-adaptive,
+    so the same query peels meaningfully at every SF. Fixed rounds keep
+    the operator oracle-unrollable (the pagerank discipline); at scale
+    the loop is driver-scheduled over cached frames, O(E) work per
+    round.
 
     Returns survivors after the final round: (node, deg0, deg_final).
     """
     deg0 = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg0"))
-    if k_threshold is None:
-        kdf = deg0.agg(
-            F.ceil(F.expr("percentile(deg0, 0.5)")).cast("long").alias("_k")
-        )
-    else:
-        kdf = deg0.agg(k_threshold.cast("long").alias("_k"))
+    kdf = deg0.agg(F.ceil(F.expr("percentile(deg0, 0.5)")).cast("long").alias("_k"))
     # scalar join-back (broadcast 1-row): the house pattern for
     # corpus-derived constants — never a collect in the lazy plan.
     # r14: checkpointed — deg0 (a full-edge-set aggregation) was
@@ -297,9 +215,9 @@ def kcore_peel(
     )
     e = edges
     alive = cur
-    for r in range(rounds):
+    for r in range(KCORE_ROUNDS):
         alive = cur.where(F.col("deg") >= F.col("_k"))
-        if r == rounds - 1:
+        if r == KCORE_ROUNDS - 1:
             break
         keep = alive.select("node", "deg0", "_k")
         e = (
@@ -314,7 +232,7 @@ def kcore_peel(
     return alive.select("node", "deg0", F.col("deg").alias("deg_final"))
 
 
-def label_propagation(edges: DataFrame, broadcast_labels: bool = False) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """(node, community) after 2 SYNCHRONOUS label-propagation
     rounds (Raghavan et al. 2007) from community = own node id.
 
@@ -326,29 +244,19 @@ def label_propagation(edges: DataFrame, broadcast_labels: bool = False) -> DataF
     single-machine codes is schedule-dependent and cannot be oracled).
 
     Physical shape mirrors :func:`pagerank`: the edge table is the
-    loop invariant (repartitioned once on the join key behind a lazy
-    localCheckpoint, or joined by broadcast when the node set is
-    dimension-sized); each round is one join + two keyed aggregations
-    — per-(node, community) counts, then a max(struct) argmax, which
-    both partial-aggregate map-side. The first round needs no join at
-    all: every neighbor's label IS its id. Assumes every node has an
-    in-edge (true for bidirectional edge sets); callers with dangling
-    nodes should union them back unchanged.
+    loop invariant behind a lazy localCheckpoint and the node-sized
+    label table joins by broadcast; each round is one join + two keyed
+    aggregations — per-(node, community) counts, then a max(struct)
+    argmax, which both partial-aggregate map-side. The first round
+    needs no join at all: every neighbor's label IS its id. Assumes
+    every node has an in-edge (true for bidirectional edge sets);
+    callers with dangling nodes should union them back unchanged.
     """
-    spark = edges.sparkSession
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_part = spark.sparkContext.defaultParallelism
-    # The edge table is the loop invariant in BOTH strategies: without
-    # the checkpoint each round's neighbor frame (and the label frame's
-    # own lineage) re-embeds — and re-executes — the whole edge-building
-    # subtree (measured: 4 copies of the lineitem⨝orders build at
-    # iters=2). Non-broadcast additionally pre-partitions on the join
-    # key so every round's label join reuses one exchange.
-    e = (
-        edges if broadcast_labels else edges.repartition(n_part, F.col("src"))
-    ).localCheckpoint(eager=False)
+    # Without the checkpoint each round's neighbor frame (and the label
+    # frame's own lineage) re-embeds — and re-executes — the whole
+    # edge-building subtree (measured: 4 copies of the lineitem⨝orders
+    # build at 2 rounds).
+    e = edges.localCheckpoint(eager=False)
 
     def _argmax(cnt: DataFrame) -> DataFrame:
         # max over (count, -community) == highest count, then smallest
@@ -363,7 +271,7 @@ def label_propagation(edges: DataFrame, broadcast_labels: bool = False) -> DataF
         if i == 0:
             nbr = e.select(F.col("dst").alias("node"), F.col("src").alias("community"))
         else:
-            rhs = F.broadcast(labels) if broadcast_labels else labels
+            rhs = F.broadcast(labels)
             nbr = e.join(rhs, e["src"] == rhs["node"]).select(
                 F.col("dst").alias("node"), "community"
             )

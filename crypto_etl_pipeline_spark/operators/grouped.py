@@ -20,9 +20,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def zscore_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """Per-group z-score, appended as ``zscore``, via grouped-map
-    applyInPandas.
+def zscore_by_group(df: DataFrame) -> DataFrame:
+    """Per-``user_id`` z-score of ``value``, appended as ``zscore``, via
+    grouped-map applyInPandas.
 
     Population stddev==0 or single-row groups yield null (matching the
     SQL convention where sample stddev of one row is null).
@@ -37,12 +37,12 @@ def zscore_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         n_part = spark.sparkContext.defaultParallelism
-    df = df.repartition(n_part, F.col(group_col))
+    df = df.repartition(n_part, F.col("user_id"))
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
     schema = f"{fields}, zscore double"
 
     def norm(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf[value_col]
+        v = pdf["value"]
         std = v.std(ddof=1)  # sample stddev == SQL stddev
         if pd.isna(std) or std == 0:
             z = pd.Series([None] * len(pdf), dtype="float64")
@@ -50,4 +50,4 @@ def zscore_by_group(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
             z = (v - v.mean()) / std
         return pdf.assign(zscore=z)
 
-    return df.groupBy(group_col).applyInPandas(norm, schema=schema)
+    return df.groupBy("user_id").applyInPandas(norm, schema=schema)

@@ -32,8 +32,8 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def moment_rows(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """Reduce (id, vector) rows to long-form second-moment partials.
+def moment_rows(df: DataFrame, dim: int) -> DataFrame:
+    """Reduce ``embedding`` rows to long-form second-moment partials.
 
     Emits (i, j, v) rows per Arrow batch: ``i>=0, j>=0`` carry the
     X^T X partial product, ``(i, -1)`` the per-dimension sum, and
@@ -48,7 +48,7 @@ def moment_rows(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             acc += x.T @ x
             s += x.sum(axis=0)
             n += len(x)
@@ -63,7 +63,7 @@ def moment_rows(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
             }
         )
 
-    parts = df.select(vec_col).mapInPandas(_partial, schema="i int, j int, v double")
+    parts = df.select("embedding").mapInPandas(_partial, schema="i int, j int, v double")
     return parts.groupBy("i", "j").agg(F.sum("v").alias("v"))
 
 
@@ -101,11 +101,10 @@ def power_iteration(cov: np.ndarray, iters: int) -> tuple[np.ndarray, float]:
 
 def pca_top_component(
     df: DataFrame,
-    vec_col: str,
     dim: int,
     iters: int = 2,
 ) -> DataFrame:
-    """Top principal component of an embedding corpus.
+    """Top principal component of an ``embedding`` corpus.
 
     Distributed part: one moment-reduction pass (see
     :func:`moment_rows`) — the only shuffle is dim^2 rows. Driver
@@ -119,7 +118,7 @@ def pca_top_component(
     dimension plus the Rayleigh-quotient variance estimate.
     """
     spark = df.sparkSession
-    rows = moment_rows(df, vec_col, dim).collect()
+    rows = moment_rows(df, dim).collect()
     cov, _, _ = covariance_from_moments(rows, dim)
     v, ray = power_iteration(cov, iters)
     out = [(int(i), round(float(v[i]), 6), round(ray, 6)) for i in range(dim)]
@@ -127,9 +126,9 @@ def pca_top_component(
 
 
 def grouped_moment_rows(
-    df: DataFrame, group_col: str, vec_col: str, dim: int
+    df: DataFrame, dim: int
 ) -> DataFrame:
-    """Per-group second-moment partials: :func:`moment_rows` with a
+    """Per-``label`` second-moment partials: :func:`moment_rows` with the
     group key carried through — one Arrow pass emitting
     (group, i, j, v) partials, one groupBy(group, i, j) merge. The
     exchange is G * (dim^2 + dim + 1) rows; per-group corpus size
@@ -138,8 +137,8 @@ def grouped_moment_rows(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            for gval, sub in pdf.groupby(group_col, sort=False):
-                x = np.array(sub[vec_col].tolist(), dtype=np.float64)
+            for gval, sub in pdf.groupby("label", sort=False):
+                x = np.array(sub["embedding"].tolist(), dtype=np.float64)
                 acc = x.T @ x
                 s = x.sum(axis=0)
                 n = len(sub)
@@ -151,34 +150,32 @@ def grouped_moment_rows(
                         "v": np.concatenate([acc.reshape(-1), s, [float(n)]]),
                     }
                 )
-                out.insert(0, group_col, gval)
+                out.insert(0, "label", gval)
                 yield out
 
-    gtype = df.schema[group_col].dataType.simpleString()
-    parts = df.select(group_col, vec_col).mapInPandas(
-        _partial, schema=f"{group_col} {gtype}, i int, j int, v double"
+    gtype = df.schema["label"].dataType.simpleString()
+    parts = df.select("label", "embedding").mapInPandas(
+        _partial, schema=f"label {gtype}, i int, j int, v double"
     )
-    return parts.groupBy(group_col, "i", "j").agg(F.sum("v").alias("v"))
+    return parts.groupBy("label", "i", "j").agg(F.sum("v").alias("v"))
 
 
 def pca_top_by_group(
     df: DataFrame,
-    group_col: str,
-    vec_col: str,
     dim: int,
     iters: int = 2,
 ) -> DataFrame:
-    """Per-group top principal component summary: (group, n_vecs,
+    """Per-``label`` top principal component summary: (label, n_vecs,
     eigenvalue, explained_share). Driver-side work is G power
     iterations on G dense dim x dim matrices — G * dim^2 floats, still
     corpus-size-free. explained_share = Rayleigh quotient / trace(cov):
     how much of the group's variance the top direction owns (a
     cluster-tightness / anisotropy signal for curation)."""
     spark = df.sparkSession
-    rows = grouped_moment_rows(df, group_col, vec_col, dim).collect()
+    rows = grouped_moment_rows(df, dim).collect()
     by_group: dict = {}
     for r in rows:
-        by_group.setdefault(r[group_col], []).append(r)
+        by_group.setdefault(r["label"], []).append(r)
     out = []
     for g, grp_rows in by_group.items():
         cov, _, n = covariance_from_moments(grp_rows, dim)
@@ -187,20 +184,19 @@ def pca_top_by_group(
         out.append(
             (g, int(n), round(ray, 6), round(ray / trace, 6))
         )
-    gtype = df.schema[group_col].dataType.simpleString()
+    gtype = df.schema["label"].dataType.simpleString()
     return spark.createDataFrame(
-        out, f"{group_col} {gtype}, n_vecs int, eigenvalue double, explained_share double"
+        out, f"label {gtype}, n_vecs int, eigenvalue double, explained_share double"
     )
 
 
 def pca_residual_scores(
     df: DataFrame,
-    id_col: str,
-    vec_col: str,
     mean: np.ndarray,
     component: np.ndarray,
 ) -> DataFrame:
-    """Per-vector spectral decomposition against a fitted component:
+    """Per-``vec_id`` spectral decomposition of ``embedding`` against a
+    fitted component:
     pc1_score = (x - mean)·v and residual = ||x - mean||² - score²
     (the variance v does NOT explain). Off-component residual is the
     spectral outlier signal: far-off-manifold rows are mislabeled /
@@ -217,11 +213,11 @@ def pca_residual_scores(
     mlit = F.array(*[F.lit(float(x)) for x in mean])
     mv = float(mean @ component)
     mm = float(mean @ mean)
-    x = F.col(vec_col)
+    x = F.col("embedding")
     score = dot(x, vlit) - F.lit(mv)
     norm2 = dot(x, x) - 2.0 * dot(x, mlit) + F.lit(mm)
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(score, 6).alias("pc1_score"),
         F.round(norm2 - score * score, 6).alias("residual"),
     )

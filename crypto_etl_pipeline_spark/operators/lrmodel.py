@@ -81,32 +81,8 @@ def sigmoid(c: Column) -> Column:
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-c))
 
 
-#: max per-coordinate Newton step when curvature is subsampled
-_CAPPED_STEP_CLIP = 10.0
-
-
-def _cap_doc_feats(fb: DataFrame, dim: int, max_doc_feats: int) -> DataFrame:
-    """Deterministic per-doc feature cap for the curvature join: bias
-    first, then lowest xxhash64(doc_id, feat) — PER-(doc,feat), not
-    per feature. A global feature order would drop high-hash features
-    from EVERY doc's subset, leaving their Hessian diagonal at the
-    bare ridge while the gradient stays exact, and the Newton step
-    would scale those gradients by ~1/ridge (divergence). Per-
-    (doc,feat) hashing keeps every feature in a ~cap/f random fraction
-    of its docs, so H_ii retains proportional curvature mass
-    (coverage property pinned in tests/test_round6_ops.py). Layout-
-    independent and the same subset every iteration, so the
-    quasi-Newton H is stable."""
-    from pyspark.sql.window import Window
-
-    w_feat = Window.partitionBy("doc_id").orderBy(
-        (F.col("feat") != dim).cast("int"), F.xxhash64("doc_id", "feat"), "feat"
-    )
-    return (
-        fb.withColumn("_rn", F.row_number().over(w_feat))
-        .where(F.col("_rn") <= max_doc_feats + 1)  # +1: the bias row
-        .drop("_rn")
-    )
+#: Hessian pair rows per iteration above which training refuses to run
+HESSIAN_ROW_BUDGET = 50_000_000
 
 
 def lr_train_newton(
@@ -115,8 +91,6 @@ def lr_train_newton(
     dim: int,
     iters: int = 3,
     ridge: float = 1e-4,
-    max_doc_feats: int | None = None,
-    hessian_row_budget: int = 50_000_000,
 ) -> list[float]:
     """Distributed Newton-IRLS for L2-logistic regression.
 
@@ -129,22 +103,16 @@ def lr_train_newton(
     stage a hash aggregation on small keys. The (dim+1)^2 solve is
     driver-side numpy.
 
-    Scale guard (ADVICE_r5): the Hessian self-join fans out
-    QUADRATICALLY in per-doc distinct features — f features in one doc
-    emit f² pair rows per iteration, so a wide-vocabulary corpus can
-    make the curvature stage dominate unexpectedly. Before iterating,
-    the exact pair-row count is measured with one cheap aggregation;
-    if it exceeds ``hessian_row_budget`` the call RAISES with the
-    measured fan-out unless ``max_doc_feats`` is set. With
-    ``max_doc_feats=f``, each doc contributes only its f
-    lowest-hash features (bias always kept, selection deterministic)
-    to the HESSIAN join — the gradient stays exact, so this is a
-    curvature-subsampled quasi-Newton step: still a descent direction
-    (H stays SPD under the ridge), trading per-step contraction for a
-    bounded O(n·f²) pair stage.
+    Scale guard: the Hessian self-join fans out QUADRATICALLY in
+    per-doc distinct features — f features in one doc emit f² pair
+    rows per iteration, so a wide-vocabulary corpus can make the
+    curvature stage dominate unexpectedly. Before iterating, the exact
+    pair-row count is measured with one cheap aggregation; above
+    ``HESSIAN_ROW_BUDGET`` the call RAISES with the measured fan-out
+    (for such corpora swap the Hessian for a local L-BFGS over the
+    same distributed gradient — see the module docstring).
     """
     import numpy as np
-    from pyspark.sql.window import Window
 
     # bias as a synthetic always-on feature `dim`: one union, after
     # which gradient and Hessian need no special-casing.
@@ -152,33 +120,26 @@ def lr_train_newton(
         labels.select("doc_id", F.lit(dim).alias("feat"))
     ).localCheckpoint(eager=False)
     w = np.zeros(dim + 1)
-    if max_doc_feats is not None:
-        fb_h = _cap_doc_feats(fb, dim, max_doc_feats).localCheckpoint(eager=False)
-        n = labels.count()
-    else:
-        fb_h = fb
-        # r14: the fan-out guard and the label count ride ONE action
-        # (two independent 1-row aggregates cross-joined) instead of
-        # two sequential driver barriers; the collect also
-        # materializes the fb checkpoint every iteration reads.
-        guard = (
-            fb.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .agg(F.sum(F.col("f") * F.col("f")).alias("p"))
+    # r14: the fan-out guard and the label count ride ONE action (two
+    # independent 1-row aggregates cross-joined) instead of two
+    # sequential driver barriers; the collect also materializes the fb
+    # checkpoint every iteration reads.
+    guard = (
+        fb.groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("f"))
+        .agg(F.sum(F.col("f") * F.col("f")).alias("p"))
+    )
+    row = (
+        labels.agg(F.count(F.lit(1)).alias("n"))
+        .crossJoin(F.broadcast(guard))
+        .first()
+    )
+    n, pair_rows = int(row["n"]), row["p"]
+    if pair_rows is not None and pair_rows > HESSIAN_ROW_BUDGET:
+        raise RuntimeError(
+            f"lr_train_newton: Hessian self-join would emit {pair_rows} "
+            f"pair rows per iteration (budget {HESSIAN_ROW_BUDGET})"
         )
-        row = (
-            labels.agg(F.count(F.lit(1)).alias("n"))
-            .crossJoin(F.broadcast(guard))
-            .first()
-        )
-        n, pair_rows = int(row["n"]), row["p"]
-        if pair_rows is not None and pair_rows > hessian_row_budget:
-            raise RuntimeError(
-                f"lr_train_newton: Hessian self-join would emit {pair_rows} "
-                f"pair rows per iteration (budget {hessian_row_budget}) — "
-                "set max_doc_feats to cap per-doc curvature features, or "
-                "raise hessian_row_budget explicitly"
-            )
     for _ in range(iters):
         m = lr_margin(fb.where(F.col("feat") < dim), list(w))
         # right outer keeps feature-less docs (margin = bias only)
@@ -196,68 +157,33 @@ def lr_train_newton(
             )
             .localCheckpoint(eager=False)
         )
-        if max_doc_feats is None:
-            # r13: ONE action per iteration instead of two. With the
-            # exact (uncapped) Hessian, every doc containing feature i
-            # emits exactly one (i, i) pair row, so the gradient
-            # g_i = sum over docs-with-i of r rides the SAME pair
-            # aggregation as a filtered sum — the separate
-            # gradient join/collect (a full fb scan + shuffle + driver
-            # round-trip per iteration) disappears. Identical sums,
-            # identical driver-side solve.
-            h_rows = (
-                fb_h.alias("a")
-                .join(fb_h.alias("b"), "doc_id")
-                .join(doc, "doc_id")
-                .groupBy(F.col("a.feat").alias("i"), F.col("b.feat").alias("j"))
-                .agg(
-                    F.sum("wd").alias("h"),
-                    F.sum(
-                        F.when(F.col("a.feat") == F.col("b.feat"), F.col("r"))
-                    ).alias("g"),
-                )
-                .collect()
+        # r13: ONE action per iteration instead of two. Every doc
+        # containing feature i emits exactly one (i, i) pair row, so the
+        # gradient g_i = sum over docs-with-i of r rides the SAME pair
+        # aggregation as a filtered sum — no separate gradient
+        # join/collect (a full fb scan + shuffle + driver round-trip per
+        # iteration).
+        h_rows = (
+            fb.alias("a")
+            .join(fb.alias("b"), "doc_id")
+            .join(doc, "doc_id")
+            .groupBy(F.col("a.feat").alias("i"), F.col("b.feat").alias("j"))
+            .agg(
+                F.sum("wd").alias("h"),
+                F.sum(
+                    F.when(F.col("a.feat") == F.col("b.feat"), F.col("r"))
+                ).alias("g"),
             )
-            g = np.zeros(dim + 1)
-            H = np.zeros((dim + 1, dim + 1))
-            for row in h_rows:
-                H[row["i"], row["j"]] = row["h"]
-                if row["i"] == row["j"] and row["g"] is not None:
-                    g[row["i"]] = row["g"]
-        else:
-            # Capped curvature: fb_h's (i, i) rows are a SUBSET of
-            # fb's, so the gradient must keep its own exact pass.
-            g_rows = (
-                fb.join(doc, "doc_id")
-                .groupBy("feat")
-                .agg(F.sum("r").alias("g"))
-                .collect()
-            )
-            h_rows = (
-                fb_h.alias("a")
-                .join(fb_h.alias("b"), "doc_id")
-                .join(doc, "doc_id")
-                .groupBy(F.col("a.feat").alias("i"), F.col("b.feat").alias("j"))
-                .agg(F.sum("wd").alias("h"))
-                .collect()
-            )
-            g = np.zeros(dim + 1)
-            for row in g_rows:
-                g[row["feat"]] = row["g"]
-            H = np.zeros((dim + 1, dim + 1))
-            for row in h_rows:
-                H[row["i"], row["j"]] = row["h"]
+            .collect()
+        )
+        g = np.zeros(dim + 1)
+        H = np.zeros((dim + 1, dim + 1))
+        for row in h_rows:
+            H[row["i"], row["j"]] = row["h"]
+            if row["i"] == row["j"] and row["g"] is not None:
+                g[row["i"]] = row["g"]
         g = g / n + ridge * w
         H = H / n + ridge * np.eye(dim + 1)
         step = np.linalg.solve(H, g)
-        if max_doc_feats is not None:
-            # Trust-region damping for the SUBSAMPLED-curvature path:
-            # the capped Hessian underestimates curvature (off-diagonal
-            # mass is dropped), so raw Newton steps can overshoot and
-            # oscillate on near-separable data. Clip the infinity norm
-            # of the step — exact-H path is untouched.
-            inf = float(np.max(np.abs(step)))
-            if inf > _CAPPED_STEP_CLIP:
-                step = step * (_CAPPED_STEP_CLIP / inf)
         w = w - step
     return [float(x) for x in w]

@@ -68,10 +68,9 @@ def pps_systematic_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
-    strata: list[str] | None = None,
 ) -> DataFrame:
     """Systematic probability-proportional-to-size sampling: ~``k``
-    rows per stratum with inclusion probability min(1, k*w/total) —
+    rows per ``lang`` stratum with inclusion probability min(1, k*w/total) —
     the weighted complement of ``hash_bernoulli_sample`` (which is
     per-row i.i.d.) and ``stratified_fixed_k_sample`` (which is
     unweighted). The corpus-mixing shape: sample documents
@@ -93,24 +92,17 @@ def pps_systematic_sample(
     """
     from pyspark.sql.window import Window
 
-    strata = strata or []
     h = md5_long(F.col("doc_id").cast("string"), 15)
     order = [F.asc("_h"), F.asc("doc_id")]  # id tiebreak: deterministic under hash ties
-    w_order = Window.partitionBy(*strata).orderBy(*order) if strata else Window.orderBy(*order)
+    w_order = Window.partitionBy("lang").orderBy(*order)
     base = df.withColumn("_h", h).withColumn(
         "_w", F.col(weight_col).cast("long")
     )
-    totals = (
-        base.groupBy(*strata).agg(F.sum("_w").alias("_total"))
-        if strata
-        else base.agg(F.sum("_w").alias("_total"))
-    )
+    totals = base.groupBy("lang").agg(F.sum("_w").alias("_total"))
     cum = base.withColumn(
         "_cum", F.sum("_w").over(w_order.rowsBetween(Window.unboundedPreceding, 0))
     )
-    joined = (
-        cum.join(F.broadcast(totals), strata) if strata else cum.crossJoin(F.broadcast(totals))
-    )
+    joined = cum.join(F.broadcast(totals), ["lang"])
     return (
         joined.withColumn("_b", (F.col("_cum") - F.col("_w")) * F.lit(k))
         .withColumn("_a", F.col("_cum") * F.lit(k))

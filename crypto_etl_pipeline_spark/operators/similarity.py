@@ -188,6 +188,30 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     return sig
 
 
+def _project_rows(v: pd.Series, M: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Decode one Arrow batch of an embedding column for the hyperplane
+    and centroid kernels: ``(P, null)``, where ``P`` is
+    ``floor(x * LSH_SCALE) @ M`` for the non-null rows, in batch order,
+    and ``null`` masks the null rows."""
+    null = v.isna().to_numpy()
+    rows = v.to_numpy()[~null]
+    X = np.stack(rows).astype(np.float64) if len(rows) else np.zeros((0, M.shape[0]))
+    return np.floor(X * LSH_SCALE) @ M, null
+
+
+def _null_rows(out: np.ndarray, null: np.ndarray) -> pd.Series:
+    """One kernel output per batch row: ``out`` holds the non-null rows'
+    values (a 2-D ``out`` gives one array per row), and a null input row
+    gives a null output, as DuckDB's list functions do."""
+    vals = list(out) if out.ndim > 1 else out
+    if not null.any():
+        return pd.Series(vals)
+    res = np.full(len(null), None, dtype=object)
+    for i, x in zip(np.flatnonzero(~null), vals):
+        res[i] = x
+    return pd.Series(res)
+
+
 def _lsh_signature_pd(planes: list[list[float]]):
     """Arrow-batched twin of :func:`lsh_signature` (one matmul per
     batch). Exact-integer arithmetic (floor-quantized terms < 2^26,
@@ -200,9 +224,8 @@ def _lsh_signature_pd(planes: list[list[float]]):
 
     @pandas_udf("long")
     def bucket(v: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v], dtype=np.float64)
-        proj = np.floor(X * LSH_SCALE) @ M
-        return pd.Series(((proj >= 0).astype(np.int64) * weights).sum(axis=1))
+        proj, null = _project_rows(v, M)
+        return _null_rows(((proj >= 0).astype(np.int64) * weights).sum(axis=1), null)
 
     return bucket
 
@@ -350,9 +373,9 @@ def _nearest_centroid_pd(centroids: list[list[float]]):
 
     @pandas_udf("int")
     def nearest(v: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v], dtype=np.float64)
-        d = -2.0 * (np.floor(X * LSH_SCALE) @ M) + c2  # |qv|^2 constant per row — omitted
-        return pd.Series(d.argmin(axis=1), dtype="int32")
+        proj, null = _project_rows(v, M)
+        d = -2.0 * proj + c2  # |qv|^2 constant per row — omitted
+        return _null_rows(d.argmin(axis=1).astype(np.int32), null)
 
     return nearest
 
@@ -374,10 +397,9 @@ def _nearest_cells_pd(centroids: list[list[float]], nprobe: int):
 
     @pandas_udf("array<int>")
     def nearest_cells(v: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v], dtype=np.float64)
-        d = -2.0 * (np.floor(X * LSH_SCALE) @ M) + c2  # |qv|^2 constant per row — omitted
-        order = np.argsort(d, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-        return pd.Series(list(order))
+        proj, null = _project_rows(v, M)
+        d = -2.0 * proj + c2  # |qv|^2 constant per row — omitted
+        return _null_rows(np.argsort(d, axis=1, kind="stable")[:, :nprobe].astype(np.int32), null)
 
     return nearest_cells
 
@@ -485,7 +507,6 @@ SEM_CELL_CAP = 512  #: max members per cell before deterministic sub-cell split
 def cap_hot_cells(
     assignments: DataFrame,
     max_cell_size: int,
-    cell_col: str = "cell",
 ) -> DataFrame:
     """Bound the within-cell pair explosion: SPLIT any cell larger than
     ``max_cell_size`` into exact-size sub-cells.
@@ -498,7 +519,7 @@ def cap_hot_cells(
     linearly. Unlike the LSH cap — which DROPS oversized buckets,
     because a pair lost in one band usually survives in another — a
     doc dropped from its IVF cell has no second chance, so this guard
-    keeps every row and instead re-labels ``cell_col`` with
+    keeps every row and instead re-labels ``_cell`` with
     deterministic sub-cells of AT MOST ``max_cell_size`` members:
     within-sub-cell pair count is bounded by cap²/2 regardless of how
     hot the parent cell gets. Recall semantics (documented, not
@@ -511,19 +532,18 @@ def cap_hot_cells(
     sort that numbers rows is O(n log n) in the hot cell — versus the
     O(n²) join it prevents; row order is decorrelated from id locality
     by sorting on xxhash64 of the row's non-cell columns. Output
-    ``cell_col`` is a string ("<cell>#<sub>", sub 0 for cells under
+    ``_cell`` is a string ("<cell>#<sub>", sub 0 for cells under
     the cap) so hot and cold cells stay uniformly typed.
     """
     from pyspark.sql.window import Window
 
-    others = [c for c in assignments.columns if c != cell_col]
-    w = Window.partitionBy(cell_col).orderBy(
+    others = [c for c in assignments.columns if c != "_cell"]
+    w = Window.partitionBy("_cell").orderBy(
         F.xxhash64(*[F.col(c) for c in others]), *[F.col(c) for c in others]
     )
     sub = F.floor((F.row_number().over(w) - F.lit(1)) / F.lit(max_cell_size))
     return assignments.withColumn(
-        cell_col,
-        F.concat_ws("#", F.col(cell_col).cast("string"), sub.cast("string")),
+        "_cell", F.concat_ws("#", F.col("_cell").cast("string"), sub.cast("string"))
     )
 
 
@@ -649,9 +669,8 @@ def _centroid_dists_pd(centroids: list[list[float]]):
 
     @pandas_udf("array<double>")
     def dist_row(v: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v], dtype=np.float64)
-        d = -2.0 * (np.floor(X * LSH_SCALE) @ M) + c2  # |qv|^2 constant per row — omitted
-        return pd.Series(list(d))
+        proj, null = _project_rows(v, M)
+        return _null_rows(-2.0 * proj + c2, null)  # |qv|^2 constant per row — omitted
 
     return dist_row
 

@@ -30,17 +30,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def fixed_bin(value: Column, width: float) -> Column:
-    """Stream-safe bin id over 100 bins: clamp(floor(value / width), 0, 99)."""
-    return F.least(F.greatest(F.floor(value / width), F.lit(0)), F.lit(99)).cast("long")
+def fixed_bin(value: Column) -> Column:
+    """Stream-safe bin id over 100 bins of width 5: clamp(floor(value / 5), 0, 99)."""
+    return F.least(F.greatest(F.floor(value / 5.0), F.lit(0)), F.lit(99)).cast("long")
 
 
 def histogram_sketch(
-    df: DataFrame, entity_col: str, bin_col: Column
+    df: DataFrame, bin_col: Column
 ) -> DataFrame:
-    """(entity, bin, c) — the mergeable sketch rows (one narrow shuffle,
+    """(event_type, bin, c) — the mergeable sketch rows (one narrow shuffle,
     map-side partial counts)."""
-    return df.groupBy(F.col(entity_col), bin_col.alias("bin")).agg(
+    return df.groupBy(F.col("event_type"), bin_col.alias("bin")).agg(
         F.count(F.lit(1)).alias("c")
     )
 
@@ -55,16 +55,18 @@ def merge_sketches(*sketches: DataFrame) -> DataFrame:
     return out.groupBy(*cols).agg(F.sum("c").alias("c"))
 
 
+#: output column -> quantile that :func:`quantile_from_sketch` estimates
+SKETCH_QUANTILES = {"est_p50": 0.50, "est_p95": 0.95}
+
+
 def quantile_from_sketch(
     sketch: DataFrame,
-    entity_col: str,
-    ps: dict[str, float],
     lo: Column,
     width: Column,
 ) -> DataFrame:
-    """Interpolated nearest-rank quantiles from a (entity, bin, c) sketch.
+    """Interpolated nearest-rank ``SKETCH_QUANTILES`` from an
+    (event_type, bin, c) sketch.
 
-    ``ps`` maps output column name -> quantile (e.g. {"est_p50": 0.5}).
     ``lo``/``width`` are per-entity columns (join them onto the sketch
     first, or pass literals for fixed-bin sketches). The cumulative
     window runs over <= n_bins rows per entity — driver-free and tiny
@@ -78,32 +80,32 @@ def quantile_from_sketch(
     rows, so caching it is the cheap side of that trade at any scale.
     """
     sketch = sketch.localCheckpoint(eager=False)
-    w_cum = Window.partitionBy(entity_col).orderBy("bin").rowsBetween(
+    w_cum = Window.partitionBy("event_type").orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    w_all = Window.partitionBy(entity_col)
+    w_all = Window.partitionBy("event_type")
     cum = sketch.select(
-        entity_col, "bin", "c", lo.alias("_lo"), width.alias("_w"),
+        "event_type", "bin", "c", lo.alias("_lo"), width.alias("_w"),
         F.sum("c").over(w_cum).alias("cum"),
         F.sum("c").over(w_all).alias("total"),
     )
-    est = cum.groupBy(entity_col, "total").agg(
+    est = cum.groupBy("event_type", "total").agg(
         *[
             F.min(F.when(F.col("cum") >= p * F.col("total"), F.col("bin"))).alias(f"_b_{name}")
-            for name, p in ps.items()
+            for name, p in SKETCH_QUANTILES.items()
         ]
     )
     out = est
-    for name, p in ps.items():
+    for name, p in SKETCH_QUANTILES.items():
         picked = cum.select(
-            F.col(entity_col),
+            F.col("event_type"),
             F.col("bin").alias(f"_b_{name}"),
             F.col("cum").alias(f"_cum_{name}"),
             F.col("c").alias(f"_c_{name}"),
             F.col("_lo").alias(f"_lo_{name}"),
             F.col("_w").alias(f"_w_{name}"),
         )
-        out = out.join(F.broadcast(picked), [entity_col, f"_b_{name}"])
+        out = out.join(F.broadcast(picked), ["event_type", f"_b_{name}"])
         interp = F.col(f"_lo_{name}") + F.col(f"_w_{name}") * (
             F.col(f"_b_{name}")
             + (p * F.col("total") - F.col(f"_cum_{name}") + F.col(f"_c_{name}"))
@@ -111,9 +113,9 @@ def quantile_from_sketch(
         )
         out = out.withColumn(name, F.round(interp, 6))
     return out.select(
-        entity_col,
+        "event_type",
         F.col("total").cast("long").alias("n_rows"),
-        *[name for name in ps],
+        *SKETCH_QUANTILES,
     )
 
 
@@ -198,8 +200,8 @@ def misra_gries_partials(df: DataFrame, term_col: str, k: int) -> DataFrame:
     )
 
 
-def heavy_hitters_exact(df: DataFrame, term_col: str, k: int) -> DataFrame:
-    """Exact frequent items (count*k > n) via candidate-verify.
+def heavy_hitters_exact(df: DataFrame, k: int) -> DataFrame:
+    """Exact frequent ``term`` values (count*k > n) via candidate-verify.
 
     Two passes over the term stream, never a full-domain shuffle:
 
@@ -216,8 +218,8 @@ def heavy_hitters_exact(df: DataFrame, term_col: str, k: int) -> DataFrame:
     count*k > n — strict, because the Misra-Gries superset guarantee
     only covers counts strictly above n/k.
     """
-    partials = misra_gries_partials(df, term_col, k)
-    return verify_heavy_hitters(df, term_col, partials.select("term"), k)
+    partials = misra_gries_partials(df, "term", k)
+    return verify_heavy_hitters(df, "term", partials.select("term"), k)
 
 
 def verify_heavy_hitters(
@@ -357,9 +359,9 @@ def cms_frequency_contract(
 KMV_DOMAIN = float(1 << 60)
 
 
-def kmv_sketch(df: DataFrame, group_col: str, key_col: str, k: int) -> DataFrame:
+def kmv_sketch(df: DataFrame, group_col: str, k: int) -> DataFrame:
     """Per-group KMV sketch: the ``k`` smallest distinct portable md5
-    hashes of ``key_col`` (phash.md5_long, 15 hex digits — the same
+    hashes of ``user_id`` (phash.md5_long, 15 hex digits — the same
     cross-engine hash the MinHash oracle rides).
 
     Plan: distinct (group, hash) — one shuffle with map-side combine —
@@ -376,7 +378,7 @@ def kmv_sketch(df: DataFrame, group_col: str, key_col: str, k: int) -> DataFrame
     from crypto_etl_pipeline_spark.operators.phash import md5_long
 
     hashed = (
-        df.select(F.col(group_col).alias("grp"), F.col(key_col).cast("string").alias("_key"))
+        df.select(F.col(group_col).alias("grp"), F.col("user_id").cast("string").alias("_key"))
         .select("grp", md5_long(F.col("_key"), 15).alias("h"))
         .distinct()
     )

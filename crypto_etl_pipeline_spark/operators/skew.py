@@ -35,9 +35,8 @@ def salted_join(
     key: str,
     salt_from: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join where ``skewed``'s hot keys are spread over n_salts tasks.
+    """Inner equi-join where ``skewed``'s hot keys are spread over n_salts tasks.
 
     ``small`` is exploded n_salts times (one copy per salt value) so the
     shuffle key becomes (key, salt) — a hot key's rows now land on
@@ -46,25 +45,19 @@ def salted_join(
     does adaptively. ``salt_from`` must be a column of ``skewed`` that
     varies within a key group (e.g. the fact table's line number).
 
-    Only ``inner`` and ``left`` (of the skewed side) are salt-safe:
-    under right/full outer joins every UNMATCHED small-side row would
-    surface once per salt replica, and the null-extension semantics
-    shift under the (key, salt) condition — so those are rejected.
+    Inner only: under an outer join every UNMATCHED small-side row
+    would surface once per salt replica.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how='inner'|'left' (salt-safe); got {how!r}"
-        )
     s = with_salt(skewed, salt_from, n_salts)
     replicated = small.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    return s.join(replicated, [key, "_salt"], how).drop("_salt")
+    return s.join(replicated, [key, "_salt"]).drop("_salt")
 
 
-def two_phase_distinct_count(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
-    """Exact per-group COUNT(DISTINCT value), as ``n_distinct``, without a
-    hot-group funnel.
+def two_phase_distinct_count(df: DataFrame) -> DataFrame:
+    """Exact per-``event_type`` COUNT(DISTINCT user_id), as ``n_distinct``,
+    without a hot-group funnel.
 
     Phase 1: dedup (group, value) — the shuffle key includes the value,
     so a hot group spreads over many partitions. Phase 2: count rows
@@ -72,8 +65,8 @@ def two_phase_distinct_count(df: DataFrame, group_col: str, value_col: str) -> D
     the classic two-job rewrite of the single-shuffle distinct-agg.
     """
     return (
-        df.select(group_col, value_col)
-        .dropDuplicates([group_col, value_col])
-        .groupBy(group_col)
+        df.select("event_type", "user_id")
+        .dropDuplicates(["event_type", "user_id"])
+        .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_distinct"))
     )

@@ -26,12 +26,11 @@ from pyspark.sql.window import Window
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str,
     by: str,
     right_cols: list[str],
 ) -> DataFrame:
     """For each left row, attach the latest right row with
-    right.on <= left.on within the same `by` group; each carried column
+    right.ts <= left.ts within the same `by` group; each carried column
     ``c`` comes back as ``c_asof``.
 
     Matches DuckDB ``ASOF JOIN`` / pandas ``merge_asof`` semantics
@@ -50,12 +49,12 @@ def asof_join(
         + ">"
     )
     l_tag = left.select(
-        F.col(by), F.col(on), F.lit(1).alias("_is_left"),
+        F.col(by), F.col("ts"), F.lit(1).alias("_is_left"),
         F.lit(None).cast(rvals_type).alias("_rvals"),
         F.struct(*left.columns).alias("_row"),
     )
     r_tag = right.select(
-        F.col(by), F.col(on), F.lit(0).alias("_is_left"),
+        F.col(by), F.col("ts"), F.lit(0).alias("_is_left"),
         F.struct(*[F.col(c) for c in right_cols]).alias("_rvals"),
         F.lit(None).cast(
             "struct<" + ",".join(f"{f.name}:{f.dataType.simpleString()}" for f in left.schema.fields) + ">"
@@ -64,7 +63,7 @@ def asof_join(
     # right (0) sorts before left (1) at equal ts -> inclusive match
     w = (
         Window.partitionBy(by)
-        .orderBy(F.col(on).asc(), F.col("_is_left").asc())
+        .orderBy(F.col("ts").asc(), F.col("_is_left").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = l_tag.unionByName(r_tag).select(
@@ -80,13 +79,11 @@ def asof_join(
 def range_join_binned(
     left: DataFrame,
     right: DataFrame,
-    by: str,
-    left_ts: str,
     right_ts: str,
     max_gap_seconds: int,
 ) -> DataFrame:
-    """Pairs (left, right) in the same `by` group with
-    right_ts in (left_ts - max_gap, left_ts].
+    """Pairs (left, right) with the same ``user_id`` and
+    right_ts in (left.p_ts - max_gap, left.p_ts].
 
     Bin both sides at max_gap granularity; a qualifying right row lives
     in the left row's bin or the one before, so two equi-joins (union)
@@ -97,13 +94,13 @@ def range_join_binned(
     # Fractional epoch seconds (microsecond precision) — unix_timestamp
     # truncates to whole seconds, which would flip membership for
     # sub-second gaps at the boundaries.
-    l_ep = F.col(left_ts).cast("double")
+    l_ep = F.col("p_ts").cast("double")
     r_ep = F.col(right_ts).cast("double")
     gap = F.lit(max_gap_seconds)
     lb = left.withColumn("_bin", F.floor(l_ep / gap))
     rb = right.withColumn("_bin", F.floor(r_ep / gap))
     shifted = rb.withColumn("_bin", F.col("_bin") + 1)
-    cand = lb.join(rb, [by, "_bin"]).unionByName(lb.join(shifted, [by, "_bin"]))
+    cand = lb.join(rb, ["user_id", "_bin"]).unionByName(lb.join(shifted, ["user_id", "_bin"]))
     delta = l_ep - r_ep
     return cand.where((delta >= 0) & (delta < max_gap_seconds)).drop("_bin")
 

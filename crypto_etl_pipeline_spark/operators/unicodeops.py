@@ -127,6 +127,6 @@ def canonical_sql(expr: str) -> str:
     return f"regexp_replace(lower({e}), '{_WS_CLASS}', ' ', 'g')"
 
 
-def fingerprint_sql(expr: str) -> str:
-    """DuckDB twin of :func:`unicode_fingerprint`."""
-    return f"md5({canonical_sql(expr)})"
+def fingerprint_sql() -> str:
+    """DuckDB twin of :func:`unicode_fingerprint` over the ``raw`` column."""
+    return f"md5({canonical_sql('raw')})"

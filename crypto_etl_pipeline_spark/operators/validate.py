@@ -82,16 +82,17 @@ def rule_report(df: DataFrame, checks: dict[str, Column]) -> DataFrame:
 
 
 def fk_orphan_count(
-    child: DataFrame, fk: str, parent: DataFrame, pk: str, rule: str
+    child: DataFrame, parent: DataFrame, rule: str
 ) -> DataFrame:
-    """(rule, n_violations) — child rows whose ``fk`` has no ``pk`` match.
+    """(rule, n_violations) — child rows whose ``l_orderkey`` has no
+    parent ``o_orderkey`` match.
 
     Referential integrity as a LEFT ANTI join (never a row-multiplying
     outer join); the parent side is key-projected so only the join key
     shuffles, and AQE broadcasts it when the parent is dimension-sized.
     """
-    orphans = child.select(F.col(fk)).join(
-        parent.select(F.col(pk).alias(fk)).distinct(), fk, "left_anti"
+    orphans = child.select(F.col("l_orderkey")).join(
+        parent.select(F.col("o_orderkey").alias("l_orderkey")).distinct(), "l_orderkey", "left_anti"
     )
     return orphans.agg(
         F.lit(rule).alias("rule"),
@@ -99,12 +100,8 @@ def fk_orphan_count(
     )
 
 
-def table_checksum(
-    df: DataFrame,
-    cols: list[str],
-    group_by: list[str] | None = None,
-) -> DataFrame:
-    """Order-insensitive content checksum for cheap table
+def table_checksum(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Per-``event_type`` order-insensitive content checksum for cheap table
     reconciliation (drift detection between a table and its replica /
     yesterday's snapshot / another engine's copy).
 
@@ -112,7 +109,7 @@ def table_checksum(
     ``cols`` joined with unit separators; caller pre-casts columns to
     PORTABLE string forms — longs/strings directly, doubles via a
     fixed-scale decimal — so both engines render identical bytes),
-    summed per group. Addition makes the checksum mergeable: one
+    summed per event type. Addition makes the checksum mergeable: one
     partial/final hash aggregate, so reconciling two 100 TB tables
     costs two scans and ships k group rows — no row-level join,
     no sort. The sum runs in DECIMAL(38,0) (no overflow below ~1e19
@@ -134,4 +131,4 @@ def table_checksum(
         .cast("long")
         .alias("checksum"),
     ]
-    return df.groupBy(*group_by).agg(*aggs) if group_by else df.agg(*aggs)
+    return df.groupBy("event_type").agg(*aggs)

@@ -57,7 +57,7 @@ def run_api_pipeline(
         )
         from crypto_etl_pipeline_spark.sources.sinks import write_csv
 
-        write_csv(classified, f"{out_dir}/api_classified_csv", single_file=True)
+        write_csv(classified, f"{out_dir}/api_classified_csv")
         render_profile_html(
             profile(classified), "API data quality report", f"{out_dir}/api_profile.html"
         )

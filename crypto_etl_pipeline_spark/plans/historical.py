@@ -224,7 +224,7 @@ def run_historical_pipeline(spark, raw_csv_path: str, out_dir: str) -> dict:
     # Durable handoff is parquet; the CSV copies exist for reference
     # parity (S3) and versioned export (S4).
     csv_path = f"{out_dir}/historical_clean_csv"
-    write_csv(cleaned, csv_path, single_file=True)
+    write_csv(cleaned, csv_path)
     ts_path = write_timestamped_csv(cleaned, out_dir, "crypto_historical_cleaned")
 
     prof = profile(spark.read.parquet(pq_path))

@@ -622,9 +622,7 @@ def roundtrip_jsonl_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = scratch_dir("events_jsonl_") + "/events"
     write_jsonl(ev, path)
-    back = read_jsonl(
-        spark, path, "event_id long, user_id long, event_type string, value double"
-    )
+    back = read_jsonl(spark, path)
     return (
         back.groupBy("event_type")
         .agg(
@@ -1447,11 +1445,7 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    # broadcast_ranks: the node set (customers + suppliers) is
-    # dimension-sized while the edge set is fact-sized, so degree and
-    # per-iteration ranks broadcast — the edge table never shuffles or
-    # window-sorts (see operators/graph.py strategy note).
-    ranks = pagerank(edges, iters=2, every_node_has_in_edges=True, broadcast_ranks=True)
+    ranks = pagerank(edges)
     label = F.when(
         F.col("node") % 2 == 0,
         F.concat(F.lit("C"), (F.col("node") / 2).cast("long").cast("string")),
@@ -1553,13 +1547,13 @@ def csv_corrupt_record_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _interleave16_sql(a: str, b: str) -> str:
-    """SQL fragment interleaving the low 16 bits of a (even positions)
-    and b (odd positions) — identical arithmetic in both engines."""
+def _interleave16_sql() -> str:
+    """SQL fragment interleaving the low 16 bits of u16 (even positions)
+    and t16 (odd positions) — identical arithmetic in both engines."""
     terms = []
     for i in range(16):
-        terms.append(f"((({a} >> {i}) & 1) << {2 * i})")
-        terms.append(f"((({b} >> {i}) & 1) << {2 * i + 1})")
+        terms.append(f"(((u16 >> {i}) & 1) << {2 * i})")
+        terms.append(f"(((t16 >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
 
 
@@ -1573,7 +1567,7 @@ def _interleave16_sql(a: str, b: str) -> str:
       FROM events
     ),
     z AS (
-      SELECT event_id, u16, t16, ({_interleave16_sql("u16", "t16")})::BIGINT AS zvalue
+      SELECT event_id, u16, t16, ({_interleave16_sql()})::BIGINT AS zvalue
       FROM dims
     )
     SELECT zvalue // 65536 AS zbucket,
@@ -2012,7 +2006,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
         .distinct()
     )
-    return triangle_stats(edges, "u", "v", broadcast_degrees=True)
+    return triangle_stats(edges)
 
 
 @register(
@@ -2236,7 +2230,7 @@ def reconcile_checksum_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("string").alias("k2"),
         F.round("value", 6).cast("decimal(18,6)").cast("string").alias("k3"),
     )
-    return table_checksum(canon, ["k1", "k2", "k3"], group_by=["event_type"])
+    return table_checksum(canon, ["k1", "k2", "k3"])
 
 
 @register(
@@ -2774,7 +2768,7 @@ def sketch_kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.operators.sketch import kmv_pair_overlap, kmv_sketch
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-    sk = kmv_sketch(ev, "event_type", "user_id", KMV_K)
+    sk = kmv_sketch(ev, "event_type", KMV_K)
     est = kmv_pair_overlap(sk, KMV_K)
 
     u = ev.distinct()
@@ -2958,7 +2952,7 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # graph work.
         .localCheckpoint(eager=False)
     )
-    return kcore_peel(edges, rounds=2)
+    return kcore_peel(edges)
 
 
 @register(
@@ -3130,7 +3124,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    labels = label_propagation(edges, broadcast_labels=True)
+    labels = label_propagation(edges)
     name = F.when(
         F.col("community") % 2 == 0,
         F.concat(F.lit("C"), F.expr("CAST(community DIV 2 AS STRING)")),

@@ -621,7 +621,7 @@ def event_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("t_ts"),
     )
     pairs = range_join_binned(
-        p, t, by="user_id", left_ts="p_ts", right_ts="t_ts",
+        p, t, right_ts="t_ts",
         max_gap_seconds=_ATTR_WINDOW_S,
     ).select("p_id", "value", "channel")
     per_p = pairs.groupBy("p_id").agg(F.count(F.lit(1)).alias("n_touch"))

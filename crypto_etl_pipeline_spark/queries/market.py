@@ -371,13 +371,11 @@ def histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor((F.col("value") - F.col("lo")) / F.col("w")).cast("long"),
         F.lit(99),
     )
-    sketch = histogram_sketch(binned, "event_type", bin_col).join(
+    sketch = histogram_sketch(binned, bin_col).join(
         F.broadcast(bounds), "event_type"
     )
     return quantile_from_sketch(
         sketch,
-        "event_type",
-        {"est_p50": 0.50, "est_p95": 0.95},
         lo=F.col("lo"),
         width=F.col("w"),
     )

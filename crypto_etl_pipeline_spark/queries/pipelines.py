@@ -182,4 +182,4 @@ def skew_two_phase_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.operators.skew import two_phase_distinct_count
 
     ev = load_table(spark, sf_dir, "events")
-    return two_phase_distinct_count(ev, "event_type", "user_id")
+    return two_phase_distinct_count(ev)

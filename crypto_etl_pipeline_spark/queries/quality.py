@@ -117,7 +117,7 @@ def grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.operators.grouped import zscore_by_group
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    out = zscore_by_group(ev, "user_id", "value")
+    out = zscore_by_group(ev)
     return out.select("event_id", "user_id", F.round("zscore", 6).alias("zscore"))
 
 
@@ -171,7 +171,7 @@ def quality_rule_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "returnflag_known": F.col("l_returnflag").isin("A", "N", "R"),
         },
     )
-    fk = fk_orphan_count(li, "l_orderkey", orders, "o_orderkey", "orderkey_references_orders")
+    fk = fk_orphan_count(li, orders, "orderkey_references_orders")
     return rules.unionByName(fk)
 
 

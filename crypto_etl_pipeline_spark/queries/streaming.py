@@ -203,7 +203,7 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical sink contents (the interval-join family fix; ~0.7-1 s
     # of fixed per-cycle overhead measured).
     events = read_event_stream(spark, stage)
-    rolled = hourly_rollup_stream(events, exclude_event_types=("_sentinel",))
+    rolled = hourly_rollup_stream(events)
     return run_available_now(
         rolled,
         f"rollup_{uuid.uuid4().hex[:8]}",
@@ -448,7 +448,7 @@ def multimodal_real_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.multimodal.binary import decode_image
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_image(_ppm_media(docs), codec="real").drop("checksum").select(
+    return decode_image(_ppm_media(docs)).drop("checksum").select(
         "doc_id", "width", "height", "n_bytes"
     )
 
@@ -1319,8 +1319,6 @@ def stream_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return quantile_from_sketch(
         merged,
-        "event_type",
-        {"est_p50": 0.50, "est_p95": 0.95},
         lo=F.lit(0.0),
         width=F.lit(5.0),
     )

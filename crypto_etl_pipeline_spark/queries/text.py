@@ -225,7 +225,7 @@ def _unicode_canonical_sql_raw() -> str:
 def _unicode_fingerprint_sql_raw() -> str:
     from crypto_etl_pipeline_spark.operators.unicodeops import fingerprint_sql
 
-    return fingerprint_sql("raw")
+    return fingerprint_sql()
 
 
 def _unicode_enc_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2385,7 +2385,7 @@ def text_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         F.explode(textops.tokens(F.col("text"))).alias("term")
     )
-    return heavy_hitters_exact(toks, "term", k=30)
+    return heavy_hitters_exact(toks, k=30)
 
 
 @register(
@@ -2536,7 +2536,11 @@ def tokenizer_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_train_oracle(n_merges: int) -> str:
+#: merges the registered BPE trainer learns (and its oracle unrolls)
+BPE_MERGES = 8
+
+
+def _bpe_train_oracle() -> str:
     """Fully-oracled BPE training (VERDICT_r5 #7): for a FIXED merge
     count the iterative trainer unrolls into SQL — each round k is
     (pair-count over the round-(k-1) vocabulary) → (argmax CTE m{k}) →
@@ -2576,7 +2580,7 @@ def _bpe_train_oracle(n_merges: int) -> str:
       WHERE length(word) >= 1 GROUP BY word
     )"""
     ]
-    for k in range(1, n_merges + 1):
+    for k in range(1, BPE_MERGES + 1):
         ctes.append(f"""p{k} AS MATERIALIZED (
       SELECT substring(w, g.i, 1) AS lc, substring(w, g.i + 1, 1) AS rc,
              sum(cnt) AS c
@@ -2589,7 +2593,7 @@ def _bpe_train_oracle(n_merges: int) -> str:
       ORDER BY c DESC, ls ASC, rs ASC
       LIMIT 1
     )""")
-        if k < n_merges:
+        if k < BPE_MERGES:
             ctes.append(f"""w{k} AS MATERIALIZED (
       SELECT replace(w, (SELECT lc || rc FROM m{k}), '{fresh(k)}') AS w, cnt
       FROM w{k - 1}
@@ -2597,14 +2601,14 @@ def _bpe_train_oracle(n_merges: int) -> str:
     selects = "\n    UNION ALL ".join(
         f"SELECT {k} AS merge_rank, ls AS left_sym, rs AS right_sym, "
         f"ls || rs AS merged_sym, c::BIGINT AS pair_count FROM m{k}"
-        for k in range(1, n_merges + 1)
+        for k in range(1, BPE_MERGES + 1)
     )
     return "WITH " + ",\n    ".join(ctes) + "\n    " + selects
 
 
 @register(
     "bpe_train_merges",
-    oracle=_bpe_train_oracle(8),
+    oracle=_bpe_train_oracle(),
     description="BPE merge training (8 rounds) over the corpus word-frequency table — fully oracled via an unrolled fresh-char replace chain",
     tags=("text", "tokenizer", "iterative"),
 )
@@ -2618,7 +2622,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return train(wc, n_merges=8)
+    return train(wc, n_merges=BPE_MERGES)
 
 
 @register(
@@ -2792,9 +2796,7 @@ def sample_pps_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         textops.token_count(F.col("text")).cast("long").alias("weight"),
     )
-    return pps_systematic_sample(
-        docs, "weight", k=20, strata=["lang"]
-    ).select("doc_id", "lang", "weight")
+    return pps_systematic_sample(docs, "weight", k=20).select("doc_id", "lang", "weight")
 
 
 @register(
@@ -7687,10 +7689,9 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     the undirected word co-occurrence graph (adjacent-token window,
     the same bigram frame the LM queries use), run PageRank, read the
     top-scoring tokens as corpus keywords. Reuses the oracle-checked
-    pagerank operator (operators/graph.py) with broadcast_ranks=True
-    — the node set is VOCAB-sized while the edge set tracks corpus
-    text, exactly the dimension-vs-fact split that strategy exists
-    for, so the edge table never shuffles inside the iterations.
+    pagerank operator (operators/graph.py), whose broadcast ranks fit
+    here — the node set is VOCAB-sized while the edge set tracks corpus
+    text, so the edge table never shuffles inside the iterations.
     Fixed 2 iterations unroll exactly in the DuckDB twin; ranks round
     to 6 decimals before the top-25 cut so FP summation noise cannot
     flip membership (the pagerank_trade_graph discipline). Distinct
@@ -7711,7 +7712,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(pairs.select(F.col("w2").alias("src"), F.col("w1").alias("dst")))
         .distinct()
     )
-    ranks = pagerank(edges, iters=2, every_node_has_in_edges=True, broadcast_ranks=True)
+    ranks = pagerank(edges)
     return (
         ranks.select(F.col("node").alias("token"), F.round("rank", 6).alias("rank"))
         .orderBy(F.desc("rank"), F.asc("token"))

@@ -39,7 +39,7 @@ def asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", "value"
     )
     clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts", "value")
-    joined = asof_join(purchases, clicks, on="ts", by="user_id", right_cols=["value"])
+    joined = asof_join(purchases, clicks, by="user_id", right_cols=["value"])
     return joined.select(
         "event_id",
         "user_id",
@@ -72,7 +72,7 @@ def range_join_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFr
     c = ev.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("c_id"), "user_id", F.col("ts").alias("c_ts")
     )
-    joined = range_join_binned(p, c, by="user_id", left_ts="p_ts", right_ts="c_ts",
+    joined = range_join_binned(p, c, right_ts="c_ts",
                                max_gap_seconds=86400)
     return joined.select(
         "p_id",

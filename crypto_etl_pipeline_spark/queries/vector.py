@@ -231,7 +231,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, queries, cents, k=TOP_K, nprobe=IVF_NPROBE)
 
 
-def _lloyd_ivf_oracle(iters: int) -> str:
+#: Lloyd steps of the refined IVF centroids (and of their oracle)
+IVF_LLOYD_ITERS = 2
+
+
+def _lloyd_ivf_oracle() -> str:
     """Unrolled Lloyd k-means + IVF probe as SQL (round 6 — this was
     the registry's last rows-only entry). Each iteration is an
     (assignment CTE, per-dimension-mean CTE, centroid-update CTE)
@@ -257,7 +261,7 @@ def _lloyd_ivf_oracle(iters: int) -> str:
     )""",
     ]
     scale = float(LSH_SCALE)
-    for i in range(1, iters + 1):
+    for i in range(1, IVF_LLOYD_ITERS + 1):
         prev = f"cent{i - 1}"
         ctes.append(f"""assign{i} AS MATERIALIZED (
       SELECT vec_id, idx AS cell FROM (
@@ -286,7 +290,7 @@ def _lloyd_ivf_oracle(iters: int) -> str:
     adist AS MATERIALIZED (
       SELECT v.vec_id, c.idx,
              -2 * list_dot_product(v.q, c.qc) + list_dot_product(c.qc, c.qc) AS d
-      FROM qv v CROSS JOIN cent{iters} c
+      FROM qv v CROSS JOIN cent{IVF_LLOYD_ITERS} c
     ),
     ranked_cells AS MATERIALIZED (
       SELECT vec_id, idx,
@@ -316,7 +320,7 @@ def _lloyd_ivf_oracle(iters: int) -> str:
 
 @register(
     "ann_ivf_refined_topk",
-    oracle=_lloyd_ivf_oracle(2),
+    oracle=_lloyd_ivf_oracle(),
     description="IVF with Lloyd-refined centroids — fully oracled via an unrolled assignment/mean/update SQL chain (recall-tested too)",
     tags=("similarity", "iterative"),
 )
@@ -332,7 +336,7 @@ def ann_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.operators.similarity import ivf_build_centroids, ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf_build_centroids(emb, k=IVF_K, iters=2)
+    cents = ivf_build_centroids(emb, k=IVF_K, iters=IVF_LLOYD_ITERS)
     queries = emb.where(F.col("vec_id") < N_QUERIES).limit(N_QUERIES)
     return ivf_topk(emb, queries, cents, k=TOP_K, nprobe=IVF_NPROBE)
 
@@ -575,7 +579,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("neighbor_id").alias("vec_id"), "_cell", "_cvec"
         ),
         max_cell_size=SEM_CELL_CAP,
-        cell_col="_cell",
     ).localCheckpoint(eager=False)
     a, b = cells.alias("a"), cells.alias("b")
     pairs = (
@@ -1033,7 +1036,7 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.operators.linalg import pca_top_component
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pca_top_component(emb, "embedding", JL_IN_DIM, iters=PCA_ITERS)
+    return pca_top_component(emb, JL_IN_DIM, iters=PCA_ITERS)
 
 
 @register(
@@ -1100,7 +1103,7 @@ def embedding_pca_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_etl_pipeline_spark.operators.linalg import pca_top_by_group
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pca_top_by_group(emb, "label", "embedding", JL_IN_DIM, iters=PCA_ITERS)
+    return pca_top_by_group(emb, JL_IN_DIM, iters=PCA_ITERS)
 
 
 @register(
@@ -1180,10 +1183,10 @@ def embedding_pca_residual_outliers(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    rows = moment_rows(emb, "embedding", JL_IN_DIM).collect()
+    rows = moment_rows(emb, JL_IN_DIM).collect()
     cov, mean, _ = covariance_from_moments(rows, JL_IN_DIM)
     v, _ = power_iteration(cov, PCA_ITERS)
-    scored = pca_residual_scores(emb, "vec_id", "embedding", mean, v)
+    scored = pca_residual_scores(emb, mean, v)
     return scored.orderBy(F.desc("residual"), F.asc("vec_id")).limit(20)
 
 
@@ -1943,7 +1946,6 @@ def embedding_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("neighbor_id").alias("vec_id"), "_cell", "_cvec"
         ),
         max_cell_size=SEM_CELL_CAP,
-        cell_col="_cell",
     ).localCheckpoint(eager=False)
     a, b = cells.alias("a"), cells.alias("b")
     # One kernel for both cosines: the full-vector ci gates the pair
@@ -2306,7 +2308,6 @@ def dedup_semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFram
             F.col("neighbor_id").alias("vec_id"), "_cell", "_cvec"
         ),
         max_cell_size=SEM_CELL_CAP,
-        cell_col="_cell",
     ).localCheckpoint(eager=False)
     a, b = cells.alias("a"), cells.alias("b")
     scored = (

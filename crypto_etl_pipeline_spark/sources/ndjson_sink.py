@@ -49,25 +49,34 @@ class _PartCommit(WriterCommitMessage):
         self.n_rows = n_rows
 
 
+def _sink_path(options: dict) -> str:
+    path = options.get("path")
+    if not path:
+        raise ValueError("ndjson_sink requires .option('path', ...)")
+    return path
+
+
+def _stage_part(path: str, rows: Iterator) -> _PartCommit:
+    """Executor side of both writers: stream one partition to a staged
+    ``part-*.ndjson`` under ``{path}/_staging``."""
+    staging = os.path.join(path, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.ndjson"
+    n = 0
+    with open(os.path.join(staging, name), "w") as f:
+        for row in rows:
+            f.write(json.dumps(row.asDict(), default=str) + "\n")
+            n += 1
+    return _PartCommit(name, n)
+
+
 class _NdjsonWriter(DataSourceWriter):
     def __init__(self, options: dict, overwrite: bool):
-        path = options.get("path")
-        if not path:
-            raise ValueError("ndjson_sink requires .option('path', ...)")
-        self.path = path
+        self.path = _sink_path(options)
         self.overwrite = overwrite
 
-    # -- executor side -----------------------------------------------------
     def write(self, rows: Iterator) -> _PartCommit:
-        staging = os.path.join(self.path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}.ndjson"
-        n = 0
-        with open(os.path.join(staging, name), "w") as f:
-            for row in rows:
-                f.write(json.dumps(row.asDict(), default=str) + "\n")
-                n += 1
-        return _PartCommit(name, n)
+        return _stage_part(self.path, rows)
 
     # -- driver side, exactly once after all tasks succeed -----------------
     def commit(self, messages) -> None:
@@ -129,21 +138,10 @@ class _NdjsonStreamWriter(DataSourceStreamWriter):
     """
 
     def __init__(self, options: dict):
-        path = options.get("path")
-        if not path:
-            raise ValueError("ndjson_sink requires .option('path', ...)")
-        self.path = path
+        self.path = _sink_path(options)
 
     def write(self, rows: Iterator) -> _PartCommit:
-        staging = os.path.join(self.path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}.ndjson"
-        n = 0
-        with open(os.path.join(staging, name), "w") as f:
-            for row in rows:
-                f.write(json.dumps(row.asDict(), default=str) + "\n")
-                n += 1
-        return _PartCommit(name, n)
+        return _stage_part(self.path, rows)
 
     def commit(self, messages, batchId: int) -> None:
         staging = os.path.join(self.path, "_staging")

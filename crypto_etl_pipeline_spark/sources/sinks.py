@@ -14,15 +14,12 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """S3 — headered CSV, full overwrite.
-
-    ``single_file=True`` coalesces to one partition for parity with
-    single-file consumers (reference df.to_csv). Leave False at scale —
-    a 100 TB result must not funnel through one task.
-    """
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """S3 — headered CSV, full overwrite, coalesced to one partition for
+    parity with single-file consumers (reference df.to_csv). Its callers
+    write small cleaned outputs; a 100 TB result belongs in
+    :func:`write_parquet`, not funnelled through one task."""
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -47,7 +44,7 @@ def write_timestamped_csv(
     caller's concern: ``df.count()``, ``len(df.columns)``.
     """
     path = f"{base_dir}/{stem}_{timestamp_suffix(now)}"
-    write_csv(df, path, single_file=True)
+    write_csv(df, path)
     return path
 
 
@@ -58,14 +55,16 @@ def write_jsonl(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def read_jsonl(spark, path: str, schema):
-    """JSON-lines source with an EXPLICIT schema.
+def read_jsonl(spark, path: str):
+    """JSON-lines events source with an EXPLICIT schema.
 
     Schema inference on JSON costs a full extra pass over the data and
-    silently widens types; at 100 TB it is never acceptable — callers
-    pass the DDL string or StructType they expect, and corrupt rows
-    surface as nulls in the columns they fail to parse."""
-    return spark.read.schema(schema).json(path)
+    silently widens types; at 100 TB it is never acceptable — the events
+    DDL is fixed here, and corrupt rows surface as nulls in the columns
+    they fail to parse."""
+    return spark.read.schema(
+        "event_id long, user_id long, event_type string, value double"
+    ).json(path)
 
 
 def compact_parquet(

@@ -112,29 +112,24 @@ def read_event_stream(
     return raw
 
 
-def hourly_rollup_stream(
-    events: DataFrame,
-    exclude_event_types: tuple = (),
-) -> DataFrame:
+def hourly_rollup_stream(events: DataFrame) -> DataFrame:
     """Watermarked tumbling 1-hour rollup by event type.
 
     The 2-hour watermark bounds aggregation state: windows older than
     (max event time - 2 hours) are finalized and their state dropped.
 
-    ``exclude_event_types`` filters AFTER the watermark node, so the
-    excluded rows still advance event time but never create window
-    state — the hook watermark-sentinel files use.
+    '_sentinel' rows (the watermark-sentinel files a drain appends) are
+    filtered AFTER the watermark node, so they still advance event time
+    but never create window state.
     """
-    src = events.withWatermark("ts", "2 hours")
-    if exclude_event_types:
-        # The vacuous ts-null disjunct REFERENCES the watermark column,
-        # which pins this filter ABOVE the EventTimeWatermark node:
-        # Catalyst pushes ts-free deterministic predicates below it
-        # (PushPredicateThroughNonJoin), and a sentinel filtered below
-        # the node never advances the watermark (measured: the last
-        # 2 h of windows never emit).
-        keep = ~F.col("event_type").isin(*exclude_event_types) | F.col("ts").isNull()
-        src = src.filter(keep)
+    # The vacuous ts-null disjunct REFERENCES the watermark column,
+    # which pins this filter ABOVE the EventTimeWatermark node:
+    # Catalyst pushes ts-free deterministic predicates below it
+    # (PushPredicateThroughNonJoin), and a sentinel filtered below
+    # the node never advances the watermark (measured: the last
+    # 2 h of windows never emit).
+    keep = ~F.col("event_type").isin("_sentinel") | F.col("ts").isNull()
+    src = events.withWatermark("ts", "2 hours").filter(keep)
     return (
         src
         .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
@@ -216,55 +211,23 @@ def _session_frame(user_id, closed):
     )
 
 
-def _sessionize_fn(gap_seconds: int, timeout: str = "none"):
+def _sessionize_fn(gap_seconds: int):
     gap_us = gap_seconds * 1_000_000
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         (user_id,) = key
-        if state.hasTimedOut:
-            # Event-time timeout: the watermark passed session_end + gap
-            # with no newer event — flush the idle session.
-            if state.exists:
-                start_us, end_us, n, sv = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "session_start": [pd.Timestamp(start_us, unit="us")],
-                        "session_end": [pd.Timestamp(end_us, unit="us")],
-                        "n_events": [n],
-                        "sum_value": [sv],
-                    }
-                )
-            return
-
         cur = tuple(state.get) if state.exists else None
         closed, new_state = _fold_sessions(pdfs, cur, gap_us)
-        start_us, end_us, n, sv = new_state
-        state.update((start_us, end_us, n, sv))
-        if timeout == "event":
-            # Flush when the WATERMARK (not wall clock) passes the end
-            # of the gap window — replay-deterministic in event time.
-            # Clamp above the current watermark: Spark rejects timeout
-            # timestamps at or below it (a long-idle session replayed
-            # late would otherwise throw).
-            state.setTimeoutTimestamp(
-                max(end_us // 1000 + gap_seconds * 1000, state.getCurrentWatermarkMs() + 1)
-            )
+        state.update(tuple(new_state))
         if closed:
             yield _session_frame(user_id, closed)
 
     return fn
 
 
-def sessionize_stream(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    timeout: str = "none",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Custom stateful operator: gap-based sessionization per user.
 
     ``applyInPandasWithState`` — Arrow batches in, per-key mutable state
@@ -272,34 +235,20 @@ def sessionize_stream(
     operator' pattern the built-in windowing cannot express (session
     windows keyed on inter-event gaps with custom accumulators).
 
-    ``timeout`` picks the idle-session flush policy, and both options
-    are deterministic in EVENT time (a processing-time timeout would
-    make output depend on wall clock and executor speed — rejected):
-
-    - ``"none"``: sessions close only when a later event for the same
-      user arrives past the gap; each user's final session stays in
-      state. Output is a pure function of the input — identical across
-      replays and micro-batch layouts (the oracle-checked mode).
-    - ``"event"``: additionally flush a session once the WATERMARK
-      passes session_end + gap (EventTimeTimeout). The production
-      choice for unbounded streams — state is bounded even for users
-      that go quiet — at the cost of output depending on how far the
-      watermark advanced (i.e. on batch boundaries during a replay).
+    A session closes when a later event for the same user arrives past
+    the gap; state keeps each user's open session, including the final
+    one, which is never emitted. There is no timeout: output is a pure
+    function of the input — identical across replays and micro-batch
+    layouts, which is what the oracle checks. (An event-time timeout
+    would bound state for users that go quiet, at the cost of output
+    depending on how far the watermark advanced during a replay.)
     """
-    if timeout not in ("none", "event"):
-        raise ValueError(f"timeout must be 'none' or 'event', got {timeout!r}")
-    if timeout == "event":
-        events = events.withWatermark("ts", watermark)
     return events.groupBy("user_id").applyInPandasWithState(
-        _sessionize_fn(gap_seconds, timeout),
+        _sessionize_fn(gap_seconds),
         outputStructType=SESSION_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if timeout == "event"
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -615,14 +564,13 @@ def run_cdc_stream(
     changes_stream: DataFrame,
     snapshot_seed: DataFrame,
     snapshot_dir: str,
-    key: str,
     checkpoint_dir: str,
     retain_versions: int = 3,
 ) -> DataFrame:
     """Maintain a parquet snapshot from a stream of CDC changesets.
 
     ``foreachBatch`` + :func:`operators.cdc.apply_changeset`: each
-    micro-batch applies its changes to the latest snapshot version and
+    micro-batch applies its changes, keyed on ``k``, to the latest snapshot version and
     writes ``{snapshot_dir}/v{batch_id}``. Versioned directories make
     the sink idempotent — a replayed batch_id overwrites its own
     version, which together with the checkpoint gives exactly-once
@@ -640,7 +588,7 @@ def run_cdc_stream(
         snapshot_dir,
         checkpoint_dir,
         reduce_batch=lambda batch_df: batch_df,
-        merge=lambda base, delta: apply_changeset(base, delta, key=key),
+        merge=lambda base, delta: apply_changeset(base, delta, key="k"),
         empty_base=lambda: snapshot_seed,
         retain_versions=retain_versions,
         label="CDC stream",
@@ -680,8 +628,7 @@ def run_sketch_rollup_stream(
         checkpoint_dir,
         reduce_batch=lambda batch_df: histogram_sketch(
             batch_df.where(F.col("value").isNotNull()),
-            "event_type",
-            fixed_bin(F.col("value"), 5.0),
+            fixed_bin(F.col("value")),
         ),
         merge=lambda base, delta: merge_sketches(base, delta),
         label="sketch rollup stream",
@@ -753,7 +700,7 @@ def run_kmv_distinct_stream(
         events,
         store_dir,
         checkpoint_dir,
-        reduce_batch=lambda batch_df: kmv_sketch(batch_df, "event_type", "user_id", k),
+        reduce_batch=lambda batch_df: kmv_sketch(batch_df, "event_type", k),
         merge=lambda base, delta: kmv_merge(base, delta, k),
         label="KMV distinct stream",
         finalize=lambda final: kmv_estimate(final, k),

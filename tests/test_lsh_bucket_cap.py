@@ -10,13 +10,8 @@ count exactly what was dropped.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from crypto_etl_pipeline_spark.operators.dedup import (
-    MinhashStore,
-    build_minhash_store,
     cap_hot_buckets,
-    incremental_near_dups,
     lsh_buckets,
     lsh_hot_buckets,
     minhash_signatures,
@@ -66,22 +61,3 @@ def test_hot_bucket_spill_metric_counts_dropped_comparisons(spark):
     kept = cap_hot_buckets(buckets, bucket_cap=10)
     kept_ids = {r["doc_id"] for r in kept.select("doc_id").distinct().collect()}
     assert kept_ids == {100, 101, 200, 201}
-
-
-def test_incremental_cap_applies_to_combined_corpus(spark, tmp_path):
-    """Bucket heat is a whole-corpus property: 20 boilerplate docs in
-    the store plus 20 in the new batch must together trip a cap of 30
-    even though neither side alone does."""
-    docs = _skew_corpus(spark)
-    old = docs.where(F.col("doc_id") % 2 == 0)
-    new = docs.where(F.col("doc_id") % 2 == 1)
-    build_minhash_store(old).save(str(tmp_path / "store"))
-    store = MinhashStore.load(spark, str(tmp_path / "store"))
-
-    pairs, _ = incremental_near_dups(new, store, threshold=0.5, bucket_cap=30)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert got == {(100, 101)}
-
-    # sanity: without the cap the boilerplate pairs flood back in
-    uncapped, _ = incremental_near_dups(new, store, threshold=0.5)
-    assert len({(r["id_a"], r["id_b"]) for r in uncapped.collect()}) > 100

@@ -1,9 +1,9 @@
 """Edge-semantics unit tests for custom operators (as-of join null
-carry, salted-join safety) — cases the sf-testdata oracles don't reach."""
+carry, salted join, null embeddings in the vector kernels) — cases the
+sf-testdata oracles don't reach."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -23,7 +23,7 @@ def test_asof_join_carries_matched_rows_null(spark):
 
     out = {
         r["ts"].second + r["ts"].minute * 60: r["v_asof"]
-        for r in asof_join(left, right, on="ts", by="k", right_cols=["v"]).collect()
+        for r in asof_join(left, right, by="k", right_cols=["v"]).collect()
     }
     assert out[100] == 10.0
     assert out[200] is None  # matched row (ts=150) carries ITS null
@@ -39,17 +39,8 @@ def test_asof_join_no_match_is_null(spark):
     right = spark.createDataFrame([(1, 500, 9.0)], "k int, ts int, v double").select(
         "k", F.timestamp_seconds("ts").alias("ts"), "v"
     )
-    rows = asof_join(left, right, on="ts", by="k", right_cols=["v"]).collect()
+    rows = asof_join(left, right, by="k", right_cols=["v"]).collect()
     assert rows[0]["v_asof"] is None
-
-
-def test_salted_join_rejects_outer(spark):
-    from crypto_etl_pipeline_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, 10)], "k int, line int")
-    dim = spark.createDataFrame([(1, "a")], "k int, name string")
-    with pytest.raises(ValueError, match="salt-safe"):
-        salted_join(big, dim, key="k", salt_from="line", how="full")
 
 
 def test_salted_join_inner_matches_plain_join(spark):
@@ -62,18 +53,6 @@ def test_salted_join_inner_matches_plain_join(spark):
     got = sorted(tuple(r) for r in salted_join(big, dim, "k", "line", n_salts=4).collect())
     want = sorted(tuple(r) for r in big.join(dim, "k").collect())
     assert got == want
-
-
-def test_salted_join_left_keeps_unmatched_skewed_rows(spark):
-    from crypto_etl_pipeline_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, 10), (9, 11)], "k int, line int")
-    dim = spark.createDataFrame([(1, "a")], "k int, name string")
-    got = sorted(
-        tuple(r)
-        for r in salted_join(big, dim, "k", "line", n_salts=4, how="left").collect()
-    )
-    assert got == [(1, 10, "a"), (9, 11, None)]
 
 
 def test_apply_changeset_semantics(spark):
@@ -98,3 +77,36 @@ def test_apply_changeset_semantics(spark):
     # replaying the same changeset over the result changes nothing
     again = apply_changeset(out, changes, key="k")
     assert sorted(tuple(r) for r in again.collect()) == got
+
+
+def test_vector_kernels_give_null_for_null_embedding(spark):
+    """A null embedding in an Arrow batch gives a null output from every
+    hyperplane/centroid kernel (DuckDB's answer), and the other rows keep
+    the values they get in a batch without it."""
+    from crypto_etl_pipeline_spark.operators.similarity import (
+        _centroid_dists_pd,
+        _lsh_signature_pd,
+        _nearest_cells_pd,
+        _nearest_centroid_pd,
+    )
+
+    vecs = [(1, [0.5, -0.25, 0.125]), (2, None), (3, [-0.75, 0.5, 0.25])]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    cents = [[0.5, 0.0, 0.0], [0.0, 0.5, 0.5], [-0.5, 0.25, 0.0]]
+    kernels = [
+        _lsh_signature_pd([[1.0, -1.0, 0.5], [0.0, 1.0, -1.0]]),
+        _nearest_centroid_pd(cents),
+        _nearest_cells_pd(cents, 2),
+        _centroid_dists_pd(cents),
+    ]
+    out = df.select(
+        "vec_id", *[k(F.col("embedding")).alias(f"k{i}") for i, k in enumerate(kernels)]
+    ).coalesce(1)
+    got = {r["vec_id"]: tuple(r)[1:] for r in out.collect()}
+    assert got[2] == (None,) * len(kernels)
+    alone = {
+        r["vec_id"]: tuple(r)[1:]
+        for r in out.where(F.col("vec_id") != 2).collect()
+    }
+    assert {i: got[i] for i in (1, 3)} == alone
+    assert all(v is not None for i in (1, 3) for v in got[i])

@@ -4,14 +4,13 @@ Misra-Gries: the sketch must stay exact END-TO-END (candidate superset
 + verify pass) under adversarial partition layouts the sf-data never
 produces; triangle counting must match brute force on graphs with
 known counts and on seeded random graphs, under raw (duplicated,
-reversed, self-looped) edge input, with both physical strategies.
+reversed, self-looped) edge input.
 """
 
 from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -59,7 +58,7 @@ class TestMisraGries:
         df = spark.createDataFrame(rows, "term string").repartition(8)
         got = {
             r["term"]: r["n_occurrences"]
-            for r in heavy_hitters_exact(df, "term", k).collect()
+            for r in heavy_hitters_exact(df, k).collect()
         }
         assert got == expected
 
@@ -77,7 +76,7 @@ class TestMisraGries:
             expected = _exact_heavy_hitters([r[0] for r in rows], k)
             got = {
                 r["term"]: r["n_occurrences"]
-                for r in heavy_hitters_exact(df, "term", k).collect()
+                for r in heavy_hitters_exact(df, k).collect()
             }
             assert got == expected, f"k={k}"
 
@@ -109,11 +108,11 @@ def _brute_triangles(edges):
 
 
 class TestTriangleStats:
-    def _run(self, spark, pairs, **kw):
+    def _run(self, spark, pairs):
         from crypto_etl_pipeline_spark.operators.graph import triangle_stats
 
         df = spark.createDataFrame(pairs, "u long, v long")
-        return triangle_stats(df, "u", "v", **kw).collect()[0]
+        return triangle_stats(df).collect()[0]
 
     def test_k4_is_fully_clustered(self, spark):
         k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
@@ -134,7 +133,7 @@ class TestTriangleStats:
         r = self._run(spark, tri)
         assert (r.n_nodes, r.n_edges, r.n_triangles) == (3, 3, 1)
 
-    def test_random_graph_matches_brute_force_both_strategies(self, spark):
+    def test_random_graph_matches_brute_force(self, spark):
         rng = random.Random(42)
         pairs = list(
             {
@@ -143,9 +142,8 @@ class TestTriangleStats:
             }
         )
         nodes, edges, tri = _brute_triangles(pairs)
-        for bc in (True, False):
-            r = self._run(spark, pairs, broadcast_degrees=bc)
-            assert (r.n_nodes, r.n_edges, r.n_triangles) == (nodes, edges, tri), bc
+        r = self._run(spark, pairs)
+        assert (r.n_nodes, r.n_edges, r.n_triangles) == (nodes, edges, tri)
 
     def test_skewed_hub_graph(self, spark):
         """Hub of degree 60 + a few rim edges: orientation must point
@@ -186,58 +184,56 @@ def _ref_bpe(wordcounts, n_merges):
     return merges
 
 
-@pytest.mark.parametrize("strategy", ["local_vocab", "distributed"])
 class TestBpeTrainer:
-    """Both trainer strategies (single-task indexed loop / distributed
-    delta-maintained loop) must produce the identical merge sequence
-    AND counts as the independent full-recount reference trainer —
-    count equality pins the delta path's incremental pair table."""
+    """The single-task indexed trainer must produce the identical merge
+    sequence AND counts as the independent full-recount reference
+    trainer — count equality pins its incremental pair table."""
 
-    def _train(self, spark, wordcounts, n, strategy):
+    def _train(self, spark, wordcounts, n):
         from crypto_etl_pipeline_spark.operators.bpe import bpe_train_merges
 
         df = spark.createDataFrame(list(wordcounts.items()), "word string, cnt long")
-        rows = bpe_train_merges(df, n, strategy=strategy).collect()
+        rows = bpe_train_merges(df, n).collect()
         return [
             (r.merge_rank, r.left_sym, r.right_sym, r.merged_sym, r.pair_count)
             for r in sorted(rows, key=lambda r: r.merge_rank)
         ]
 
-    def test_overlapping_runs_merge_greedily(self, spark, strategy):
+    def test_overlapping_runs_merge_greedily(self, spark):
         """'aaaa' x3: round 1 pair (a,a) counts 3 per occurrence (9),
         greedy application leaves ['aa','aa'] — round 2 must see
         (aa,aa), not (a,a)."""
         wc = {"aaaa": 3, "aab": 1}
-        got = self._train(spark, wc, 3, strategy)
+        got = self._train(spark, wc, 3)
         assert got == _ref_bpe(wc, 3)
         assert got[0][1:4] == ("a", "a", "aa")
         assert got[1][1:4] == ("aa", "aa", "aaaa")
 
-    def test_tie_break_is_lexicographic(self, spark, strategy):
+    def test_tie_break_is_lexicographic(self, spark):
         wc = {"xy": 5, "ab": 5, "cd": 5}
-        got = self._train(spark, wc, 2, strategy)
+        got = self._train(spark, wc, 2)
         assert got == _ref_bpe(wc, 2)
         assert got[0][1:3] == ("a", "b")
         assert got[1][1:3] == ("c", "d")
 
-    def test_early_stop_when_pairs_exhausted(self, spark, strategy):
+    def test_early_stop_when_pairs_exhausted(self, spark):
         wc = {"ab": 4, "c": 9}
-        got = self._train(spark, wc, 5, strategy)
+        got = self._train(spark, wc, 5)
         # 'ab' merges to one symbol in round 1; no pairs remain.
         assert got == _ref_bpe(wc, 5)
         assert len(got) == 1
 
-    def test_matches_reference_on_random_corpus(self, spark, strategy):
+    def test_matches_reference_on_random_corpus(self, spark):
         rng = random.Random(19)
         alphabet = "abcde"
         wc = {}
         for _ in range(120):
             w = "".join(rng.choice(alphabet) for _ in range(rng.randrange(1, 9)))
             wc[w] = wc.get(w, 0) + rng.randrange(1, 20)
-        got = self._train(spark, wc, 6, strategy)
+        got = self._train(spark, wc, 6)
         assert got == _ref_bpe(wc, 6)
 
-    def test_matches_reference_deep_merge_run(self, spark, strategy):
+    def test_matches_reference_deep_merge_run(self, spark):
         """24 merges on a dense 2-letter alphabet: every round's argmax
         rides on counts perturbed by many earlier merges — a wrong
         delta update diverges within a round or two."""
@@ -246,7 +242,7 @@ class TestBpeTrainer:
         for _ in range(80):
             w = "".join(rng.choice("ab") for _ in range(rng.randrange(1, 12)))
             wc[w] = wc.get(w, 0) + rng.randrange(1, 10)
-        got = self._train(spark, wc, 24, strategy)
+        got = self._train(spark, wc, 24)
         assert got == _ref_bpe(wc, 24)
 
 

@@ -261,7 +261,7 @@ class TestPcaTopComponent:
         from crypto_etl_pipeline_spark.operators.linalg import pca_top_component
 
         emb = spark.read.parquet(SF + "/embeddings.parquet")
-        out = pca_top_component(emb, "embedding", 64, iters=300)
+        out = pca_top_component(emb, 64, iters=300)
         rows = sorted(out.collect(), key=lambda r: r["pos"])
         v = np.array([r["loading"] for r in rows])
         ray = rows[0]["eigenvalue"]
@@ -278,7 +278,7 @@ class TestPcaTopComponent:
         from crypto_etl_pipeline_spark.operators.linalg import moment_rows
 
         emb = spark.read.parquet(SF + "/embeddings.parquet")
-        n = moment_rows(emb, "embedding", 64).count()
+        n = moment_rows(emb, 64).count()
         assert n == 64 * 64 + 64 + 1
 
 
@@ -292,12 +292,12 @@ class TestKmvSketch:
         rows = [("a", i) for i in range(200)] + [("b", i) for i in range(100, 300)]
         df = spark.createDataFrame(rows, "grp string, user_id long")
         k = 32
-        sk = kmv_sketch(df, "grp", "user_id", k)
+        sk = kmv_sketch(df, "grp", k)
         per = {g: sorted(r["h"] for r in sk.where(f"grp = '{g}'").collect()) for g in ("a", "b")}
         assert len(per["a"]) == k and len(per["b"]) == k
         both = kmv_sketch(
             spark.createDataFrame([("u", i) for i in range(300)], "grp string, user_id long"),
-            "grp", "user_id", k,
+            "grp", k,
         )
         union_sketch = sorted(r["h"] for r in both.collect())
         merged = sorted(set(per["a"]) | set(per["b"]))[:k]
@@ -376,38 +376,50 @@ class TestBloomPrefilter:
         assert got == want and len(got) > 0
 
 
+def _ref_kcore(edges):
+    """Pure-Python reference peel: k = ceil of the interpolated median
+    initial degree, filter deg0, recompute, filter deg1 ->
+    {node: (deg0, deg1)}."""
+    import math
+    from collections import Counter
+
+    deg0 = Counter(src for src, _ in edges)
+    ds = sorted(deg0.values())
+    mid = (len(ds) - 1) / 2
+    lo, hi = ds[math.floor(mid)], ds[math.ceil(mid)]
+    k = math.ceil(lo + (hi - lo) * (mid - math.floor(mid)))
+    alive1 = {n for n, d in deg0.items() if d >= k}
+    deg1 = Counter(src for src, dst in edges if src in alive1 and dst in alive1)
+    return {n: (deg0[n], deg1[n]) for n in alive1 if deg1.get(n, 0) >= k}
+
+
 class TestKcorePeel:
     def test_fixpoint_retains_exact_clique(self, spark):
-        """4-clique + pendant path: at k=3, peeling to fixpoint must
-        keep exactly the clique (pendants cascade off over successive
-        rounds — the case a single-round filter gets wrong)."""
-        import pyspark.sql.functions as F
-
+        """4-clique + pendant path d-e-f-g: the median degree is 3, the
+        first round drops the path, and the second reports d's
+        recomputed degree (3, not its initial 4) — exactly the clique,
+        which no further round would change."""
         from crypto_etl_pipeline_spark.operators.graph import kcore_peel
 
         clique = ["a", "b", "c", "d"]
         und = [(x, y) for x in clique for y in clique if x < y]
-        # path hanging off the clique: d-e-f-g; e has degree 2, then 1...
         und += [("d", "e"), ("e", "f"), ("f", "g")]
-        edges = spark.createDataFrame(
-            und + [(y, x) for x, y in und], "src string, dst string"
-        )
-        out = kcore_peel(edges, k_threshold=F.lit(3), rounds=5).collect()
-        assert sorted(r["node"] for r in out) == clique
-        assert all(r["deg_final"] == 3 for r in out)
+        directed = und + [(y, x) for x, y in und]
+        edges = spark.createDataFrame(directed, "src string, dst string")
+        got = {r["node"]: (r["deg0"], r["deg_final"]) for r in kcore_peel(edges).collect()}
+        assert got == _ref_kcore(directed)
+        assert sorted(got) == clique
+        assert all(d == 3 for _, d in got.values())
 
     def test_two_round_contract_matches_manual_peel(self, spark):
         """The registered 2-round semantics: filter deg0, recompute,
         filter deg1 — verified against a driver-side reference peel on
         the sf0.001 trade graph."""
-        from collections import Counter
+        import duckdb
 
         from crypto_etl_pipeline_spark.queries.analytics import kcore_trade_graph
 
         got = {r["node"]: (r["deg0"], r["deg_final"]) for r in kcore_trade_graph(spark, SF).collect()}
-        # reference: rebuild edges in python
-        import duckdb
-
         con = duckdb.connect()
         pairs = con.execute(f"""
             SELECT DISTINCT 'C' || o_custkey, 'S' || l_suppkey
@@ -415,15 +427,7 @@ class TestKcorePeel:
         """).fetchall()
         con.close()
         edges = [(c, s) for c, s in pairs] + [(s, c) for c, s in pairs]
-        deg0 = Counter(src for src, _ in edges)
-        import math as _m
-        ds = sorted(deg0.values())
-        mid = (len(ds) - 1) / 2
-        lo, hi = ds[int(_m.floor(mid))], ds[int(_m.ceil(mid))]
-        k = _m.ceil(lo + (hi - lo) * (mid - _m.floor(mid)))
-        alive1 = {n for n, d in deg0.items() if d >= k}
-        deg1 = Counter(src for src, dst in edges if src in alive1 and dst in alive1)
-        want = {n: (deg0[n], deg1[n]) for n in alive1 if deg1.get(n, 0) >= k}
+        want = _ref_kcore(edges)
         assert got == want and len(got) > 0
 
 
@@ -487,7 +491,7 @@ class TestGroupedPca:
 
         emb = spark.read.parquet(SF + "/embeddings.parquet")
         out = {r["label"]: r for r in pca_top_by_group(
-            emb, "label", "embedding", 64, iters=300
+            emb, 64, iters=300
         ).collect()}
         rows = emb.collect()
         by_label: dict = {}
@@ -506,7 +510,7 @@ class TestGroupedPca:
         from crypto_etl_pipeline_spark.operators.linalg import grouped_moment_rows
 
         emb = spark.read.parquet(SF + "/embeddings.parquet")
-        n = grouped_moment_rows(emb, "label", "embedding", 64).count()
+        n = grouped_moment_rows(emb, 64).count()
         assert n == 10 * (64 * 64 + 64 + 1)
 
 
@@ -529,14 +533,14 @@ class TestStreamKmv:
             [("a", i) for i in range(150, 260)],
         ]
         dfs = [spark.createDataFrame(s, "event_type string, user_id long") for s in slices]
-        merged = kmv_sketch(dfs[0], "event_type", "user_id", k)
+        merged = kmv_sketch(dfs[0], "event_type", k)
         for d in dfs[1:]:
-            merged = kmv_merge(merged, kmv_sketch(d, "event_type", "user_id", k), k)
+            merged = kmv_merge(merged, kmv_sketch(d, "event_type", k), k)
         whole = kmv_sketch(
             spark.createDataFrame(
                 [r for s in slices for r in s], "event_type string, user_id long"
             ),
-            "event_type", "user_id", k,
+            "event_type", k,
         )
         assert sorted(r["h"] for r in merged.collect()) == sorted(
             r["h"] for r in whole.collect()
@@ -547,7 +551,7 @@ class TestStreamKmv:
             spark.createDataFrame(
                 [("a", i) for i in range(1000)], "event_type string, user_id long"
             ),
-            "event_type", "user_id", 64,
+            "event_type", 64,
         )
         est = kmv_estimate(big, 64).collect()[0]
         assert 620 < est["distinct_est"] < 1380, est["distinct_est"]
@@ -567,11 +571,11 @@ class TestPcaResidualOutliers:
         )
 
         emb = spark.read.parquet(SF + "/embeddings.parquet")
-        rows = moment_rows(emb, "embedding", 64).collect()
+        rows = moment_rows(emb, 64).collect()
         cov, mean, _ = covariance_from_moments(rows, 64)
         v, _ = power_iteration(cov, 2)
         assert abs(float(v @ v) - 1.0) < 1e-12
-        got = {r["vec_id"]: r for r in pca_residual_scores(emb, "vec_id", "embedding", mean, v).collect()}
+        got = {r["vec_id"]: r for r in pca_residual_scores(emb, mean, v).collect()}
         for r in emb.limit(30).collect():
             x = np.array(r["embedding"], dtype=np.float64)
             c = x - mean
@@ -589,6 +593,6 @@ class TestPcaResidualOutliers:
 
         emb = spark.read.parquet(SF + "/embeddings.parquet")
         plan = pca_residual_scores(
-            emb, "vec_id", "embedding", np.zeros(64), np.ones(64) / 8.0
+            emb, np.zeros(64), np.ones(64) / 8.0
         )._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan

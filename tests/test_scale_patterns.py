@@ -157,7 +157,7 @@ def test_python_grouped_stages_keep_parallelism(spark):
     )
     for df in (
         ewma(ev, by="user_id", order_cols=["ts", "event_id"], value_col="value", alpha=0.2),
-        zscore_by_group(ev.drop("ts"), "user_id", "value"),
+        zscore_by_group(ev.drop("ts")),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" in plan

@@ -23,7 +23,7 @@ def test_csv_roundtrip_preserves_values(spark, tmp_path):
         "id long, s string, v double",
     )
     out = str(tmp_path / "csv_out")
-    write_csv(df, out, single_file=True)
+    write_csv(df, out)
     back = read_csv_inferred(spark, out).orderBy("id").collect()
     assert [tuple(r) for r in back] == [(1, "a,b", 1.5), (2, None, None), (3, 'quo"te', -0.25)]
 
@@ -271,7 +271,7 @@ def _write_event_file(spark, path, rows):
 
 
 def test_sessionize_two_drains_identical(spark, tmp_path):
-    """timeout='none' output is a pure function of the input: two
+    """Sessionizer output is a pure function of the input: two
     independent drains of the same files emit identical session rows
     (no wall-clock dependence — the ProcessingTimeTimeout hazard)."""
     from crypto_etl_pipeline_spark.streaming.incremental import (
@@ -289,68 +289,13 @@ def test_sessionize_two_drains_identical(spark, tmp_path):
     def drain(tag):
         ev = read_event_stream(spark, input_dir)
         out = run_available_now(
-            sessionize_stream(ev, gap_seconds=6 * 3600, timeout="none"),
+            sessionize_stream(ev, gap_seconds=6 * 3600),
             f"sess_det_{tag}",
             str(tmp_path / f"ckpt_{tag}"),
         )
         return sorted(map(repr, (tuple(r) for r in out.collect())))
 
     assert drain("a") == drain("b")
-
-
-def test_sessionize_event_timeout_flushes_idle(spark, tmp_path):
-    """timeout='event': once the watermark passes session_end + gap, an
-    idle user's session flushes WITHOUT a closing event — the bounded-
-    state production mode (EventTimeTimeout, not wall clock)."""
-    from crypto_etl_pipeline_spark.streaming.incremental import (
-        read_event_stream,
-        run_available_now,
-        sessionize_stream,
-    )
-
-    from crypto_etl_pipeline_spark.streaming.incremental import sessionize_stream as _sess
-
-    t0 = 1_700_000_000  # fixed epoch base
-    input_dir = str(tmp_path / "in")
-    os.makedirs(input_dir)
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-
-    def drain():
-        # parquet sink: the only sink kind that recovers stateful
-        # progress from the checkpoint across separate drains
-        ev = read_event_stream(spark, input_dir)
-        q = (
-            sessionize_stream(ev, gap_seconds=600, timeout="event", watermark="10 seconds")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        try:
-            return [tuple(r) for r in spark.read.parquet(sink).collect()]
-        except Exception:  # sink dir still empty
-            return []
-
-    # drain 1: user 1 has a 2-event session; nothing can flush yet
-    _write_event_file(spark, os.path.join(input_dir, "f1.parquet"),
-                      [(1, t0, 1, 1.0), (2, t0 + 30, 1, 2.0)])
-    assert drain() == []
-
-    # drain 2: a much-later event from ANOTHER user advances the
-    # watermark far past user 1's end + gap; drain 3 then fires the
-    # event-time timeout against that watermark and emits user 1's idle
-    # session (never closed by an event of its own)
-    _write_event_file(spark, os.path.join(input_dir, "f2.parquet"),
-                      [(3, t0 + 86_400, 2, 5.0)])
-    drain()
-    _write_event_file(spark, os.path.join(input_dir, "f3.parquet"),
-                      [(4, t0 + 2 * 86_400, 2, 7.0)])
-    rows = drain()
-    assert any(r[0] == 1 and r[3] == 2 and abs(r[4] - 3.0) < 1e-9 for r in rows), rows
 
 
 def test_cdc_stream_maintains_snapshot(spark, tmp_path):
@@ -380,7 +325,7 @@ def test_cdc_stream_maintains_snapshot(spark, tmp_path):
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(in_dir)
     )
     final = run_cdc_stream(
-        stream, snap, str(tmp_path / "snap"), "k", str(tmp_path / "ckpt")
+        stream, snap, str(tmp_path / "snap"), str(tmp_path / "ckpt")
     )
     got = sorted((r["k"], r["v"]) for r in final.collect())
 
@@ -423,7 +368,7 @@ def test_cdc_stream_retention_bounds_versions(spark, tmp_path):
     )
     snap_dir = str(tmp_path / "snap")
     final = run_cdc_stream(
-        stream, snap, snap_dir, "k", str(tmp_path / "ckpt"), retain_versions=2
+        stream, snap, snap_dir, str(tmp_path / "ckpt"), retain_versions=2
     )
 
     assert sorted(os.listdir(snap_dir)) == ["v2", "v3"]
@@ -554,8 +499,8 @@ def test_decode_image_real_vs_stub_differential(spark):
 
     ppm, _ = _make_ppm(31, 17, seed=3)
     df = spark.createDataFrame([(1, bytearray(ppm))], "doc_id long, payload binary")
-    real = mm.decode_image(df, codec="real").collect()[0]
-    stub = mm.decode_image(df, codec="stub").collect()[0]
+    real = mm.decode_image(df).collect()[0]
+    stub = mm.decode_image_stub(df).collect()[0]
     assert real.asDict().keys() == stub.asDict().keys()
     assert (real["n_bytes"], real["checksum"]) == (stub["n_bytes"], stub["checksum"])
     assert (real["width"], real["height"]) == (31, 17)
@@ -585,17 +530,15 @@ def test_decode_pixels_reproduces_raster(spark):
 
 def test_decode_image_real_fails_loudly_on_garbage(spark):
     """A real pipeline must not invent dimensions for undecodable
-    payloads: without Pillow, non-PPM/BMP bytes raise; codec='pil'
-    raises RuntimeError when Pillow is absent (no silent stubbing)."""
+    payloads: without Pillow, non-PPM/BMP bytes raise (no silent
+    stubbing)."""
     from crypto_etl_pipeline_spark.multimodal import binary as mm
 
     if mm.HAS_PIL:
         pytest.skip("Pillow present: garbage goes to PIL and raises there")
     df = spark.createDataFrame([(1, bytearray(b"abc"))], "doc_id long, payload binary")
     with pytest.raises(Exception):
-        mm.decode_image(df, codec="real").collect()
-    with pytest.raises(RuntimeError):
-        mm.decode_image(df, codec="pil")
+        mm.decode_image(df).collect()
 
 
 def test_decode_image_pil_parses_real_png(spark):
@@ -615,7 +558,7 @@ def test_decode_image_pil_parses_real_png(spark):
     df = spark.createDataFrame(
         [(1, bytearray(buf.getvalue()))], "doc_id long, payload binary"
     )
-    row = mm.decode_image(df, codec="pil").collect()[0]
+    row = mm.decode_image(df).collect()[0]
     assert (row["width"], row["height"]) == (7, 5)
 
 
